@@ -2,7 +2,6 @@ package graft.analysis
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.TopK
 
@@ -24,24 +23,18 @@ import graft.functions.TopK
  * break label-ascending (ASCII labels — the engine-portable tie-break).
  *
  * Scale shape: the model is vocabulary×classes (prune with `minCount`,
- * CCNet-style) and BROADCASTS into the scoring join, so the corpus-sized
- * token stream never shuffles for the lookup; the only corpus-wide
- * exchanges are the per-(doc, token) and per-doc aggregations, keyed by
- * doc id (uniform). `broadcastModel = false` degrades the lookup to a
- * hash-partitioned shuffle join — identical output (the Decontaminate
- * dual-path contract) — for a vocabulary too large to broadcast.
+ * CCNet-style) and BROADCASTS to every executor, where each document is
+ * scored in its own row ([[scoreRowTopK]]), so the corpus never shuffles
+ * for scoring.
  */
 object Classify {
 
-  private val Reserved = Seq("_cx_d", "_cx_dn", "_cx_cn", "_cx_dot", "_cx_tc",
-    "_cx_pos", "_cx_s")
+  private val Reserved = Seq("_cx_tc", "_cx_pos", "_cx_s")
 
   private def guard(df: DataFrame): Unit = {
     val clash = df.columns.toSet.intersect(Reserved.toSet)
     require(clash.isEmpty, s"input carries reserved column(s): $clash")
   }
-
-  private val Dec = DecimalType(38, 0)
 
   /** Per-row exact token-count map + squared norm (r17 optimization
     * round): one pass over [[TextMetrics.wsTokenArr]] (char-identical to
@@ -81,11 +74,11 @@ object Classify {
 
   /** The model in driver-local form (r18): per-token postings into the
     * label space plus the per-label norm PRECONVERTED through the exact
-    * same decimal→double path the aggregated plan takes
+    * same decimal→double path the oracle's aggregated SQL takes
     * (sum cnt² in exact integers, BigDecimal.doubleValue — what
     * Decimal(38,0).cast("double") runs — then Math.sqrt). Duplicate
-    * (label, token) rows are kept as separate postings: the scoring
-    * join would have multiplied them too. */
+    * (label, token) rows are kept as separate postings: a scoring
+    * join would multiply them too. */
   private[analysis] final case class LocalModel(
       labels: Array[String],
       cnSqrt: Array[Double],
@@ -118,8 +111,7 @@ object Classify {
     val postings = new java.util.HashMap[String, (Array[Int], Array[Long])](
       byTok.size() * 2)
     byTok.forEach((t, e) => postings.put(t, (e._1.toArray, e._2.toArray)))
-    // the EXACT double the aggregated plan's sqrt(cn.cast("double"))
-    // sees: Decimal(38,0) → double is BigDecimal.doubleValue
+    // the EXACT double an aggregated sqrt(cn.cast("double")) sees: Decimal(38,0) → double is BigDecimal.doubleValue
     val cnSqrt = cn.map(b =>
       Math.sqrt(new java.math.BigDecimal(b).doubleValue()))
     LocalModel(labels, cnSqrt, postings)
@@ -133,7 +125,7 @@ object Classify {
 
   /** Score ONE document's exact token-count map against every centroid
     * of a [[LocalModel]] — the per-row kernel of the driver-local
-    * scoring dual (r18). Bit-identical to the aggregated plan: dots are
+    * scoring (r18). Bit-identical to the oracle's aggregated SQL: dots are
     * exact integer sums (Long with overflow promotion to BigInteger —
     * integer addition is order-free, so any accumulation order yields
     * the aggregated sum), converted to double through the same
@@ -191,17 +183,13 @@ object Classify {
     }.take(k).toSeq
   }
 
-  /** Driver-local scoring dual of [[scoreCountsTopK]] (r18 optimization
-    * round): in the `broadcastModel = true` regime the model was already
-    * shipped whole to every executor as a broadcast join side, so it is
-    * by definition driver-collectable — score each document IN ITS ROW
-    * against all centroids instead. The per-(doc, label) dot
-    * aggregation, the per-class-norm broadcast join and the TopK
-    * regroup — the plan's only corpus-sized exchanges — disappear
-    * (guide §2.4). Input is the per-row (idCol, (counts map, squared
-    * norm)) struct BEFORE explosion; output matches
-    * [[TopK.topLabelsPerGroup]]'s (idCol, label, cosine, rank) exactly
-    * (ClassifySpec pins local == shuffled-path equivalence). */
+  /** Driver-local scoring (r18 optimization round): the model is
+    * collected once and broadcast, and each document is scored IN ITS
+    * ROW against all centroids, so the plan has no join and no
+    * corpus-sized exchange (guide §2.4). Input is the per-row (idCol, (counts map,
+    * squared norm)) struct; output is (idCol, label, cosine, rank) in
+    * [[TopK.topLabelsPerGroup]]'s order (ClassifySpec pins it against
+    * an independent in-memory reference). */
   private[analysis] def scoreTcTopKLocal(tc: DataFrame, model: DataFrame,
                                          idCol: String, k: Int): DataFrame = {
     val lm = collectLocalModel(model)
@@ -216,33 +204,6 @@ object Classify {
       .select(col(idCol), col("_cx_s").getField("_1").as("label"),
         col("_cx_s").getField("_2").as("cosine"),
         (col("_cx_pos") + 1).cast("int").as("rank"))
-  }
-
-  /** The scoring tail shared by [[centroidScoreTopK]] and the fused
-    * tokenizer paths ([[graft.analysis.LangId]]): input is the EXPLODED
-    * per-(doc, token) exact counts with the per-doc squared norm riding
-    * every row — `(idCol, token, _cx_d, _cx_dn)` — so the only
-    * corpus-sized exchange left is the per-(doc, label) dot aggregation
-    * (the norm is max-folded through it: constant within the group). */
-  private[analysis] def scoreCountsTopK(toks: DataFrame, model: DataFrame,
-                                        idCol: String, k: Int,
-                                        broadcastModel: Boolean): DataFrame = {
-    guard(model)
-    val m0 = model.select(col("label"), col("token"), col("cnt"))
-    val m = if (broadcastModel) broadcast(m0) else m0
-    // per-class squared norm — class-count-sized aggregate, broadcast
-    val cn = m0.groupBy("label")
-      .agg(sum(col("cnt").cast(Dec) * col("cnt")).as("_cx_cn"))
-    val dots = toks.join(m, Seq("token"))
-      .groupBy(col(idCol), col("label"))
-      .agg(sum(col("_cx_d").cast(Dec) * col("cnt")).as("_cx_dot"),
-        max(col("_cx_dn")).as("_cx_dn"))
-    val scored = dots
-      .join(broadcast(cn), Seq("label"))
-      .withColumn("cosine", col("_cx_dot").cast("double") /
-        (sqrt(col("_cx_dn").cast(Dec).cast("double")) * sqrt(col("_cx_cn").cast("double"))))
-      .select(col(idCol), col("label"), col("cosine"))
-    TopK.topLabelsPerGroup(scored, idCol, "label", "cosine", k)
   }
 
   /**
@@ -271,9 +232,8 @@ object Classify {
    * back when an explicit "unclassified" marker is wanted.
    */
   def centroidScore(docs: DataFrame, model: DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    broadcastModel: Boolean = true): DataFrame =
-    centroidScoreTopK(docs, model, idCol, textCol, 1, broadcastModel)
+                    idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    centroidScoreTopK(docs, model, idCol, textCol, 1)
       .drop("rank")
 
   /** [[centroidScore]]'s top-k form (r17): the k best classes per
@@ -285,29 +245,12 @@ object Classify {
     * document appear, so a document may yield fewer than k rows. */
   def centroidScoreTopK(docs: DataFrame, model: DataFrame,
                         idCol: String = "doc_id", textCol: String = "text",
-                        k: Int = 1,
-                        broadcastModel: Boolean = true): DataFrame = {
+                        k: Int = 1): DataFrame = {
     guard(docs)
-    // per-row exact counts (see [[tokCountsUdf]]): the former
-    // explode → groupBy(id, token) → groupBy(id) chain shuffled the
-    // whole token stream twice and re-joined the norm; counts and norm
-    // are per-row functions. In the broadcastModel regime (r18) the
-    // SCORING is per-row too ([[scoreTcTopKLocal]] — the model was
-    // already executor-resident, so the dot aggregation and TopK
-    // regroup were pure exchange overhead); `broadcastModel = false`
-    // keeps the shuffled dual for a vocabulary too large to collect —
-    // identical output (spec-pinned), the Decontaminate dual-path
-    // contract.
-    if (broadcastModel) {
-      val tc = docs.select(col(idCol), tokCountsUdf(col(textCol)).as("_cx_tc"))
-      scoreTcTopKLocal(tc, model, idCol, k)
-    } else {
-      val toks = docs
-        .select(col(idCol), tokCountsUdf(col(textCol)).as("_cx_tc"))
-        .select(col(idCol), col("_cx_tc").getField("_2").as("_cx_dn"),
-          explode(col("_cx_tc").getField("_1")).as(Seq("token", "_cx_d")))
-      scoreCountsTopK(toks, model, idCol, k, broadcastModel)
-    }
+    // per-row exact counts (see [[tokCountsUdf]]) scored per row against
+    // the executor-resident model ([[scoreTcTopKLocal]])
+    val tc = docs.select(col(idCol), tokCountsUdf(col(textCol)).as("_cx_tc"))
+    scoreTcTopKLocal(tc, model, idCol, k)
   }
 
   /**
@@ -319,9 +262,8 @@ object Classify {
   def centroidClassify(docs: DataFrame, labeled: DataFrame,
                        idCol: String = "doc_id", textCol: String = "text",
                        labelCol: String = "label",
-                       minCount: Long = 1L,
-                       broadcastModel: Boolean = true): DataFrame =
+                       minCount: Long = 1L): DataFrame =
     centroidScore(docs,
       centroidTrain(labeled, textCol, labelCol, minCount),
-      idCol, textCol, broadcastModel)
+      idCol, textCol)
 }

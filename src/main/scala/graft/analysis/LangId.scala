@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -30,11 +30,8 @@ import org.apache.spark.sql.functions._
  * path — the whole run is one "word" and its char uni/bi/trigrams are
  * exactly the Cavnar-Trenkle profile.
  *
- * Scale shape = [[Classify]]'s: the model is tiny and broadcasts; the
- * corpus-side cost is one explode+groupBy over per-doc grams (the gram
- * stream is ~6× the letter count — the quality-classifier shape, keyed
- * by doc id). `broadcastModel = false` degrades the lookup join,
- * identical output.
+ * Scale shape = [[Classify]]'s: the model is tiny and broadcasts, and
+ * each document is counted and scored in its own row — no exchange.
  */
 object LangId {
 
@@ -275,35 +272,9 @@ object LangId {
     (b.result(), dn)
   }
 
-  /** The exploded (idCol, _cx_dn, token, _cx_d) frame
-    * [[Classify.scoreCountsTopK]] consumes, via [[gramCounts]]. */
-  private def gramToks(docs: DataFrame, idCol: String,
-                       textCol: String): DataFrame = {
-    val g = udf((s: String) => gramCounts(s))
-    docs.select(col(idCol), g(col(textCol)).as("_lid_tc"))
-      .select(col(idCol), col("_lid_tc").getField("_2").as("_cx_dn"),
-        explode(col("_lid_tc").getField("_1")).as(Seq("token", "_cx_d")))
-  }
-
-  /** The built-in model in [[Classify.centroidTrain]]'s (label, token,
-    * cnt) shape — gram tokens, 32 languages, a few thousand rows.
-    * Computed DRIVER-SIDE (r17 optimization round): the model is a pure
-    * function of the in-repo seed prose (a few hundred KB), so the
-    * former per-call explode+groupBy Spark jobs were scheduler latency
-    * for a driver-sized constant. Values are identical — integer counts
-    * of the same gram multiset ([[gramCounts]] ≡ charGramsText +
-    * wsTokens counting, spec-pinned). */
-  def builtinModel(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    TrainSamples.flatMap { case (label, prose) =>
-      gramCounts(prose)._1.iterator.map { case (tok, cnt) => (label, tok, cnt) }
-    }.toDF("label", "token", "cnt")
-  }
-
   /** The built-in centroids in [[Classify.LocalModel]] form — a pure
     * function of the in-repo seed prose, computed once per JVM (r18:
-    * the per-row scoring path's model; identical rows to
-    * [[builtinModel]], spec-pinned). */
+    * the per-row scoring path's model). */
   private lazy val builtinLocal: Classify.LocalModel =
     Classify.buildLocalModel(TrainSamples.flatMap { case (label, prose) =>
       gramCounts(prose)._1.iterator.map { case (t, c) => (label, t, c) }
@@ -318,48 +289,26 @@ object LangId {
     * back to [[TextMetrics.languageId]], so every row labels. Pass a
     * corpus-trained `model` to override the built-in centroids.
     *
-    * Scale shape (r18): with `broadcastModel = true` (default) the
-    * whole classification — gram counting, centroid scoring, argmax,
-    * heuristic fallback — is ONE per-row UDF over a broadcast
-    * [[Classify.LocalModel]]: zero exchanges, zero joins (the model was
-    * executor-resident before as a broadcast join side; the dot
-    * aggregation, TopK regroup and fallback left-join were pure
-    * exchange overhead). `broadcastModel = false` keeps the shuffled
-    * scoring dual + join-back for a vocabulary too large to collect —
-    * identical output (LangIdSpec pins the two paths). */
+    * Scale shape (r18): the whole classification — gram counting,
+    * centroid scoring, argmax, heuristic fallback — is ONE per-row UDF
+    * over a broadcast [[Classify.LocalModel]]: zero exchanges, zero
+    * joins. */
   def classify(docs: DataFrame, idCol: String = "doc_id",
                textCol: String = "text",
-               model: DataFrame = null,
-               broadcastModel: Boolean = true): DataFrame = {
-    // the input is PROJECTED to (idCol, textCol) before any internal
-    // column minting, so a docs frame carrying its own `lang` data
-    // column is fine — only the projected names themselves may not
-    // collide with the minted ones
-    require(idCol != "_lid_grams" && textCol != "_lid_grams" &&
-      idCol != "lang" && idCol != "_lid_hit" && textCol != "_lid_hit",
-      "idCol/textCol may not be named _lid_grams/_lid_hit/lang " +
-        "(reserved by LangId.classify)")
-    val spark = docs.sparkSession
-    if (broadcastModel) {
-      val bc = spark.sparkContext.broadcast(localModelOf(model))
-      val lang = udf { (s: String) =>
-        val gc = gramCounts(s)
-        val top =
-          if (gc == null) Nil else Classify.scoreRowTopK(bc.value, gc._1, gc._2, 1)
-        if (top.isEmpty) TextMetrics.languageId(s) else top.head._1
-      }
-      docs.select(col(idCol), lang(col(textCol)).as("lang"))
-    } else {
-      val m = if (model != null) model else builtinModel(spark)
-      val scored = Classify.scoreCountsTopK(
-          gramToks(docs, idCol, textCol), m, idCol, 1, broadcastModel)
-        .select(col(idCol), col("label").as("_lid_hit"))
-      val heur = udf((s: String) => TextMetrics.languageId(s))
-      docs.select(col(idCol), col(textCol))
-        .join(scored, Seq(idCol), "left")
-        .select(col(idCol),
-          coalesce(col("_lid_hit"), heur(col(textCol))).as("lang"))
+               model: DataFrame = null): DataFrame = {
+    // the input is PROJECTED to (idCol, lang) in one select, so a docs
+    // frame carrying its own `lang` data column is fine — only idCol
+    // may not collide with the minted name
+    require(idCol != "lang",
+      "idCol may not be named lang (reserved by LangId.classify)")
+    val bc = docs.sparkSession.sparkContext.broadcast(localModelOf(model))
+    val lang = udf { (s: String) =>
+      val gc = gramCounts(s)
+      val top =
+        if (gc == null) Nil else Classify.scoreRowTopK(bc.value, gc._1, gc._2, 1)
+      if (top.isEmpty) TextMetrics.languageId(s) else top.head._1
     }
+    docs.select(col(idCol), lang(col(textCol)).as("lang"))
   }
 
   /** [[classify]] with a CONFIDENCE column (r17): the cosine margin
@@ -374,50 +323,24 @@ object LangId {
     * engine-bit-portable like the cosines themselves. */
   def classifyWithConfidence(docs: DataFrame, idCol: String = "doc_id",
                              textCol: String = "text",
-                             model: DataFrame = null,
-                             broadcastModel: Boolean = true): DataFrame = {
-    require(idCol != "_lid_grams" && textCol != "_lid_grams" &&
-      idCol != "lang" && idCol != "confidence" &&
-      idCol != "_lid_hit" && textCol != "_lid_hit" &&
-      idCol != "_lid_c1" && idCol != "_lid_c2" && idCol != "_lid_s",
-      "idCol/textCol may not be named _lid_grams/_lid_hit/_lid_c1/" +
-        "_lid_c2/_lid_s/lang/confidence (reserved by " +
+                             model: DataFrame = null): DataFrame = {
+    require(idCol != "lang" && idCol != "confidence" && idCol != "_lid_s",
+      "idCol may not be named _lid_s/lang/confidence (reserved by " +
         "classifyWithConfidence)")
-    val spark = docs.sparkSession
-    if (broadcastModel) {
-      // one per-row UDF, zero exchanges (the classify note applies);
-      // margin = the SAME one double subtraction of the two
-      // correctly-rounded cosines the join form computed
-      val bc = spark.sparkContext.broadcast(localModelOf(model))
-      val scored = udf { (s: String) =>
-        val gc = gramCounts(s)
-        val top =
-          if (gc == null) Nil else Classify.scoreRowTopK(bc.value, gc._1, gc._2, 2)
-        if (top.isEmpty) (TextMetrics.languageId(s), None: Option[Double])
-        else (top.head._1,
-          Some(top.head._2 - (if (top.size > 1) top(1)._2 else 0.0)))
-      }
-      docs.select(col(idCol), scored(col(textCol)).as("_lid_s"))
-        .select(col(idCol), col("_lid_s").getField("_1").as("lang"),
-          col("_lid_s").getField("_2").as("confidence"))
-    } else {
-      val m = if (model != null) model else builtinModel(spark)
-      val top2 = Classify.scoreCountsTopK(
-        gramToks(docs, idCol, textCol), m, idCol, 2, broadcastModel)
-      val best = top2.filter(col("rank") === 1)
-        .select(col(idCol), col("label").as("_lid_hit"),
-          col("cosine").as("_lid_c1"))
-      val second = top2.filter(col("rank") === 2)
-        .select(col(idCol), col("cosine").as("_lid_c2"))
-      val heur = udf((s: String) => TextMetrics.languageId(s))
-      docs.select(col(idCol), col(textCol))
-        .join(best, Seq(idCol), "left")
-        .join(second, Seq(idCol), "left")
-        .select(col(idCol),
-          coalesce(col("_lid_hit"), heur(col(textCol))).as("lang"),
-          when(col("_lid_hit").isNotNull,
-            col("_lid_c1") - coalesce(col("_lid_c2"), lit(0.0)))
-            .as("confidence"))
+    // one per-row UDF, zero exchanges (the classify note applies);
+    // margin = one double subtraction of the two correctly-rounded
+    // cosines
+    val bc = docs.sparkSession.sparkContext.broadcast(localModelOf(model))
+    val scored = udf { (s: String) =>
+      val gc = gramCounts(s)
+      val top =
+        if (gc == null) Nil else Classify.scoreRowTopK(bc.value, gc._1, gc._2, 2)
+      if (top.isEmpty) (TextMetrics.languageId(s), None: Option[Double])
+      else (top.head._1,
+        Some(top.head._2 - (if (top.size > 1) top(1)._2 else 0.0)))
     }
+    docs.select(col(idCol), scored(col(textCol)).as("_lid_s"))
+      .select(col(idCol), col("_lid_s").getField("_1").as("lang"),
+        col("_lid_s").getField("_2").as("confidence"))
   }
 }

@@ -32,12 +32,8 @@ import org.apache.spark.sql.functions._
  * way) the model is vocabulary-sized and BROADCASTS — the corpus-sized
  * pair stream never shuffles for the lookup, and the only corpus-wide
  * exchange is the per-document re-aggregation keyed by doc id (uniform).
- * For a model too large to broadcast, `broadcastModel = false` degrades
- * both lookups to hash-partitioned shuffle joins — identical output (the
- * Decontaminate dual-path contract); the stop-word-heavy join keys skew
- * the PAIR side there, which AQE skew-join splitting handles because the
- * count side is one row per key. N rides a broadcast one-row aggregate
- * (no driver action — the tfidf precedent).
+ * N rides a broadcast one-row aggregate (no driver action — the tfidf
+ * precedent).
  */
 object NgramLm {
 
@@ -99,18 +95,16 @@ object NgramLm {
    */
   def scoreDocs(docs: DataFrame, uni: DataFrame, bi: DataFrame,
                 total: DataFrame, textCol: String = "text",
-                idCol: String = "doc_id",
-                broadcastModel: Boolean = true): DataFrame = {
+                idCol: String = "doc_id"): DataFrame = {
     guard(docs)
-    def side(df: DataFrame): DataFrame = if (broadcastModel) broadcast(df) else df
 
     val pairs = docs
       .select(col(idCol), explode(pairsUdf(col(textCol))).as("_lm_p"))
       .select(col(idCol), col("_lm_p._1").as("_lm_w1"), col("_lm_p._2").as("_lm_w2"))
 
-    val biK  = side(bi.select(col("bigram").as("_lm_bg"), col("c").as("_lm_cb")))
-    val uni1 = side(uni.select(col("token").as("_lm_w1k"), col("c").as("_lm_cu1")))
-    val uni2 = side(uni.select(col("token").as("_lm_w2k"), col("c").as("_lm_cu2")))
+    val biK  = broadcast(bi.select(col("bigram").as("_lm_bg"), col("c").as("_lm_cb")))
+    val uni1 = broadcast(uni.select(col("token").as("_lm_w1k"), col("c").as("_lm_cu1")))
+    val uni2 = broadcast(uni.select(col("token").as("_lm_w2k"), col("c").as("_lm_cu2")))
     val n1   = broadcast(total.select(col(total.columns.head).as("_lm_n_total")))
 
     val joined = pairs
@@ -315,14 +309,13 @@ object NgramLm {
    * sums of installment deltas, minCount prunes the SUMMED totals, and
    * `asOfInstallment` pins scoring to the model as of that installment
    * (partition-pruned `<=` reads; valid between compactions — the shared
-   * snapshot contract). The summed model then broadcasts (or shuffles,
-   * `broadcastModel = false`) exactly as in [[scoreDocs]].
+   * snapshot contract). The summed model then broadcasts exactly as in
+   * [[scoreDocs]].
    */
   def lmScoreIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      docs: DataFrame, textCol: String = "text",
                      idCol: String = "doc_id", minCount: Long = 1L,
-                     asOfInstallment: Int = Int.MaxValue,
-                     broadcastModel: Boolean = true): DataFrame = {
+                     asOfInstallment: Int = Int.MaxValue): DataFrame = {
     def snapshot(df: DataFrame): DataFrame =
       if (asOfInstallment == Int.MaxValue) df
       else df.filter(col("installment") <= asOfInstallment)
@@ -334,7 +327,7 @@ object NgramLm {
     // everything through the zero backoff, not NPE
     val tot = snapshot(spark.read.parquet(s"$path/tot"))
       .agg(coalesce(sum("n_total"), lit(0L)).cast("long").as("n_total"))
-    scoreDocs(docs, uni, bi, tot, textCol, idCol, broadcastModel)
+    scoreDocs(docs, uni, bi, tot, textCol, idCol)
   }
 
   /** Self-trained convenience: score `docs` against its own statistics
@@ -342,11 +335,10 @@ object NgramLm {
     * calibrated against; production use trains on a held-out high-quality
     * corpus and passes the tables explicitly). */
   def selfScore(docs: DataFrame, textCol: String = "text",
-                idCol: String = "doc_id", minCount: Long = 1L,
-                broadcastModel: Boolean = true): DataFrame =
+                idCol: String = "doc_id", minCount: Long = 1L): DataFrame =
     scoreDocs(docs, unigramCounts(docs, textCol, minCount),
       bigramCounts(docs, textCol, minCount), totalTokens(docs, textCol),
-      textCol, idCol, broadcastModel)
+      textCol, idCol)
 
   // ------------------------------------------------- importance weighting
 
@@ -385,14 +377,13 @@ object NgramLm {
                         targetTot: DataFrame,
                         rawUni: DataFrame, rawBi: DataFrame,
                         rawTot: DataFrame,
-                        textCol: String = "text", idCol: String = "doc_id",
-                        broadcastModel: Boolean = true): DataFrame = {
+                        textCol: String = "text",
+                        idCol: String = "doc_id"): DataFrame = {
     guard(docs)
-    def side(df: DataFrame): DataFrame = if (broadcastModel) broadcast(df) else df
     def model(uni: DataFrame, bi: DataFrame, tot: DataFrame, sfx: String) = (
-      side(bi.select(col("bigram").as(s"_lm_bg$sfx"), col("c").as(s"_lm_cb$sfx"))),
-      side(uni.select(col("token").as(s"_lm_w1k$sfx"), col("c").as(s"_lm_cu1$sfx"))),
-      side(uni.select(col("token").as(s"_lm_w2k$sfx"), col("c").as(s"_lm_cu2$sfx"))),
+      broadcast(bi.select(col("bigram").as(s"_lm_bg$sfx"), col("c").as(s"_lm_cb$sfx"))),
+      broadcast(uni.select(col("token").as(s"_lm_w1k$sfx"), col("c").as(s"_lm_cu1$sfx"))),
+      broadcast(uni.select(col("token").as(s"_lm_w2k$sfx"), col("c").as(s"_lm_cu2$sfx"))),
       broadcast(tot.select(col(tot.columns.head).as(s"_lm_nt$sfx"))))
 
     val pairs = docs
@@ -441,8 +432,7 @@ object NgramLm {
    */
   def dsirSelect(docs: DataFrame, targetDocs: DataFrame, n: Int,
                  textCol: String = "text", idCol: String = "doc_id",
-                 minCount: Long = 1L,
-                 broadcastModel: Boolean = true): DataFrame = {
+                 minCount: Long = 1L): DataFrame = {
     val w = importanceWeights(docs,
       unigramCounts(targetDocs, textCol, minCount),
       bigramCounts(targetDocs, textCol, minCount),
@@ -450,7 +440,7 @@ object NgramLm {
       unigramCounts(docs, textCol, minCount),
       bigramCounts(docs, textCol, minCount),
       totalTokens(docs, textCol),
-      textCol, idCol, broadcastModel)
+      textCol, idCol)
     // |importance| ≤ Scale = 1e6 ≪ 2^53: the double cast for TopK is exact
     graft.functions.TopK.topKPerGroup(
         w.select(lit(0).as("_lm_g"), col(idCol),

@@ -784,10 +784,10 @@ object Dedup {
    *
    * The broadcast contract assumes a batch small enough to ship to every
    * executor (the daily-increment shape). For a batch that is itself
-   * corpus-sized, set `broadcastBatch = false`: every probe join degrades
-   * to a hash-partitioned shuffle on both sides — identical output,
-   * no driver OOM (same dual path as
-   * [[graft.pipeline.Decontaminate.contaminationHits]]).
+   * corpus-sized, `broadcastBatch = false` degrades every probe join to
+   * a hash-partitioned shuffle on both sides — identical output, no
+   * driver OOM. [[graft.pipeline.Crawl.ingestBatch]] picks the regime
+   * from the batch's measured text bytes.
    *
    * Recall contract: candidates are LSH-generated, so a true pair at
    * Jaccard j is found with probability 1-(1-j^r)^b (r rows/band, b
@@ -1000,18 +1000,15 @@ object Dedup {
    * and joins the BROADCAST batch chunks on (chunk_idx, chunk) — the
    * corpus-sized table is never shuffled by a probe (the probe-path
    * invariant); the only exchange is the candidate-pair distinct,
-   * bounded by real chunk collisions. `broadcastBatch = false` degrades
-   * both sides to a hash join for corpus-sized batches (identical
-   * output). Tombstoned rows never pair (takedown semantics);
-   * `asOfInstallment` pins the stored side (valid between compactions).
+   * bounded by real chunk collisions. Tombstoned rows never pair
+   * (takedown semantics); `asOfInstallment` pins the stored side (valid
+   * between compactions).
    */
   def hammingIndexProbe(spark: org.apache.spark.sql.SparkSession, path: String,
                         batch: DataFrame, idCol: String, hashCol: String,
                         maxHamming: Int = 3,
-                        broadcastBatch: Boolean = true,
                         asOfInstallment: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3, "chunk trick is exact only for hamming <= 3 with 4 chunks")
-    def bb(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
     def chunks(h: Column): Column = array((0 until 4).map(i =>
       shiftrightunsigned(h, i * 16).bitwiseAND(lit(0xFFFFL))): _*)
     val stored0 = spark.read.parquet(s"$path/hashes")
@@ -1024,7 +1021,7 @@ object Dedup {
       .select(col(idCol).as("new_id"), guardedHash(hashCol).as("_hx_bh"))
       .select(col("new_id"), col("_hx_bh"),
         posexplode(chunks(col("_hx_bh"))).as(Seq("chunk_idx", "chunk")))
-    stored.join(bb(bchunked), Seq("chunk_idx", "chunk"))
+    stored.join(broadcast(bchunked), Seq("chunk_idx", "chunk"))
       .filter(col("corpus_id") =!= col("new_id"))
       .withColumn("hamming", bit_count(col("_hx_sh").bitwiseXOR(col("_hx_bh"))))
       .filter(col("hamming") <= maxHamming)
@@ -1051,7 +1048,7 @@ object Dedup {
     require(!batch.columns.exists(_.startsWith("_hx_")),
       "hammingIndexPrune reserves internal column names starting with _hx_")
     val stored = hammingIndexProbe(spark, path, batch, idCol, hashCol,
-      maxHamming, broadcastBatch = true, asOfInstallment)
+      maxHamming, asOfInstallment)
       .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
       .localCheckpoint()
     val internal = hammingNearDuplicates64(
@@ -1268,9 +1265,7 @@ object Dedup {
    * from the BATCH side before the main join, so they can never fan out;
    * the guard uses the STORED df (the one-shot operator guards on the
    * combined corpus df — at probe time the stored corpus is the
-   * boilerplate population that matters). `broadcastBatch = false`
-   * degrades every probe join to a hash-partitioned shuffle for
-   * corpus-sized batches — identical output. Tombstoned videos never pair
+   * boilerplate population that matters). Tombstoned videos never pair
    * (takedown semantics); `asOfInstallment` pins the stored side
    * (partition-pruned, valid between compactions). Exact at the threshold
    * for surviving hashes.
@@ -1280,9 +1275,7 @@ object Dedup {
                             idCol: String = "id", hashCol: String = "ahash",
                             threshold: Double = 0.9,
                             maxDocFreq: Int = 1000,
-                            broadcastBatch: Boolean = true,
                             asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    def bb(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
     def snapshot(df: DataFrame): DataFrame =
       if (asOfInstallment == Int.MaxValue) df
       else df.filter(col("installment") <= asOfInstallment)
@@ -1295,17 +1288,17 @@ object Dedup {
     // touched list, the minhash hot-bucket shape
     val touched = bSet.select("h").distinct()
     val hot = snapshot(spark.read.parquet(s"$path/dfs"))
-      .join(bb(touched), Seq("h"))
+      .join(broadcast(touched), Seq("h"))
       .groupBy("h").agg(sum("c").as("_vp_df"))
       .filter(col("_vp_df") > maxDocFreq)
       .select("h")
-    val keptB = bSet.join(bb(hot), Seq("h"), "left_anti")
+    val keptB = bSet.join(broadcast(hot), Seq("h"), "left_anti")
     val stored = graft.store.Tombstones.filter(spark, path,
       snapshot(spark.read.parquet(s"$path/frames")), "id")
     // matched rows are batch-bounded; the distinct collapses repeated
     // frames (a hash can recur across frame_idx) to set semantics
     val shared = stored
-      .join(bb(keptB), Seq("h"))
+      .join(broadcast(keptB), Seq("h"))
       .select(col("id").as("corpus_id"), col("new_id"), col("h"))
       .distinct()
       .groupBy("corpus_id", "new_id").agg(count(lit(1)).as("shared"))
@@ -1313,8 +1306,8 @@ object Dedup {
     // scan — sizes streams map-side like frames, never shuffles
     val sizes = snapshot(spark.read.parquet(s"$path/sizes"))
     sizes.select(col("id").as("corpus_id"), col("n").as("_vp_na"))
-      .join(bb(shared), Seq("corpus_id"))
-      .join(bb(bSizes), Seq("new_id"))
+      .join(broadcast(shared), Seq("corpus_id"))
+      .join(broadcast(bSizes), Seq("new_id"))
       .withColumn("containment", col("shared").cast("double") /
         least(col("_vp_na"), col("_vp_nb")))
       .filter(col("containment") >= threshold)
@@ -1376,7 +1369,7 @@ object Dedup {
     require(!batch.columns.exists(_.startsWith("_vc_")),
       "videoIndexPrune reserves internal column names starting with _vc_")
     val stored = videoContainmentProbe(spark, path, batch, idCol, hashCol,
-      threshold, maxDocFreq, broadcastBatch = true, asOfInstallment)
+      threshold, maxDocFreq, asOfInstallment)
       .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
       .localCheckpoint()
     val internal = containmentPairsFromSets(

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /**
- * Scalar vector-math kernels (pure Scala, no Spark deps) plus their Spark
- * Column/UDF surface.
+ * Scalar vector-math kernels (pure Scala, no Spark deps) plus their SQL
+ * UDF registrations.
  *
  * Capability map (see SURVEY.md §2.5, reference kreeben/resin):
  *  - cosine          ≙ VectorOperations.CosAngle (VectorOperations.cs:305-314)
@@ -149,30 +148,11 @@ object VectorOps {
     if (normSig == 0.0) 0.0 else (sum * u) / normSig
   }
 
-  /** ≙ VectorOperations.AsString (VectorOperations.cs:450-472): sparse
-    * vector values reinterpreted as chars — a debug aid for eyeballing
-    * one-hot/count vectors, kept for surface parity. */
-  def asString(values: Array[Double]): String =
-    new String(values.map(v => v.toChar))
-
   // ---------------------------------------------------------------- Spark API
 
-  // NOTE: the former HOF cosine/dot Column helpers were removed — all
-  // scoring goes through the codegen'd Catalyst expression
+  // Column-level scoring goes through the codegen'd Catalyst expression
   // (graft.functions.expressions.CosineSimilarity.cosineNative), which
-  // fuses the three reductions into one loop. norm/normalize below have no
-  // internal callers; they stay as the library's public array-normalization
-  // surface (unit-sphere preprocessing for cosine⇔euclidean LSH).
-
-  /** L2 norm of an array column. */
-  def normCol(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
-
-  /** L2-normalize an array<float/double> column to unit length. */
-  def normalizeCol(a: Column): Column = {
-    val n = normCol(a)
-    when(n === 0.0, a).otherwise(transform(a, x => x / n))
-  }
+  // fuses the three reductions into one loop.
 
   /** Register the scalar kernels as SQL-callable UDFs. */
   def registerUdfs(spark: SparkSession): Unit = {

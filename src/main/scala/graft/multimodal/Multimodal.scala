@@ -183,10 +183,17 @@ object Multimodal {
     if (hdrSize < 40 || planes != 1 || bpp != 24 || comp != 0 ||
       w <= 0 || hRaw == 0) return None
     val topDown = hRaw < 0
-    val h = math.abs(hRaw)
-    val stride = (w * 3 + 3) / 4 * 4
-    if (dataOff < 54 || dataOff.toLong + stride.toLong * h > bytes.length)
-      return None
+    // Long arithmetic: w·3 wraps an Int for hostile widths, and
+    // |Int.MinValue| is only representable as a Long
+    val hL = math.abs(hRaw.toLong)
+    val strideL = (w.toLong * 3 + 3) / 4 * 4
+    // the pixel rows must fit in the input; since w·h·3 ≤ stride·h that
+    // also bounds the output by the input length. The stride is checked
+    // first so stride·h cannot overflow a Long.
+    if (dataOff < 54 || strideL > bytes.length ||
+      dataOff.toLong + strideL * hL > bytes.length) return None
+    val h = hL.toInt
+    val stride = strideL.toInt
     val out = new Array[Byte](w * h * 3)
     var y = 0
     while (y < h) {

@@ -26,11 +26,9 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape: the edge set is materialized ONCE (dedup + checkpoint) and
  * then only ever read map-side — each round joins the node-sized
- * (rank div degree) table into the edge scan (BROADCAST by default: hosts
- * ≪ pages; `broadcastRanks = false` degrades to a hash-partitioned join
- * for node sets past broadcast size, identical output — the Decontaminate
- * dual-path contract) and aggregates shares by destination with map-side
- * partial combine. Rounds checkpoint and eagerly release their
+ * (rank div degree) table into the edge scan (BROADCAST: hosts ≪ pages)
+ * and aggregates shares by destination with map-side partial combine.
+ * Rounds checkpoint and eagerly release their
  * predecessor (the connectedComponents lineage discipline); call
  * [[graft.dedup.Dedup.release]] on the result when its blocks should be
  * freed.
@@ -47,16 +45,12 @@ object PageRank {
 
   def pageRank(edges0: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3,
-               alphaNum: Long = 17L, alphaDen: Long = 20L,
-               broadcastRanks: Boolean = true): DataFrame = {
+               alphaNum: Long = 17L, alphaDen: Long = 20L): DataFrame = {
     require(iters >= 0, s"iters must be non-negative, got $iters")
     require(alphaNum > 0 && alphaNum < alphaDen,
       s"damping must satisfy 0 < alphaNum < alphaDen, got $alphaNum/$alphaDen")
     val clash = edges0.columns.toSet.intersect(Reserved.toSet)
     require(clash.isEmpty, s"input carries reserved column(s): $clash")
-
-    def side(df: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(df) else df
 
     // dedup + materialize the edge list once: the iteration scans it every
     // round, and re-running the distinct() shuffle per round would cost
@@ -89,11 +83,11 @@ object PageRank {
     while (round < iters) {
       val shares = ranks.join(deg, Seq("id"))
         .select(col("id").as("_pr_src"), expr("_pr_r div _pr_d").as("_pr_s"))
-      val sums = edges.join(side(shares), Seq("_pr_src"))
+      val sums = edges.join(broadcast(shares), Seq("_pr_src"))
         .groupBy(col("_pr_dst").as("id"))
         .agg(sum("_pr_s").as("_pr_s"))
       val next = nodes.crossJoin(broadcast(nTbl))
-        .join(side(sums), Seq("id"), "left")
+        .join(broadcast(sums), Seq("id"), "left")
         .select(col("id"),
           (baseExpr + expr(s"(cast($alphaNum as bigint) *" +
             s" coalesce(_pr_s, cast(0 as bigint)))" +

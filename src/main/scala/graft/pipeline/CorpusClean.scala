@@ -73,18 +73,14 @@ object CorpusClean {
    * mathematically bounded by total_units / maxDocFreq and broadcasts
    * into the flagging join, so the corpus side never shuffles for the
    * drop decision; the reassembly groupBy is the one corpus-wide
-   * exchange, keyed by document id (uniform). For extreme corpora where
-   * even the bounded hot set exceeds broadcast limits, set
-   * `broadcastHot = false` — both joins degrade to hash-partitioned
-   * shuffles, identical output (the Decontaminate dual-path contract).
+   * exchange, keyed by document id (uniform).
    *
    * Position values must be unique per document (they order the
    * reassembly); unit strings must not contain `sep` if a later re-split
    * must round-trip.
    */
   def dedupUnits(units: DataFrame, idCol: String, posCol: String,
-                 unitCol: String, maxDocFreq: Int, sep: String = "\n",
-                 broadcastHot: Boolean = true): DataFrame = {
+                 unitCol: String, maxDocFreq: Int, sep: String = "\n"): DataFrame = {
     require(maxDocFreq >= 1, "maxDocFreq must be at least 1")
     Seq("_uh", "_hot").foreach { r =>
       require(!units.columns.contains(r),
@@ -96,8 +92,7 @@ object CorpusClean {
       .agg(count_distinct(col(idCol)).as("_df"))
       .filter(col("_df") > maxDocFreq)
       .select(col("_uh"), lit(1).as("_hot"))
-    val hotSide = if (broadcastHot) broadcast(hot) else hot
-    hashed.join(hotSide, Seq("_uh"), "left")
+    hashed.join(broadcast(hot), Seq("_uh"), "left")
       .groupBy(col(idCol))
       .agg(
         reassembleUdf(sep)(sort_array(collect_list(

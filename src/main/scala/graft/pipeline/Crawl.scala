@@ -685,23 +685,12 @@ object Crawl {
     * by it. A fetcher honoring crawl-delay but not Retry-After still
     * hammers a 429/503 host.
     *
-    * `broadcastPacing = false` (r16) routes the delays/retryAfter
-    * joins through the host-keyed shuffle instead of a pinned
-    * broadcast — identical output (the Decontaminate dual-path
-    * contract). The tables are rule-carrying/throttling hosts only, so
-    * the broadcast default is right in practice, but a pacing table
-    * derived from an all-hosts source must not OOM the executors just
-    * because the operator pinned the hint.
-    *
     * Output: (host, url, n_refs, round[, delay_s[, retry_after_s],
     * not_before_s]). */
   def schedule(frontier: DataFrame, maxRounds: Int,
                urlCol: String = "url", refsCol: String = "n_refs",
                delays: DataFrame = null,
-               retryAfter: DataFrame = null,
-               broadcastPacing: Boolean = true): DataFrame = {
-    def side(df: DataFrame): DataFrame =
-      if (broadcastPacing) broadcast(df) else df
+               retryAfter: DataFrame = null): DataFrame = {
     val base = graft.functions.TopK.topLabelsPerGroup(
         frontier.withColumn("host", UrlFilter.hostOf(col(urlCol)))
           .filter(col("host").isNotNull),
@@ -713,13 +702,13 @@ object Crawl {
     val paced =
       if (delays == null) base.withColumn("delay_s", lit(0.0))
       else base
-        .join(side(delays.select(col("host"),
+        .join(broadcast(delays.select(col("host"),
           col("delay_s").cast("double").as("delay_s"))), Seq("host"), "left")
         .na.fill(0.0, Seq("delay_s"))
     val withRetry =
       if (retryAfter == null) paced
       else paced
-        .join(side(retryAfter.select(col("host"),
+        .join(broadcast(retryAfter.select(col("host"),
           col("retry_after_s").cast("double").as("retry_after_s"))),
           Seq("host"), "left")
         .na.fill(0.0, Seq("retry_after_s"))
@@ -1095,17 +1084,13 @@ object Crawl {
     * normalized img_url, so the keys agree by construction) and attach
     * to every (page, img_url, text) pair referencing them, ready for
     * the multimodal decode/phash chain. The batch of fetched records
-    * broadcasts into the pairs side by default (pairs ledger = the big
-    * side, never shuffles); pass `broadcastRecords = false` for a bulk
-    * backfill whose image bytes exceed broadcast budgets — identical
-    * output through a shuffled join. */
-  def imageBytesJoin(pairs: DataFrame, records: DataFrame,
-                     broadcastRecords: Boolean = true): DataFrame = {
+    * broadcasts into the pairs side (pairs ledger = the big side,
+    * never shuffles). */
+  def imageBytesJoin(pairs: DataFrame, records: DataFrame): DataFrame = {
     val resp = records
       .filter(col("warc_type") === "response" && col("http_status") === 200)
       .select(col("target_uri").cast("string").as("img_url"), col("body"))
-    pairs.join(if (broadcastRecords) broadcast(resp) else resp,
-      Seq("img_url"))
+    pairs.join(broadcast(resp), Seq("img_url"))
   }
 
   /** Join fetched enclosure payloads back to their harvested
@@ -1114,15 +1099,12 @@ object Crawl {
     * fetcher fetched the normalized media_url, so the keys agree by
     * construction) and attach to every (feed, media_url, caption)
     * pair referencing them, ready for the audio/video decode chain.
-    * Records broadcast into the pairs side by default; pass
-    * `broadcastRecords = false` for bulk backfills. */
-  def mediaBytesJoin(pairs: DataFrame, records: DataFrame,
-                     broadcastRecords: Boolean = true): DataFrame = {
+    * Records broadcast into the pairs side. */
+  def mediaBytesJoin(pairs: DataFrame, records: DataFrame): DataFrame = {
     val resp = records
       .filter(col("warc_type") === "response" && col("http_status") === 200)
       .select(col("target_uri").cast("string").as("media_url"), col("body"))
-    pairs.join(if (broadcastRecords) broadcast(resp) else resp,
-      Seq("media_url"))
+    pairs.join(broadcast(resp), Seq("media_url"))
   }
 
   /** CLIP-style pair filtering (r17) — LAION step 3: once the fetched
@@ -1179,8 +1161,7 @@ object Crawl {
     * images (bytes never shuffle — 8 B hashes do); the pair join is
     * the banded chunk join; CC runs on the near-dup pair list
     * (≪ images); the url→canonical map is dup-images-sized and
-    * broadcasts into the pairs side by default (`broadcastMap =
-    * false` for the shuffled dual when the dup set itself is huge).
+    * broadcasts into the pairs side.
     * The exact-duplicate fold is one distinct over the re-keyed pairs
     * — strings only, the same cost class as doc_exact_dedup; pass
     * `foldExact = false` to keep multiplicity. */
@@ -1188,7 +1169,6 @@ object Crawl {
                          maxHamming: Int = 3,
                          imgKey: String = "img_url",
                          payloadCol: String = "body",
-                         broadcastMap: Boolean = true,
                          foldExact: Boolean = true): DataFrame = {
     require(!pairs.columns.contains("_ipd_canon"),
       "column name _ipd_canon is reserved by dedupePairsByImage")
@@ -1197,8 +1177,7 @@ object Crawl {
       // refetched duplicates of one url hash identically; drop them
       // on the 8-byte rows, never on the bytes
       .select(col("key"), col("ahash")).distinct()
-    rekeyPairsByCanon(pairs, hashes, imgKey, maxHamming, broadcastMap,
-      foldExact)
+    rekeyPairsByCanon(pairs, hashes, imgKey, maxHamming, foldExact)
   }
 
   /** Perceptual audio dedup over an enclosure-pairs corpus (r17) — the
@@ -1217,15 +1196,13 @@ object Crawl {
                          maxHamming: Int = 3,
                          mediaKey: String = "media_url",
                          payloadCol: String = "body",
-                         broadcastMap: Boolean = true,
                          foldExact: Boolean = true): DataFrame = {
     require(!pairs.columns.contains("_ipd_canon"),
       "column name _ipd_canon is reserved by dedupePairsByAudio")
     val hashes = graft.multimodal.Multimodal
       .audioHashesByKey(media, mediaKey, payloadCol).toDF()
       .select(col("key"), col("ahash64").as("ahash")).distinct()
-    rekeyPairsByCanon(pairs, hashes, mediaKey, maxHamming, broadcastMap,
-      foldExact)
+    rekeyPairsByCanon(pairs, hashes, mediaKey, maxHamming, foldExact)
   }
 
   /** The shared mirror-collapse tail of [[dedupePairsByImage]] /
@@ -1234,11 +1211,10 @@ object Crawl {
     * lexicographic-min canonical, optionally fold exact duplicates. */
   private def rekeyPairsByCanon(pairs: DataFrame, hashes: DataFrame,
                                 keyCol: String, maxHamming: Int,
-                                broadcastMap: Boolean,
                                 foldExact: Boolean): DataFrame = {
     val nearDups = graft.dedup.Dedup.hammingNearDuplicates64(
       hashes, "key", "ahash", maxHamming)
-    rekeyPairsFromEdges(pairs, nearDups, keyCol, broadcastMap, foldExact)
+    rekeyPairsFromEdges(pairs, nearDups, keyCol, foldExact)
   }
 
   /** Video frame-set dedup over an enclosure-pairs corpus (r17) — the
@@ -1259,7 +1235,6 @@ object Crawl {
                          maxDocFreq: Int = 1000,
                          mediaKey: String = "media_url",
                          payloadCol: String = "body",
-                         broadcastMap: Boolean = true,
                          foldExact: Boolean = true): DataFrame = {
     require(!pairs.columns.contains("_ipd_canon"),
       "column name _ipd_canon is reserved by dedupePairsByVideo")
@@ -1268,7 +1243,7 @@ object Crawl {
       .select(col("key").as("id"), col("ahash").as("h"))
     val edges = graft.dedup.Dedup.containmentPairsFromSets(
       sets, threshold, maxDocFreq)
-    rekeyPairsFromEdges(pairs, edges, mediaKey, broadcastMap, foldExact)
+    rekeyPairsFromEdges(pairs, edges, mediaKey, foldExact)
   }
 
   /** The shared re-key tail: cluster the duplicate-pair edge list
@@ -1276,14 +1251,12 @@ object Crawl {
     * canonical, re-key the pairs, optionally fold exact duplicates. */
   private def rekeyPairsFromEdges(pairs: DataFrame, edges: DataFrame,
                                   keyCol: String,
-                                  broadcastMap: Boolean,
                                   foldExact: Boolean): DataFrame = {
     val labels = graft.dedup.Dedup.connectedComponents(
       edges, "id_a", "id_b")
     val mapping = labels.filter(col("id") =!= col("rep"))
       .select(col("id").as(keyCol), col("rep").as("_ipd_canon"))
-    val mapSide = if (broadcastMap) broadcast(mapping) else mapping
-    val rekeyed = pairs.join(mapSide, Seq(keyCol), "left")
+    val rekeyed = pairs.join(broadcast(mapping), Seq(keyCol), "left")
       .withColumn(keyCol, coalesce(col("_ipd_canon"), col(keyCol)))
       .drop("_ipd_canon")
       .select(pairs.columns.map(col): _*) // the join fronts its key
@@ -1483,32 +1456,22 @@ object Crawl {
     * authority). Output: schedule's columns + `host_rank_fp` +
     * `priority`; a fetcher consumes in priority order.
     *
-    * Scale: the rank table is hosts-sized (broadcast by default —
-    * millions of hosts ≈ tens of MB). `broadcastRanks = false` (r16:
-    * it now governs the FINAL schedule⋈ranks join too, not just
-    * PageRank's internal joins — the r15 VERDICT finding: at the
-    * 100 TB design point the rank table is EVERY host with an inlink,
-    * ~10⁸ rows, a multi-GB pinned broadcast) degrades both to
-    * host-keyed shuffles — identical output, no executor OOM. The
-    * schedule itself is ≤ maxRounds·hosts rows, so the final range
-    * rank is frontier-bounded. `broadcastPacing` forwards to
-    * [[schedule]]. */
+    * Scale: the rank table is hosts-sized and broadcasts (millions of
+    * hosts ≈ tens of MB). The schedule itself is ≤ maxRounds·hosts
+    * rows, so the final range rank is frontier-bounded. */
   def scheduleRanked(frontier: DataFrame, hostEdges: DataFrame,
                      maxRounds: Int, iters: Int = 3,
                      urlCol: String = "url", refsCol: String = "n_refs",
                      delays: DataFrame = null,
-                     retryAfter: DataFrame = null,
-                     broadcastRanks: Boolean = true,
-                     broadcastPacing: Boolean = true): DataFrame = {
+                     retryAfter: DataFrame = null): DataFrame = {
     require(!frontier.columns.exists(Seq("_sr_nr", "_sr_nn").contains),
       "column names _sr_nr/_sr_nn are reserved by scheduleRanked")
     val ranks = graft.operators.PageRank.pageRank(hostEdges,
-        "src_host", "dst_host", iters, broadcastRanks = broadcastRanks)
+        "src_host", "dst_host", iters)
       .select(col("id").as("host"), col("rank_fp").as("host_rank_fp"))
-    val ranksSide = if (broadcastRanks) broadcast(ranks) else ranks
     val base = schedule(frontier, maxRounds, urlCol, refsCol, delays,
-      retryAfter, broadcastPacing)
-    val joined = base.join(ranksSide, Seq("host"), "left")
+      retryAfter)
+    val joined = base.join(broadcast(ranks), Seq("host"), "left")
       .na.fill(0L, Seq("host_rank_fp"))
       .withColumn("_sr_nr", negate(col("host_rank_fp")))
       .withColumn("_sr_nn", negate(col(refsCol)))

@@ -16,9 +16,8 @@ import graft.dedup.Dedup
  *    documents, not billions), so its distinct n-gram set is BROADCAST —
  *    the 100 TB training side streams through a broadcast semi-join with
  *    no shuffle at all; contamination checking is a map-side filter.
- *  - For pathologically large benchmark sets, `broadcastBenchmark = false`
- *    falls back to a shuffled left-semi join on the gram (both sides
- *    hash-partition cleanly).
+ *    Benchmark sets too large to broadcast go through
+ *    [[decontaminateBloom]].
  *  - Shingling reuses [[Dedup.shinglesUdf]] (distinct word n-grams over the
  *    canonical normalization, one tight pass per row) so dedup and
  *    decontamination agree on what an n-gram is.
@@ -47,10 +46,8 @@ object Decontaminate {
    * with `n_hits` = number of distinct shared n-grams.
    */
   def contaminationHits(docs: DataFrame, idCol: String, textCol: String,
-                        benchmark: DataFrame, n: Int,
-                        broadcastBenchmark: Boolean = true): DataFrame = {
-    val grams0 = benchmarkNgrams(benchmark, textCol, n)
-    val grams = if (broadcastBenchmark) broadcast(grams0) else grams0
+                        benchmark: DataFrame, n: Int): DataFrame = {
+    val grams = broadcast(benchmarkNgrams(benchmark, textCol, n))
     docs
       .select(col(idCol), explode(Dedup.shinglesUdf(n)(col(textCol))).as("gram"))
       .filter(length(col("gram")) > 0)
@@ -64,10 +61,9 @@ object Decontaminate {
     * gram explode). Join strategy is left to AQE: the hit set is usually
     * tiny (runtime-broadcast), but nothing bounds it by construction. */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
-                    benchmark: DataFrame, n: Int,
-                    broadcastBenchmark: Boolean = true): DataFrame = {
-    val hits = contaminationHits(docs, idCol, textCol, benchmark, n,
-      broadcastBenchmark).select(idCol)
+                    benchmark: DataFrame, n: Int): DataFrame = {
+    val hits = contaminationHits(docs, idCol, textCol, benchmark, n)
+      .select(idCol)
     docs.join(hits, Seq(idCol), "left_anti")
   }
 

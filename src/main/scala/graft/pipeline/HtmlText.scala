@@ -886,12 +886,6 @@ object HtmlText {
     }.toArray
   }
 
-  /** Column form of [[htmlImages]]: array<struct<src,alt,title,caption>>. */
-  def htmlImagesCol(html: Column): Column = {
-    val u = udf((s: String) => htmlImages(s).toSeq)
-    u(html)
-  }
-
   /** Does the attribute region `[from, until)` declare
     * `rel="…nofollow…"` (token list, case-insensitive)? */
   private def relNofollowIn(s: String, from: Int, until: Int): Boolean = {

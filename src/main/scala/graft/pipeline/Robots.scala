@@ -474,11 +474,10 @@ object Robots {
     *
     * Shape: rules collapse to one row per host (collect_list of the
     * winning agent group's rules — host-count-sized), then ONE join
-    * against the candidates; the verdict is a map-side UDF. Broadcast
-    * when the host universe is small. */
+    * against the candidates; the verdict is a map-side UDF. The rules
+    * side broadcasts. */
   def filterAllowed(urls: DataFrame, rules: DataFrame, agentToken: String,
-                    urlCol: String = "url",
-                    broadcastRules: Boolean = true): DataFrame = {
+                    urlCol: String = "url"): DataFrame = {
     require(!urls.columns.contains("_robots_host"),
       "column name _robots_host is reserved by filterAllowed")
     require(!urls.columns.contains("host") && !urls.columns.contains("rules"),
@@ -499,14 +498,13 @@ object Robots {
         (col("best") < 0 && col("agent") === "*"))
       .groupBy("host")
       .agg(collect_list(struct(col("allow"), col("path"))).as("rules"))
-    val rulesSide = if (broadcastRules) broadcast(groupRules) else groupRules
     val verdict = udf { (rules: Seq[org.apache.spark.sql.Row], path: String) =>
       rules == null ||
         isAllowed(rules.map(r => (r.getBoolean(0), r.getString(1))), path)
     }
     urls
       .withColumn("_robots_host", UrlFilter.hostOf(col(urlCol)))
-      .join(rulesSide, col("_robots_host") === col("host"), "left")
+      .join(broadcast(groupRules), col("_robots_host") === col("host"), "left")
       .filter(verdict(col("rules"), pathOf(col(urlCol))))
       .drop("_robots_host", "host", "rules")
   }

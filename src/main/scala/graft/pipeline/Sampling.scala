@@ -89,23 +89,21 @@ object Sampling {
    * deterministically on any engine or retry.
    *
    * Scale shape: CC runs on the PAIR list (≪ corpus); the labels frame is
-   * cluster-membership-sized and broadcasts into the corpus join
-   * (`broadcastLabels = false` shuffled fallback when the dup set is a
-   * large corpus fraction); the split predicate itself is the scan-fused
+   * cluster-membership-sized and broadcasts into the corpus join; the
+   * split predicate itself is the scan-fused
    * hash-coordinate filter, zero additional exchange.
    */
   def leakageSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
-                      aCol: String, bCol: String, valFraction: Double,
-                      broadcastLabels: Boolean = true): DataFrame = {
+                      aCol: String, bCol: String,
+                      valFraction: Double): DataFrame = {
     Seq("rep", "split", "_ls_id", "_ls_rep").foreach { r =>
       require(!df.columns.contains(r),
         s"leakageSafeSplit reserves the column name $r")
     }
     val labels = graft.dedup.Dedup.connectedComponents(pairs, aCol, bCol)
       .select(col("id").as("_ls_id"), col("rep").as("_ls_rep"))
-    val side = if (broadcastLabels) broadcast(labels) else labels
     val cut = lit((valFraction * Mod32).toLong)
-    df.join(side, col(idCol) === col("_ls_id"), "left")
+    df.join(broadcast(labels), col(idCol) === col("_ls_id"), "left")
       .withColumn("rep", coalesce(col("_ls_rep"), col(idCol)))
       .withColumn("split",
         when(hashCoord(col("rep")) < cut, lit("val")).otherwise(lit("train")))
@@ -375,8 +373,7 @@ object Sampling {
     val budgetDf = budgets.toSeq.sortBy(_._1).toDF(stratumCol, "_tbs_budget")
     val budgeted = df
       .join(broadcast(budgetDf), Seq(stratumCol)) // unbudgeted strata drop
-    stratumLocalCumSum(budgeted, stratumCol, keyCol, tokensCol,
-        broadcastOffsets = true)
+    stratumLocalCumSum(budgeted, stratumCol, keyCol, tokensCol)
       .filter(col("_tbs_gcum") - col("_tbs_off") + col("_tbs_tok") <=
         col("_tbs_budget"))
       .drop("_tbs_budget", "_tbs_tok", "_tbs_coord", "_tbs_gcum", "_tbs_off")
@@ -391,16 +388,13 @@ object Sampling {
    * measured the way mixes are actually measured, in tokens). Same
    * selection rule: per stratum, docs in (hash-coord, key) order keep
    * while the inclusive running token sum stays ≤ `budget`; no stratum
-   * is dropped. Set `broadcastOffsets=false` when the stratum count is
-   * too large for a broadcast (tens of millions of hosts) — the offset
-   * join falls back to a shuffle on the stratum key.
+   * is dropped.
    */
   def tokenBudgetCap(df: DataFrame, stratumCol: String, keyCol: String,
-                     tokensCol: String, budget: Long,
-                     broadcastOffsets: Boolean = true): DataFrame = {
+                     tokensCol: String, budget: Long): DataFrame = {
     require(budget >= 0L, s"budget must be non-negative, got $budget")
     requireNoTbs(df)
-    stratumLocalCumSum(df, stratumCol, keyCol, tokensCol, broadcastOffsets)
+    stratumLocalCumSum(df, stratumCol, keyCol, tokensCol)
       .filter(col("_tbs_gcum") - col("_tbs_off") + col("_tbs_tok") <=
         lit(budget))
       .drop("_tbs_tok", "_tbs_coord", "_tbs_gcum", "_tbs_off")
@@ -432,8 +426,7 @@ object Sampling {
    */
   def topFractionPerStratum(df: DataFrame, stratumCol: String,
                             keyCol: String, scoreCol: String,
-                            fracBp: Int,
-                            broadcastOffsets: Boolean = true): DataFrame = {
+                            fracBp: Int): DataFrame = {
     require(fracBp >= 0 && fracBp <= 10000,
       s"fracBp must be basis points in [0, 10000], got $fracBp")
     requireNoTbs(df)
@@ -447,14 +440,10 @@ object Sampling {
     val quotas = counts
       .withColumn("_tbs_budget", expr(s"_tbs_n * $fracBp div 10000"))
       .drop("_tbs_n")
-    // broadcastOffsets = false shifts BOTH strata-sized joins (quota and
-    // cumsum offset) to shuffled form for huge stratum cardinalities —
-    // the tokenBudgetCap parity flag
-    val quotaJoin = if (broadcastOffsets) broadcast(quotas) else quotas
     stratumLocalCumSum(
-        scored.join(quotaJoin, Seq(stratumCol))
+        scored.join(broadcast(quotas), Seq(stratumCol))
           .withColumn("_tbs_one", lit(1L)),
-        stratumCol, keyCol, "_tbs_one", broadcastOffsets,
+        stratumCol, keyCol, "_tbs_one",
         orderBy = Some(col(scoreCol)))
       .filter(col("_tbs_gcum") - col("_tbs_off") + lit(1L) <=
         col("_tbs_budget"))
@@ -477,7 +466,6 @@ object Sampling {
 
   private def stratumLocalCumSum(df: DataFrame, stratumCol: String,
                                  keyCol: String, tokensCol: String,
-                                 broadcastOffsets: Boolean,
                                  orderBy: Option[Column] = None): DataFrame = {
     val scored = df
       .withColumn("_tbs_tok", greatest(col(tokensCol).cast("long"), lit(0L)))
@@ -488,8 +476,7 @@ object Sampling {
     val cum = org.apache.spark.sql.graft.RowBridge
       .zipWithGlobalCumSum(parted, "_tbs_tok", "_tbs_gcum")
     val offsets = cum.groupBy(stratumCol).agg(min("_tbs_gcum").as("_tbs_off"))
-    cum.join(if (broadcastOffsets) broadcast(offsets) else offsets,
-      Seq(stratumCol))
+    cum.join(broadcast(offsets), Seq(stratumCol))
   }
 
   /**

@@ -31,10 +31,7 @@ import graft.analysis.TextMetrics
  * corpus) broadcasts into the marking join, so the corpus-sized window
  * stream is never shuffled for the ownership decision — its only exchange
  * is the per-document re-aggregation of marked positions (keyed by doc
- * id, uniform; per-doc state bounded by document length). For corpora
- * whose duplicated-window set exceeds broadcast limits, `broadcastDups =
- * false` degrades both joins to hash-partitioned shuffles, identical
- * output (the Decontaminate dual-path contract).
+ * id, uniform; per-doc state bounded by document length).
  */
 object SpanDedup {
 
@@ -254,19 +251,15 @@ object SpanDedup {
    * scan, which is filtered MAP-SIDE — the corpus-sized index is never
    * shuffled by a probe, and the returned hit set is bounded by the
    * batch's window count before broadcasting back into the marking join.
-   * `broadcastBatch = false` degrades both joins to hash-partitioned
-   * shuffles for corpus-sized batches — identical output.
    * `asOfInstallment` pins the probe to the index as of that installment
    * (partition-pruned; valid between compactions).
    */
   def spanIndexProbe(spark: org.apache.spark.sql.SparkSession, path: String,
                      batch: DataFrame, textCol: String = "text",
                      idCol: String = "doc_id",
-                     broadcastBatch: Boolean = true,
                      asOfInstallment: Int = Int.MaxValue): DataFrame = {
     guard(batch)
     val k = spark.read.parquet(s"$path/meta").head().getInt(0)
-    def bb(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
     def snapshot(df: DataFrame): DataFrame =
       if (asOfInstallment == Int.MaxValue) df
       else df.filter(col("installment") <= asOfInstallment)
@@ -283,7 +276,7 @@ object SpanDedup {
     // the aggregate exchange is bounded by the batch's window count
     val storedHits = snapshot(spark.read.parquet(s"$path/wins"))
       .select(col("h").as("_sd_h"), col("c"))
-      .join(bb(wins.select(col("_sd_h")).distinct()), Seq("_sd_h"), "left_semi")
+      .join(broadcast(wins.select(col("_sd_h")).distinct()), Seq("_sd_h"), "left_semi")
       .groupBy("_sd_h").agg(sum(col("c")).as("_sd_netc"))
       .filter(col("_sd_netc") > 0)
       .select(col("_sd_h"))
@@ -294,9 +287,9 @@ object SpanDedup {
       .filter(col("_sd_cnt") >= 2)
       .select(col("_sd_h"), col("_sd_own"))
 
-    val markedStored = wins.join(bb(storedHits), Seq("_sd_h"), "left_semi")
+    val markedStored = wins.join(broadcast(storedHits), Seq("_sd_h"), "left_semi")
       .select(col(idCol), col("_sd_pos"))
-    val markedInternal = wins.join(bb(internal), "_sd_h")
+    val markedInternal = wins.join(broadcast(internal), "_sd_h")
       .filter(!(col("_sd_own")(idCol) === col(idCol) &&
         col("_sd_own")("_sd_pos") === col("_sd_pos")))
       .select(col(idCol), col("_sd_pos"))
@@ -322,8 +315,7 @@ object SpanDedup {
    * always the token-normalized (single-space-rejoined) form.
    */
   def removeRepeatedSpans(docs: DataFrame, textCol: String = "text",
-                          idCol: String = "doc_id", k: Int = 8,
-                          broadcastDups: Boolean = true): DataFrame = {
+                          idCol: String = "doc_id", k: Int = 8): DataFrame = {
     guard(docs)
     require(k >= 2, s"window length k must be >= 2, got $k")
 
@@ -339,10 +331,9 @@ object SpanDedup {
         min(struct(col(idCol), col("_sd_pos"))).as("_sd_own"))
       .filter(col("_sd_cnt") >= 2)
       .select(col("_sd_h"), col("_sd_own"))
-    val dupSide = if (broadcastDups) broadcast(dups) else dups
 
     // non-owner occurrences of duplicated windows
-    val marked = wins.join(dupSide, "_sd_h")
+    val marked = wins.join(broadcast(dups), "_sd_h")
       .filter(!(col("_sd_own")(idCol) === col(idCol) &&
         col("_sd_own")("_sd_pos") === col("_sd_pos")))
       .groupBy(idCol)

@@ -397,10 +397,4 @@ object UrlResolve {
     val r = resolve(c, c)
     if (r == null) null else normalizeResolved(r)
   }
-
-  /** Column form of [[selfNormalize]]. */
-  def selfNormalizeCol(u: Column): Column = {
-    val f = udf((s: String) => selfNormalize(s))
-    f(u)
-  }
 }

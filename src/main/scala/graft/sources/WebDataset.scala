@@ -304,15 +304,6 @@ object WebDataset {
     else (name.substring(0, dot), name.substring(dot + 1))
   }
 
-  /** Explode a binary shard column into tar members — map-side. */
-  def tarEntries(files: DataFrame,
-                 payloadCol: String = "payload"): Dataset[TarEntry] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col(payloadCol)).as[Array[Byte]]
-      .flatMap(b => parseTar(b))
-  }
-
   /**
    * Explode a binary shard column into WebDataset samples: members
    * grouped by key. Grouping exploits the contiguity contract — a

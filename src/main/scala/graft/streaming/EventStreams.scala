@@ -526,14 +526,13 @@ object EventStreams extends Serializable {
    * nothing (the batch contract).
    */
   def classifyStream(spark: SparkSession, docs: DataFrame, model: DataFrame,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     broadcastModel: Boolean = true)
+                     idCol: String = "doc_id", textCol: String = "text")
                     (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         sink(graft.analysis.Classify.centroidScore(batch.toDF(), model,
-          idCol, textCol, broadcastModel), batchId)
+          idCol, textCol), batchId)
         ()
     }
 
@@ -548,14 +547,13 @@ object EventStreams extends Serializable {
    */
   def decontaminateStream(spark: SparkSession, docs: DataFrame,
                           benchmark: DataFrame, n: Int,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          broadcastBenchmark: Boolean = true)
+                          idCol: String = "doc_id", textCol: String = "text")
                          (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         sink(graft.pipeline.Decontaminate.decontaminate(batch.toDF(), idCol,
-          textCol, benchmark, n, broadcastBenchmark), batchId)
+          textCol, benchmark, n), batchId)
         ()
     }
 

@@ -51,45 +51,37 @@ class ClassifySpec extends SparkTestBase {
     assert(!ids.contains(3L) && !ids.contains(4L))
   }
 
-  test("shuffled-model dual path equals the broadcast path") {
-    val m = Classify.centroidTrain(labeled)
-    val b = Classify.centroidScore(docs, m).as[(Long, String, Double)]
-      .collect().toSet
-    val s = Classify.centroidScore(docs, m, broadcastModel = false)
-      .as[(Long, String, Double)].collect().toSet
-    assert(b === s)
-  }
-
   test("null labels train nothing; reserved columns are guarded") {
     val withNull = labeled.unionByName(
       Seq(("noise noise", null.asInstanceOf[String])).toDF("text", "label"))
     val m = Classify.centroidTrain(withNull)
     assert(m.filter(col("token") === "noise").isEmpty)
     val e = intercept[IllegalArgumentException] {
-      Classify.centroidScore(docs.withColumn("_cx_d", lit(1)), m)
+      Classify.centroidScore(docs.withColumn("_cx_tc", lit(1)), m)
     }
-    assert(e.getMessage.contains("_cx_d"))
+    assert(e.getMessage.contains("_cx_tc"))
   }
 
   test("random corpora match an independent in-memory reference") {
     // seeded random docs/labels vs a direct Scala Rocchio over the same
-    // integer arithmetic — exercises multi-class argmax, ties, and
-    // no-overlap docs beyond the hand fixture
+    // integer arithmetic — exercises multi-class argmax, ties, k above
+    // the class count, and no-overlap/empty docs beyond the hand fixture
     val words = Array("aa", "bb", "cc", "dd", "ee")
     val rnd = new scala.util.Random(99L)
     def doc(): String =
       (1 to (1 + rnd.nextInt(6))).map(_ => words(rnd.nextInt(words.length)))
         .mkString(" ")
     val labeledRows = (1 to 12).map(_ => (doc(), s"c${rnd.nextInt(3)}"))
-    val docRows = (1L to 20L).map(i => (i, doc()))
+    val docRows = (1L to 20L).map(i => (i, doc())) :+ ((21L, ""))
 
     val centroids: Map[String, Map[String, Long]] = labeledRows
       .groupBy(_._2).map { case (lab, rows) =>
         lab -> rows.flatMap(_._1.split(" ")).groupBy(identity)
           .map { case (t, ts) => t -> ts.size.toLong }
       }
-    def predict(text: String): Option[(String, Double)] = {
-      val d = text.split(" ").groupBy(identity)
+    // every class sharing a token with the doc, best first
+    def ranked(text: String): Seq[(String, Double)] = {
+      val d = text.split(" ").filter(_.nonEmpty).groupBy(identity)
         .map { case (t, ts) => t -> ts.size.toLong }
       val dn = d.values.map(v => v * v).sum
       val scored = centroids.toSeq.flatMap { case (lab, c) =>
@@ -100,20 +92,39 @@ class ClassifySpec extends SparkTestBase {
           Some(lab -> dot.toDouble / (math.sqrt(dn.toDouble) * math.sqrt(cn.toDouble)))
         }
       }
-      if (scored.isEmpty) None
-      else Some(scored.minBy { case (lab, cos) => (-cos, lab) })
+      scored.sortBy { case (lab, cos) => (-cos, lab) }
     }
 
-    val got = Classify.centroidClassify(
-        docRows.toDF("doc_id", "text"), labeledRows.toDF("text", "label"))
+    val docsDf = docRows.toDF("doc_id", "text")
+    val labeledDf = labeledRows.toDF("text", "label")
+    val got = Classify.centroidClassify(docsDf, labeledDf)
       .as[(Long, String, Double)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     docRows.foreach { case (id, text) =>
-      val want = predict(text)
+      val want = ranked(text).headOption
       assert(got.get(id).map(_._1) === want.map(_._1), s"doc $id '$text'")
       (got.get(id), want) match {
         case (Some((_, g)), Some((_, w))) => assert(math.abs(g - w) < 1e-12)
         case _ => ()
+      }
+    }
+    // the top-k form: label, cosine and rank of every emitted row
+    val model = Classify.centroidTrain(labeledDf)
+    Seq(1, 2, 7).foreach { k =>
+      val topk = Classify.centroidScoreTopK(docsDf, model, k = k)
+        .as[(Long, String, Double, Int)].collect()
+        .groupBy(_._1).map { case (id, rs) =>
+          id -> rs.sortBy(_._4).map(r => (r._2, r._3, r._4)).toSeq
+        }
+      docRows.foreach { case (id, text) =>
+        val want = ranked(text).take(k).zipWithIndex
+          .map { case ((lab, cos), i) => (lab, cos, i + 1) }
+        val have = topk.getOrElse(id, Seq.empty)
+        assert(have.map(r => (r._1, r._3)) === want.map(r => (r._1, r._3)),
+          s"k=$k doc $id '$text'")
+        have.zip(want).foreach { case (h, w) =>
+          assert(math.abs(h._2 - w._2) < 1e-12, s"k=$k doc $id cosine")
+        }
       }
     }
   }
@@ -127,14 +138,6 @@ class ClassifySpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join") && !plan.contains("Exchange"),
       s"per-row scoring must be map-only:\n$plan")
-    // the shuffled dual (vocabulary too large to collect) keeps the
-    // equi-join shape and must never degrade to nested-loop/cartesian
-    val dual = Classify.centroidScore(docs,
-        Classify.centroidTrain(labeled), broadcastModel = false)
-      .queryExecution.executedPlan.toString
-    assert(!dual.contains("BroadcastNestedLoopJoin") &&
-      !dual.contains("CartesianProduct"),
-      s"no nested-loop/cartesian in the dual path:\n$dual")
   }
 
   test("tokCountsUdf equals the explode/groupBy counting chain (r18 pin)") {
@@ -172,39 +175,6 @@ class ClassifySpec extends SparkTestBase {
           s"doc $id counts")
         assert(dn === counts.values.map(d => d * d).sum, s"doc $id norm")
       }
-    }
-  }
-
-  test("driver-local scoring equals the shuffled path bit for bit (r18 pin)") {
-    // randomized corpora: every (id, label, cosine, rank) row from the
-    // per-row scorer must equal the exchange path's EXACTLY (cosine by
-    // bitwise double equality — the arithmetic contract), including
-    // ties, k > classes, and docs with partial class overlap
-    val rnd = new scala.util.Random(1817)
-    val vocab = Vector("ball", "goal", "cake", "bread", "net", "oven",
-      "press", "wheel", "天气", "кот")
-    val labeledRows = (0 until 60).map { i =>
-      val lab = s"c${i % 4}"
-      val text = Seq.fill(1 + rnd.nextInt(8))(
-        vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      (text, lab)
-    }
-    val docRows = (0 until 80).map { i =>
-      val text =
-        if (i % 17 == 0) ""
-        else Seq.fill(1 + rnd.nextInt(10))(
-          vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      (i.toLong, text)
-    }
-    val model = Classify.centroidTrain(labeledRows.toDF("text", "label"))
-    val docsDf = docRows.toDF("doc_id", "text")
-    Seq(1, 2, 7).foreach { k =>
-      val local = Classify.centroidScoreTopK(docsDf, model, k = k)
-        .as[(Long, String, Double, Int)].collect().toSet
-      val shuffled = Classify.centroidScoreTopK(docsDf, model, k = k,
-          broadcastModel = false)
-        .as[(Long, String, Double, Int)].collect().toSet
-      assert(local === shuffled, s"k=$k local != shuffled")
     }
   }
 }

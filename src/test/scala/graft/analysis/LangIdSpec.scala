@@ -4,8 +4,8 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Trained char-n-gram language ID: held-out generalization across all
-  * 32 built-in languages, kernel edges, heuristic fallback, the
-  * broadcast dual path, and the r17 confidence margin. */
+  * 32 built-in languages, kernel edges, heuristic fallback, and the
+  * r17 confidence margin against an in-test nearest-centroid reference. */
 class LangIdSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -84,16 +84,6 @@ class LangIdSpec extends SparkTestBase {
     assert(got === Map(1L -> "und", 2L -> "und", 3L -> "und"))
   }
 
-  test("broadcastModel dual path: identical labels") {
-    val docs = heldOut.zipWithIndex
-      .map { case ((_, text), i) => (i.toLong, text) }
-      .toDF("doc_id", "text")
-    val a = LangId.classify(docs).as[(Long, String)].collect().toSet
-    val b = LangId.classify(docs, broadcastModel = false)
-      .as[(Long, String)].collect().toSet
-    assert(a === b)
-  }
-
   test("confidence: positive margins on held-out, NULL on fallback, label parity (r17)") {
     val docs = heldOut.zipWithIndex
       .map { case ((_, text), i) => (i.toLong, text) }
@@ -151,20 +141,48 @@ class LangIdSpec extends SparkTestBase {
     }
   }
 
-  test("confidence dual path: bitwise-identical margins (r18 pin)") {
-    // the per-row local scorer vs the shuffled scoring + join-back
-    // form: labels AND margins must agree exactly (double equality —
-    // both compute the same one subtraction of the same two cosines)
-    val docs = heldOut.zipWithIndex
-      .map { case ((_, text), i) => (i.toLong, text) }
-      .toDF("doc_id", "text")
-      .unionByName(Seq((999L, "12345 ..."), (1000L, ""),
-        (1001L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val a = LangId.classifyWithConfidence(docs)
-      .as[(Long, String, Option[Double])].collect().toSet
-    val b = LangId.classifyWithConfidence(docs, broadcastModel = false)
-      .as[(Long, String, Option[Double])].collect().toSet
-    assert(a === b)
+  test("confidence matches an in-test nearest-centroid reference (r18 pin)") {
+    // the per-row scorer vs a direct Scala nearest-centroid over the
+    // same gram counts: labels AND margins must agree exactly (double
+    // equality — one correctly-rounded cosine per class, one
+    // subtraction); gram-less rows take the heuristic with no margin
+    val centroids: Map[String, Map[String, Long]] = LangId.TrainSamples
+      .groupBy(_._1).map { case (lang, rows) =>
+        lang -> rows.flatMap(r => LangId.gramCounts(r._2)._1.toSeq)
+          .groupBy(_._1).map { case (g, cs) => g -> cs.map(_._2).sum }
+      }
+    def reference(text: String): (String, Option[Double]) = {
+      val gc = LangId.gramCounts(text)
+      val ranked =
+        if (gc == null) Seq.empty
+        else centroids.toSeq.flatMap { case (lang, c) =>
+          val dot = gc._1.map { case (g, d) => d * c.getOrElse(g, 0L) }.sum
+          if (dot == 0L) None
+          else {
+            val cn = c.values.map(v => v * v).sum
+            Some(lang -> dot.toDouble /
+              (math.sqrt(gc._2.toDouble) * math.sqrt(cn.toDouble)))
+          }
+        }.sortBy { case (lang, cos) => (-cos, lang) }
+      ranked match {
+        case Seq() => (TextMetrics.languageId(text), None)
+        case Seq((lang, c1)) => (lang, Some(c1 - 0.0))
+        case (lang, c1) +: (_, c2) +: _ => (lang, Some(c1 - c2))
+      }
+    }
+    val rows = heldOut.zipWithIndex.map { case ((_, text), i) =>
+      (i.toLong, text)
+    } ++ Seq((999L, "12345 ..."), (1000L, ""),
+      (1001L, null.asInstanceOf[String]))
+    val got = LangId.classifyWithConfidence(rows.toDF("doc_id", "text"))
+      .as[(Long, String, Option[Double])].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got.size === rows.size)
+    rows.foreach { case (id, text) =>
+      assert(got(id) === reference(text), s"doc $id")
+    }
+    assert(got(999L) === (("und", None)) && got(1000L) === (("und", None)) &&
+      got(1001L) === (("und", None)))
   }
 
   test("classify plan is map-only on the broadcast path (r18)") {

@@ -47,14 +47,6 @@ class NgramLmSpec extends SparkTestBase {
     assert(out(1) === ((2L, 1L, 0L, 0L)))
   }
 
-  test("shuffled-model path equals the broadcast path") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val a = NgramLm.selfScore(docs, broadcastModel = true)
-    val b = NgramLm.selfScore(docs, broadcastModel = false)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
   test("deterministic under repartitioning; avg bounded by Scale") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -132,6 +132,42 @@ class MultimodalSpec extends SparkTestBase {
     assert(Multimodal.decodeFrames(enc).head.toSeq === rgb.toSeq)
   }
 
+  test("BMP headers with hostile dimensions return None; mutations never throw") {
+    def withInt(b: Array[Byte], off: Int, v: Int): Array[Byte] = {
+      val c = b.clone()
+      java.nio.ByteBuffer.wrap(c).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(off, v)
+      c
+    }
+    // 1×1 image: 54-byte header + one 4-byte padded row = 58 bytes
+    val tiny = Multimodal.encodeBmp(1, 1, Array[Byte](1, 2, 3))
+    assert(tiny.length === 58)
+    // width·3 wraps an Int: a wrapped (negative) stride must not pass
+    // the row check and reach the allocation
+    assert(Multimodal.decodeBmp(withInt(tiny, 18, 800000000)).isEmpty)
+    // |Int.MinValue| stays negative as an Int
+    assert(Multimodal.decodeBmp(withInt(tiny, 22, Int.MinValue)).isEmpty)
+    assert(Multimodal.decodeBmp(
+      withInt(withInt(tiny, 18, Int.MaxValue), 22, Int.MinValue)).isEmpty)
+    // seeded header mutations plus truncation over a valid image: every
+    // input returns (Some or None), none throws
+    val rgb = Array.tabulate(5 * 3 * 3)(i => (i * 7 % 256).toByte)
+    val enc = Multimodal.encodeBmp(5, 3, rgb)
+    val rnd = new scala.util.Random(2024L)
+    (0 until 3000).foreach { i =>
+      val m = enc.clone()
+      (0 until 1 + rnd.nextInt(4)).foreach { _ =>
+        m(rnd.nextInt(54)) = rnd.nextInt(256).toByte
+      }
+      val cut = if (rnd.nextBoolean()) m else m.take(rnd.nextInt(m.length + 1))
+      val got = Multimodal.decodeBmp(cut)
+      got.foreach { case (w, h, px) =>
+        assert(px.length.toLong === w.toLong * h * 3, s"case $i")
+        assert(px.length <= cut.length, s"case $i")
+      }
+    }
+  }
+
   test("PNG round-trips through every filter type, truecolor and grayscale") {
     // height 10 → filter types 0,1,2,3,4 each used twice (encodePng
     // cycles y % 5); width 5 makes Sub/Paeth predictions non-trivial

@@ -57,15 +57,6 @@ class CorpusCleanSpec extends SparkTestBase {
     assert(got.forall(_._4 === 0L), s"nothing should drop at df==maxDocFreq: ${got.toSeq}")
   }
 
-  test("dedupUnits broadcast and shuffled paths agree") {
-    val a = CorpusClean.dedupUnits(lineDocs, "doc_id", "pos", "line", 2)
-      .as[(Long, String, Long, Long)].collect().toSet
-    val b = CorpusClean.dedupUnits(lineDocs, "doc_id", "pos", "line", 2,
-      broadcastHot = false)
-      .as[(Long, String, Long, Long)].collect().toSet
-    assert(a === b)
-  }
-
   test("dedupUnits guards reserved names") {
     intercept[IllegalArgumentException](CorpusClean.dedupUnits(
       lineDocs.withColumn("_uh", $"pos"), "doc_id", "pos", "line", 2))

@@ -540,46 +540,22 @@ class CrawlFrontierSpec extends SparkTestBase {
       "rank 0 sorts after every ranked round-1 host despite 99 refs")
   }
 
-  test("scheduleRanked/schedule dual paths: unbroadcast joins, equal output") {
-    // r16 (the r15 VERDICT finding): broadcastRanks must govern the
-    // FINAL schedule⋈ranks join — at the 100 TB design point the rank
-    // table is all-hosts-sized and a pinned broadcast is an OOM class;
-    // broadcastPacing is the same dual for delays/retryAfter.
-    val pages = Seq(
-      ("https://a.example/p", Seq("https://big.example/x")),
-      ("https://big.example/p", Seq("https://a.example/y")))
-      .toDF("url", "links")
+  test("schedule pins its pacing-table broadcasts") {
     val frontier = Seq(
       ("https://a.example/1", 9L), ("https://a.example/2", 8L),
       ("https://big.example/1", 2L)).toDF("url", "n_refs")
     val delays = Seq(("a.example", 2.5)).toDF("host", "delay_s")
     val retry = Seq(("big.example", 60.0)).toDF("host", "retry_after_s")
-    def run(bc: Boolean) = Crawl.scheduleRanked(frontier,
-      Crawl.hostEdges(pages), maxRounds = 3, delays = delays,
-      retryAfter = retry, broadcastRanks = bc, broadcastPacing = bc)
-    // kill auto-broadcast so any BroadcastHashJoin left in a plan is a
+    // kill auto-broadcast so any BroadcastHashJoin left in the plan is a
     // PINNED hint, not Catalyst sizing tiny test relations (the
     // BucketingSpec discipline)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // output equality exercises the unbroadcast ranks join (PageRank
-      // internals AND the final schedule⋈ranks) end-to-end; the
-      // schedule plans below pin the hint routing — scheduleRanked's
-      // own output plan is opaque (Ranks materializes internally, the
-      // executed plan reads Scan ExistingRDD)
-      assert(run(true).collect().toSet === run(false).collect().toSet)
-      val s1 = Crawl.schedule(frontier, 3, delays = delays,
-        retryAfter = retry, broadcastPacing = true)
-      val s2 = Crawl.schedule(frontier, 3, delays = delays,
-        retryAfter = retry, broadcastPacing = false)
-      assert(s1.collect().toSet === s2.collect().toSet)
-      val planOn = s1.queryExecution.executedPlan.toString
-      val planOff = s2.queryExecution.executedPlan.toString
-      assert(planOn.contains("BroadcastHashJoin"),
-        s"broadcast pacing must pin its broadcasts:\n$planOn")
-      assert(!planOff.contains("BroadcastHashJoin"),
-        s"unbroadcast pacing must pin NO broadcast:\n$planOff")
+      val plan = Crawl.schedule(frontier, 3, delays = delays,
+        retryAfter = retry).queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"broadcast pacing must pin its broadcasts:\n$plan")
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
@@ -897,13 +873,6 @@ class CrawlFrontierSpec extends SparkTestBase {
     assert(joined === Set(
       ("https://p/a", "https://img.test/1", "one"),
       ("https://p/b", "https://img.test/1", "one")))
-    // unbroadcast dual: identical output
-    val dual = Crawl.imageBytesJoin(
-      Crawl.imagePairsLedger(spark, fDir), records,
-      broadcastRecords = false)
-      .select($"url", $"img_url", $"body".cast("string"))
-      .as[(String, String, String)].collect().toSet
-    assert(dual === joined)
     // absent ledger -> empty fetch list, not an error
     assert(Crawl.imageFetchList(spark,
       base.resolve("nowhere").toString).count() === 0L)
@@ -978,7 +947,7 @@ class CrawlFrontierSpec extends SparkTestBase {
       .select("url").as[String].collect().toSet
     assert(gated === Set("https://cdn.test/ep/1", "https://cdn.test/ep/2"))
     // bytes join: 200 bodies attach to EVERY referencing pair;
-    // non-200 and unfetched pairs drop; the unbroadcast dual agrees
+    // non-200 and unfetched pairs drop
     val records = Seq(
       ("response", "https://cdn.test/ep/1", 200, "one".getBytes("UTF-8")),
       ("response", "https://cdn.test/ep/2", 404, "no".getBytes("UTF-8")))
@@ -990,12 +959,6 @@ class CrawlFrontierSpec extends SparkTestBase {
     assert(joined === Set(
       ("https://f/a", "https://cdn.test/ep/1", "one"),
       ("https://f/b", "https://cdn.test/ep/1", "one")))
-    val dual = Crawl.mediaBytesJoin(
-      Crawl.mediaPairsLedger(spark, fDir), records,
-      broadcastRecords = false)
-      .select($"url", $"media_url", $"body".cast("string"))
-      .as[(String, String, String)].collect().toSet
-    assert(dual === joined)
     // absent ledger -> empty fetch list, not an error
     assert(Crawl.mediaFetchList(spark,
       base.resolve("nowhere").toString).count() === 0L)
@@ -1252,10 +1215,6 @@ class CrawlFrontierSpec extends SparkTestBase {
       ("https://p/B", "https://a.cdn/img/1.bmp", "other"),
       ("https://p/C", "https://a.cdn/img/2.bmp", "solo"),
       ("https://p/D", "https://a.cdn/x/bad.bin", "bad")))
-    // shuffled-map dual: identical output
-    val dual = Crawl.dedupePairsByImage(pairs, images,
-      broadcastMap = false).as[(String, String, String)].collect().toSet
-    assert(dual === got)
     // foldExact=false keeps page A's two re-keyed rows
     val unfolded = Crawl.dedupePairsByImage(pairs, images,
       foldExact = false).as[(String, String, String)].collect().toSeq
@@ -1330,9 +1289,6 @@ class CrawlFrontierSpec extends SparkTestBase {
       ("https://f/B", "https://a.cdn/au/1.wav", "other"),
       ("https://f/C", "https://a.cdn/au/2.wav", "solo"),
       ("https://f/D", "https://a.cdn/x/bad.bin", "bad")))
-    val dual = Crawl.dedupePairsByAudio(pairs, media,
-      broadcastMap = false).as[(String, String, String)].collect().toSet
-    assert(dual === got)
     val unfolded = Crawl.dedupePairsByAudio(pairs, media,
       foldExact = false).as[(String, String, String)].collect().toSeq
     assert(unfolded.size === 5)

@@ -52,15 +52,6 @@ class DecontaminateSpec extends SparkTestBase {
     assert(clean.select("doc_id").as[Long].collect().sorted === Array(3L, 4L))
   }
 
-  test("shuffled-join fallback agrees with the broadcast path") {
-    val bcast = Decontaminate.contaminationHits(
-      trainDocs, "doc_id", "text", benchDocs, n = 5).collect().toSet
-    val shuffled = Decontaminate.contaminationHits(
-      trainDocs, "doc_id", "text", benchDocs, n = 5,
-      broadcastBenchmark = false).collect().toSet
-    assert(bcast === shuffled)
-  }
-
   test("bloom path returns exactly the exact-join survivors") {
     val exact = Decontaminate.decontaminate(
       trainDocs, "doc_id", "text", benchDocs, n = 5)

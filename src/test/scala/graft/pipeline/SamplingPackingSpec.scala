@@ -502,14 +502,11 @@ class SamplingPackingSpec extends SparkTestBase {
     assert(langs === Set("a", "b", "c", "d"))
   }
 
-  test("tokenBudgetCap shuffled-offset fallback selects identical rows") {
+  test("tokenBudgetCap over nine hosts matches the reference") {
     val rows = (1L to 200L).map(k => (k, s"h${k % 9}", (k * 7) % 29))
     val df = rows.toDF("id", "host", "tok")
-    val a = Sampling.tokenBudgetCap(df, "host", "id", "tok", 100L,
-      broadcastOffsets = true).select("id").as[Long].collect().sorted.toSeq
-    val b = Sampling.tokenBudgetCap(df, "host", "id", "tok", 100L,
-      broadcastOffsets = false).select("id").as[Long].collect().sorted.toSeq
-    assert(a === b)
+    val a = Sampling.tokenBudgetCap(df, "host", "id", "tok", 100L)
+      .select("id").as[Long].collect().sorted.toSeq
     assert(a === tbsReference(rows.map(r => (r._1, r._2, r._3)),
       (0 until 9).map(i => s"h$i" -> 100L).toMap).sorted)
   }
@@ -563,7 +560,7 @@ class SamplingPackingSpec extends SparkTestBase {
     assert(!plan.contains("Window"), s"must not window:\n$plan")
   }
 
-  test("topFractionPerStratum: null scores drop before counting; shuffled-offset parity") {
+  test("topFractionPerStratum: null scores drop before counting") {
     // 4 scored + 2 null-scored in 'a': the quota must derive from the 4
     // SCORED rows (floor(4*0.5)=2), not 6 — and no null row may survive
     // (Spark sorts nulls first, DuckDB last; admitting them would be a
@@ -576,11 +573,6 @@ class SamplingPackingSpec extends SparkTestBase {
     val got = Sampling.topFractionPerStratum(df, "lang", "id", "score", 5000)
       .select("id").as[Long].collect().toSet
     assert(got === Set(1L, 2L, 7L)) // a: best 2 of 4 scored; b: best 1 of 2
-    // broadcastOffsets = false must select the identical rows
-    val shuffled = Sampling.topFractionPerStratum(df, "lang", "id", "score",
-        5000, broadcastOffsets = false)
-      .select("id").as[Long].collect().toSet
-    assert(shuffled === got)
   }
 
   test("tokenBudgetSelect guards reserved names and bad budgets") {
@@ -747,13 +739,13 @@ class SamplingPackingSpec extends SparkTestBase {
     assert(out.values.map(_._2).toSet === Set("train", "val"))
   }
 
-  test("leakageSafeSplit: dual label path, determinism, reserved names") {
+  test("leakageSafeSplit: repartition determinism, reserved names") {
     val corpus = (1L to 30L).map(i => (i, s"d$i")).toDF("doc_id", "text")
     val pairs = Seq((5L, 6L), (6L, 7L), (20L, 21L)).toDF("id_a", "id_b")
     val a = Sampling.leakageSafeSplit(corpus, "doc_id", pairs, "id_a", "id_b",
-      0.3, broadcastLabels = true)
+      0.3)
     val b = Sampling.leakageSafeSplit(corpus.repartition(7), "doc_id", pairs,
-      "id_a", "id_b", 0.3, broadcastLabels = false)
+      "id_a", "id_b", 0.3)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     intercept[IllegalArgumentException] {
       Sampling.leakageSafeSplit(corpus.withColumn("rep", lit(1L)), "doc_id",

@@ -111,14 +111,6 @@ class SpanDedupIndexSpec extends SparkTestBase {
     assert(dirs === Set("installment=0"))
   }
 
-  test("shuffled-batch path equals the broadcast path") {
-    val path = tmp("span-dual")
-    SpanDedup.spanIndexBuild(corpus, path, k = 8)
-    val a = SpanDedup.spanIndexProbe(spark, path, batch, broadcastBatch = true)
-    val b = SpanDedup.spanIndexProbe(spark, path, batch, broadcastBatch = false)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
   test("probe marks batch-internal repeats even when absent from the index") {
     val path = tmp("span-internal")
     SpanDedup.spanIndexBuild(Seq((1L, "nothing shared here at all ok fine yes"))

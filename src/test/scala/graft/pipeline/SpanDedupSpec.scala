@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 class SpanDedupSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def run(docs: org.apache.spark.sql.DataFrame, k: Int,
-                  bcast: Boolean = true) =
-    SpanDedup.removeRepeatedSpans(docs, k = k, broadcastDups = bcast)
+  private def run(docs: org.apache.spark.sql.DataFrame, k: Int) =
+    SpanDedup.removeRepeatedSpans(docs, k = k)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
 
@@ -65,15 +64,13 @@ class SpanDedupSpec extends SparkTestBase {
     assert(out(1) === ((2L, "", 4L, 1L)))
   }
 
-  test("shuffled-dups path equals the broadcast path on real data") {
+  test("duplicated real documents lose their repeated spans") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val dup = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
     val corpus = docs.unionByName(dup)
-    val a = SpanDedup.removeRepeatedSpans(corpus, k = 8, broadcastDups = true)
-    val b = SpanDedup.removeRepeatedSpans(corpus, k = 8, broadcastDups = false)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    val a = SpanDedup.removeRepeatedSpans(corpus, k = 8)
     // the duplicated copies must actually lose their content
     val emptied = a.filter(col("doc_id") >= 500000L && col("n_removed") > 0)
     assert(emptied.count() > 0)
