@@ -3145,12 +3145,13 @@ object SparkEntry {
               case 2 => "NONE"
               case _ => "googlebot: nofollow"
             }
-            (s"https://h${id % 7}.example/xr/$id", 200, "text/html", null,
-              tag,
-              (s"""<a href="https://t.example/${id % 5}">t</a>""" +
+            graft.sources.Warc.ResponseFixture(
+              s"https://h${id % 7}.example/xr/$id", 200,
+              contentType = "text/html", xRobots = tag,
+              body = (s"""<a href="https://t.example/${id % 5}">t</a>""" +
                 s"<p>body $id</p>").getBytes("UTF-8"))
           }.toSeq
-          (g, graft.sources.Warc.encodeWarcResponsesTagged(recs,
+          (g, graft.sources.Warc.encodeWarcFixtures(recs,
             gzipPerRecord = g % 2 == 1))
         }.toDF("g", "payload")
       val records = graft.sources.Warc.warcRecords(files).toDF()
@@ -3563,35 +3564,32 @@ object SparkEntry {
         .as[Long].groupByKey(_ % 8).mapGroups { (g, ids) =>
           val recs = ids.flatMap { id =>
             val host = s"h${id % 7}.example"
+            def fx(uri: String, status: Int, retryAfter: String) =
+              graft.sources.Warc.ResponseFixture(uri, status,
+                retryAfter = retryAfter)
             (id % 3) match {
-              case 0 => Seq((s"https://$host/th/$id", 429, null: String,
-                null: String, null: String, s"${30 + id % 11}",
-                Array.emptyByteArray))
-              case 1 => Seq((s"https://$host/busy/$id", 503, null: String,
-                null: String, null: String, s"${30 + id % 11}",
-                Array.emptyByteArray))
+              case 0 => Seq(fx(s"https://$host/th/$id", 429,
+                s"${30 + id % 11}"))
+              case 1 => Seq(fx(s"https://$host/busy/$id", 503,
+                s"${30 + id % 11}"))
               case _ =>
                 // HTTP-date form: id%90 seconds past the fixture
                 // warc_date (2026-01-01T00:00:00Z)
                 val future = f"Thu, 01 Jan 2026 00:${(id % 90) / 60}%02d:${(id % 90) % 60}%02d GMT"
                 Seq(
-                (s"https://$host/date/$id", 429, null: String,
-                  null: String, null: String, future, Array.emptyByteArray),
+                fx(s"https://$host/date/$id", 429, future),
                 // a date in the PAST clamps to 0 (never negative)
-                (s"https://$host/past/$id", 503, null: String,
-                  null: String, null: String,
-                  "Wed, 31 Dec 2025 23:00:00 GMT", Array.emptyByteArray),
+                fx(s"https://$host/past/$id", 503,
+                  "Wed, 31 Dec 2025 23:00:00 GMT"),
                 // unparseable: dropped, must not stall the host
-                (s"https://$host/junk/$id", 429, null: String,
-                  null: String, null: String, "tomorrow-ish",
-                  Array.emptyByteArray),
+                fx(s"https://$host/junk/$id", 429, "tomorrow-ish"),
                 // non-throttling status: ignored even with a numeric value
-                (s"https://$host/ok/$id", 200, "text/html", null: String,
-                  null: String, "999", s"<p>fine $id</p>".getBytes(
-                    java.nio.charset.StandardCharsets.UTF_8)))
+                fx(s"https://$host/ok/$id", 200, "999").copy(
+                  contentType = "text/html", body = s"<p>fine $id</p>"
+                    .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
             }
           }.toSeq
-          (g, graft.sources.Warc.encodeWarcResponsesFull(recs,
+          (g, graft.sources.Warc.encodeWarcFixtures(recs,
             gzipPerRecord = g % 2 == 1))
         }.toDF("g", "payload")
       val retry = graft.pipeline.Crawl.retryAfterDelays(
@@ -3640,23 +3638,25 @@ object SparkEntry {
         .map { case (g, ids) =>
           val recs = ids.flatMap { id =>
             val own = s"https://h${id % 7}.example/page/$id"
-            val page = Seq((own, 200, "text/html", null: String,
-              s"<html><body>doc $id</body></html>"
+            def html(uri: String, status: Int) =
+              graft.sources.Warc.ResponseFixture(uri, status,
+                contentType = "text/html")
+            val page = Seq(html(own, 200).copy(
+              body = s"<html><body>doc $id</body></html>"
                 .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
             val redirect = (id % 10) match {
-              case 3 => Seq((s"https://h${id % 7}.example/old/$id", 301,
-                "text/html",
-                s"https://h${(id * 3) % 7}.example/target/${id + 600000}",
-                Array.emptyByteArray))
-              case 7 => Seq((s"https://h${id % 7}.example/moved/$id", 302,
-                "text/html", s"../hub/${id % 13}", Array.emptyByteArray))
-              case 1 => Seq((s"https://h${id % 7}.example/gone/$id", 301,
-                "text/html", own, Array.emptyByteArray))
+              case 3 => Seq(html(s"https://h${id % 7}.example/old/$id", 301)
+                .copy(location =
+                  s"https://h${(id * 3) % 7}.example/target/${id + 600000}"))
+              case 7 => Seq(html(s"https://h${id % 7}.example/moved/$id", 302)
+                .copy(location = s"../hub/${id % 13}"))
+              case 1 => Seq(html(s"https://h${id % 7}.example/gone/$id", 301)
+                .copy(location = own))
               case _ => Seq.empty
             }
             page ++ redirect
           }
-          (g, graft.sources.Warc.encodeWarcResponses(recs,
+          (g, graft.sources.Warc.encodeWarcFixtures(recs,
             gzipPerRecord = g % 2 == 1))
         }.toDF("g", "payload")
       val records = graft.sources.Warc.warcRecords(files).toDF()
@@ -5357,10 +5357,12 @@ object SparkEntry {
         .map { case (g, rs) =>
           val recs = rs.map { case (id, text) =>
             val status = if (id % 10 == 7) 404 else 200
-            (s"https://graft.test/doc/$id", status,
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            graft.sources.Warc.ResponseFixture(s"https://graft.test/doc/$id",
+              status, contentType = "text/plain; charset=utf-8",
+              body = text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-          (g, graft.sources.Warc.encodeWarc(recs, gzipPerRecord = g % 2 == 1))
+          (g, graft.sources.Warc.encodeWarcFixtures(recs,
+            gzipPerRecord = g % 2 == 1))
         }.toDF("g", "payload")
       graft.sources.Warc.warcRecords(files).toDF()
         .filter(col("warc_type") === "response")
@@ -5408,10 +5410,12 @@ object SparkEntry {
                    |<p>$esc</p>
                    |<div>footer &#169; 2026</div>
                    |</body></html>""".stripMargin
-              (s"https://graft.test/doc/$id", 200,
-                html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              graft.sources.Warc.ResponseFixture(s"https://graft.test/doc/$id",
+                200, contentType = "text/plain; charset=utf-8",
+                body = html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
             }
-            (g, graft.sources.Warc.encodeWarc(recs, gzipPerRecord = g % 2 == 1))
+            (g, graft.sources.Warc.encodeWarcFixtures(recs,
+              gzipPerRecord = g % 2 == 1))
           }.toDF("g", "payload")
       val recs1 = graft.sources.Warc.warcRecords(
         warcFiles(tbl(s, dir, "documents").select("doc_id", "text"))).toDF()
@@ -5465,10 +5469,12 @@ object SparkEntry {
         .map { case (g, rs) =>
           val recs = rs.map { case (id, text) =>
             val status = if (id % 10 == 7) 404 else 200
-            (s"https://graft.test/doc/$id", status,
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            graft.sources.Warc.ResponseFixture(s"https://graft.test/doc/$id",
+              status, contentType = "text/plain; charset=utf-8",
+              body = text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-          (g, graft.sources.Warc.encodeWarc(recs, gzipPerRecord = g % 2 == 1))
+          (g, graft.sources.Warc.encodeWarcFixtures(recs,
+            gzipPerRecord = g % 2 == 1))
         }.toDF("g", "payload")
       val tmp = java.nio.file.Files.createTempDirectory("graft_warc_src_")
       deleteRecursivelyOnExit(tmp)

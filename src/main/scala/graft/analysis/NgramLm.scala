@@ -270,32 +270,20 @@ object NgramLm {
   }
 
   /** Maintenance (the bm25IndexCompact analog): fold every table's delta
-    * history into ONE `installment=0` partition via a fully-materialized
-    * side dir + delete+rename swap — a concurrent read sees either the
-    * old or the new layout, both summing to identical totals. Returns the
-    * compacted vocabulary size. */
+    * history into ONE `installment=0` partition
+    * ([[graft.store.Installments.fold]]) — the old and the new layout sum
+    * to identical totals. Returns the compacted vocabulary size. */
   def lmIndexCompact(spark: org.apache.spark.sql.SparkSession,
                      path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    def swap(dir: String, compacted: DataFrame): Long = {
-      val out = new Path(s"$path/$dir")
-      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(s"$path/$dir._compacting")
-      compacted.write.mode("overwrite")
-        .parquet(new Path(tmp, "installment=0").toString)
-      val rows = spark.read.parquet(tmp.toString).count()
-      if (!fs.delete(out, true) || !fs.rename(tmp, out))
-        throw new java.io.IOException(s"compaction swap failed for $path/$dir")
-      spark.catalog.refreshByPath(out.toString)
-      rows
-    }
-    val vocab = swap("uni", spark.read.parquet(s"$path/uni")
+    def fold(table: String, compacted: DataFrame): Long =
+      graft.store.Installments.fold(spark, s"$path/$table", compacted)
+    val vocab = fold("uni", spark.read.parquet(s"$path/uni")
       .groupBy("token").agg(sum("c").as("c"))
       .filter(col("c") =!= 0)) // fully-deleted tokens fold away physically
-    swap("bi", spark.read.parquet(s"$path/bi")
+    fold("bi", spark.read.parquet(s"$path/bi")
       .groupBy("bigram").agg(sum("c").as("c"))
       .filter(col("c") =!= 0))
-    swap("tot", spark.read.parquet(s"$path/tot")
+    fold("tot", spark.read.parquet(s"$path/tot")
       .agg(sum("n_total").cast("long").as("n_total")))
     // the negative deltas are now folded physically — clear the delete
     // LEDGER last (the shared crash-safe ordering: a re-run of a crashed

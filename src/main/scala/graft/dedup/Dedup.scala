@@ -654,8 +654,9 @@ object Dedup {
    * Physical fold of the tombstone set — the maintenance job
    * [[minhashIndexDelete]] defers to: rewrite `sets/` and `bands/`
    * without the tombstoned ids and recompute `sizes/` from the folded
-   * bands, each table folded to ONE `installment=0` partition behind the
-   * atomic side-dir swap; clear `deletes/` last. Crash-safe by ordering:
+   * bands, each table folded to ONE `installment=0` partition
+   * ([[graft.store.Tombstones.fold]], [[graft.store.Installments.fold]]);
+   * clear `deletes/` last. Crash-safe by ordering:
    * until the final clear, probes still anti-join the tombstones, so a
    * partially-folded index reads exactly like an unfolded one, and
    * re-running the vacuum completes it. asOf snapshots are only
@@ -664,28 +665,14 @@ object Dedup {
    */
   def minhashIndexVacuum(spark: org.apache.spark.sql.SparkSession,
                          path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    def swap(dir: String, folded: DataFrame): Long = {
-      val out = new Path(s"$path/$dir")
-      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(s"$path/$dir._compacting")
-      folded.write.mode("overwrite")
-        .parquet(new Path(tmp, "installment=0").toString)
-      val rows = spark.read.parquet(tmp.toString).count()
-      if (!fs.delete(out, true) || !fs.rename(tmp, out))
-        throw new java.io.IOException(s"vacuum swap failed for $path/$dir")
-      spark.catalog.refreshByPath(out.toString)
-      rows
-    }
-    swap("sets", graft.store.Tombstones.filter(spark, path,
-      spark.read.parquet(s"$path/sets").drop("installment"), "id"))
+    graft.store.Tombstones.fold(spark, path, "sets", "id")
     // sets/ is exploded — the surviving DOC count is distinct ids
     val docs = spark.read.parquet(s"$path/sets")
       .select("id").distinct().count()
-    swap("bands", graft.store.Tombstones.filter(spark, path,
-      spark.read.parquet(s"$path/bands").drop("installment"), "id"))
-    swap("sizes", spark.read.parquet(s"$path/bands")
-      .groupBy("band", "bucket").agg(count(lit(1)).as("cnt")))
+    graft.store.Tombstones.fold(spark, path, "bands", "id")
+    graft.store.Installments.fold(spark, s"$path/sizes",
+      spark.read.parquet(s"$path/bands")
+        .groupBy("band", "bucket").agg(count(lit(1)).as("cnt")))
     graft.store.Tombstones.clear(spark, path)
     docs
   }
@@ -693,13 +680,10 @@ object Dedup {
   /**
    * Index maintenance — the periodic job the append-only contract
    * promises (same shape as EventStreams.compactAndRewrite): fold every
-   * per-installment size delta into ONE `installment=0` partition, so a
-   * probed bucket resolves from one delta row again no matter how many
-   * appends have landed. The rewrite materializes fully in a side dir
-   * before a delete+rename swap — a concurrent probe sees either the old
-   * or the new sizes table, and both sum to identical totals (HDFS/posix
-   * renames are atomic; on an object store run this in a maintenance
-   * window or layer on a table format with atomic commits).
+   * per-installment size delta into ONE `installment=0` partition
+   * ([[graft.store.Installments.fold]]), so a probed bucket resolves from
+   * one delta row again no matter how many appends have landed; the old
+   * and the new sizes table sum to identical totals.
    *
    * `bands/` and `sets/` are left untouched: their rows are already
    * minimal and installment-invariant — compacting them would be a full
@@ -709,23 +693,10 @@ object Dedup {
    * number of distinct buckets in the compacted table.
    */
   def minhashIndexCompactSizes(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val sizesPath = s"$path/sizes"
-    val compacted = spark.read.parquet(sizesPath)
-      .groupBy("band", "bucket").agg(sum("cnt").as("cnt"))
-    val out = new Path(sizesPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(sizesPath + "._compacting")
-    // overwrite: a crashed prior compaction leaves only this side dir
-    compacted.write.mode("overwrite")
-      .parquet(new Path(tmp, "installment=0").toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"sizes swap failed for $sizesPath")
-    spark.catalog.refreshByPath(sizesPath)
-    rows
-  }
+                               path: String): Long =
+    graft.store.Installments.fold(spark, s"$path/sizes",
+      spark.read.parquet(s"$path/sizes")
+        .groupBy("band", "bucket").agg(sum("cnt").as("cnt")))
 
   /** One installment's three tables. Each stage reads the previous stage's
     * just-written partition back from parquet — disk materialization, no
@@ -969,23 +940,11 @@ object Dedup {
     graft.store.Tombstones.append(spark, path, ids, idCol)
 
   /** Fold installments to one dir, drop tombstoned rows, clear deletes —
-    * the shared compaction contract (atomic side-dir swap; clear LAST).
-    * Returns the surviving hash-row count. */
+    * the shared compaction contract ([[graft.store.Tombstones.fold]];
+    * clear LAST). Returns the surviving hash-row count. */
   def hammingIndexCompact(spark: org.apache.spark.sql.SparkSession,
                           path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val hPath = s"$path/hashes"
-    val out = new Path(hPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(hPath + "._compacting")
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(hPath).drop("installment"), "id")
-      .write.mode("overwrite")
-      .parquet(new Path(tmp, "installment=0").toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"compaction swap failed for $hPath")
-    spark.catalog.refreshByPath(hPath)
+    val rows = graft.store.Tombstones.fold(spark, path, "hashes", "id")
     graft.store.Tombstones.clear(spark, path)
     rows
   }
@@ -1218,31 +1177,20 @@ object Dedup {
   }
 
   /** Physical fold — frames/sizes/dfs rewritten without the tombstoned
-    * videos to one `installment=0` partition each behind the atomic
-    * side-dir swap; `deletes/` cleared LAST (crash-safe ordering: until
-    * then probes still anti-join, and a re-run completes the job).
-    * Returns the surviving video count. */
+    * videos to one `installment=0` partition each
+    * ([[graft.store.Tombstones.fold]], [[graft.store.Installments.fold]]);
+    * `deletes/` cleared LAST (crash-safe ordering: until then probes
+    * still anti-join, and a re-run completes the job). Returns the
+    * surviving video count. */
   def videoIndexCompact(spark: org.apache.spark.sql.SparkSession,
                         path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    def swap(dir: String, folded: DataFrame): Long = {
-      val out = new Path(s"$path/$dir")
-      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(s"$path/$dir._compacting")
-      folded.write.mode("overwrite")
-        .parquet(new Path(tmp, "installment=0").toString)
-      val rows = spark.read.parquet(tmp.toString).count()
-      if (!fs.delete(out, true) || !fs.rename(tmp, out))
-        throw new java.io.IOException(s"compaction swap failed for $path/$dir")
-      spark.catalog.refreshByPath(out.toString)
-      rows
-    }
-    swap("frames", graft.store.Tombstones.filter(spark, path,
-      spark.read.parquet(s"$path/frames").drop("installment"), "id"))
+    graft.store.Tombstones.fold(spark, path, "frames", "id")
     val live = spark.read.parquet(s"$path/frames")
       .select("id", "h").distinct()
-    val videos = swap("sizes", live.groupBy("id").agg(count(lit(1)).as("n")))
-    swap("dfs", live.groupBy("h").agg(count(lit(1)).as("c")))
+    val videos = graft.store.Installments.fold(spark, s"$path/sizes",
+      live.groupBy("id").agg(count(lit(1)).as("n")))
+    graft.store.Installments.fold(spark, s"$path/dfs",
+      live.groupBy("h").agg(count(lit(1)).as("c")))
     graft.store.Tombstones.clear(spark, path)
     videos
   }

@@ -189,9 +189,10 @@ object Bm25 {
   /**
    * Physical fold of the tombstone set — [[bm25IndexDelete]]'s deferred
    * maintenance: rewrite `postings/` without the tombstoned docs (folded
-   * to one `installment=0` partition behind the atomic side-dir swap),
-   * fold `terms/`/`stats/` with [[bm25IndexCompact]] (their sums already
-   * net out the delete's negative deltas), clear `deletes/` last.
+   * to one `installment=0` partition through
+   * [[graft.store.DirSwap.replace]]), fold `terms/`/`stats/` with
+   * [[bm25IndexCompact]] (their sums already net out the delete's
+   * negative deltas), clear `deletes/` last.
    * Crash-safe by ordering: until the final clear, searches still
    * anti-join the tombstones, so a partially-folded index reads exactly
    * like an unfolded one and a re-run completes the job. Returns the
@@ -199,20 +200,13 @@ object Bm25 {
    */
   def bm25IndexVacuum(spark: org.apache.spark.sql.SparkSession,
                       path: String): Long = {
-    import org.apache.hadoop.fs.Path
     val pPath = s"$path/postings"
-    val out = new Path(pPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(pPath + "._compacting")
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(pPath).drop("installment"), "doc_id")
-      .write.mode("overwrite")
-      .parquet(new Path(tmp, "installment=0").toString)
-    val docs = spark.read.parquet(tmp.toString)
-      .select("doc_id").distinct().count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"vacuum swap failed for $pPath")
-    spark.catalog.refreshByPath(pPath)
+    val docs = graft.store.DirSwap.replace(spark, pPath) { side =>
+      graft.store.Tombstones.filter(spark, path,
+          spark.read.parquet(pPath).drop("installment"), "doc_id")
+        .write.parquet(s"$side/installment=0")
+      spark.read.parquet(side).select("doc_id").distinct().count()
+    }
     bm25IndexCompact(spark, path)
     graft.store.Tombstones.clear(spark, path)
     docs
@@ -221,33 +215,21 @@ object Bm25 {
   /**
    * Index maintenance (the minhashIndexCompactSizes analog): fold the
    * per-installment `terms/` df deltas and `stats/` deltas into ONE
-   * `installment=0` partition each, so a searched term resolves from one
-   * delta row no matter how many appends have landed. Each rewrite
-   * materializes fully in a side dir before a delete+rename swap — a
-   * concurrent search sees either the old or the new table, and both sum
-   * to identical totals. `postings/` is left untouched: its rows are
-   * already minimal and installment-invariant. Returns the number of
-   * distinct terms in the compacted terms table.
+   * `installment=0` partition each ([[graft.store.Installments.fold]]),
+   * so a searched term resolves from one delta row no matter how many
+   * appends have landed; the old and the new table sum to identical
+   * totals. `postings/` is left untouched: its rows are already minimal
+   * and installment-invariant. Returns the number of distinct terms in
+   * the compacted terms table.
    */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
                        path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    def swap(dir: String, compacted: DataFrame): Long = {
-      val out = new Path(s"$path/$dir")
-      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(s"$path/$dir._compacting")
-      compacted.write.mode("overwrite")
-        .parquet(new Path(tmp, "installment=0").toString)
-      val rows = spark.read.parquet(tmp.toString).count()
-      if (!fs.delete(out, true) || !fs.rename(tmp, out))
-        throw new java.io.IOException(s"compaction swap failed for $path/$dir")
-      spark.catalog.refreshByPath(out.toString)
-      rows
-    }
-    val nTerms = swap("terms", spark.read.parquet(s"$path/terms")
-      .groupBy("term").agg(sum("df_t").as("df_t")))
-    swap("stats", spark.read.parquet(s"$path/stats")
-      .agg(sum("n").as("n"), sum("sdl").as("sdl")))
+    val nTerms = graft.store.Installments.fold(spark, s"$path/terms",
+      spark.read.parquet(s"$path/terms")
+        .groupBy("term").agg(sum("df_t").as("df_t")))
+    graft.store.Installments.fold(spark, s"$path/stats",
+      spark.read.parquet(s"$path/stats")
+        .agg(sum("n").as("n"), sum("sdl").as("sdl")))
     nTerms
   }
 

@@ -438,7 +438,7 @@ object Pq {
     * unchanged). */
   private def readRotation(spark: SparkSession, path: String,
                            dim: Int): Array[Array[Double]] = {
-    if (!Quantize.dirExists(spark, s"$path/rotation")) return null
+    if (!graft.store.dirExists(spark, s"$path/rotation")) return null
     val rows = spark.read.parquet(s"$path/rotation")
       .select("i", "row").collect()
     val r = new Array[Array[Double]](dim)
@@ -620,24 +620,12 @@ object Pq {
 
   /** Fold every `installment=` partition into ONE, dropping tombstoned
     * rows physically and clearing the deletes list (the int8Compact
-    * sibling — atomic side-dir swap; code bytes untouched, so search
-    * results are identical; asOf snapshots are only meaningful between
-    * compactions). Returns the surviving row count. */
+    * sibling — [[graft.store.Tombstones.fold]]; code bytes untouched, so
+    * search results are identical; asOf snapshots are only meaningful
+    * between compactions). Returns the surviving row count. */
   def pqCompact(spark: SparkSession, path: String,
                 corpusId: String = "vec_id"): Long = {
-    import org.apache.hadoop.fs.Path
-    val cPath = s"$path/codes"
-    val out = new Path(cPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(cPath + "._compacting")
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(cPath).drop("installment"), corpusId)
-      .write.mode("overwrite")
-      .parquet(new Path(tmp, "installment=0").toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"compaction swap failed for $cPath")
-    spark.catalog.refreshByPath(cPath)
+    val rows = graft.store.Tombstones.fold(spark, path, "codes", corpusId)
     graft.store.Tombstones.clear(spark, path)
     rows
   }
@@ -822,7 +810,7 @@ object Pq {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("list_id", "ingest")
       .parquet(s"$path/codes")
-    if (Quantize.dirExists(spark, s"$path/raw"))
+    if (graft.store.dirExists(spark, s"$path/raw"))
       assigned.filter(enc.isNotNull)
         .withColumn("ingest", lit(ingest))
         .write.mode("overwrite")
@@ -890,7 +878,7 @@ object Pq {
                          queryVec: String = "query_vec"): DataFrame = {
     require(candidateK >= k,
       s"candidateK ($candidateK) must be at least k ($k)")
-    require(Quantize.dirExists(spark, s"$path/raw"),
+    require(graft.store.dirExists(spark, s"$path/raw"),
       s"$path has no raw/ refine sidecar — build with storeRaw = true " +
         "to enable refined search")
     import spark.implicits._
@@ -949,17 +937,13 @@ object Pq {
                     installment: Int, idCol: String = "vec_id"): Unit =
     graft.store.Tombstones.appendAt(spark, path, ids, idCol, installment)
 
-  /** Fold the ingest history hash-clustered by list via the shared
-    * atomic-swap [[Quantize.compactListDir]] (tombstones drop
-    * physically; the raw/ sidecar folds in lockstep or refined
-    * searches would resurrect deleted rows / lose appended ones).
-    * Returns the surviving code row count. */
+  /** Fold the ingest history hash-clustered by list — the same
+    * two-level layout as IVF-SQ8, so the same fold:
+    * [[Quantize.ivfSq8Compact]] (tombstones drop physically; the raw/
+    * sidecar folds in lockstep or refined searches would resurrect
+    * deleted rows / lose appended ones). Returns the surviving code row
+    * count. */
   def ivfPqCompact(spark: SparkSession, path: String,
-                   corpusId: String = "vec_id"): Long = {
-    val rows = Quantize.compactListDir(spark, path, s"$path/codes", corpusId)
-    if (Quantize.dirExists(spark, s"$path/raw"))
-      Quantize.compactListDir(spark, path, s"$path/raw", corpusId)
-    graft.store.Tombstones.clear(spark, path)
-    rows
-  }
+                   corpusId: String = "vec_id"): Long =
+    Quantize.ivfSq8Compact(spark, path, corpusId)
 }

@@ -276,11 +276,6 @@ object Quantize {
     graft.store.Tombstones.clear(spark, path)
   }
 
-  private[index] def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Fold new vectors in against the FROZEN centroids and scale (the
     * ivfAppend contract: map-side assignment + quantization, appends
     * into matching `list_id=` partitions, nothing re-read or rewritten;
@@ -317,7 +312,7 @@ object Quantize {
     // the build decided whether this index carries the refine sidecar; an
     // append must keep raw/ in lockstep with codes/ or refined searches
     // would silently stop seeing appended vectors
-    if (dirExists(spark, s"$path/raw"))
+    if (graft.store.dirExists(spark, s"$path/raw"))
       assigned.withColumn("ingest", lit(ingest))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -332,45 +327,21 @@ object Quantize {
    * parquet file per touched `list_id=` partition, so a daily cadence
    * accumulates hundreds of small files per list and probe reads
    * degrade to file-open overhead. Rewrites the packed codes
-   * hash-clustered by list (one file per list per writing task),
-   * materialized fully in a side dir before an atomic delete+rename
-   * swap — a concurrent search sees the old or the new layout, never a
-   * mix; code bytes are untouched, so search results are bit-identical.
-   * Centroids and the stored scale are not touched. Returns the
-   * compacted code row count.
+   * hash-clustered by list (one file per list per writing task) with
+   * [[SimilarityIndex.compactListDir]]; code bytes are untouched, so
+   * search results are bit-identical. Centroids and the stored scale are
+   * not touched. Returns the compacted code row count.
    */
   def ivfSq8Compact(spark: SparkSession, path: String,
                     corpusId: String = "vec_id"): Long = {
-    val rows = compactListDir(spark, path, s"$path/codes", corpusId)
+    val rows = SimilarityIndex.compactListDir(spark, path, s"$path/codes",
+      corpusId)
     // keep the refine sidecar's file layout in step with the codes it
     // shadows (same small-file accumulation per append — and the SAME
     // tombstone fold, or refined re-ranks would resurrect deleted rows)
-    if (dirExists(spark, s"$path/raw"))
-      compactListDir(spark, path, s"$path/raw", corpusId)
+    if (graft.store.dirExists(spark, s"$path/raw"))
+      SimilarityIndex.compactListDir(spark, path, s"$path/raw", corpusId)
     graft.store.Tombstones.clear(spark, path)
-    rows
-  }
-
-  /** Rewrite one `list_id=`-partitioned dir hash-clustered by list via the
-    * atomic side-dir swap (shared by codes/ and the raw/ refine sidecar,
-    * and by [[Pq.ivfPqCompact]] — the same two-level layout), dropping
-    * tombstoned rows during the fold. */
-  private[index] def compactListDir(spark: SparkSession, indexPath: String,
-                                    dir: String, corpusId: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val out = new Path(dir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + "._compacting")
-    graft.store.Tombstones.filter(spark, indexPath,
-        spark.read.parquet(dir), corpusId)
-      .withColumn("ingest", lit(0)) // the ingest history folds away
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id", "ingest")
-      .parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"codes swap failed for $dir")
-    spark.catalog.refreshByPath(dir)
     rows
   }
 
@@ -438,7 +409,7 @@ object Quantize {
                           queryVec: String = "query_vec"): DataFrame = {
     require(candidateK >= k,
       s"candidateK ($candidateK) must be at least k ($k)")
-    require(dirExists(spark, s"$path/raw"),
+    require(graft.store.dirExists(spark, s"$path/raw"),
       s"$path has no raw/ refine sidecar — build with storeRaw = true " +
         "to enable refined search")
     import spark.implicits._
@@ -824,31 +795,18 @@ object Quantize {
   /**
    * Installment-index maintenance for [[int8Build]]/[[int8Append]] — the
    * bm25IndexCompact sibling: fold every `installment=` partition of
-   * packed codes into ONE `installment=0` dir via the atomic side-dir
-   * swap (a concurrent search sees the old or the new listing, never a
-   * mix). Tombstoned rows are dropped during the fold and the deletes
-   * list is cleared after the swap — compaction is where logical deletes
-   * become physical. Surviving code bytes and the stored scale are
-   * untouched, so search results are bit-identical; `asOfInstallment`
-   * snapshots are only meaningful between compactions (the append
-   * history folds away — the shared appendable-index contract). Returns
-   * the compacted row count.
+   * packed codes into ONE `installment=0` dir
+   * ([[graft.store.Tombstones.fold]]). Tombstoned rows are dropped during
+   * the fold and the deletes list is cleared after the swap — compaction
+   * is where logical deletes become physical. Surviving code bytes and
+   * the stored scale are untouched, so search results are bit-identical;
+   * `asOfInstallment` snapshots are only meaningful between compactions
+   * (the append history folds away — the shared appendable-index
+   * contract). Returns the compacted row count.
    */
   def int8Compact(spark: SparkSession, path: String,
                   corpusId: String = "vec_id"): Long = {
-    import org.apache.hadoop.fs.Path
-    val cPath = s"$path/codes"
-    val out = new Path(cPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(cPath + "._compacting")
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(cPath).drop("installment"), corpusId)
-      .write.mode("overwrite")
-      .parquet(new Path(tmp, "installment=0").toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"compaction swap failed for $cPath")
-    spark.catalog.refreshByPath(cPath)
+    val rows = graft.store.Tombstones.fold(spark, path, "codes", corpusId)
     graft.store.Tombstones.clear(spark, path)
     rows
   }

@@ -254,6 +254,23 @@ object SimilarityIndex {
     graft.store.Tombstones.clear(spark, path)
   }
 
+  /** Fold one `list_id=X/ingest=N`-partitioned dir (the layout above) to
+    * `ingest=0`, hash-clustered by list and without the tombstoned rows,
+    * through [[graft.store.DirSwap.replace]]; returns the folded row
+    * count. Shared by [[ivfCompact]] and the IVF-SQ8/IVF-PQ codes/ and
+    * raw/ folds ([[Quantize.ivfSq8Compact]]). */
+  private[index] def compactListDir(spark: SparkSession, indexPath: String,
+                                    dir: String, corpusId: String): Long =
+    graft.store.DirSwap.replace(spark, dir) { side =>
+      graft.store.Tombstones.filter(spark, indexPath,
+          spark.read.parquet(dir), corpusId)
+        .withColumn("ingest", lit(0)) // the ingest history folds away
+        .repartition(col("list_id"))
+        .write.partitionBy("list_id", "ingest")
+        .parquet(side)
+      spark.read.parquet(side).count()
+    }
+
   /** The stored centroid matrix, list_id-ordered — nlist rows, driver-side
     * by design (it is the index's tiny routing table). */
   private[index] def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] = {
@@ -372,31 +389,13 @@ object SimilarityIndex {
    * `list_id=` partition, so a daily cadence accumulates hundreds of
    * small files per list and probe reads degrade to file-open overhead.
    * Rewrites the assignments hash-clustered by list (one file per list
-   * per writing task), materialized fully in a side dir before an atomic
-   * delete+rename swap — a concurrent search sees the old or the new
-   * layout, never a mix; row content is untouched, so results are
-   * bit-identical. Centroids are not touched. Returns the compacted
-   * assignment row count.
+   * per writing task) with [[compactListDir]]; row content is untouched,
+   * so results are bit-identical. Centroids are not touched. Returns the
+   * compacted assignment row count.
    */
   def ivfCompact(spark: SparkSession, path: String,
                  corpusId: String = "vec_id"): Long = {
-    import org.apache.hadoop.fs.Path
-    val aPath = s"$path/assignments"
-    val out = new Path(aPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(aPath + "._compacting")
-    // tombstoned rows are dropped during the fold — compaction is where
-    // logical deletes become physical (the ivfSq8Compact contract)
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(aPath), corpusId)
-      .withColumn("ingest", lit(0)) // the ingest history folds away
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id", "ingest")
-      .parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"assignments swap failed for $aPath")
-    spark.catalog.refreshByPath(aPath)
+    val rows = compactListDir(spark, path, s"$path/assignments", corpusId)
     // clear deletes LAST (the Bm25 vacuum ordering): until this point a
     // crashed compaction still reads correctly through the anti-join, and
     // re-running the compaction completes it

@@ -787,31 +787,21 @@ object Crawl {
 
   /** Fold the `edges/batch=N` partitions into ONE keyed by the highest
     * batch id seen (counts SUM per host pair) — the [[compactNext]]
-    * sibling: same atomic delete+rename swap, same
+    * sibling: same [[graft.store.DirSwap.replace]], same
     * replays-out-of-contract-afterwards convention. Returns the
     * retained batch id, or -1 when the ledger is empty/absent. */
   def compactEdges(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val edges = new Path(s"$frontierDir/edges")
-    val fs = edges.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, edges.toString)) return -1L
-    val df = spark.read.parquet(edges.toString)
+    val edges = s"$frontierDir/edges"
+    if (!hasCommittedData(spark, edges)) return -1L
+    val df = spark.read.parquet(edges)
     val maxBatch = df.agg(max(col("batch"))).head() match {
       case r if r.isNullAt(0) => return -1L
       case r => r.getAs[Number](0).longValue()
     }
     val folded = df.groupBy("src_host", "dst_host")
       .agg(sum(col("n")).cast("long").as("n"))
-    val tmp = new Path(s"$frontierDir/edges._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/edges._old")
-    fs.delete(old, true)
-    if (!fs.rename(edges, old))
-      throw new java.io.IOException(s"edges compact swap-out failed: $edges")
-    if (!fs.rename(tmp, edges))
-      throw new java.io.IOException(s"edges compact swap-in failed: $edges")
-    fs.delete(old, true)
+    graft.store.DirSwap.replace(spark, edges)(side =>
+      folded.write.parquet(s"$side/batch=$maxBatch"))
     maxBatch
   }
 
@@ -853,15 +843,14 @@ object Crawl {
     * [[imagePairsLedger]] read — superseded pair sets drop physically,
     * and null-src supersession sentinels fold to ABSENCE: dropped after
     * the latest-batch selection, so the pairs they superseded drop with
-    * them). The [[compactNext]] sibling: same atomic delete+rename
-    * swap, same replays-out-of-contract-afterwards convention. Returns
-    * the retained batch id, or -1 when the ledger is empty/absent. */
+    * them). The [[compactNext]] sibling: same
+    * [[graft.store.DirSwap.replace]], same replays-out-of-contract-
+    * afterwards convention. Returns the retained batch id, or -1 when
+    * the ledger is empty/absent. */
   def compactImages(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val images = new Path(s"$frontierDir/images")
-    val fs = images.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, images.toString)) return -1L
-    val df = spark.read.parquet(images.toString)
+    val images = s"$frontierDir/images"
+    if (!hasCommittedData(spark, images)) return -1L
+    val df = spark.read.parquet(images)
     val maxBatch = df.agg(max(col("batch"))).head() match {
       case r if r.isNullAt(0) => return -1L
       case r => r.getAs[Number](0).longValue()
@@ -872,16 +861,8 @@ object Crawl {
         col("batch") === col("_il_max"))
       .filter(col("img_url").isNotNull)
       .select(ImagePairCols.map(col): _*)
-    val tmp = new Path(s"$frontierDir/images._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/images._old")
-    fs.delete(old, true)
-    if (!fs.rename(images, old))
-      throw new java.io.IOException(s"images compact swap-out failed: $images")
-    if (!fs.rename(tmp, images))
-      throw new java.io.IOException(s"images compact swap-in failed: $images")
-    fs.delete(old, true)
+    graft.store.DirSwap.replace(spark, images)(side =>
+      folded.write.parquet(s"$side/batch=$maxBatch"))
     maxBatch
   }
 
@@ -916,15 +897,14 @@ object Crawl {
 
   /** Fold the `media/batch=N` partitions into ONE keyed by the highest
     * batch id seen — the [[compactImages]] sibling: latest-batch pairs
-    * per feed url, sentinels fold to absence, atomic delete+rename
-    * swap, replays out of contract afterwards. Returns the retained
-    * batch id, or -1 when the ledger is empty/absent. */
+    * per feed url, sentinels fold to absence,
+    * [[graft.store.DirSwap.replace]], replays out of contract
+    * afterwards. Returns the retained batch id, or -1 when the ledger is
+    * empty/absent. */
   def compactMedia(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val media = new Path(s"$frontierDir/media")
-    val fs = media.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, media.toString)) return -1L
-    val df = spark.read.parquet(media.toString)
+    val media = s"$frontierDir/media"
+    if (!hasCommittedData(spark, media)) return -1L
+    val df = spark.read.parquet(media)
     val maxBatch = df.agg(max(col("batch"))).head() match {
       case r if r.isNullAt(0) => return -1L
       case r => r.getAs[Number](0).longValue()
@@ -935,16 +915,8 @@ object Crawl {
         col("batch") === col("_ml_max"))
       .filter(col("media_url").isNotNull)
       .select(MediaPairCols.map(col): _*)
-    val tmp = new Path(s"$frontierDir/media._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/media._old")
-    fs.delete(old, true)
-    if (!fs.rename(media, old))
-      throw new java.io.IOException(s"media compact swap-out failed: $media")
-    if (!fs.rename(tmp, media))
-      throw new java.io.IOException(s"media compact swap-in failed: $media")
-    fs.delete(old, true)
+    graft.store.DirSwap.replace(spark, media)(side =>
+      folded.write.parquet(s"$side/batch=$maxBatch"))
     maxBatch
   }
 
@@ -1769,17 +1741,15 @@ object Crawl {
     * the fold also PRESERVES the churn signal: the folded row keeps
     * the url's LAST observed hash plus accumulated (n_obs, n_changes)
     * — [[recrawlChurn]] over a compacted-then-extended ledger equals
-    * the uncompacted math (spec- and oracle-pinned). Atomic
-    * delete+rename swap (the maintenance convention); replays of
-    * PRE-compaction batches are out of contract afterwards, like every
-    * index compaction here. Returns the max batch id seen, or -1 when
-    * the ledger is empty/absent. */
+    * the uncompacted math (spec- and oracle-pinned).
+    * [[graft.store.DirSwap.replace]] (the maintenance convention);
+    * replays of PRE-compaction batches are out of contract afterwards,
+    * like every index compaction here. Returns the max batch id seen, or
+    * -1 when the ledger is empty/absent. */
   def compactFetched(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val fetched = new Path(s"$frontierDir/fetched")
-    val fs = fetched.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, fetched.toString)) return -1L
-    val df = spark.read.parquet(fetched.toString)
+    val fetched = s"$frontierDir/fetched"
+    if (!hasCommittedData(spark, fetched)) return -1L
+    val df = spark.read.parquet(fetched)
     val maxBatch = df.agg(max(col("batch"))).head() match {
       case r if r.isNullAt(0) => return -1L
       case r => r.getAs[Number](0).longValue()
@@ -1791,16 +1761,8 @@ object Crawl {
       else churnStats(df)
         .select(col("url"), col("content_md5"), col("n_obs"),
           col("n_changes"), col("last_batch").as("batch"))
-    val tmp = new Path(s"$frontierDir/fetched._compacting")
-    fs.delete(tmp, true)
-    folded.write.partitionBy("batch").parquet(tmp.toString)
-    val old = new Path(s"$frontierDir/fetched._old")
-    fs.delete(old, true)
-    if (!fs.rename(fetched, old))
-      throw new java.io.IOException(s"fetched compact swap-out failed: $fetched")
-    if (!fs.rename(tmp, fetched))
-      throw new java.io.IOException(s"fetched compact swap-in failed: $fetched")
-    fs.delete(old, true)
+    graft.store.DirSwap.replace(spark, fetched)(side =>
+      folded.write.partitionBy("batch").parquet(side))
     maxBatch
   }
 
@@ -1957,7 +1919,7 @@ object Crawl {
     * about the page too). Rewrites the ledgers minus the given urls,
     * PRESERVING the per-batch partition layout and every surviving
     * row verbatim (accumulators included — churn math over the
-    * survivors is untouched), via the atomic delete+rename swap of
+    * survivors is untouched), via [[graft.store.DirSwap.replace]] like
     * the compaction family; replays of pre-purge batches are out of
     * contract afterwards (the shared convention). Returns (purged
     * fetched rows, purged next rows, purged image pairs, purged
@@ -1993,16 +1955,8 @@ object Crawl {
         fs.delete(p, true)
         return before
       }
-      val tmp = new Path(s"$frontierDir/$name._purging")
-      fs.delete(tmp, true)
-      kept.write.partitionBy("batch").parquet(tmp.toString)
-      val old = new Path(s"$frontierDir/$name._old")
-      fs.delete(old, true)
-      if (!fs.rename(p, old))
-        throw new java.io.IOException(s"purge swap-out failed: $p")
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"purge swap-in failed: $p")
-      fs.delete(old, true)
+      graft.store.DirSwap.replace(spark, p.toString)(side =>
+        kept.write.partitionBy("batch").parquet(side))
       before - keptCount
     }
     (purge("fetched"), purge("next"), purge("images"), purge("media"))
@@ -2013,8 +1967,9 @@ object Crawl {
     * fetch-priority signal accumulates across discoveries), and urls
     * that have since been FETCHED drop (their ledger row gates them —
     * a frontier row for a fetched url is a guaranteed double-fetch).
-    * The [[compactFetched]] sibling: same atomic delete+rename swap,
-    * same replays-out-of-contract-afterwards convention. Run it before
+    * The [[compactFetched]] sibling: same
+    * [[graft.store.DirSwap.replace]], same replays-out-of-contract-
+    * afterwards convention. Run it before
     * handing `next/` to a fetcher that consumes across batches.
     * Returns the retained batch id, or -1 when the dir is empty/absent.
     *
@@ -2065,24 +2020,22 @@ object Crawl {
   private def compactNextImpl(spark: SparkSession, frontierDir: String,
                               fetchedBloom: org.apache.spark.util.sketch.BloomFilter,
                               coversBelow: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val next = new Path(s"$frontierDir/next")
-    val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val next = s"$frontierDir/next"
     // committed-data probe, not bare existence: a crash-created empty
     // dir must fold like absence, not fail schema inference (r15)
-    if (!hasCommittedData(spark, next.toString)) return -1L
-    val df = spark.read.parquet(next.toString)
+    if (!hasCommittedData(spark, next)) return -1L
+    val df = spark.read.parquet(next)
     val maxBatch = df.agg(max(col("batch"))).head() match {
       case r if r.isNullAt(0) => return -1L
       case r => r.getAs[Number](0).longValue()
     }
     val folded0 = df.groupBy("url")
       .agg(sum(col("n_refs")).cast("long").as("n_refs"))
-    val fetched = new Path(s"$frontierDir/fetched")
+    val fetched = s"$frontierDir/fetched"
     val folded =
-      if (!hasCommittedData(spark, fetched.toString)) folded0
+      if (!hasCommittedData(spark, fetched)) folded0
       else {
-        val fetchedAll = spark.read.parquet(fetched.toString)
+        val fetchedAll = spark.read.parquet(fetched)
         val fetchedDf = fetchedAll.select("url")
         if (fetchedBloom == null)
           folded0.join(fetchedDf, Seq("url"), "left_anti")
@@ -2110,16 +2063,8 @@ object Crawl {
             maybe.join(broadcast(confirmed), Seq("url"), "left_anti"))
         }
       }
-    val tmp = new Path(s"$frontierDir/next._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/next._old")
-    fs.delete(old, true)
-    if (!fs.rename(next, old))
-      throw new java.io.IOException(s"next compact swap-out failed: $next")
-    if (!fs.rename(tmp, next))
-      throw new java.io.IOException(s"next compact swap-in failed: $next")
-    fs.delete(old, true)
+    graft.store.DirSwap.replace(spark, next)(side =>
+      folded.write.parquet(s"$side/batch=$maxBatch"))
     maxBatch
   }
 

@@ -217,22 +217,14 @@ object SpanDedup {
   }
 
   /** Maintenance: fold the per-installment count deltas into ONE
-    * `installment=0` partition via a side-dir materialization +
-    * delete+rename swap (a concurrent probe sees old or new, identical
-    * hash sets). Returns the distinct-window count. */
+    * `installment=0` partition ([[graft.store.Installments.fold]]; old
+    * and new hold identical hash sets). Returns the distinct-window
+    * count. */
   def spanIndexCompact(spark: org.apache.spark.sql.SparkSession,
                        path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val out = new Path(s"$path/wins")
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$path/wins._compacting")
-    spark.read.parquet(s"$path/wins").groupBy("h").agg(sum("c").as("c"))
-      .filter(col("c") =!= 0) // fully-deleted windows fold away physically
-      .write.mode("overwrite").parquet(new Path(tmp, "installment=0").toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"compaction swap failed for $path/wins")
-    spark.catalog.refreshByPath(out.toString)
+    val rows = graft.store.Installments.fold(spark, s"$path/wins",
+      spark.read.parquet(s"$path/wins").groupBy("h").agg(sum("c").as("c"))
+        .filter(col("c") =!= 0)) // fully-deleted windows fold away physically
     // deltas folded physically — clear the delete ledger LAST (the shared
     // crash-safe ordering)
     graft.store.Tombstones.clear(spark, path)

@@ -111,65 +111,6 @@ object Warc {
     out
   }
 
-  /** Encode a complete WARC file: a `warcinfo` record followed by one
-    * `response` record per (uri, status, body). `gzipPerRecord` wraps
-    * EACH record in its own gzip member — the Common Crawl packaging the
-    * decoder must stream through. */
-  def encodeWarc(records: Seq[(String, Int, Array[Byte])],
-                 date: String = "2026-01-01T00:00:00Z",
-                 gzipPerRecord: Boolean = false): Array[Byte] =
-    encodeWarcTyped(records.map { case (u, st, b) =>
-      (u, st, "text/plain; charset=utf-8", b)
-    }, date, gzipPerRecord)
-
-  /** [[encodeWarc]] with a per-record HTTP Content-Type — the shape the
-    * charset-aware extraction fixtures need (crawl responses declare
-    * their charset in this header ~60% of the time). */
-  def encodeWarcTyped(records: Seq[(String, Int, String, Array[Byte])],
-                      date: String = "2026-01-01T00:00:00Z",
-                      gzipPerRecord: Boolean = false): Array[Byte] =
-    encodeWarcResponses(records.map { case (u, st, ct, b) =>
-      (u, st, ct, null: String, b)
-    }, date, gzipPerRecord)
-
-  /** The full fixture encoder: per-record Content-Type AND an optional
-    * `Location` header — (uri, status, contentType, location|null,
-    * body). The redirect-handling fixtures need real 3xx records whose
-    * Location survives the HTTP split. */
-  def encodeWarcResponses(records: Seq[(String, Int, String, String, Array[Byte])],
-                          date: String = "2026-01-01T00:00:00Z",
-                          gzipPerRecord: Boolean = false): Array[Byte] =
-    encodeWarcResponsesTagged(records.map { case (u, st, ct, loc, b) =>
-      (u, st, ct, loc, null: String, b)
-    }, date, gzipPerRecord)
-
-  /** [[encodeWarcResponses]] plus an optional per-record `X-Robots-Tag`
-    * value — (uri, status, contentType, location|null, xRobots|null,
-    * body). The header-politeness fixtures need the tag to survive the
-    * HTTP split. */
-  def encodeWarcResponsesTagged(
-      records: Seq[(String, Int, String, String, String, Array[Byte])],
-      date: String = "2026-01-01T00:00:00Z",
-      gzipPerRecord: Boolean = false): Array[Byte] =
-    encodeWarcResponsesFull(records.map { case (u, st, ct, loc, xr, b) =>
-      (u, st, ct, loc, xr, null: String, b)
-    }, date, gzipPerRecord)
-
-  /** The widest fixture encoder (r15): per-record Content-Type,
-    * `Location`, `X-Robots-Tag` AND `Retry-After` — (uri, status,
-    * contentType, location|null, xRobots|null, retryAfter|null, body).
-    * The throttling-politeness fixtures need `Retry-After` to survive
-    * the HTTP split into [[graft.pipeline.Crawl.retryAfterDelays]]. */
-  def encodeWarcResponsesFull(
-      records: Seq[(String, Int, String, String, String, String,
-        Array[Byte])],
-      date: String = "2026-01-01T00:00:00Z",
-      gzipPerRecord: Boolean = false): Array[Byte] =
-    encodeWarcFixtures(records.map { case (u, st, ct, loc, xr, ra, b) =>
-      ResponseFixture(u, st, contentType = ct, location = loc,
-        xRobots = xr, retryAfter = ra, body = b)
-    }, date, gzipPerRecord)
-
   /** One fixture record for [[encodeWarcFixtures]] — the named-field
     * form that ended the positional-tuple treadmill (r15): every
     * header the HTTP split surfaces is a defaulted field, and
@@ -188,9 +129,10 @@ object Warc {
                                    body: Array[Byte] = Array.emptyByteArray,
                                    warcType: String = "response")
 
-  /** The r15 fixture encoder: a `warcinfo` record followed by one
-    * record per [[ResponseFixture]] (every earlier `encodeWarc*` form
-    * delegates here). */
+  /** Encode a complete WARC file: a `warcinfo` record followed by one
+    * record per [[ResponseFixture]]. `gzipPerRecord` wraps EACH record in
+    * its own gzip member — the Common Crawl packaging the decoder must
+    * stream through. */
   def encodeWarcFixtures(records: Seq[ResponseFixture],
                          date: String = "2026-01-01T00:00:00Z",
                          gzipPerRecord: Boolean = false): Array[Byte] = {
@@ -486,12 +428,14 @@ object Warc {
         var shard = 0
         rows.grouped(recordsPerShard).foreach { chunk =>
           val batch = chunk.map { r =>
-            (r.getString(0), 200,
-              Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray))
+            ResponseFixture(r.getString(0), 200,
+              contentType = "text/plain; charset=utf-8",
+              body = Option(r.getAs[Array[Byte]](1))
+                .getOrElse(Array.emptyByteArray))
           }
           val out = fs.create(new org.apache.hadoop.fs.Path(dir,
             f"part-$pid%05d-$shard%04d.warc.gz"), true)
-          try out.write(encodeWarc(batch, date, gzipPerRecord = true))
+          try out.write(encodeWarcFixtures(batch, date, gzipPerRecord = true))
           finally out.close()
           shard += 1
         }

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Shared numbering discipline for the append-only persisted indexes
@@ -35,6 +35,15 @@ object Installments {
           "is corrupt or only partially written; rebuild it (or restore " +
           "installment=0 from backup) before appending"))
   }
+
+  /** Replace `dir` with `folded` as its one `installment=0` partition
+    * ([[DirSwap.replace]]) — the fold every installment-index compaction
+    * ends in. Returns the folded row count. */
+  def fold(spark: SparkSession, dir: String, folded: DataFrame): Long =
+    DirSwap.replace(spark, dir) { side =>
+      folded.write.parquet(s"$side/installment=0")
+      spark.read.parquet(side).count()
+    }
 
   /** Maintenance observability for installment indexes (r17): per
     * (table, installment) row counts — the compaction/health signal an

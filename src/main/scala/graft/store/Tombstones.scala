@@ -40,11 +40,6 @@ object Tombstones {
 
   private def deletesDir(path: String) = s"$path/deletes"
 
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Append a batch of deleted ids as the next `installment=` partition
     * of `$path/deletes`. First delete creates the dir at installment 0.
     * Returns the installment written. Ids are stored distinct — a
@@ -148,6 +143,15 @@ object Tombstones {
       broadcast(read(spark, path, stored.schema(joinCol).dataType)
         .select(col("id").as(joinCol))),
       Seq(joinCol), "left_anti")
+
+  /** Fold every installment of `$path/$table` into one `installment=0`
+    * partition without the tombstoned rows ([[Installments.fold]]);
+    * returns the folded row count. The deletes dir stays: callers clear
+    * it LAST, after every table of the index is folded. */
+  def fold(spark: SparkSession, path: String, table: String,
+           idCol: String): Long =
+    Installments.fold(spark, s"$path/$table", filter(spark, path,
+      spark.read.parquet(s"$path/$table").drop("installment"), idCol))
 
   /** Remove the deletes dir — the compaction epilogue, after the
     * physical fold has dropped the tombstoned rows from the data

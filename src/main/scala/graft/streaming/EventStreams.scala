@@ -303,32 +303,17 @@ object EventStreams extends Serializable {
    * max batch_id: a resumed stream's next micro-batch id is strictly
    * greater, so later appends still win last-writer-wins against the
    * rewritten baseline, and re-running the job is idempotent. The rewrite
-   * materializes fully in a side dir before a delete+rename swap — a reader
-   * concurrent with the swap sees either the old or the new log, and both
-   * compact to the same state. (On an object store where rename is
-   * copy+delete, run the job in the stream's maintenance window or layer
-   * the log on a table format with atomic commits; HDFS/posix renames are
-   * atomic.) Returns the compacted row count.
+   * goes through [[graft.store.DirSwap.replace]]; the old and the new log
+   * compact to the same state. Returns the compacted row count.
    */
   def compactAndRewrite(spark: SparkSession, outPath: String): Long = {
-    import org.apache.hadoop.fs.Path
     val log = spark.read.parquet(outPath)
     val maxBatch = log.agg(max(col("batch_id"))).head().getLong(0)
     val compacted = compactHourlyLog(log).withColumn("batch_id", lit(maxBatch))
-    val out = new Path(outPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(outPath + "._compacting")
-    // overwrite: a crashed prior compaction leaves only this side dir
-    compacted.write.mode("overwrite").parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"changelog swap failed for $outPath")
-    // recache any CACHED plans over the path; note that (standard Spark
-    // overwrite semantics) lazy DataFrames created over the log BEFORE the
-    // rewrite hold the old file listing and must be re-created — fresh
-    // `spark.read.parquet(outPath)` calls list fresh and see the new log
-    spark.catalog.refreshByPath(outPath)
-    rows
+    graft.store.DirSwap.replace(spark, outPath) { side =>
+      compacted.write.parquet(side)
+      spark.read.parquet(side).count()
+    }
   }
 
   /**

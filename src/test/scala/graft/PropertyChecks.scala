@@ -255,7 +255,10 @@ object PropertyChecks extends Properties("graft.kernels") {
         (s"https://p/${rnd.nextInt(1000)}", 200, body)
       }
       val got = graft.sources.Warc.parseWarc(
-        graft.sources.Warc.encodeWarc(recs, gzipPerRecord = gz))
+        graft.sources.Warc.encodeWarcFixtures(recs.map { case (u, st, b) =>
+          graft.sources.Warc.ResponseFixture(u, st,
+            contentType = "text/plain; charset=utf-8", body = b)
+        }, gzipPerRecord = gz))
         .filter(_.warc_type == "response")
       got.length == recs.length &&
         got.zip(recs).forall { case (r, (u, _, b)) =>

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
+import graft.sources.Warc.{ResponseFixture, encodeWarcFixtures}
 import org.apache.spark.sql.functions._
 
 /** The crawl loop's closing edge: outlinks ride the fused decode pass,
@@ -16,9 +17,10 @@ class CrawlFrontierSpec extends SparkTestBase {
   }
 
   private def warcOf(pages: Seq[(String, String)]): Array[Byte] =
-    graft.sources.Warc.encodeWarc(
+    encodeWarcFixtures(
       pages.map { case (u, html) =>
-        (u, 200, html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        ResponseFixture(u, 200, contentType = "text/plain; charset=utf-8",
+          body = html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       })
 
   test("ingestBatch hands every page's links to onPageLinks; frontier composes") {
@@ -205,15 +207,15 @@ class CrawlFrontierSpec extends SparkTestBase {
   }
 
   test("redirect records feed the frontier; Location resolves; crawled targets drop") {
-    val files = Seq((0L, graft.sources.Warc.encodeWarcResponses(Seq(
-      ("https://s/1", 200, "text/html", null,
-        "<a href=\"https://n/1\">x</a>".getBytes("UTF-8")),
-      ("https://s/old", 301, "text/html", "https://n/2",
-        Array.emptyByteArray),                       // absolute Location
-      ("https://s/moved/deep", 302, "text/html", "../hub",
-        Array.emptyByteArray),                       // relative Location
-      ("https://s/gone", 301, "text/html", "https://s/1",
-        Array.emptyByteArray)))))                    // redirect-to-crawled
+    val files = Seq((0L, encodeWarcFixtures(Seq(
+      ResponseFixture("https://s/1", 200, contentType = "text/html",
+        body = "<a href=\"https://n/1\">x</a>".getBytes("UTF-8")),
+      ResponseFixture("https://s/old", 301, contentType = "text/html",
+        location = "https://n/2"),                   // absolute Location
+      ResponseFixture("https://s/moved/deep", 302, contentType = "text/html",
+        location = "../hub"),                        // relative Location
+      ResponseFixture("https://s/gone", 301, contentType = "text/html",
+        location = "https://s/1")))))                // redirect-to-crawled
       .toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
     // Location survives the HTTP split
@@ -271,12 +273,12 @@ class CrawlFrontierSpec extends SparkTestBase {
 
   test("ingestBatch unions redirect targets into the frontier feed") {
     val idx = tmp("crawl-redir-idx")
-    val files = Seq((0L, graft.sources.Warc.encodeWarcResponses(Seq(
-      ("https://s/1", 200, "text/html", null,
-        "<html><body>enough words to make a document here <a href=\"https://n/1\">x</a></body></html>"
+    val files = Seq((0L, encodeWarcFixtures(Seq(
+      ResponseFixture("https://s/1", 200, contentType = "text/html",
+        body = "<html><body>enough words to make a document here <a href=\"https://n/1\">x</a></body></html>"
           .getBytes("UTF-8")),
-      ("https://s/old", 301, "text/html", "/fresh-target",
-        Array.emptyByteArray)))))
+      ResponseFixture("https://s/old", 301, contentType = "text/html",
+        location = "/fresh-target")))))
       .toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
     var frontierRows: Set[(String, Long)] = null
@@ -295,15 +297,15 @@ class CrawlFrontierSpec extends SparkTestBase {
 
   test("<base href> overrides the resolution base for relative links") {
     val idx = tmp("crawl-base-idx")
-    val files = Seq((0L, graft.sources.Warc.encodeWarcResponses(Seq(
-      ("https://s/dir/page", 200, "text/html", null,
-        ("""<p>page one body words</p><base href="https://cdn.ex/assets/sub/">""" +
+    val files = Seq((0L, encodeWarcFixtures(Seq(
+      ResponseFixture("https://s/dir/page", 200, contentType = "text/html",
+        body = ("""<p>page one body words</p><base href="https://cdn.ex/assets/sub/">""" +
           """<a href="img/x">rel</a><a href="/root">abs-path</a>""" +
           """<a href="https://abs.ex/y">abs</a>""").getBytes("UTF-8")),
-      ("https://s/nobase", 200, "text/html", null,
-        """<p>page two other words</p><a href="rel2">r</a>""".getBytes("UTF-8")),
-      ("https://s/relbase/deep/page", 200, "text/html", null,
-        ("""<p>page three more words</p><base href='../up/'>""" +
+      ResponseFixture("https://s/nobase", 200, contentType = "text/html",
+        body = """<p>page two other words</p><a href="rel2">r</a>""".getBytes("UTF-8")),
+      ResponseFixture("https://s/relbase/deep/page", 200, contentType = "text/html",
+        body = ("""<p>page three more words</p><base href='../up/'>""" +
           """<a href="z">r</a>""").getBytes("UTF-8"))))))
       .toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
@@ -325,20 +327,23 @@ class CrawlFrontierSpec extends SparkTestBase {
     val idx = tmp("crawl-nontext-idx")
     val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A,
       0x00, 0xFF.toByte, 0xFE.toByte, 0x80.toByte) // binary garbage body
-    val files = Seq((0L, graft.sources.Warc.encodeWarcResponses(Seq(
-      ("https://s/1", 200, "text/html", null,
-        "<p>a real html page body with words</p>".getBytes("UTF-8")),
-      ("https://s/pic.png", 200, "image/png", null, png),
-      ("https://s/blob", 200, "application/octet-stream", null, png),
-      ("https://s/style.css", 200, "text/css", null,
-        "body { color: red } /* boilerplate code is not a corpus doc */"
+    val files = Seq((0L, encodeWarcFixtures(Seq(
+      ResponseFixture("https://s/1", 200, contentType = "text/html",
+        body = "<p>a real html page body with words</p>".getBytes("UTF-8")),
+      ResponseFixture("https://s/pic.png", 200, contentType = "image/png",
+        body = png),
+      ResponseFixture("https://s/blob", 200,
+        contentType = "application/octet-stream", body = png),
+      ResponseFixture("https://s/style.css", 200, contentType = "text/css",
+        body = "body { color: red } /* boilerplate code is not a corpus doc */"
           .getBytes("UTF-8")),
-      ("https://s/app.js", 200, "text/javascript; charset=utf-8", null,
-        "function f() { return 42; }".getBytes("UTF-8")),
-      ("https://s/readme", 200, "text/plain", null,
-        "plain text is a real corpus document".getBytes("UTF-8")),
-      ("https://s/unlabeled", 200, null, null,
-        "<p>no content type still extracts</p>".getBytes("UTF-8"))))))
+      ResponseFixture("https://s/app.js", 200,
+        contentType = "text/javascript; charset=utf-8",
+        body = "function f() { return 42; }".getBytes("UTF-8")),
+      ResponseFixture("https://s/readme", 200, contentType = "text/plain",
+        body = "plain text is a real corpus document".getBytes("UTF-8")),
+      ResponseFixture("https://s/unlabeled", 200,
+        body = "<p>no content type still extracts</p>".getBytes("UTF-8"))))))
       .toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
     var fetched: Set[String] = null
@@ -434,16 +439,16 @@ class CrawlFrontierSpec extends SparkTestBase {
 
   test("robots-meta noindex pages: ledger + frontier yes, corpus no") {
     val idx = tmp("crawl-noindex-idx")
-    val files = Seq((0L, graft.sources.Warc.encodeWarcResponses(Seq(
-      ("https://s/indexed", 200, "text/html", null,
-        "<p>a normal page body with words</p>".getBytes("UTF-8")),
-      ("https://s/hidden", 200, "text/html", null,
-        ("""<meta name="robots" content="noindex">""" +
+    val files = Seq((0L, encodeWarcFixtures(Seq(
+      ResponseFixture("https://s/indexed", 200, contentType = "text/html",
+        body = "<p>a normal page body with words</p>".getBytes("UTF-8")),
+      ResponseFixture("https://s/hidden", 200, contentType = "text/html",
+        body = ("""<meta name="robots" content="noindex">""" +
           """<p>substantial text that must not become a corpus doc</p>""" +
           """<a href="https://s/found-via-hidden">link still follows</a>""")
           .getBytes("UTF-8")),
-      ("https://s/gone", 200, "text/html", null,
-        ("""<meta name="robots" content="none">""" +
+      ResponseFixture("https://s/gone", 200, contentType = "text/html",
+        body = ("""<meta name="robots" content="none">""" +
           """<p>none means noindex AND nofollow</p>""" +
           """<a href="https://s/never">dropped</a>""").getBytes("UTF-8"))))))
       .toDF("g", "payload")
@@ -469,15 +474,17 @@ class CrawlFrontierSpec extends SparkTestBase {
 
   test("X-Robots-Tag header gates like robots meta through ingestBatch") {
     val idx = tmp("crawl-xrobots-idx")
-    val files = Seq((0L, graft.sources.Warc.encodeWarcResponsesTagged(Seq(
-      ("https://x/plain", 200, "text/html", null, null,
-        "<p>plain page words</p><a href=\"https://x/l1\">l</a>"
+    val files = Seq((0L, encodeWarcFixtures(Seq(
+      ResponseFixture("https://x/plain", 200, contentType = "text/html",
+        body = "<p>plain page words</p><a href=\"https://x/l1\">l</a>"
           .getBytes("UTF-8")),
-      ("https://x/hidden", 200, "text/html", null, "noindex",
-        "<p>header noindex page body</p><a href=\"https://x/l2\">l</a>"
+      ResponseFixture("https://x/hidden", 200, contentType = "text/html",
+        xRobots = "noindex",
+        body = "<p>header noindex page body</p><a href=\"https://x/l2\">l</a>"
           .getBytes("UTF-8")),
-      ("https://x/gone", 200, "text/html", null, "none",
-        "<p>header none page body</p><a href=\"https://x/l3\">l</a>"
+      ResponseFixture("https://x/gone", 200, contentType = "text/html",
+        xRobots = "none",
+        body = "<p>header none page body</p><a href=\"https://x/l3\">l</a>"
           .getBytes("UTF-8"))))))
       .toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
@@ -654,6 +661,9 @@ class CrawlFrontierSpec extends SparkTestBase {
       .select("batch", "url").as[(Long, String)].collect().toSet
     assert(after === Set((0L, "https://f/1"), (1L, "https://f/2"),
       (1L, "https://f/3")))
+    // the swap leaves no side or aside directory next to the ledger
+    assert(new java.io.File(fDir).list().filter(_.startsWith("fetched."))
+      .isEmpty)
     // missing artifacts -> None (stream falls back to the exact path)
     assert(Crawl.loadFetchedBloom(spark, d.resolve("nope.bloom").toString)
       .isEmpty)

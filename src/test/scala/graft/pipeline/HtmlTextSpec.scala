@@ -60,10 +60,11 @@ class HtmlTextSpec extends SparkTestBase {
     val docs = Seq(
       (1L, "<html><body><p>alpha &amp; beta</p></body></html>"),
       (2L, "<p>two</p><script>x</script><p>lines</p>"))
-    val warc = graft.sources.Warc.encodeWarc(
+    val warc = graft.sources.Warc.encodeWarcFixtures(
       docs.map { case (id, h) =>
-        (s"https://t/$id", 200,
-          h.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        graft.sources.Warc.ResponseFixture(s"https://t/$id", 200,
+          contentType = "text/plain; charset=utf-8",
+          body = h.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }, gzipPerRecord = true)
     val files = Seq((0L, warc)).toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
@@ -139,8 +140,11 @@ class HtmlTextSpec extends SparkTestBase {
       (3L, "text/html",
         Array[Byte](0xFF.toByte, 0xFE.toByte) ++ enc("<p>b\u00F6m</p>", "UTF-16LE")),
       (4L, "text/html; charset=utf-8", enc("<p>caf\u00E9</p>", "windows-1252")))
-    val warc = graft.sources.Warc.encodeWarcTyped(
-      docs.map { case (id, ct, b) => (s"https://t/$id", 200, ct, b) })
+    val warc = graft.sources.Warc.encodeWarcFixtures(
+      docs.map { case (id, ct, b) =>
+        graft.sources.Warc.ResponseFixture(s"https://t/$id", 200,
+          contentType = ct, body = b)
+      })
     val files = Seq((0L, warc)).toDF("g", "payload")
     val recs = graft.sources.Warc.warcRecords(files).toDF()
       .filter($"warc_type" === "response")

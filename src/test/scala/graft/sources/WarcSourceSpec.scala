@@ -8,6 +8,10 @@ class WarcSourceSpec extends SparkTestBase {
 
   private val utf8 = java.nio.charset.StandardCharsets.UTF_8
 
+  private def plainText(uri: String, status: Int, body: Array[Byte]) =
+    Warc.ResponseFixture(uri, status,
+      contentType = "text/plain; charset=utf-8", body = body)
+
   /** 60 records with incompressible ~3 KB bodies → a gzip file large
     * enough to split at the source's 64 KiB floor. */
   private def bigWarc(): (Array[Byte], Seq[(String, Array[Byte])]) = {
@@ -16,7 +20,7 @@ class WarcSourceSpec extends SparkTestBase {
       new scala.util.Random(i).nextBytes(body)
       (s"https://big.test/$i", body)
     }
-    (Warc.encodeWarc(recs.map { case (u, b) => (u, 200, b) },
+    (Warc.encodeWarcFixtures(recs.map { case (u, b) => plainText(u, 200, b) },
       gzipPerRecord = true), recs)
   }
 
@@ -54,9 +58,9 @@ class WarcSourceSpec extends SparkTestBase {
   test("plain files read as one partition; garbage between members skips") {
     val dir = java.nio.file.Files.createTempDirectory("warc-src2")
     // plain (uncompressed): no safe split frame -> single partition
-    val plain = Warc.encodeWarc(Seq(
-      ("https://p/1", 200, "one".getBytes(utf8)),
-      ("https://p/2", 404, "two".getBytes(utf8))))
+    val plain = Warc.encodeWarcFixtures(Seq(
+      plainText("https://p/1", 200, "one".getBytes(utf8)),
+      plainText("https://p/2", 404, "two".getBytes(utf8))))
     val fp = dir.resolve("plain.warc")
     java.nio.file.Files.write(fp, plain)
     withMaxSplit(65536) {
@@ -76,10 +80,10 @@ class WarcSourceSpec extends SparkTestBase {
       new scala.util.Random(seed).nextBytes(b)
       b
     }
-    val m1 = Warc.encodeWarc(Seq(("https://g/1", 200, noise(1))),
-      gzipPerRecord = true)
-    val m2 = Warc.encodeWarc(Seq(("https://g/2", 200, noise(2))),
-      gzipPerRecord = true)
+    val m1 = Warc.encodeWarcFixtures(
+      Seq(plainText("https://g/1", 200, noise(1))), gzipPerRecord = true)
+    val m2 = Warc.encodeWarcFixtures(
+      Seq(plainText("https://g/2", 200, noise(2))), gzipPerRecord = true)
     val junk = Array[Byte](0x1F.toByte, 0x8B.toByte, 0x08, 0x00, 0x42, 0x42)
     val fz = dir.resolve("tricky.warc.gz")
     java.nio.file.Files.write(fz, m1 ++ junk ++ m2)
@@ -116,7 +120,8 @@ class WarcSourceSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("warc-src3")
     Seq("x", "y").zipWithIndex.foreach { case (s, i) =>
       java.nio.file.Files.write(dir.resolve(s"f$i.warc"),
-        Warc.encodeWarc(Seq((s"https://d/$s", 200, s.getBytes(utf8)))))
+        Warc.encodeWarcFixtures(
+          Seq(plainText(s"https://d/$s", 200, s.getBytes(utf8)))))
     }
     val df = spark.read.format("warc").load(dir.toString)
     assert(df.schema.fieldNames.toSeq === Seq("warc_type", "target_uri",
@@ -159,9 +164,9 @@ class WarcSourceSpec extends SparkTestBase {
     val recs = (0 until 40).map { i =>
       val body = new Array[Byte](512 * 1024)
       new scala.util.Random(1000 + i).nextBytes(body)
-      (s"https://lazy.test/$i", 200, body)
+      plainText(s"https://lazy.test/$i", 200, body)
     }
-    val warc = Warc.encodeWarc(recs, gzipPerRecord = true)
+    val warc = Warc.encodeWarcFixtures(recs, gzipPerRecord = true)
     val dir = java.nio.file.Files.createTempDirectory("warc-src5")
     val f = dir.resolve("lazy.warc.gz")
     java.nio.file.Files.write(f, warc)
@@ -198,16 +203,16 @@ class WarcSourceSpec extends SparkTestBase {
     // per-member cap must skip it as corrupt and resume the magic scan,
     // delivering the surrounding legitimate records
     val out = new java.io.ByteArrayOutputStream()
-    out.write(Warc.encodeWarc(
-      Seq(("https://ok.test/a", 200, "alpha".getBytes(utf8))),
+    out.write(Warc.encodeWarcFixtures(
+      Seq(plainText("https://ok.test/a", 200, "alpha".getBytes(utf8))),
       gzipPerRecord = true))
     val gz = new java.util.zip.GZIPOutputStream(out, 65536)
     val zeros = new Array[Byte](1 << 20)
     var written = 0L
     while (written <= (1L << 30)) { gz.write(zeros); written += zeros.length }
     gz.finish()
-    out.write(Warc.encodeWarc(
-      Seq(("https://ok.test/b", 200, "beta".getBytes(utf8))),
+    out.write(Warc.encodeWarcFixtures(
+      Seq(plainText("https://ok.test/b", 200, "beta".getBytes(utf8))),
       gzipPerRecord = true))
     val bytes = out.toByteArray
     val dir = java.nio.file.Files.createTempDirectory("warc-src6")

@@ -8,11 +8,16 @@ class WarcSpec extends SparkTestBase {
 
   private val utf8 = java.nio.charset.StandardCharsets.UTF_8
 
+  private def plainText(uri: String, status: Int, body: Array[Byte]) =
+    Warc.ResponseFixture(uri, status,
+      contentType = "text/plain; charset=utf-8", body = body)
+
   private def fileOf(gzip: Boolean): Array[Byte] =
-    Warc.encodeWarc(Seq(
-      ("https://a.test/1", 200, "hello world".getBytes(utf8)),
-      ("https://a.test/2", 404, "gone".getBytes(utf8)),
-      ("https://a.test/3", 200, Array.tabulate[Byte](1000)(i => (i % 251).toByte))
+    Warc.encodeWarcFixtures(Seq(
+      plainText("https://a.test/1", 200, "hello world".getBytes(utf8)),
+      plainText("https://a.test/2", 404, "gone".getBytes(utf8)),
+      plainText("https://a.test/3", 200,
+        Array.tabulate[Byte](1000)(i => (i % 251).toByte))
     ), gzipPerRecord = gzip)
 
   test("round-trips records, plain and gzip-per-member") {
@@ -36,12 +41,13 @@ class WarcSpec extends SparkTestBase {
   }
 
   test("Retry-After survives the HTTP split (r15), alongside its siblings") {
-    val bytes = Warc.encodeWarcResponsesFull(Seq(
-      ("https://t/429", 429, null, null, null, "120", Array.emptyByteArray),
-      ("https://t/503", 503, "text/html", null, null,
-        "Fri, 01 Jan 2027 00:00:00 GMT", "<p>x</p>".getBytes(utf8)),
-      ("https://t/ok", 200, "text/html", null, "noindex", null,
-        "<p>y</p>".getBytes(utf8))),
+    val bytes = Warc.encodeWarcFixtures(Seq(
+      Warc.ResponseFixture("https://t/429", 429, retryAfter = "120"),
+      Warc.ResponseFixture("https://t/503", 503, contentType = "text/html",
+        retryAfter = "Fri, 01 Jan 2027 00:00:00 GMT",
+        body = "<p>x</p>".getBytes(utf8)),
+      Warc.ResponseFixture("https://t/ok", 200, contentType = "text/html",
+        xRobots = "noindex", body = "<p>y</p>".getBytes(utf8))),
       gzipPerRecord = true)
     val rs = Warc.parseWarc(bytes).filter(_.warc_type == "response")
     assert(rs.map(_.http_retry_after) ===
@@ -95,7 +101,8 @@ class WarcSpec extends SparkTestBase {
     // Content-Length-driven parsing survives this (the reason WARC is
     // counted, not delimited)
     val trap = "x\r\n\r\nWARC/1.0\r\nContent-Length: 999\r\n\r\ny".getBytes(utf8)
-    val recs = Warc.parseWarc(Warc.encodeWarc(Seq(("https://t/x", 200, trap))))
+    val recs = Warc.parseWarc(Warc.encodeWarcFixtures(Seq(
+      plainText("https://t/x", 200, trap))))
     assert(recs.length === 2)
     assert(recs(1).body.toSeq === trap.toSeq)
   }

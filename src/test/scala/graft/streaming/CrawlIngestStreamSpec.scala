@@ -11,9 +11,11 @@ class CrawlIngestStreamSpec extends SparkTestBase {
   import spark.implicits._
 
   private def warcOf(recs: (String, Int, String)*): Array[Byte] =
-    graft.sources.Warc.encodeWarc(
+    graft.sources.Warc.encodeWarcFixtures(
       recs.map { case (u, st, html) =>
-        (u, st, html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        graft.sources.Warc.ResponseFixture(u, st,
+          contentType = "text/plain; charset=utf-8",
+          body = html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }, gzipPerRecord = true)
 
   test("stream: parse -> extract -> dedup vs corpus and earlier batches -> fold in") {
@@ -396,10 +398,11 @@ class CrawlIngestStreamSpec extends SparkTestBase {
     val idx = base.resolve("idx").toString
     val fDir = base.resolve("frontier").toString
     def warcResp(recs: (String, Int, String, String)*): Array[Byte] =
-      graft.sources.Warc.encodeWarcResponses(
+      graft.sources.Warc.encodeWarcFixtures(
         recs.map { case (u, st, loc, html) =>
-          (u, st, "text/html", loc,
-            html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          graft.sources.Warc.ResponseFixture(u, st, contentType = "text/html",
+            location = loc,
+            body = html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }, gzipPerRecord = true)
     val input = MemoryStream[(Long, Array[Byte])]
     val q = EventStreams.crawlIngestStream(spark,
