@@ -40,40 +40,51 @@ object TopK {
     c > 0 || (c == 0 && i1 < i2)
   }
 
+  /** `b` with (score, id) inserted at its rank, cut to the best `k` — the
+    * one bounded top-k insert: the aggregator below and the driver-routed
+    * IVF scan ([[graft.index.SimilarityIndex.ivfSearchIndexed]]) both rank
+    * through it. `b` is never mutated; an insert that cannot make the cut
+    * returns `b` itself. */
+  def insert(b: Buf, score: Double, id: Long, k: Int): Buf = {
+    val n = b.ids.length
+    if (n >= k && !beats(score, id, b.scores(n - 1), b.ids(n - 1))) b
+    else {
+      var pos = n
+      while (pos > 0 && beats(score, id, b.scores(pos - 1), b.ids(pos - 1))) pos -= 1
+      val m = math.min(n + 1, k)
+      val ns = new Array[Double](m)
+      val ni = new Array[Long](m)
+      System.arraycopy(b.scores, 0, ns, 0, pos)
+      System.arraycopy(b.ids, 0, ni, 0, pos)
+      ns(pos) = score; ni(pos) = id
+      val tail = m - pos - 1
+      if (tail > 0) {
+        System.arraycopy(b.scores, pos, ns, pos + 1, tail)
+        System.arraycopy(b.ids, pos, ni, pos + 1, tail)
+      }
+      Buf(ns, ni)
+    }
+  }
+
+  /** `b2`'s entries inserted into `b1`: the two buffers' best `k` together. */
+  def merge(b1: Buf, b2: Buf, k: Int): Buf = {
+    var acc = b1
+    var i = 0
+    while (i < b2.ids.length) { acc = insert(acc, b2.scores(i), b2.ids(i), k); i += 1 }
+    acc
+  }
+
+  /** The empty buffer. */
+  val emptyBuf: Buf = Buf(Array.emptyDoubleArray, Array.emptyLongArray)
+
   private final class TopKAggregator(k: Int)
       extends Aggregator[Scored, Buf, Buf] {
 
-    override def zero: Buf = Buf(Array.emptyDoubleArray, Array.emptyLongArray)
+    override def zero: Buf = emptyBuf
 
-    private def insert(b: Buf, score: Double, id: Long): Buf = {
-      val n = b.ids.length
-      if (n >= k && !beats(score, id, b.scores(n - 1), b.ids(n - 1))) b
-      else {
-        var pos = n
-        while (pos > 0 && beats(score, id, b.scores(pos - 1), b.ids(pos - 1))) pos -= 1
-        val m = math.min(n + 1, k)
-        val ns = new Array[Double](m)
-        val ni = new Array[Long](m)
-        System.arraycopy(b.scores, 0, ns, 0, pos)
-        System.arraycopy(b.ids, 0, ni, 0, pos)
-        ns(pos) = score; ni(pos) = id
-        val tail = m - pos - 1
-        if (tail > 0) {
-          System.arraycopy(b.scores, pos, ns, pos + 1, tail)
-          System.arraycopy(b.ids, pos, ni, pos + 1, tail)
-        }
-        Buf(ns, ni)
-      }
-    }
+    override def reduce(b: Buf, a: Scored): Buf = insert(b, a.score, a.id, k)
 
-    override def reduce(b: Buf, a: Scored): Buf = insert(b, a.score, a.id)
-
-    override def merge(b1: Buf, b2: Buf): Buf = {
-      var acc = b1
-      var i = 0
-      while (i < b2.ids.length) { acc = insert(acc, b2.scores(i), b2.ids(i)); i += 1 }
-      acc
-    }
+    override def merge(b1: Buf, b2: Buf): Buf = TopK.merge(b1, b2, k)
 
     override def finish(r: Buf): Buf = r
     override def bufferEncoder = Encoders.product[Buf]

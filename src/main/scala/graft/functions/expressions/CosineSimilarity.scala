@@ -42,9 +42,30 @@ case class CosineSimilarity(left: Expression, right: Expression)
   private lazy val isFloat =
     left.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.expressions.CosineSimilarity.cosine($a, $b, $isFloat);")
+
+  override protected def withNewChildrenInternal(
+    newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_similarity"
+}
+
+object CosineSimilarity {
+  import org.apache.spark.sql.graft.ColumnBridge
+
+  /** The one cosine loop: dot, |a|² and |b|² fused in a single pass over
+    * two float (`isFloat`) or double arrays, each element widened to double;
+    * elements past the shorter array's end count toward that side's norm
+    * only, and a zero norm scores 0. The interpreted path, the generated
+    * code and [[graft.index.SimilarityIndex.ivfSearchIndexed]]'s scan all
+    * call it, so their cosines agree bit for bit. */
+  def cosine(xa: ArrayData, xb: ArrayData, isFloat: Boolean): Double = {
     val n = math.min(xa.numElements(), xb.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -68,42 +89,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (na == 0.0 || nb == 0.0) 0.0
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double va = (double) $a.$get($i);
-         |  double vb = (double) $b.$get($i);
-         |  $dot += va * vb; $na += va * va; $nb += vb * vb;
-         |}
-         |for (int $i = $n; $i < $a.numElements(); $i++) {
-         |  double v = (double) $a.$get($i); $na += v * v;
-         |}
-         |for (int $i = $n; $i < $b.numElements(); $i++) {
-         |  double v = (double) $b.$get($i); $nb += v * v;
-         |}
-         |${ev.value} = ($na == 0.0 || $nb == 0.0) ? 0.0 :
-         |  $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-    newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_similarity"
-}
-
-object CosineSimilarity {
-  import org.apache.spark.sql.graft.ColumnBridge
 
   /** Column-API entry point for the native expression. */
   def cosineNative(a: Column, b: Column): Column =

@@ -1,8 +1,13 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.{TopK, VectorOps}
+import graft.functions.expressions.CosineSimilarity
 
 /**
  * Batch similarity search over embedding columns — the Spark-native
@@ -29,13 +34,14 @@ import graft.functions.{TopK, VectorOps}
  * Scale shape: brute force broadcasts the (small) query side so the big
  * corpus never shuffles; LSH bands ids only — vectors never ride the band
  * exchange — and scores within buckets only. All per-query ranking goes
- * through `TopK.topKPerGroup` (bounded partial aggregation): no per-query
- * window funnel anywhere in this file.
+ * through `TopK`'s bounded buffers — `topKPerGroup` (bounded partial
+ * aggregation), or its insert/merge directly in `ivfSearchIndexed`'s
+ * one-scan search: no per-query window funnel anywhere in this file.
  */
 object SimilarityIndex {
 
   private def cosine(a: Column, b: Column): Column =
-    graft.functions.expressions.CosineSimilarity.cosineNative(a, b)
+    CosineSimilarity.cosineNative(a, b)
 
   /**
    * Exact top-k: score every corpus row against every query (queries
@@ -182,19 +188,27 @@ object SimilarityIndex {
     best
   }
 
-  /** The `nprobe` nearest centroid ids for a query vector. */
-  private[index] def probeUdf(centers: Array[Array[Double]], nprobe: Int) = udf { (v: Seq[Float]) =>
-    centers.indices.map(j => (sqDist(v, centers(j)), j)).sorted
+  /** The `nprobe` nearest centroid ids for a query vector, nearest first
+    * (equal distances → lower list id); none for a null vector, so a null
+    * query yields no rows instead of failing its search. */
+  private[index] def probeLists(centers: Array[Array[Double]], v: Seq[Float],
+                                nprobe: Int): Array[Int] =
+    if (v == null) Array.emptyIntArray
+    else centers.indices.map(j => (sqDist(v, centers(j)), j)).sorted
       .take(math.min(nprobe, centers.length)).map(_._2).toArray
-  }
+
+  /** [[probeLists]] as a column function. */
+  private[index] def probeUdf(centers: Array[Array[Double]], nprobe: Int) =
+    udf((v: Seq[Float]) => probeLists(centers, v, nprobe))
 
   /**
    * IVF (inverted-file) approximate top-k — the clustered-data scale path
    * alongside `lshTopK`:
    *
-   *   1. fit nlist k-means centroids (MLlib, fixed seed — deterministic),
-   *      on a corpus sample when `fitSampleFraction < 1` (at 100 TB the fit
-   *      must never scan the full corpus),
+   *   1. fit nlist k-means centroids with [[KMeansLocal]] (fixed seed —
+   *      deterministic) on a row-bounded sample of the corpus (see
+   *      [[fitCentroids]]; at 100 TB the fit must never scan the full
+   *      corpus),
    *   2. assign every corpus vector to its nearest centroid (map-side, the
    *      centroid matrix broadcasts; the corpus never shuffles for this),
    *   3. each query probes its `nprobe` nearest centroids and scores only
@@ -227,8 +241,9 @@ object SimilarityIndex {
    *     `partitionBy("list_id")` so each inverted list is its own partition
    *     directory and a probe reads ONLY matching partitions.
    *
-   * `fitSampleFraction` bounds the k-means fit scan — the default samples;
-   * pass 1.0 only for small corpora.
+   * The k-means fit reads a row-bounded sample whatever the corpus size
+   * ([[fitCentroids]]); `fitSampleFraction` is accepted for source
+   * compatibility and does not change the bound.
    */
   def ivfBuild(corpus: DataFrame, path: String, nlist: Int = 64,
                corpusId: String = "vec_id", corpusVec: String = "embedding",
@@ -275,8 +290,9 @@ object SimilarityIndex {
     * by design (it is the index's tiny routing table). */
   private[index] def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/centroids")
-      .select("list_id", "centroid").as[(Int, Array[Double])]
+    // the declared schema every centroid writer writes: no inference job
+    spark.read.schema("list_id INT, centroid ARRAY<DOUBLE>").parquet(s"$path/centroids")
+      .as[(Int, Array[Double])]
       .collect().sortBy(_._1).map(_._2)
   }
 
@@ -408,8 +424,8 @@ object SimilarityIndex {
    * delete half of the installment lifecycle ([[graft.store.Tombstones]]),
    * closing the one family the index-wide tombstone sweep had missed: one
    * id-list append, no assignment partition touched. [[ivfSearchIndexed]]
-   * drops tombstoned rows via a broadcast anti-join (takedown semantics —
-   * the set applies to every read); [[ivfCompact]] folds the deletion
+   * drops tombstoned rows inside its scan (takedown semantics — the set
+   * applies to every read); [[ivfCompact]] folds the deletion
    * physically and clears the list. The centroids are intentionally
    * untouched: probe routing must stay consistent with every stored
    * assignment (the frozen-centroid append contract), and a delete only
@@ -434,32 +450,96 @@ object SimilarityIndex {
    * of SeekableGraphReader.ClosestMatch (SeekableGraphReader.cs:57-104):
    * read only the nodes on the search path.
    *
-   * Queries are expected to be small (an interactive probe set); the probe
-   * assignment runs driver-side over the collected query vectors.
+   * Query sets are small (an interactive probe set), so the search is one
+   * scan plus a driver merge, never a top-k exchange:
+   *
+   *   1. route on the driver: the queries (`queryId`, `queryVec`) and,
+   *      when a delete has landed, the tombstone ids are collected; each
+   *      query's `nprobe` lists come from [[probeLists]];
+   *   2. score map-side: one pass over the pruned assignments, each row
+   *      scored ([[CosineSimilarity.cosine]]) against only the queries
+   *      probing its list, tombstoned rows skipped; every task keeps a
+   *      bounded top-k buffer per query ([[TopK.insert]]), so at most
+   *      tasks · |queries| · k partial rows reach the driver;
+   *   3. merge on the driver ([[TopK.merge]]).
+   *
+   * EAGER: the work runs inside this call, and the result is a local frame
+   * of ≤ |queries| · k rows — (queryId as given, corpusId long, cosine
+   * double, rank int), the `TopK.topKPerGroup` columns and order (score
+   * desc, lower id on ties). Queries sharing an id rank together; a query
+   * with a null vector, and corpus rows with a null id or vector, score
+   * nothing. `corpusVec` and `queryVec` are both array<float> or both
+   * array<double>; routing reads a query at float precision. The scan runs
+   * as one SQL execution, so query listeners see it with its file-scan
+   * metrics.
    */
   def ivfSearchIndexed(spark: SparkSession, path: String, queries: DataFrame,
                        k: Int, nprobe: Int = 8,
                        corpusId: String = "vec_id", corpusVec: String = "embedding",
                        queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    import spark.implicits._
+    require(k > 0, "k must be positive")
     val centers = readCentroids(spark, path)
-    val qProbed = queries.withColumn("list_id",
-      explode(probeUdf(centers, nprobe)(col(queryVec))))
-    // the probed list union is ≤ |queries| · nprobe values — collect it so
-    // the scan gets a literal IN filter the partition index can prune on
-    val probedLists = qProbed.select("list_id").distinct().as[Int].collect()
-    // tombstones apply to every read (takedown semantics); a no-op with
-    // the byte-identical pre-delete plan when no delete has ever landed
-    // (Tombstones.filter short-circuits), keeping the partition-pruned
-    // map-side scan shape either way
-    val assignments = graft.store.Tombstones.filter(spark, path,
-      spark.read.parquet(s"$path/assignments")
-        .filter(col("list_id").isin(probedLists.map(_.asInstanceOf[Any]): _*)),
-      corpusId)
-    val scored = assignments.join(broadcast(qProbed), Seq("list_id"))
-      .withColumn("cosine", cosine(col(corpusVec), col(queryVec)))
-      .select(col(queryId), col(corpusId), col("cosine"))
-    TopK.topKPerGroup(scored, queryId, corpusId, "cosine", k)
+    val qs = queries.select(col(queryId), col(queryVec)).collect()
+    val dead = graft.store.Tombstones.collectLongIds(spark, path) // sorted
+    val scan = spark.read.parquet(s"$path/assignments")
+    val isFloat = (scan.schema(corpusVec).dataType, queries.schema(queryVec).dataType) match {
+      case (ArrayType(a @ (FloatType | DoubleType), _), ArrayType(b, _)) if a == b => a == FloatType
+      case (a, b) => throw new IllegalArgumentException(s"ivfSearchIndexed: $corpusVec " +
+        s"(${a.sql}) and $queryVec (${b.sql}) must both be array<float> or array<double>")
+    }
+    // queries sharing an id share one top-k (topKPerGroup's group semantics)
+    val keys = qs.map(_.get(0)).distinct
+    val group = qs.map(r => keys.indexOf(r.get(0)))
+    val qVecs: Array[ArrayData] = qs.map { r =>
+      if (r.isNullAt(1)) null
+      else if (isFloat) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)
+      else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray)
+    }
+    // list id → the queries probing it
+    val byList = Array.fill(centers.length)(Array.newBuilder[Int])
+    qs.indices.foreach { q =>
+      val v = if (qs(q).isNullAt(1)) null
+        else if (isFloat) qs(q).getSeq[Float](1)
+        else qs(q).getSeq[Double](1).map(_.toFloat)
+      probeLists(centers, v, nprobe).foreach(byList(_) += q)
+    }
+    val probing = byList.map(_.result())
+    val pruned = scan
+      .filter(col("list_id").isin(probing.indices.filter(probing(_).nonEmpty): _*))
+      .select(col(corpusId).cast("long"), col(corpusVec), col("list_id").cast("int"))
+    val nGroups = keys.length
+    val qe = pruned.queryExecution
+    val partials = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.toRdd.mapPartitions { rows =>
+        val bufs = Array.fill(nGroups)(TopK.emptyBuf)
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) &&
+              java.util.Arrays.binarySearch(dead, r.getLong(0)) < 0) {
+            val id = r.getLong(0)
+            val v = r.getArray(1)
+            val qsOfList = probing(r.getInt(2))
+            var i = 0
+            while (i < qsOfList.length) {
+              val q = qsOfList(i)
+              val g = group(q)
+              bufs(g) = TopK.insert(bufs(g), CosineSimilarity.cosine(v, qVecs(q), isFloat), id, k)
+              i += 1
+            }
+          }
+        }
+        Iterator.single(bufs)
+      }.collect()
+    }
+    val merged = Array.fill(nGroups)(TopK.emptyBuf)
+    partials.foreach(p => p.indices.foreach(g => merged(g) = TopK.merge(merged(g), p(g), k)))
+    val out = new java.util.ArrayList[Row]()
+    merged.indices.foreach { g =>
+      val b = merged(g)
+      b.ids.indices.foreach(i => out.add(Row(keys(g), b.ids(i), b.scores(i), i + 1)))
+    }
+    spark.createDataFrame(out, StructType(Seq(queries.schema(queryId),
+      StructField(corpusId, LongType), StructField("cosine", DoubleType),
+      StructField("rank", IntegerType, nullable = false))))
   }
 
   /**

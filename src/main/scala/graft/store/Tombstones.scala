@@ -86,6 +86,21 @@ object Tombstones {
     else spark.read.parquet(dir).select("id").distinct()
   }
 
+  /** The full tombstone set collected to the driver as distinct long ids,
+    * sorted ascending (binary-searchable); empty when no delete has ever
+    * landed — for readers that route on the driver and drop tombstoned
+    * rows inside their own scan (the IVF search) instead of planning an
+    * anti-join. One scan job: `id` is read with a declared BIGINT type
+    * (narrower integer ids widen on read), so no schema-inference job
+    * runs, and the distinct happens on the driver. */
+  def collectLongIds(spark: SparkSession, path: String): Array[Long] =
+    if (!any(spark, path)) Array.emptyLongArray
+    else {
+      import spark.implicits._
+      spark.read.schema("id BIGINT").parquet(deletesDir(path))
+        .where(col("id").isNotNull).select("id").as[Long].collect().distinct.sorted
+    }
+
   /** The tombstone set from installments STRICTLY BEFORE `installment` —
     * what the self-enforcing `*DeleteAt` forms anti-join their incoming
     * ids against: a replay at the SAME numbers excludes its own (possibly

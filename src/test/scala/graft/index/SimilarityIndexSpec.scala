@@ -1,12 +1,72 @@
 package graft.index
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Mirrors reference GraphTests.cs: build-corpus queries return themselves
   * at ≈ identical score; closest-match picks the nearest sentence. */
 class SimilarityIndexSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** What a block ran: the file scans of every SQL execution it finished
+    * (as query listeners see them), its Spark jobs and its shuffle-map
+    * stages. */
+  private final case class Ran(scans: Seq[FileSourceScanExec], jobs: Int,
+                               shuffleStages: Int) {
+    def scansOf(dir: String): Seq[FileSourceScanExec] =
+      scans.filter(_.relation.location.rootPaths.exists(_.toString.endsWith(dir)))
+    /** Every `assignments/` scan carries a `list_id` partition filter. */
+    def prunesLists: Boolean = scansOf("assignments").nonEmpty &&
+      scansOf("assignments").forall(_.partitionFilters.exists(
+        _.references.exists(_.name == "list_id")))
+  }
+
+  private def ran[T](body: => T): (T, Ran) = {
+    val sc = spark.sparkContext
+    val group = s"ran-${System.nanoTime()}"
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val scans = new ConcurrentLinkedQueue[FileSourceScanExec]
+    val jobs = new AtomicInteger
+    val shuffleStages = new AtomicInteger
+    val queries = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .foreach(scans.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val stages = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties) && ListenerBus.isShuffleMapStage(e.stageInfo))
+          shuffleStages.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    spark.listenerManager.register(queries)
+    sc.addSparkListener(stages)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      ListenerBus.drain(sc)
+      (out, Ran(scans.asScala.toSeq, jobs.get, shuffleStages.get))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(stages)
+      spark.listenerManager.unregister(queries)
+    }
+  }
 
   // ≙ FIXTURES A5: ';'-joined sentence pairs over a 4-word vocab
   private val sentences = Seq(
@@ -329,17 +389,14 @@ class SimilarityIndexSpec extends SparkTestBase {
     SimilarityIndex.ivfBuild(corpus.toDF("vec_id", "embedding"), dir,
       nlist = 2, fitSampleFraction = 1.0)
     val queries = Seq((1L, c1)).toDF("query_id", "query_vec")
-    val hits = SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
-      k = 20, nprobe = 1)
-    val ids = hits.select("vec_id").as[Long].collect().toSet
+    val (ids, search) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
+      k = 20, nprobe = 1).select("vec_id").as[Long].collect().toSet)
     // only the c1 cluster's list is probed — no c2 ids can appear
     assert(ids.nonEmpty && ids.subsetOf((1L to 10L).toSet),
       s"got $ids — expected only ids 1-10")
     // and the pruning is physical: the scan must carry a list_id partition
     // filter (the non-probed list's files are never opened)
-    val plan = hits.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning in:\n$plan")
+    assert(search.prunesLists, s"expected list_id partition pruning in ${search.scans}")
   }
 
   test("ivfAppend: search over a two-installment index equals the one-shot build") {
@@ -366,17 +423,15 @@ class SimilarityIndexSpec extends SparkTestBase {
     SimilarityIndex.ivfBuild(corpusDf.filter($"vec_id" % 2 === 1), appDir,
       nlist = 2, fitSampleFraction = 1.0)
     SimilarityIndex.ivfAppend(spark, appDir, corpusDf.filter($"vec_id" % 2 === 0))
-    val appended = SimilarityIndex.ivfSearchIndexed(spark, appDir, queries,
-      k = 20, nprobe = 1)
+    val (appended, search) = ran(SimilarityIndex.ivfSearchIndexed(spark, appDir,
+      queries, k = 20, nprobe = 1).select("query_id", "vec_id", "cosine")
+      .as[(Long, Long, Double)].collect().toSet)
 
     // both centroid fits see the same two tight clusters, so the probed
     // lists hold the same members and scores are identical floats
-    assert(appended.select("query_id", "vec_id", "cosine")
-      .as[(Long, Long, Double)].collect().toSet === oneShot)
+    assert(appended === oneShot)
     // appended files land in the pruned partition layout
-    val plan = appended.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning in:\n$plan")
+    assert(search.prunesLists, s"expected list_id partition pruning in ${search.scans}")
   }
 
   test("ivfDriftStats: per-(list, ingest) mean cosine; null/mismatch excluded (r17)") {
@@ -475,19 +530,21 @@ class SimilarityIndexSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
     SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2, fitSampleFraction = 1.0)
 
-    // a delete-free index must keep the byte-identical pre-tombstone plan
-    // (Tombstones.filter short-circuits) — no anti-join anywhere
-    val cleanPlan = SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
-      k = 20, nprobe = 2).queryExecution.executedPlan.toString
-    assert(!cleanPlan.contains("LeftAnti"),
-      s"delete-free search must not plan an anti-join:\n$cleanPlan")
+    // a delete-free index never reads a tombstone list
+    val (_, clean) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
+      k = 20, nprobe = 2).collect())
+    assert(clean.scansOf("deletes").isEmpty,
+      s"delete-free search must not read deletes/: ${clean.scans}")
 
     val deleted = Set(2L, 3L, 15L)
     SimilarityIndex.ivfDelete(spark, dir,
       deleted.toSeq.toDF("vec_id"))
-    val afterDelete = SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
-      k = 20, nprobe = 2)
-    val hitIds = afterDelete.select("vec_id").as[Long].collect().toSet
+    val (afterDelete, withDeletes) = ran(SimilarityIndex.ivfSearchIndexed(spark,
+      dir, queries, k = 20, nprobe = 2).select("query_id", "vec_id", "cosine")
+      .as[(Long, Long, Double)].collect().toSet)
+    // the listener sees the tombstone read when there is one
+    assert(withDeletes.scansOf("deletes").nonEmpty)
+    val hitIds = afterDelete.map(_._2)
     assert(hitIds.intersect(deleted).isEmpty,
       s"tombstoned vectors still ranked: $hitIds")
     // at nprobe = nlist this equals a fresh build over the live rows —
@@ -500,26 +557,23 @@ class SimilarityIndexSpec extends SparkTestBase {
       k = 20, nprobe = 2)
       .select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet
-    assert(afterDelete.select("query_id", "vec_id", "cosine")
-      .as[(Long, Long, Double)].collect().toSet === fresh)
+    assert(afterDelete === fresh)
 
     // physical fold: compact drops the tombstoned rows, clears deletes/,
-    // search results unchanged, plan back to the anti-join-free shape
+    // search results unchanged, and the search reads no deletes/ again
     val rows = SimilarityIndex.ivfCompact(spark, dir)
     assert(rows === 17L, s"compaction must fold the deletion, kept $rows")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "deletes")),
       "compaction must clear the deletes dir LAST")
-    val afterCompact = SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
-      k = 20, nprobe = 2)
-    assert(afterCompact.select("query_id", "vec_id", "cosine")
-      .as[(Long, Long, Double)].collect().toSet === fresh)
-    val foldedPlan = afterCompact.queryExecution.executedPlan.toString
-    assert(!foldedPlan.contains("LeftAnti"),
-      s"post-compaction search must shed the anti-join:\n$foldedPlan")
+    val (afterCompact, folded) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir,
+      queries, k = 20, nprobe = 2).select("query_id", "vec_id", "cosine")
+      .as[(Long, Long, Double)].collect().toSet)
+    assert(afterCompact === fresh)
+    assert(folded.scansOf("deletes").isEmpty,
+      s"post-compaction search must not read deletes/: ${folded.scans}")
     // the map-side probe shape survives the tombstone era end-to-end
-    assert(foldedPlan.contains("PartitionFilters") && foldedPlan.contains("list_id"),
-      s"expected list_id partition pruning in:\n$foldedPlan")
+    assert(folded.prunesLists, s"expected list_id partition pruning in ${folded.scans}")
   }
 
   test("ivfBuild rebuild clears a previous generation's tombstones") {
@@ -551,5 +605,94 @@ class SimilarityIndexSpec extends SparkTestBase {
     // only the c1 cluster's list is probed — no c2 ids can appear
     assert(hits.nonEmpty && hits.subsetOf((1L to 10L).toSet),
       s"got $hits — expected only ids 1-10")
+  }
+
+  test("one IVF search runs at most 4 jobs and no shuffle stage") {
+    // a churned index: an appended ingest and two tombstone installments
+    val rnd = new scala.util.Random(11)
+    def vecs(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_jobs").toString
+    SimilarityIndex.ivfBuild(vecs(0 until 2000), dir, nlist = 8)
+    SimilarityIndex.ivfAppend(spark, dir, vecs(2000 until 2200))
+    SimilarityIndex.ivfDelete(spark, dir, Seq(1L, 2L, 3L).toDF("vec_id"))
+    SimilarityIndex.ivfDelete(spark, dir, Seq(2100L).toDF("vec_id"))
+    val queries = (0 until 16).map(i =>
+      (-1L - i, Array.fill(16)(rnd.nextGaussian().toFloat))).toDF("query_id", "query_vec")
+    val (hits, search) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
+      k = 10, nprobe = 4).collect())
+    assert(hits.length === 160)
+    // centroid collect, tombstone collect, assignments schema, the scan
+    assert(search.jobs <= 4, s"one search ran ${search.jobs} jobs")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+    assert(search.prunesLists)
+  }
+
+  test("a null query vector yields no rows instead of failing the search") {
+    val c1 = Array(1.0f, 0.0f, 0.0f, 0.0f)
+    val c2 = Array(0.0f, 0.0f, 0.0f, -1.0f)
+    val corpusDf = ((1 to 10).map(i => (i.toLong, Array(1.0f + i * 0.01f, 0.1f, 0.0f, 0.0f))) ++
+      (11 to 20).map(i => (i.toLong, Array(i * 0.01f, 0.0f, 0.0f, -1.0f))))
+      .toDF("vec_id", "embedding")
+    val queries = Seq((1L, c1), (2L, null), (3L, c2)).toDF("query_id", "query_vec")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_nullq").toString
+    SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2)
+    def rows(df: DataFrame) = df.select("query_id", "vec_id", "cosine", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val exact = rows(SimilarityIndex.bruteForceTopK(corpusDf, queries, k = 3))
+    assert(exact.map(_._1) === Set(1L, 3L))
+    assert(rows(SimilarityIndex.ivfSearchIndexed(spark, dir, queries, k = 3,
+      nprobe = 2)) === exact)
+    assert(rows(SimilarityIndex.ivfTopK(corpusDf, queries, k = 3, nlist = 2,
+      nprobe = 2)) === exact)
+  }
+
+  test("IVF search equals brute force over the live rows at nprobe = nlist") {
+    val rnd = new scala.util.Random(42)
+    def vec(): Array[Float] = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val base = (0 until 300).map(i => (i.toLong, vec()))
+    // ids 300-319 repeat the vectors of ids 0-19: exact score ties, which
+    // the lower id must win
+    val dups = (0 until 20).map(i => (300L + i, base(i)._2))
+    val appended = (320 until 400).map(i => (i.toLong, vec()))
+    val deleted = (0L until 400L by 7L) :+ 305L
+    // tombstones apply to every read: an appended row under a deleted id
+    // stays hidden
+    val reappended = deleted.take(5).map(i => (i, vec()))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_eq").toString
+    SimilarityIndex.ivfBuild((base ++ dups).toDF("vec_id", "embedding"), dir, nlist = 6)
+    SimilarityIndex.ivfAppend(spark, dir, appended.toDF("vec_id", "embedding"))
+    // two tombstone installments, one of int ids (they widen on read)
+    val (delLong, delInt) = deleted.splitAt(deleted.length / 2)
+    SimilarityIndex.ivfDelete(spark, dir, delLong.toDF("vec_id"))
+    SimilarityIndex.ivfDelete(spark, dir, delInt.map(_.toInt).toDF("vec_id"))
+    SimilarityIndex.ivfAppend(spark, dir, reappended.toDF("vec_id", "embedding"))
+    val live = (base ++ dups ++ appended).filterNot(r => deleted.contains(r._1))
+    // string ids keep their type; queries sit on a duplicated vector, a
+    // deleted one (its self-hit must not surface) and fresh points
+    val queries = (Seq(base(1)._2, base(2)._2, base(7)._2) ++ Seq.fill(3)(vec()))
+      .zipWithIndex.map { case (v, i) => (s"q$i", v) }.toDF("query_id", "query_vec")
+    def same(got: DataFrame, exact: DataFrame): Unit = {
+      assert(got.schema === exact.schema)
+      assert(got.collect().toSet === exact.collect().toSet)
+    }
+    same(SimilarityIndex.ivfSearchIndexed(spark, dir, queries, k = 12, nprobe = 6),
+      SimilarityIndex.bruteForceTopK(live.toDF("vec_id", "embedding"), queries, k = 12))
+
+    // array<double> vectors, in an index written by hand (the IVF writers
+    // fit float vectors only)
+    val ddir = java.nio.file.Files.createTempDirectory("graft_ivf_eqd").toString
+    Seq((0, Array.fill(8)(0.5)), (1, Array.fill(8)(-0.5))).toDF("list_id", "centroid")
+      .write.parquet(s"$ddir/centroids")
+    val dcorpus = (0 until 60).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian()))) ++
+      Seq((60L, Array.fill(8)(1.0)), (61L, Array.fill(8)(1.0)))
+    dcorpus.toDF("vec_id", "embedding")
+      .withColumn("list_id", (col("vec_id") % 2).cast("int")).withColumn("ingest", lit(0))
+      .write.partitionBy("list_id", "ingest").parquet(s"$ddir/assignments")
+    val dqueries = Seq((1L, Array.fill(8)(2.0)), (2L, dcorpus(5)._2))
+      .toDF("query_id", "query_vec")
+    same(SimilarityIndex.ivfSearchIndexed(spark, ddir, dqueries, k = 5, nprobe = 2),
+      SimilarityIndex.bruteForceTopK(dcorpus.toDF("vec_id", "embedding"), dqueries, k = 5))
   }
 }
