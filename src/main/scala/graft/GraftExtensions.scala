@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.expressions.CosineSimilarity
@@ -22,4 +22,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CosineSimilarity(children.head, children(1))
       }))
   }
+}
+
+object GraftExtensions {
+  /** The session builder of every graft main: `master`, `cpus` shuffle
+    * partitions, UTC session time, no UI, and these extensions. */
+  def builder(master: String, cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
 }

@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopK
@@ -44,9 +45,12 @@ import graft.functions.TopK
  * ([[graft.store.Tombstones]] — takedown semantics, physical fold at
  * [[pqCompact]]).
  *
- * Scale shape: probe-path invariant throughout — queries (with their ADC
- * tables, m·ksub doubles each) broadcast; the code scan streams map-side
- * and never shuffles; top-k is the bounded aggregator. Codebooks are
+ * Scale shape: probe-path invariant throughout — the code scan streams
+ * map-side and never shuffles. The flat [[pqSearch]] broadcasts the
+ * queries with their ADC tables (m·ksub doubles each) into the bounded
+ * top-k aggregator; the IVF-PQ searches prepare the tables once on the
+ * driver and run the routed IVF kernel
+ * ([[SimilarityIndex.ivfSearchIndexed]]'s). Codebooks are
  * m·ksub·(dim/m) doubles (m=8, ksub=256, dim=64 → 16k doubles) — a
  * driver-side constant, the readCentroids pattern.
  *
@@ -113,18 +117,22 @@ object Pq {
   /** Unit-normalize a float vector to doubles; null for null/zero-norm
     * input (zero-norm rows have no cosine and are excluded everywhere,
     * the family rule). */
-  private def normalize(v: Seq[Float]): Array[Double] = {
-    if (v == null) return null
+  private def normalize(v: Seq[Float]): Array[Double] =
+    if (v == null) null else normalize(v.iterator.map(_.toDouble).toArray)
+
+  private def normalize(a: Array[Double]): Array[Double] = {
     var ss = 0.0
     var i = 0
-    while (i < v.length) { val d = v(i).toDouble; ss += d * d; i += 1 }
+    while (i < a.length) { ss += a(i) * a(i); i += 1 }
     if (ss == 0.0 || ss.isNaN) return null
     val inv = 1.0 / math.sqrt(ss)
-    val out = new Array[Double](v.length)
-    i = 0
-    while (i < v.length) { out(i) = v(i).toDouble * inv; i += 1 }
-    out
+    a.map(_ * inv)
   }
+
+  /** u − w, componentwise: a normalized vector's residual to its list's
+    * unit centroid. */
+  private def minus(u: Array[Double], w: Array[Double]): Array[Double] =
+    Array.tabulate(u.length)(i => u(i) - w(i))
 
   /** Fit per-subspace codebooks over unit-normalized subvectors:
     * `[m][ksub][dim/m]`, each subspace its own seeded MLlib KMeans
@@ -159,34 +167,15 @@ object Pq {
     // normalize → (residual subtract) → rotate, once per sample row —
     // the exact transform chain of the encode path; zero-norm and
     // wrong-dim rows drop (the family rule)
-    val prepped = new scala.collection.mutable.ArrayBuffer[Array[Double]](sample.length)
-    sample.foreach { a =>
-      if (a.length == dim) {
-        var ss = 0.0
-        var i = 0
-        while (i < dim) { ss += a(i) * a(i); i += 1 }
-        if (ss != 0.0 && !ss.isNaN) {
-          val inv = 1.0 / math.sqrt(ss)
-          val u0 = new Array[Double](dim)
-          i = 0
-          while (i < dim) { u0(i) = a(i) * inv; i += 1 }
-          val u1 =
-            if (residCenters == null) u0
-            else {
-              // residual training: subtract the training row's own
-              // nearest list's anchor (assignment parity with the
-              // encode path is immaterial for a training DISTRIBUTION)
-              val anchor = residAnchors(nearestListD(a, residCenters))
-              val r = new Array[Double](dim)
-              var t = 0
-              while (t < dim) { r(t) = u0(t) - anchor(t); t += 1 }
-              r
-            }
-          prepped += applyRotation(rot, u1)
-        }
+    val pts = sample.filter(_.length == dim).flatMap { a =>
+      Option(normalize(a)).map { u0 =>
+        // residual training: subtract the training row's own nearest
+        // list's anchor (assignment parity with the encode path is
+        // immaterial for a training DISTRIBUTION)
+        applyRotation(rot,
+          if (residCenters == null) u0 else minus(u0, residAnchors(nearest(a, 0, a.length, residCenters))))
       }
     }
-    val pts = prepped.toArray
     (0 until m).map { j =>
       val sub = pts.map(u =>
         java.util.Arrays.copyOfRange(u, j * dsub, (j + 1) * dsub))
@@ -205,179 +194,117 @@ object Pq {
     udf { (v: Seq[Float]) =>
       val u0 = normalize(v)
       if (u0 == null || u0.length != dim) null
-      else {
-        val u = applyRotation(rot, u0)
-        val m = books.length
-        val dsub = dim / m
-        val out = new Array[Byte](m)
-        var j = 0
-        while (j < m) {
-          val cb = books(j)
-          var best = 0
-          var bestD = Double.MaxValue
-          var c = 0
-          while (c < cb.length) {
-            val cent = cb(c)
-            var s = 0.0
-            var i = 0
-            while (i < dsub) {
-              val d = u(j * dsub + i) - cent(i)
-              s += d * d
-              i += 1
-            }
-            if (s < bestD) { bestD = s; best = c }
-            c += 1
-          }
-          out(j) = best.toByte
-          j += 1
-        }
-        out
-      }
+      else encodeVec(books, applyRotation(rot, u0))
     }
 
   /** Per-query ADC lookup table: flat m·ksub doubles,
     * `table(j·ksub + c) = q_sub_j ⋅ centroid_{j,c}` over the normalized
-    * query; null for zero-norm queries. */
-  private def tableUdf(books: Array[Array[Array[Double]]], ksub: Int,
-                       dim: Int, rot: Array[Array[Double]] = null) =
-    udf { (v: Seq[Float]) =>
-      val u0 = normalize(v)
-      if (u0 == null || u0.length != dim) null
-      else {
-        val u = applyRotation(rot, u0)
-        val m = books.length
-        val dsub = dim / m
-        val out = new Array[Double](m * ksub)
-        var j = 0
-        while (j < m) {
-          val cb = books(j)
-          var c = 0
-          while (c < cb.length) {
-            val cent = cb(c)
-            var s = 0.0
-            var i = 0
-            while (i < dsub) { s += u(j * dsub + i) * cent(i); i += 1 }
-            out(j * ksub + c) = s
-            c += 1
-          }
-          j += 1
-        }
-        out
+    * (and rotated) query; null for null, zero-norm and wrong-dimension
+    * queries. */
+  private def adcTable(books: Array[Array[Array[Double]]], ksub: Int, dim: Int,
+                       rot: Array[Array[Double]], v: Seq[Float]): Array[Double] = {
+    val u0 = normalize(v)
+    if (u0 == null || u0.length != dim) return null
+    val u = applyRotation(rot, u0)
+    val m = books.length
+    val dsub = dim / m
+    val out = new Array[Double](m * ksub)
+    var j = 0
+    while (j < m) {
+      val cb = books(j)
+      var c = 0
+      while (c < cb.length) {
+        val cent = cb(c)
+        var s = 0.0
+        var i = 0
+        while (i < dsub) { s += u(j * dsub + i) * cent(i); i += 1 }
+        out(j * ksub + c) = s
+        c += 1
       }
+      j += 1
     }
+    out
+  }
 
-  /** ADC score: m table lookups, fixed summation order (deterministic). */
+  /** [[adcTable]] as a column function. */
+  private def tableUdf(books: Array[Array[Array[Double]]], ksub: Int,
+                       dim: Int, rot: Array[Array[Double]]) =
+    udf((v: Seq[Float]) => adcTable(books, ksub, dim, rot, v))
+
+  /** ADC score: m table lookups, fixed summation order (deterministic).
+    * `table` is a lookup function so an array-backed table is read
+    * without boxing, and a column's `Seq[Double]` without a copy. */
+  private def adc(codes: Array[Byte], table: Int => Double, ksub: Int): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < codes.length) {
+      s += table(j * ksub + (codes(j) & 0xFF))
+      j += 1
+    }
+    s
+  }
+
+  /** [[adc]] as a column function; null in, null out. */
   private val adcScoreUdf =
     udf { (codes: Array[Byte], table: Seq[Double], ksub: Int) =>
-      if (codes == null || table == null) None
-      else {
-        var s = 0.0
-        var j = 0
-        while (j < codes.length) {
-          s += table(j * ksub + (codes(j) & 0xFF))
-          j += 1
-        }
-        Some(s)
-      }
+      if (codes == null || table == null) None else Some(adc(codes, table, ksub))
     }
 
-  /** (m, ksub, dim, residual) — `residual` reads by NAME with a false
-    * default, so flat-PQ and pre-r17 IVF-PQ metas (3 columns) parse
-    * unchanged. */
+  /** The residual base term of a normalized query `u` for one list: q·w,
+    * `w` the list's unit-normalized centroid — a residual code scores
+    * q·u = q·w + ADC(u − w). */
+  private def residualBase(u: Array[Double], w: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < u.length) { s += u(i) * w(i); i += 1 }
+    s
+  }
+
+  /** (m, ksub, dim, residual), read with the declared schema both
+    * writers' columns fit ([[pqBuild]]: m, ksub, dim; [[ivfPqBuild]] adds
+    * residual) — no schema-inference job. Flat-PQ and pre-r17 IVF-PQ
+    * metas have no residual column; it reads null, which means false. */
   private def readMeta(spark: SparkSession, path: String)
       : (Int, Int, Int, Boolean) = {
-    val df = spark.read.parquet(s"$path/meta")
-    val r = df.head()
-    val res = df.columns.contains("residual") &&
-      r.getAs[Int]("residual") == 1
-    (r.getAs[Int]("m"), r.getAs[Int]("ksub"), r.getAs[Int]("dim"), res)
+    val r = spark.read.schema("m INT, ksub INT, dim INT, residual INT")
+      .parquet(s"$path/meta").head()
+    (r.getInt(0), r.getInt(1), r.getInt(2), !r.isNullAt(3) && r.getInt(3) == 1)
   }
 
   /** Unit-normalized coarse centroids — the u-space anchors residual
     * encoding subtracts. A zero-norm centroid (degenerate fit) anchors
     * at the origin: its list's residuals are the vectors themselves. */
-  private def normCenters(centers: Array[Array[Double]])
-      : Array[Array[Double]] = centers.map { c =>
-    var ss = 0.0
-    var i = 0
-    while (i < c.length) { ss += c(i) * c(i); i += 1 }
-    if (ss == 0.0) new Array[Double](c.length)
-    else {
-      val inv = 1.0 / math.sqrt(ss)
-      c.map(_ * inv)
-    }
-  }
+  private def normCenters(centers: Array[Array[Double]]): Array[Array[Double]] =
+    centers.map(c => Option(normalize(c)).getOrElse(new Array[Double](c.length)))
 
-  /** Nearest coarse list by squared distance on the RAW float vector —
-    * the training-side twin of SimilarityIndex.assignUdf (encode paths
-    * take the assigned list as an ARGUMENT instead, so stored codes can
-    * never disagree with their partition). */
-  /** [[nearestList]] over an already-converted double vector (the
-    * driver-local fit path) — identical arithmetic: the float variant
-    * promotes each element to double before subtracting. */
-  private def nearestListD(v: Array[Double],
-                           centers: Array[Array[Double]]): Int = {
+  /** The candidate nearest to `u[from, from + len)` by squared distance
+    * (the first on ties): a subvector's code ([[encodeVec]]), or a raw
+    * training row's coarse list — the training-side twin of
+    * SimilarityIndex.assignUdf (encode paths take the assigned list as an
+    * ARGUMENT instead, so stored codes can never disagree with their
+    * partition). */
+  private def nearest(u: Array[Double], from: Int, len: Int,
+                      cands: Array[Array[Double]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
-    var j = 0
-    while (j < centers.length) {
-      val c = centers(j)
+    var c = 0
+    while (c < cands.length) {
+      val cent = cands(c)
+      val n = math.min(len, cent.length)
       var s = 0.0
       var i = 0
-      val n = math.min(v.length, c.length)
-      while (i < n) { val d = v(i) - c(i); s += d * d; i += 1 }
-      if (s < bestD) { bestD = s; best = j }
-      j += 1
-    }
-    best
-  }
-
-  private def nearestList(v: Seq[Float],
-                          centers: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var j = 0
-    while (j < centers.length) {
-      val c = centers(j)
-      var s = 0.0
-      var i = 0
-      val n = math.min(v.length, c.length)
-      while (i < n) { val d = v(i) - c(i); s += d * d; i += 1 }
-      if (s < bestD) { bestD = s; best = j }
-      j += 1
+      while (i < n) { val d = u(from + i) - cent(i); s += d * d; i += 1 }
+      if (s < bestD) { bestD = s; best = c }
+      c += 1
     }
     best
   }
 
   /** The nearest-centroid encode core over an (already normalized,
     * rotated, residualized) double vector. */
-  private def encodeVec(books: Array[Array[Array[Double]]],
-                        u: Array[Double]): Array[Byte] = {
-    val m = books.length
-    val dsub = u.length / m
-    val out = new Array[Byte](m)
-    var j = 0
-    while (j < m) {
-      val cb = books(j)
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cb.length) {
-        val cent = cb(c)
-        var s = 0.0
-        var i = 0
-        while (i < dsub) {
-          val d = u(j * dsub + i) - cent(i)
-          s += d * d
-          i += 1
-        }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      out(j) = best.toByte
-      j += 1
-    }
-    out
+  private def encodeVec(books: Array[Array[Array[Double]]], u: Array[Double]): Array[Byte] = {
+    val dsub = u.length / books.length
+    Array.tabulate(books.length)(j => nearest(u, j * dsub, dsub, books(j)).toByte)
   }
 
   /** Residual encode: the row's assigned list rides in as an argument
@@ -390,30 +317,7 @@ object Pq {
                                 w: Array[Array[Double]]) =
     udf { (v: Seq[Float], list: Int) =>
       val u0 = normalize(v)
-      if (u0 == null || u0.length != dim) null
-      else {
-        val anchor = w(list)
-        val r = new Array[Double](dim)
-        var i = 0
-        while (i < dim) { r(i) = u0(i) - anchor(i); i += 1 }
-        encodeVec(books, r)
-      }
-    }
-
-  /** Per-(query, probed-list) residual base term: score = q·u =
-    * q·w_list + q·(u − w_list), and the second term is the ADC sum —
-    * this udf is the first. */
-  private def qBaseUdf(w: Array[Array[Double]], dim: Int) =
-    udf { (v: Seq[Float], list: Int) =>
-      val u = normalize(v)
-      if (u == null || u.length != dim) None
-      else {
-        val anchor = w(list)
-        var s = 0.0
-        var i = 0
-        while (i < dim) { s += u(i) * anchor(i); i += 1 }
-        Some(s)
-      }
+      if (u0 == null || u0.length != dim) null else encodeVec(books, minus(u0, w(list)))
     }
 
   /** Codebooks may be RAGGED: k-means returns fewer than `ksub` centers
@@ -422,8 +326,9 @@ object Pq {
     * ADC table STRIDE (an upper bound on every subspace's width). */
   private def readCodebooks(spark: SparkSession, path: String, m: Int,
                             ksub: Int): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .select("sub", "code", "centroid").collect()
+    // the declared schema of the codebooks writers: no inference job
+    val rows = spark.read.schema("sub INT, code INT, centroid ARRAY<DOUBLE>")
+      .parquet(s"$path/codebooks").collect()
     val bySub = rows.groupBy(_.getInt(0))
     (0 until m).toArray.map { j =>
       val subRows = bySub.getOrElse(j, Array.empty)
@@ -439,21 +344,62 @@ object Pq {
   private def readRotation(spark: SparkSession, path: String,
                            dim: Int): Array[Array[Double]] = {
     if (!graft.store.dirExists(spark, s"$path/rotation")) return null
-    val rows = spark.read.parquet(s"$path/rotation")
-      .select("i", "row").collect()
+    val rows = spark.read.schema("i INT, row ARRAY<DOUBLE>")
+      .parquet(s"$path/rotation").collect()
     val r = new Array[Array[Double]](dim)
     rows.foreach(x => r(x.getInt(0)) = x.getSeq[Double](1).toArray)
     r
   }
 
-  private def writeRotation(spark: SparkSession, path: String,
-                            rot: Array[Array[Double]]): Unit = {
+  /** A build's rotation: with `rotate`, the seeded matrix for `dim`,
+    * stored; without, null, and a previous build's `rotation/` is
+    * cleared (its presence is the flag). */
+  private def storeRotation(spark: SparkSession, path: String, dim: Int,
+                            rotate: Boolean): Array[Array[Double]] = {
     import spark.implicits._
-    rot.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-      .toDF("i", "row")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/rotation")
+    val rp = new org.apache.hadoop.fs.Path(s"$path/rotation")
+    if (!rotate) {
+      rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
+      null
+    } else {
+      val rot = rotationMatrix(dim)
+      rot.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq.toDF("i", "row")
+        .repartition(1).write.mode("overwrite").parquet(rp.toString)
+      rot
+    }
   }
+
+  private def writeCodebooks(spark: SparkSession, path: String,
+                             books: Array[Array[Array[Double]]]): Unit = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (cb, j) =>
+      cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
+    }.toSeq.toDF("sub", "code", "centroid")
+      .repartition(1).write.mode("overwrite").parquet(s"$path/codebooks")
+  }
+
+  /** A build's shape: the vector dim (of the first non-null row; `m` must
+    * divide it) and the codebook training-row bound. */
+  private def buildShape(corpus: DataFrame, corpusVec: String, m: Int, ksub: Int,
+                         maxFitRows: Long, caller: String): (Int, Long) = {
+    require(m >= 1 && ksub >= 1 && ksub <= 256,
+      s"need 1 <= ksub <= 256 (one byte per subspace), got m=$m ksub=$ksub")
+    val dim = corpus.select(col(corpusVec)).filter(col(corpusVec).isNotNull)
+      .limit(1).collect().headOption
+      .map(_.getSeq[Float](0).length)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$caller: no non-null $corpusVec rows to size the index from"))
+    require(dim % m == 0, s"vector dim $dim must divide by m=$m")
+    (dim, if (maxFitRows > 0L) maxFitRows else math.max(256L * ksub, 10000L))
+  }
+
+  /** The codes of `corpusVec` rows carrying their assigned `list_id`. */
+  private def encodeCol(books: Array[Array[Array[Double]]], dim: Int,
+                        rot: Array[Array[Double]], centers: Array[Array[Double]],
+                        residual: Boolean, corpusVec: String): Column =
+    if (residual)
+      encodeResidualUdf(books, dim, normCenters(centers))(col(corpusVec), col("list_id"))
+    else encodeUdf(books, dim, rot)(col(corpusVec))
 
   /**
    * Build a PQ index: fit codebooks, encode the corpus, persist
@@ -468,29 +414,13 @@ object Pq {
   def pqBuild(corpus: DataFrame, path: String, m: Int = 8, ksub: Int = 256,
               corpusId: String = "vec_id", corpusVec: String = "embedding",
               maxFitRows: Long = 0L, rotate: Boolean = false): Unit = {
-    require(m >= 1 && ksub >= 1 && ksub <= 256,
-      s"need 1 <= ksub <= 256 (one byte per subspace), got m=$m ksub=$ksub")
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(col(corpusVec)).filter(col(corpusVec).isNotNull)
-      .limit(1).collect().headOption
-      .map(_.getSeq[Float](0).length)
-      .getOrElse(throw new IllegalArgumentException(
-        s"pqBuild: no non-null $corpusVec rows to size the index from"))
-    require(dim % m == 0, s"vector dim $dim must divide by m=$m")
-    val fitRows =
-      if (maxFitRows > 0L) maxFitRows else math.max(256L * ksub, 10000L)
+    val (dim, fitRows) = buildShape(corpus, corpusVec, m, ksub, maxFitRows, "pqBuild")
     // `rotate` (r17): seeded random orthonormal pre-rotation before the
     // subspace split (the OPQ-family recall lift at the same byte
     // budget — see [[rotationMatrix]]); STORED like the codebooks, so
     // appends and searches can never disagree with the build
-    val rot = if (rotate) rotationMatrix(dim) else null
-    if (rotate) writeRotation(spark, path, rot)
-    else {
-      val rp = new org.apache.hadoop.fs.Path(s"$path/rotation")
-      rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(rp, true) // a rebuild without rotation clears the old one
-    }
+    val rot = storeRotation(spark, path, dim, rotate)
     val books = fitCodebooks(corpus, corpusVec, m, ksub, fitRows, dim, rot)
     // the three writes are independent given (books, rot) — overlap
     // them (guide §2.6); all awaited before return
@@ -498,13 +428,7 @@ object Pq {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val w = Seq(
-      Future {
-        books.zipWithIndex.flatMap { case (cb, j) =>
-          cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-        }.toSeq.toDF("sub", "code", "centroid")
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$path/codebooks")
-      },
+      Future { writeCodebooks(spark, path, books) },
       Future {
         spark.createDataFrame(Seq((m, ksub, dim))).toDF("m", "ksub", "dim")
           .write.mode("overwrite").parquet(s"$path/meta")
@@ -658,23 +582,13 @@ object Pq {
                  maxFitRows: Long = 0L, storeRaw: Boolean = false,
                  rotate: Boolean = false,
                  residual: Boolean = false): Unit = {
-    require(m >= 1 && ksub >= 1 && ksub <= 256,
-      s"need 1 <= ksub <= 256 (one byte per subspace), got m=$m ksub=$ksub")
     require(!(rotate && residual),
       "rotate and residual do not compose here: the rotation is defined " +
         "on the vector space, the residual codebooks on anchor offsets — " +
         "pick one tier (FAISS's OPQ+residual needs rotated coarse " +
         "centroids, a different layout)")
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(col(corpusVec)).filter(col(corpusVec).isNotNull)
-      .limit(1).collect().headOption
-      .map(_.getSeq[Float](0).length)
-      .getOrElse(throw new IllegalArgumentException(
-        s"ivfPqBuild: no non-null $corpusVec rows to size the index from"))
-    require(dim % m == 0, s"vector dim $dim must divide by m=$m")
-    val fitRows =
-      if (maxFitRows > 0L) maxFitRows else math.max(256L * ksub, 10000L)
+    val (dim, fitRows) = buildShape(corpus, corpusVec, m, ksub, maxFitRows, "ivfPqBuild")
     // coarse routing fit shares the row-bounded discipline: fraction
     // derived from one count, seeded — corpus-independent fit cost.
     // The coarse fit and the m codebook fits are INDEPENDENT seeded
@@ -691,13 +605,7 @@ object Pq {
     // on the ORIGINAL float vectors (rotation preserves distances, so
     // either convention is valid — original keeps assignUdf shared and
     // every call site consistent by construction)
-    val rot = if (rotate) rotationMatrix(dim) else null
-    if (rotate) writeRotation(spark, path, rot)
-    else {
-      val rp = new org.apache.hadoop.fs.Path(s"$path/rotation")
-      rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(rp, true)
-    }
+    val rot = storeRotation(spark, path, dim, rotate)
     val coarseF = Future {
       SimilarityIndex.fitCentroids(corpus, corpusVec, nlist, coarseFrac)
     }
@@ -725,48 +633,27 @@ object Pq {
     val assigned = corpus.select(col(corpusId),
       SimilarityIndex.assignUdf(centers)(col(corpusVec)).as("list_id"),
       col(corpusVec))
-    val enc: org.apache.spark.sql.Column =
-      if (residual)
-        encodeResidualUdf(books, dim, normCenters(centers))(
-          col(corpusVec), col("list_id"))
-      else encodeUdf(books, dim, rot)(col(corpusVec))
+    val enc = encodeCol(books, dim, rot, centers, residual, corpusVec)
     // the five writes are independent given (centers, books) — overlap
     // them (guide §2.6, the concurrent-fits precedent above); all
     // awaited before return, so the on-disk contract is unchanged
     val writes = Seq(
-      Future {
-        centers.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-          .toDF("list_id", "centroid")
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$path/centroids")
-      },
-      Future {
-        books.zipWithIndex.flatMap { case (cb, j) =>
-          cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-        }.toSeq.toDF("sub", "code", "centroid")
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$path/codebooks")
-      },
+      Future { SimilarityIndex.writeCentroids(spark, path, centers) },
+      Future { writeCodebooks(spark, path, books) },
       Future {
         spark.createDataFrame(Seq((m, ksub, dim, if (residual) 1 else 0)))
           .toDF("m", "ksub", "dim", "residual")
           .write.mode("overwrite").parquet(s"$path/meta")
       },
       Future {
-        assigned.select(col(corpusId), col("list_id"), enc.as("codes"))
-          .filter(col("codes").isNotNull)
-          .withColumn("ingest", lit(0))
-          .write.mode("overwrite").partitionBy("list_id", "ingest")
-          .parquet(s"$path/codes")
+        SimilarityIndex.writeLists(assigned.select(col(corpusId), col("list_id"), enc.as("codes"))
+          .filter(col("codes").isNotNull), s"$path/codes", 0, build = true)
       }) ++
       // refine sidecar: ORIGINAL float vectors under the SAME list
       // assignment, so the exact re-rank reads only probed lists (the
       // ivfSq8 raw/ contract — lockstep through append and compact)
       (if (storeRaw) Seq(Future {
-        assigned.filter(enc.isNotNull)
-          .withColumn("ingest", lit(0))
-          .write.mode("overwrite").partitionBy("list_id", "ingest")
-          .parquet(s"$path/raw")
+        SimilarityIndex.writeLists(assigned.filter(enc.isNotNull), s"$path/raw", 0, build = true)
       })
       else Nil)
     Await.result(Future.sequence(writes), Duration.Inf)
@@ -797,78 +684,78 @@ object Pq {
     val assigned = newDf.select(col(corpusId),
       SimilarityIndex.assignUdf(centers)(col(corpusVec)).as("list_id"),
       col(corpusVec))
-    val enc: org.apache.spark.sql.Column =
-      if (residual)
-        encodeResidualUdf(books, dim, normCenters(centers))(
-          col(corpusVec), col("list_id"))
-      else encodeUdf(books, dim, rot)(col(corpusVec))
-    assigned.select(col(corpusId), col("list_id"),
-        enc.as("codes"))
-      .filter(col("codes").isNotNull)
-      .withColumn("ingest", lit(ingest))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("list_id", "ingest")
-      .parquet(s"$path/codes")
+    val enc = encodeCol(books, dim, rot, centers, residual, corpusVec)
+    SimilarityIndex.writeLists(assigned.select(col(corpusId), col("list_id"), enc.as("codes"))
+      .filter(col("codes").isNotNull), s"$path/codes", ingest, build = false)
     if (graft.store.dirExists(spark, s"$path/raw"))
-      assigned.filter(enc.isNotNull)
-        .withColumn("ingest", lit(ingest))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("list_id", "ingest")
-        .parquet(s"$path/raw")
+      SimilarityIndex.writeLists(assigned.filter(enc.isNotNull), s"$path/raw", ingest,
+        build = false)
   }
 
-  /** Routed ADC search: driver-resolved probe lists → partition-pruned
-    * code scan → per-query broadcast ADC tables → bounded top-k. The
-    * probe cost is ∝ the probed lists' codes, never the corpus. */
+  /** One query's ADC state: its table and, in residual mode, its base
+    * term for every list (null otherwise). */
+  private final case class AdcQuery(table: Int => Double, base: Array[Double])
+
+  /** The ADC score for [[SimilarityIndex.routedTopK]] over stored `codes`:
+    * adc + base, the base 0.0 when the index is not residual. Zero-norm
+    * and wrong-dimension queries decline. */
+  private def adcScorer(books: Array[Array[Array[Double]]], ksub: Int, dim: Int,
+                        rot: Array[Array[Double]], anchors: Array[Array[Double]])
+      : SimilarityIndex.RoutedScorer[AdcQuery, Array[Byte]] =
+    new SimilarityIndex.RoutedScorer[AdcQuery, Array[Byte]] {
+      def query(r: Row, v: Seq[Float]): AdcQuery = {
+        val t = adcTable(books, ksub, dim, rot, v)
+        if (t == null) null
+        else if (anchors == null) AdcQuery(i => t(i), null)
+        else { val u = normalize(v); AdcQuery(i => t(i), anchors.map(residualBase(u, _))) }
+      }
+      def row(r: InternalRow): Array[Byte] = r.getBinary(1)
+      def score(c: Array[Byte], q: AdcQuery, list: Int): Double =
+        adc(c, q.table, ksub) + (if (q.base == null) 0.0 else q.base(list))
+    }
+
+  /** The routed ADC pass both IVF-PQ searches run: its routing and its
+    * top-`k` buffers. */
+  private def ivfPqPass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
+                        nprobe: Int, corpusId: String, queryId: String,
+                        queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) = {
+    val (m, ksub, dim, residual) = readMeta(spark, path)
+    val books = readCodebooks(spark, path, m, ksub)
+    val rot = readRotation(spark, path, dim)
+    val routing = SimilarityIndex.route(spark, path, queries, nprobe, queryId, queryVec)
+    val anchors = if (residual) normCenters(routing.centers) else null
+    (routing, SimilarityIndex.routedTopK(spark, path, "codes", "codes", corpusId, routing, k,
+      _ => adcScorer(books, ksub, dim, rot, anchors)))
+  }
+
+  /** Routed ADC search: the routed IVF kernel
+    * ([[SimilarityIndex.ivfSearchIndexed]]'s — driver-resolved probe
+    * lists, one partition-pruned code scan, a bounded top-k per query per
+    * task, a driver merge) scoring each stored code by its query's ADC
+    * table (plus the residual base in residual mode). The probe cost is ∝
+    * the probed lists' codes, never the corpus. EAGER: returns a local
+    * frame (queryId, corpusId long, score_pq double, rank int), score desc
+    * and lower id on ties; zero-norm and null queries score nothing. */
   def ivfPqSearch(spark: SparkSession, path: String, queries: DataFrame,
                   k: Int, nprobe: Int = 8, corpusId: String = "vec_id",
                   queryId: String = "query_id",
                   queryVec: String = "query_vec"): DataFrame = {
-    import spark.implicits._
-    val (m, ksub, dim, residual) = readMeta(spark, path)
-    val books = readCodebooks(spark, path, m, ksub)
-    val rot = readRotation(spark, path, dim)
-    val centers = SimilarityIndex.readCentroids(spark, path)
-    val qProbed = queries.withColumn("list_id",
-      explode(SimilarityIndex.probeUdf(centers, nprobe)(col(queryVec))))
-    val probedLists = qProbed.select("list_id").distinct().as[Int].collect()
-      .map(_.asInstanceOf[Any])
-    // residual base: q·u = q·w_list + ADC(residual) — one scalar per
-    // (query, probed list), riding the same broadcast row as the table
-    val qb: org.apache.spark.sql.Column =
-      if (residual)
-        qBaseUdf(normCenters(centers), dim)(col(queryVec), col("list_id"))
-      else lit(0.0)
-    val q = qProbed
-      .select(col(queryId), col("list_id"),
-        tableUdf(books, ksub, dim, rot)(col(queryVec)).as("_qt"),
-        qb.as("_qb"))
-      .filter(col("_qt").isNotNull)
-    val c = graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(s"$path/codes")
-          .filter(col("list_id").isin(probedLists: _*)),
-        corpusId)
-      .select(col(corpusId), col("list_id"), col("codes"))
-    val scored = c.join(broadcast(q), Seq("list_id"))
-      .withColumn("score_pq",
-        adcScoreUdf(col("codes"), col("_qt"), lit(ksub)) + col("_qb"))
-      .select(col(queryId), col(corpusId), col("score_pq"))
-    TopK.topKPerGroup(scored, queryId, corpusId, "score_pq", k)
+    val (routing, top) = ivfPqPass(spark, path, queries, k, nprobe, corpusId, queryId, queryVec)
+    SimilarityIndex.localTopK(spark, routing, corpusId, "score_pq", top)
   }
 
   /**
    * IVF-PQ with EXACT float re-ranking — FAISS's `IVF,PQ` +
-   * `IndexRefineFlat`: the routed ADC scan generates a `candidateK`
-   * pool per query over the probed lists only, then the pool re-scores
-   * by exact cosine against the `raw/` sidecar (ALSO pruned to the
-   * probed lists) and cuts to top-k. PQ error only shuffles ranks
-   * inside the pool, so with the pool covering the probed lists' true
-   * top-k the answer equals the exact float top-k over the probed
-   * lists — and the GLOBAL exact top-k at nprobe = nlist. Pool and
-   * query vectors broadcast into the raw read; no corpus-sized side
-   * ever shuffles. Requires `storeRaw = true` at build.
+   * `IndexRefineFlat`: the routed ADC scan ([[ivfPqSearch]]) generates a
+   * `candidateK` pool per query over the probed lists only, then the pool
+   * re-scores by exact cosine against the `raw/` sidecar (the same probed
+   * lists, the same routing) and cuts to top-k. PQ error only shuffles
+   * ranks inside the pool, so with the pool covering the probed lists'
+   * true top-k the answer equals the exact float top-k over the probed
+   * lists — and the GLOBAL exact top-k at nprobe = nlist. Both passes are
+   * one scan each plus a driver merge; nothing shuffles. EAGER: returns a
+   * local frame (queryId, corpusId long, cosine double, rank int).
+   * Requires `storeRaw = true` at build.
    */
   def ivfPqSearchRefined(spark: SparkSession, path: String,
                          queries: DataFrame, k: Int, candidateK: Int = 64,
@@ -881,48 +768,9 @@ object Pq {
     require(graft.store.dirExists(spark, s"$path/raw"),
       s"$path has no raw/ refine sidecar — build with storeRaw = true " +
         "to enable refined search")
-    import spark.implicits._
-    val (m, ksub, dim, residual) = readMeta(spark, path)
-    val books = readCodebooks(spark, path, m, ksub)
-    val rot = readRotation(spark, path, dim)
-    val centers = SimilarityIndex.readCentroids(spark, path)
-    val qProbed = queries.withColumn("list_id",
-      explode(SimilarityIndex.probeUdf(centers, nprobe)(col(queryVec))))
-    val probedLists = qProbed.select("list_id").distinct().as[Int].collect()
-      .map(_.asInstanceOf[Any])
-    val qb: org.apache.spark.sql.Column =
-      if (residual)
-        qBaseUdf(normCenters(centers), dim)(col(queryVec), col("list_id"))
-      else lit(0.0)
-    val q = qProbed
-      .select(col(queryId), col("list_id"),
-        tableUdf(books, ksub, dim, rot)(col(queryVec)).as("_qt"),
-        qb.as("_qb"))
-      .filter(col("_qt").isNotNull)
-    val c = graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(s"$path/codes")
-          .filter(col("list_id").isin(probedLists: _*)),
-        corpusId)
-      .select(col(corpusId), col("list_id"), col("codes"))
-    val scored = c.join(broadcast(q), Seq("list_id"))
-      .withColumn("_spq",
-        adcScoreUdf(col("codes"), col("_qt"), lit(ksub)) + col("_qb"))
-      .select(col(queryId), col(corpusId), col("_spq"))
-    val pool = TopK.topKPerGroup(scored, queryId, corpusId, "_spq",
-        candidateK)
-      .select(col(queryId), col(corpusId))
-    val raw = spark.read.parquet(s"$path/raw")
-      .filter(col("list_id").isin(probedLists: _*))
-      .select(col(corpusId), col(corpusVec))
-    val rescored = raw
-      .join(broadcast(pool), Seq(corpusId))
-      .join(broadcast(queries.select(col(queryId), col(queryVec))),
-        Seq(queryId))
-      .withColumn("cosine",
-        graft.functions.expressions.CosineSimilarity.cosineNative(
-          col(corpusVec), col(queryVec)))
-      .select(col(queryId), col(corpusId), col("cosine"))
-    TopK.topKPerGroup(rescored, queryId, corpusId, "cosine", k)
+    val (routing, pools) = ivfPqPass(spark, path, queries, candidateK, nprobe,
+      corpusId, queryId, queryVec)
+    SimilarityIndex.refineOnRaw(spark, path, routing, pools, k, corpusId, corpusVec, queryVec)
   }
 
   /** Tombstone ids out of the IVF-PQ index (takedown semantics;

@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -56,43 +57,46 @@ object Quantize {
     require(scale > 0 && !scale.isNaN,
       s"quantization scale must be positive, got $scale — " +
         "an all-zero or empty corpus cannot be int8-quantized")
-    udf { (v: Seq[Float]) =>
-      if (v == null) null
-      else {
-        val out = new Array[Int](v.length)
-        var i = 0
-        while (i < v.length) {
-          out(i) = math.floor(v(i).toDouble / scale + 0.5).toInt
-          i += 1
-        }
-        out
-      }
+    udf((v: Seq[Float]) => if (v == null) null else codes(scale, v))
+  }
+
+  /** The int8 codes of a vector under `scale`: floor(v/scale + 0.5). */
+  private[index] def codes(scale: Double, v: Seq[Float]): Array[Int] = {
+    val out = new Array[Int](v.length)
+    var i = 0
+    while (i < v.length) {
+      out(i) = math.floor(v(i).toDouble / scale + 0.5).toInt
+      i += 1
     }
+    out
   }
 
   /** Exact integer dot product of two code arrays (BIGINT — 64 dims of
-    * ±127 cannot overflow; associative, so no summation-order hazard).
-    * Null in → null out (a null embedding row quantizes to null codes;
-    * the `> 0` norm filters then drop it like any zero-norm row). */
-  def dotUdf: UserDefinedFunction = udf { (a: Seq[Int], b: Seq[Int]) =>
-    if (a == null || b == null) None
-    else {
-      var s = 0L; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i).toLong * b(i); i += 1 }
-      Some(s)
-    }
+    * ±127 cannot overflow; associative, so no summation-order hazard). */
+  private[index] def dot(a: Array[Int], b: Array[Int]): Long = {
+    var s = 0L; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i).toLong * b(i); i += 1 }
+    s
   }
 
-  /** Integer self-dot (squared norm) of a code array; null-safe like
-    * [[dotUdf]]. */
+  /** Integer self-dot (squared norm) of a code array. */
+  private[index] def normSq(a: Array[Int]): Long = {
+    var s = 0L; var i = 0
+    while (i < a.length) { s += a(i).toLong * a(i); i += 1 }
+    s
+  }
+
+  /** [[dot]] as a column function. Null in → null out (a null embedding
+    * row quantizes to null codes; the `> 0` norm filters then drop it like
+    * any zero-norm row). */
+  def dotUdf: UserDefinedFunction = udf { (a: Seq[Int], b: Seq[Int]) =>
+    if (a == null || b == null) None else Some(dot(a.toArray, b.toArray))
+  }
+
+  /** [[normSq]] as a column function; null-safe like [[dotUdf]]. */
   def normSqUdf: UserDefinedFunction = udf { (a: Seq[Int]) =>
-    if (a == null) None
-    else {
-      var s = 0L; var i = 0
-      while (i < a.length) { s += a(i).toLong * a(i); i += 1 }
-      Some(s)
-    }
+    if (a == null) None else Some(normSq(a.toArray))
   }
 
   /** Pack int8 codes into a binary column — the at-rest form (1 byte per
@@ -107,16 +111,27 @@ object Quantize {
     }
   }
 
-  /** Unpack a binary code column back to array<int>. */
-  def unpackCodesUdf: UserDefinedFunction = udf { (b: Array[Byte]) =>
-    if (b == null) null
-    else {
-      val out = new Array[Int](b.length)
-      var i = 0
-      while (i < b.length) { out(i) = b(i).toInt; i += 1 }
-      out
-    }
+  /** Packed int8 codes back to ints. */
+  private[index] def unpack(b: Array[Byte]): Array[Int] = {
+    val out = new Array[Int](b.length)
+    var i = 0
+    while (i < b.length) { out(i) = b(i).toInt; i += 1 }
+    out
   }
+
+  /** Unpack a binary code column back to array<int>. */
+  def unpackCodesUdf: UserDefinedFunction =
+    udf((b: Array[Byte]) => if (b == null) null else unpack(b))
+
+  /** The stored global scale: `meta/` as [[int8Build]] and [[ivfSq8Build]]
+    * write it ([[writeScale]]), one `scale DOUBLE` row — read with that
+    * declared schema, so no schema-inference job runs. */
+  private def readScale(spark: SparkSession, path: String): Double =
+    spark.read.schema("scale DOUBLE").parquet(s"$path/meta").head().getDouble(0)
+
+  private def writeScale(spark: SparkSession, path: String, scale: Double): Unit =
+    spark.createDataFrame(Seq(Tuple1(scale))).toDF("scale")
+      .write.mode("overwrite").parquet(s"$path/meta")
 
   /**
    * Brute-force top-k by QUANTIZED cosine: quantize corpus and queries
@@ -165,8 +180,7 @@ object Quantize {
     val scale = maxAbs(df, vecCol) / 127.0
     df.select(col(idCol), packCodesUdf(codesUdf(scale)(col(vecCol))).as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes/installment=0")
-    spark.createDataFrame(Seq(Tuple1(scale))).toDF("scale")
-      .write.mode("overwrite").parquet(s"$path/meta")
+    writeScale(spark, path, scale)
     // a rebuild starts a new index generation — drop the previous
     // generation's tombstones or they silently filter the new rows
     graft.store.Tombstones.clear(spark, path)
@@ -189,7 +203,7 @@ object Quantize {
   def int8AppendAt(spark: SparkSession, path: String, newDf: DataFrame,
                    installment: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     newDf.select(col(idCol), packCodesUdf(codesUdf(scale)(col(vecCol))).as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes/installment=$installment")
   }
@@ -220,7 +234,6 @@ object Quantize {
                   fitSampleFraction: Double = 0.5,
                   storeRaw: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     // the fit, the scale pass, and the four writes below are
     // independent except through (centers, scale) — overlap them
     // (guide §2.6; the ivfPqBuild concurrent-fits precedent): fit ∥
@@ -232,29 +245,15 @@ object Quantize {
     val scaleF = Future { maxAbs(corpus, corpusVec) / 127.0 }
     val centers = SimilarityIndex.fitCentroids(corpus, corpusVec, nlist,
       fitSampleFraction)
-    val centroidsF = Future {
-      centers.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-        .toDF("list_id", "centroid")
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")
-    }
+    val centroidsF = Future { SimilarityIndex.writeCentroids(spark, path, centers) }
     val scale = Await.result(scaleF, Duration.Inf)
-    val metaF = Future {
-      spark.createDataFrame(Seq(Tuple1(scale))).toDF("scale")
-        .write.mode("overwrite").parquet(s"$path/meta")
-    }
+    val metaF = Future { writeScale(spark, path, scale) }
     val assigned = corpus.select(col(corpusId),
       SimilarityIndex.assignUdf(centers)(col(corpusVec)).as("list_id"),
       col(corpusVec))
-    // two-level layout (the ivfBuild contract): list_id stays the top
-    // partition for probe pruning; the ingest level makes appends
-    // replay-idempotent and foldable
     val codesF = Future {
-      assigned.select(col(corpusId), col("list_id"),
-          packCodesUdf(codesUdf(scale)(col(corpusVec))).as("codes"))
-        .withColumn("ingest", lit(0))
-        .write.mode("overwrite").partitionBy("list_id", "ingest")
-        .parquet(s"$path/codes")
+      SimilarityIndex.writeLists(assigned.select(col(corpusId), col("list_id"),
+        packCodesUdf(codesUdf(scale)(col(corpusVec))).as("codes")), s"$path/codes", 0, build = true)
     }
     // refine sidecar: the ORIGINAL float vectors, partitioned by the SAME
     // list assignment, so an exact re-rank reads only probed lists (see
@@ -262,9 +261,7 @@ object Quantize {
     // opt in only when the refine path is wanted.
     val rawF =
       if (storeRaw) Some(Future {
-        assigned.withColumn("ingest", lit(0))
-          .write.mode("overwrite").partitionBy("list_id", "ingest")
-          .parquet(s"$path/raw")
+        SimilarityIndex.writeLists(assigned, s"$path/raw", 0, build = true)
       })
       else None
     // settle EVERYTHING before returning (and before an error
@@ -298,26 +295,18 @@ object Quantize {
                      ingest: Int, corpusId: String = "vec_id",
                      corpusVec: String = "embedding"): Unit = {
     val centers = SimilarityIndex.readCentroids(spark, path)
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     val assigned = newVecs.select(col(corpusId),
       SimilarityIndex.assignUdf(centers)(col(corpusVec)).as("list_id"),
       col(corpusVec))
-    assigned.select(col(corpusId), col("list_id"),
-        packCodesUdf(codesUdf(scale)(col(corpusVec))).as("codes"))
-      .withColumn("ingest", lit(ingest))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("list_id", "ingest")
-      .parquet(s"$path/codes")
+    SimilarityIndex.writeLists(assigned.select(col(corpusId), col("list_id"),
+      packCodesUdf(codesUdf(scale)(col(corpusVec))).as("codes")), s"$path/codes", ingest,
+      build = false)
     // the build decided whether this index carries the refine sidecar; an
     // append must keep raw/ in lockstep with codes/ or refined searches
     // would silently stop seeing appended vectors
     if (graft.store.dirExists(spark, s"$path/raw"))
-      assigned.withColumn("ingest", lit(ingest))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("list_id", "ingest")
-        .parquet(s"$path/raw")
+      SimilarityIndex.writeLists(assigned, s"$path/raw", ingest, build = false)
   }
 
   /**
@@ -345,39 +334,51 @@ object Quantize {
     rows
   }
 
-  /** Search a persisted [[ivfSq8Build]] index: driver-resolved probe
-    * lists → partition-pruned code scan → integer-dot cosine → bounded
-    * top-k. */
+  /** Int8 codes with their integer self-dot — either side of a quantized
+    * cosine; zero-norm codes (an all-zero vector) have none. */
+  private final case class Coded(codes: Array[Int], normSq: Long)
+
+  private def coded(c: Array[Int]): Coded = {
+    val n = normSq(c)
+    if (n > 0) Coded(c, n) else null
+  }
+
+  /** The quantized cosine for [[SimilarityIndex.routedTopK]] over packed
+    * `codes`: the query quantizes under the stored `scale`; zero-norm rows
+    * and queries decline. */
+  private def sq8Scorer(scale: Double): SimilarityIndex.RoutedScorer[Coded, Coded] =
+    new SimilarityIndex.RoutedScorer[Coded, Coded] {
+      def query(r: Row, v: Seq[Float]): Coded = if (v == null) null else coded(codes(scale, v))
+      def row(r: InternalRow): Coded = coded(unpack(r.getBinary(1)))
+      def score(c: Coded, q: Coded, list: Int): Double =
+        dot(c.codes, q.codes).toDouble / (math.sqrt(c.normSq.toDouble) * math.sqrt(q.normSq.toDouble))
+    }
+
+  /** The routed quantized pass both IVF-SQ8 searches run: its routing and
+    * its top-`k` buffers. */
+  private def ivfSq8Pass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
+                         nprobe: Int, corpusId: String, queryId: String,
+                         queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) = {
+    val scale = readScale(spark, path)
+    val routing = SimilarityIndex.route(spark, path, queries, nprobe, queryId, queryVec)
+    (routing, SimilarityIndex.routedTopK(spark, path, "codes", "codes", corpusId, routing, k,
+      _ => sq8Scorer(scale)))
+  }
+
+  /** Search a persisted [[ivfSq8Build]] index: the routed IVF kernel
+    * ([[SimilarityIndex.ivfSearchIndexed]]'s — driver-resolved probe
+    * lists, one partition-pruned code scan, a bounded top-k per query per
+    * task, a driver merge) scoring the integer-dot cosine of the
+    * scale-quantized query. EAGER: returns a local frame (queryId,
+    * corpusId long, cosine_q double, rank int), score desc and lower id on
+    * ties; zero-norm and null queries score nothing. */
   def ivfSq8Search(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int, nprobe: Int = 8,
                    corpusId: String = "vec_id",
                    queryId: String = "query_id",
                    queryVec: String = "query_vec"): DataFrame = {
-    import spark.implicits._
-    val centers = SimilarityIndex.readCentroids(spark, path)
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
-    val qProbed = queries.withColumn("list_id",
-      explode(SimilarityIndex.probeUdf(centers, nprobe)(col(queryVec))))
-    val probedLists = qProbed.select("list_id").distinct().as[Int].collect()
-    val q = qProbed
-      .select(col(queryId), col("list_id"),
-        codesUdf(scale)(col(queryVec)).as("_qc"))
-      .withColumn("_qn", normSqUdf(col("_qc")))
-      .filter(col("_qn") > 0)
-    val c = graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(s"$path/codes")
-          .filter(col("list_id").isin(probedLists.map(_.asInstanceOf[Any]): _*)),
-        corpusId)
-      .select(col(corpusId), col("list_id"),
-        unpackCodesUdf(col("codes")).as("_cc"))
-      .withColumn("_cn", normSqUdf(col("_cc")))
-      .filter(col("_cn") > 0)
-    val scored = c.join(broadcast(q), Seq("list_id"))
-      .withColumn("_dot", dotUdf(col("_cc"), col("_qc")))
-      .withColumn("cosine_q", col("_dot").cast("double") /
-        (sqrt(col("_cn").cast("double")) * sqrt(col("_qn").cast("double"))))
-      .select(col(queryId), col(corpusId), col("cosine_q"))
-    TopK.topKPerGroup(scored, queryId, corpusId, "cosine_q", k)
+    val (routing, top) = ivfSq8Pass(spark, path, queries, k, nprobe, corpusId, queryId, queryVec)
+    SimilarityIndex.localTopK(spark, routing, corpusId, "cosine_q", top)
   }
 
   /**
@@ -391,12 +392,13 @@ object Quantize {
    * exact float top-k over the probed lists — full-precision answers at
    * quantized scan cost.
    *
-   * Scale shape: both scans are partition-pruned to the probed lists;
-   * the candidate pool (≤ |queries|·candidateK id pairs) and the query
-   * vectors broadcast into the raw read, so the corpus-sized sides never
-   * shuffle. The re-rank reads float bytes for probed lists only — the
+   * Scale shape: two runs of the routed IVF kernel on one routing — the
+   * [[ivfSq8Search]] pass at `candidateK`, then a scan of the same
+   * probed `raw/` lists where each query scores only its pool; nothing
+   * shuffles. The re-rank reads float bytes for probed lists only — the
    * 4× scan saving of SQ8 still applies to the candidate-generation
-   * pass, which is the one that touches every probed row.
+   * pass. EAGER: returns a local frame (queryId, corpusId long, cosine
+   * double, rank int).
    *
    * Requires an index built with `storeRaw = true` ([[ivfSq8Build]]);
    * fails fast otherwise.
@@ -412,46 +414,9 @@ object Quantize {
     require(graft.store.dirExists(spark, s"$path/raw"),
       s"$path has no raw/ refine sidecar — build with storeRaw = true " +
         "to enable refined search")
-    import spark.implicits._
-    val centers = SimilarityIndex.readCentroids(spark, path)
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
-    val qProbed = queries.withColumn("list_id",
-      explode(SimilarityIndex.probeUdf(centers, nprobe)(col(queryVec))))
-    val probedLists = qProbed.select("list_id").distinct().as[Int].collect()
-      .map(_.asInstanceOf[Any])
-    // pass 1 — quantized candidate generation over the probed code lists
-    val q = qProbed
-      .select(col(queryId), col("list_id"),
-        codesUdf(scale)(col(queryVec)).as("_qc"))
-      .withColumn("_qn", normSqUdf(col("_qc")))
-      .filter(col("_qn") > 0)
-    val c = graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(s"$path/codes")
-          .filter(col("list_id").isin(probedLists: _*)),
-        corpusId)
-      .select(col(corpusId), col("list_id"),
-        unpackCodesUdf(col("codes")).as("_cc"))
-      .withColumn("_cn", normSqUdf(col("_cc")))
-      .filter(col("_cn") > 0)
-    val scored = c.join(broadcast(q), Seq("list_id"))
-      .withColumn("_dot", dotUdf(col("_cc"), col("_qc")))
-      .withColumn("_cq", col("_dot").cast("double") /
-        (sqrt(col("_cn").cast("double")) * sqrt(col("_qn").cast("double"))))
-      .select(col(queryId), col(corpusId), col("_cq"))
-    val pool = TopK.topKPerGroup(scored, queryId, corpusId, "_cq", candidateK)
-      .select(col(queryId), col(corpusId))
-    // pass 2 — exact float re-rank of the pool against the raw sidecar
-    val raw = spark.read.parquet(s"$path/raw")
-      .filter(col("list_id").isin(probedLists: _*))
-      .select(col(corpusId), col(corpusVec))
-    val rescored = raw
-      .join(broadcast(pool), Seq(corpusId))
-      .join(broadcast(queries.select(col(queryId), col(queryVec))), Seq(queryId))
-      .withColumn("cosine",
-        graft.functions.expressions.CosineSimilarity.cosineNative(
-          col(corpusVec), col(queryVec)))
-      .select(col(queryId), col(corpusId), col("cosine"))
-    TopK.topKPerGroup(rescored, queryId, corpusId, "cosine", k)
+    val (routing, pools) = ivfSq8Pass(spark, path, queries, candidateK, nprobe,
+      corpusId, queryId, queryVec)
+    SimilarityIndex.refineOnRaw(spark, path, routing, pools, k, corpusId, corpusVec, queryVec)
   }
 
   /**
@@ -517,7 +482,7 @@ object Quantize {
                        corpusId: String = "vec_id",
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     val codes0 = spark.read.parquet(s"$path/codes")
     val codes1 = if (asOfInstallment == Int.MaxValue) codes0
       else codes0.filter(col("installment") <= asOfInstallment)
@@ -575,7 +540,7 @@ object Quantize {
       corpusId, idCol, vecCol, asOfInstallment)
       .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
       .localCheckpoint()
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     val internal = batchInternalPairs(newVecs, scale, threshold, idCol, vecCol)
     probePrunePolicy(newVecs, stored, internal, idCol, broadcastDrop)
   }
@@ -685,7 +650,7 @@ object Quantize {
                          asOfIngest: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     val centers = SimilarityIndex.readCentroids(spark, path)
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     val qProbed = newVecs.select(col(idCol).as("new_id"), col(vecCol))
       .withColumn("list_id",
         explode(SimilarityIndex.probeUdf(centers, nprobe)(col(vecCol))))
@@ -747,7 +712,7 @@ object Quantize {
       corpusId, idCol, vecCol, asOfIngest)
       .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
       .localCheckpoint()
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     // batch-internal pairs route through the SAME probe lists (r11): the
     // exact n² self-join was the routed prune's residual floor at scale —
     // with the stored side pruned to probed lists, the batch² term
@@ -820,7 +785,7 @@ object Quantize {
                         queryId: String = "query_id",
                         queryVec: String = "query_vec",
                         asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    val scale = readScale(spark, path)
     val codes0 = spark.read.parquet(s"$path/codes")
     val codes1 = if (asOfInstallment == Int.MaxValue) codes0
       else codes0.filter(col("installment") <= asOfInstallment)

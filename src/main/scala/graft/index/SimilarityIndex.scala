@@ -1,6 +1,10 @@
 package graft.index
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
@@ -35,8 +39,9 @@ import graft.functions.expressions.CosineSimilarity
  * corpus never shuffles; LSH bands ids only — vectors never ride the band
  * exchange — and scores within buckets only. All per-query ranking goes
  * through `TopK`'s bounded buffers — `topKPerGroup` (bounded partial
- * aggregation), or its insert/merge directly in `ivfSearchIndexed`'s
- * one-scan search: no per-query window funnel anywhere in this file.
+ * aggregation), or its insert/merge directly in the routed IVF kernel
+ * (`routedTopK`: one scan plus a driver merge, shared by the float, IVF-SQ8
+ * and IVF-PQ searches): no per-query window funnel anywhere in this file.
  */
 object SimilarityIndex {
 
@@ -202,37 +207,6 @@ object SimilarityIndex {
     udf((v: Seq[Float]) => probeLists(centers, v, nprobe))
 
   /**
-   * IVF (inverted-file) approximate top-k — the clustered-data scale path
-   * alongside `lshTopK`:
-   *
-   *   1. fit nlist k-means centroids with [[KMeansLocal]] (fixed seed —
-   *      deterministic) on a row-bounded sample of the corpus (see
-   *      [[fitCentroids]]; at 100 TB the fit must never scan the full
-   *      corpus),
-   *   2. assign every corpus vector to its nearest centroid (map-side, the
-   *      centroid matrix broadcasts; the corpus never shuffles for this),
-   *   3. each query probes its `nprobe` nearest centroids and scores only
-   *      vectors in those lists, bounded top-k per query.
-   *
-   * For a reusable on-disk index with partition-pruned probes, see
-   * `ivfBuild` / `ivfSearchIndexed`.
-   */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 64, nprobe: Int = 8,
-              corpusId: String = "vec_id", corpusVec: String = "embedding",
-              queryId: String = "query_id", queryVec: String = "query_vec",
-              fitSampleFraction: Double = 1.0): DataFrame = {
-    val centers = fitCentroids(corpus, corpusVec, nlist, fitSampleFraction)
-    val cAssigned = corpus.withColumn("list_id", assignUdf(centers)(col(corpusVec)))
-    val qProbed = queries.withColumn("list_id",
-      explode(probeUdf(centers, nprobe)(col(queryVec))))
-    val scored = cAssigned.join(broadcast(qProbed), Seq("list_id"))
-      .withColumn("cosine", cosine(col(corpusVec), col(queryVec)))
-      .select(col(queryId), col(corpusId), col("cosine"))
-    TopK.topKPerGroup(scored, queryId, corpusId, "cosine", k)
-  }
-
-  /**
    * Fit and persist an IVF index (≙ GraphSerializer.Save, GraphSerializer
    * .cs:29-61 — but as a queryable columnar layout instead of a node file):
    *
@@ -249,24 +223,34 @@ object SimilarityIndex {
                corpusId: String = "vec_id", corpusVec: String = "embedding",
                fitSampleFraction: Double = 0.5): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val centers = fitCentroids(corpus, corpusVec, nlist, fitSampleFraction)
-    centers.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("list_id", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    // two-level layout: list_id stays the TOP partition (probe pruning),
-    // the ingest level below it is what makes appends replay-idempotent
-    // (a streaming batch overwrites exactly its own ingest dirs) and
-    // gives the IVF family the same snapshot/maintenance story as the
-    // installment indexes
-    corpus.withColumn("list_id", assignUdf(centers)(col(corpusVec)))
-      .withColumn("ingest", lit(0))
-      .write.mode("overwrite").partitionBy("list_id", "ingest")
-      .parquet(s"$path/assignments")
+    writeCentroids(spark, path, centers)
+    writeLists(corpus.withColumn("list_id", assignUdf(centers)(col(corpusVec))),
+      s"$path/assignments", 0, build = true)
     // a rebuild starts a new index generation — drop the previous
     // generation's tombstones or they silently filter the new rows
     graft.store.Tombstones.clear(spark, path)
+  }
+
+  /** Write the routing table: (list_id, centroid array<double>), one file. */
+  private[index] def writeCentroids(spark: SparkSession, path: String,
+                                    centers: Array[Array[Double]]): Unit = {
+    import spark.implicits._
+    centers.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("list_id", "centroid")
+      .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  /** Write `df` (with its `list_id`) as ingest `ingest` of the IVF
+    * families' two-level layout at `dir`: list_id stays the TOP partition
+    * (probe pruning), and the ingest level below it is what makes appends
+    * replay-idempotent and foldable. A build replaces the whole dir; an
+    * append replaces only its own `list_id=X/ingest=N` dirs (dynamic
+    * overwrite), so a retry can never duplicate rows. */
+  private[index] def writeLists(df: DataFrame, dir: String, ingest: Int,
+                                build: Boolean): Unit = {
+    val w = df.withColumn("ingest", lit(ingest)).write.mode("overwrite")
+    (if (build) w else w.option("partitionOverwriteMode", "dynamic"))
+      .partitionBy("list_id", "ingest").parquet(dir)
   }
 
   /** Fold one `list_id=X/ingest=N`-partitioned dir (the layout above) to
@@ -328,12 +312,8 @@ object SimilarityIndex {
   def ivfAppendAt(spark: SparkSession, path: String, newVecs: DataFrame,
                   ingest: Int, corpusVec: String = "embedding"): Unit = {
     val centers = readCentroids(spark, path)
-    newVecs.withColumn("list_id", assignUdf(centers)(col(corpusVec)))
-      .withColumn("ingest", lit(ingest))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("list_id", "ingest")
-      .parquet(s"$path/assignments")
+    writeLists(newVecs.withColumn("list_id", assignUdf(centers)(col(corpusVec))),
+      s"$path/assignments", ingest, build = false)
   }
 
   /** Assignment-quality drift stats for the float IVF index (r17) —
@@ -451,16 +431,18 @@ object SimilarityIndex {
    * read only the nodes on the search path.
    *
    * Query sets are small (an interactive probe set), so the search is one
-   * scan plus a driver merge, never a top-k exchange:
+   * scan plus a driver merge, never a top-k exchange — the routed kernel
+   * ([[routedTopK]]) the IVF-SQ8 and IVF-PQ searches share, here scoring
+   * float vectors by exact cosine ([[CosineSimilarity.cosine]]):
    *
-   *   1. route on the driver: the queries (`queryId`, `queryVec`) and,
-   *      when a delete has landed, the tombstone ids are collected; each
-   *      query's `nprobe` lists come from [[probeLists]];
+   *   1. route on the driver ([[route]]): the queries (`queryId`,
+   *      `queryVec`) and, when a delete has landed, the tombstone ids are
+   *      collected; each query's `nprobe` lists come from [[probeLists]];
    *   2. score map-side: one pass over the pruned assignments, each row
-   *      scored ([[CosineSimilarity.cosine]]) against only the queries
-   *      probing its list, tombstoned rows skipped; every task keeps a
-   *      bounded top-k buffer per query ([[TopK.insert]]), so at most
-   *      tasks · |queries| · k partial rows reach the driver;
+   *      scored against only the queries probing its list, tombstoned rows
+   *      skipped; every task keeps a bounded top-k buffer per query
+   *      ([[TopK.insert]]), so at most tasks · |queries| · k partial rows
+   *      reach the driver;
    *   3. merge on the driver ([[TopK.merge]]).
    *
    * EAGER: the work runs inside this call, and the result is a local frame
@@ -477,36 +459,82 @@ object SimilarityIndex {
                        k: Int, nprobe: Int = 8,
                        corpusId: String = "vec_id", corpusVec: String = "embedding",
                        queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    require(k > 0, "k must be positive")
+    val routing = route(spark, path, queries, nprobe, queryId, queryVec)
+    localTopK(spark, routing, corpusId, "cosine",
+      routedTopK(spark, path, "assignments", corpusVec, corpusId, routing, k,
+        cosineScorer("ivfSearchIndexed", corpusVec, queryVec, routing, null)))
+  }
+
+  // ------------------------------------------------- routed search kernel
+
+  /** One IVF search's driver-side routing ([[route]]): the stored
+    * centroids, the collected (queryId, queryVec) rows, each query's
+    * vector at float precision (null for a null vector), the distinct
+    * query ids with each query's index into them (queries sharing an id
+    * share one top-k — the `topKPerGroup` group semantics), the queries
+    * probing each list, and the sorted tombstone ids. */
+  private[index] final case class Routing(centers: Array[Array[Double]],
+                                          queries: Array[Row], floats: Array[Seq[Float]],
+                                          keys: Array[Any], group: Array[Int],
+                                          probing: Array[Array[Int]], dead: Array[Long],
+                                          idField: StructField, vecType: DataType)
+
+  /** Route a query set through the stored centroids of the IVF index at
+    * `path`: one centroid read, one query collect, one tombstone collect. */
+  private[index] def route(spark: SparkSession, path: String, queries: DataFrame,
+                           nprobe: Int, queryId: String, queryVec: String): Routing = {
     val centers = readCentroids(spark, path)
     val qs = queries.select(col(queryId), col(queryVec)).collect()
-    val dead = graft.store.Tombstones.collectLongIds(spark, path) // sorted
-    val scan = spark.read.parquet(s"$path/assignments")
-    val isFloat = (scan.schema(corpusVec).dataType, queries.schema(queryVec).dataType) match {
-      case (ArrayType(a @ (FloatType | DoubleType), _), ArrayType(b, _)) if a == b => a == FloatType
-      case (a, b) => throw new IllegalArgumentException(s"ivfSearchIndexed: $corpusVec " +
-        s"(${a.sql}) and $queryVec (${b.sql}) must both be array<float> or array<double>")
-    }
-    // queries sharing an id share one top-k (topKPerGroup's group semantics)
+    val vecType = queries.schema(queryVec).dataType
+    val isDouble = vecType match { case ArrayType(DoubleType, _) => true; case _ => false }
+    val floats = qs.map(r => if (r.isNullAt(1)) null
+      else if (isDouble) r.getSeq[Double](1).map(_.toFloat) else r.getSeq[Float](1))
     val keys = qs.map(_.get(0)).distinct
-    val group = qs.map(r => keys.indexOf(r.get(0)))
-    val qVecs: Array[ArrayData] = qs.map { r =>
-      if (r.isNullAt(1)) null
-      else if (isFloat) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)
-      else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray)
-    }
-    // list id → the queries probing it
     val byList = Array.fill(centers.length)(Array.newBuilder[Int])
-    qs.indices.foreach { q =>
-      val v = if (qs(q).isNullAt(1)) null
-        else if (isFloat) qs(q).getSeq[Float](1)
-        else qs(q).getSeq[Double](1).map(_.toFloat)
-      probeLists(centers, v, nprobe).foreach(byList(_) += q)
-    }
-    val probing = byList.map(_.result())
+    qs.indices.foreach(q => probeLists(centers, floats(q), nprobe).foreach(byList(_) += q))
+    Routing(centers, qs, floats, keys, qs.map(r => keys.indexOf(r.get(0))), byList.map(_.result()),
+      graft.store.Tombstones.collectLongIds(spark, path), queries.schema(queryId), vecType)
+  }
+
+  /** A codec's half of [[routedTopK]]: query state `Q` is prepared once per
+    * query on the driver, row state `R` once per scanned row, and a row is
+    * scored against each query probing its list. A null state, or a false
+    * [[admits]], declines without scoring — never a NaN score, which
+    * `TopK` ranks like any other. */
+  private[index] trait RoutedScorer[Q, R] extends Serializable {
+    /** The state of a collected (queryId, queryVec) row, given its vector
+      * at float precision (null for a null vector); null: the query
+      * scores nothing. */
+    def query(r: Row, v: Seq[Float]): Q
+    /** The state of a scanned row's non-null payload (ordinal 1 of `r`);
+      * null: the row scores nothing. */
+    def row(r: InternalRow): R
+    /** False: the row `id` does not compete for this query. */
+    def admits(id: Long, q: Q): Boolean = true
+    def score(row: R, q: Q, list: Int): Double
+  }
+
+  /**
+   * The routed-search kernel of the IVF families: one `list_id`-pruned
+   * scan of `<path>/<table>` reading (corpusId, `payload`, list_id), run
+   * as one SQL execution. Rows with a null id or payload, and tombstoned
+   * rows, are skipped; every other row is scored against the queries
+   * probing its list, into one [[TopK.insert]] buffer per query id per
+   * task, and the task buffers merge on the driver ([[TopK.merge]]).
+   * Returns one buffer per `routing.keys` entry. `scorer` receives the
+   * payload column's type.
+   */
+  private[index] def routedTopK[Q >: Null : ClassTag, R >: Null](
+      spark: SparkSession, path: String, table: String, payload: String, corpusId: String,
+      routing: Routing, k: Int, scorer: DataType => RoutedScorer[Q, R]): Array[TopK.Buf] = {
+    require(k > 0, "k must be positive")
+    val scan = spark.read.parquet(s"$path/$table")
+    val s = scorer(scan.schema(payload).dataType)
+    val states = routing.queries.indices.map(q => s.query(routing.queries(q), routing.floats(q))).toArray
+    val Routing(_, _, _, keys, group, probing, dead, _, _) = routing
     val pruned = scan
       .filter(col("list_id").isin(probing.indices.filter(probing(_).nonEmpty): _*))
-      .select(col(corpusId).cast("long"), col(corpusVec), col("list_id").cast("int"))
+      .select(col(corpusId).cast("long"), col(payload), col("list_id").cast("int"))
     val nGroups = keys.length
     val qe = pruned.queryExecution
     val partials = SQLExecution.withNewExecutionId(qe, Some("collect")) {
@@ -515,15 +543,21 @@ object SimilarityIndex {
         rows.foreach { r =>
           if (!r.isNullAt(0) && !r.isNullAt(1) &&
               java.util.Arrays.binarySearch(dead, r.getLong(0)) < 0) {
-            val id = r.getLong(0)
-            val v = r.getArray(1)
-            val qsOfList = probing(r.getInt(2))
-            var i = 0
-            while (i < qsOfList.length) {
-              val q = qsOfList(i)
-              val g = group(q)
-              bufs(g) = TopK.insert(bufs(g), CosineSimilarity.cosine(v, qVecs(q), isFloat), id, k)
-              i += 1
+            val row = s.row(r)
+            if (row != null) {
+              val id = r.getLong(0)
+              val list = r.getInt(2)
+              val qsOfList = probing(list)
+              var i = 0
+              while (i < qsOfList.length) {
+                val q = qsOfList(i)
+                val st = states(q)
+                if (st != null && s.admits(id, st)) {
+                  val g = group(q)
+                  bufs(g) = TopK.insert(bufs(g), s.score(row, st, list), id, k)
+                }
+                i += 1
+              }
             }
           }
         }
@@ -532,14 +566,65 @@ object SimilarityIndex {
     }
     val merged = Array.fill(nGroups)(TopK.emptyBuf)
     partials.foreach(p => p.indices.foreach(g => merged(g) = TopK.merge(merged(g), p(g), k)))
-    val out = new java.util.ArrayList[Row]()
-    merged.indices.foreach { g =>
-      val b = merged(g)
-      b.ids.indices.foreach(i => out.add(Row(keys(g), b.ids(i), b.scores(i), i + 1)))
-    }
-    spark.createDataFrame(out, StructType(Seq(queries.schema(queryId),
-      StructField(corpusId, LongType), StructField("cosine", DoubleType),
+    merged
+  }
+
+  /** [[routedTopK]]'s buffers as a local frame: (queryId as given,
+    * corpusId long, `score` double, rank int), best first per query id. */
+  private[index] def localTopK(spark: SparkSession, routing: Routing, corpusId: String,
+                               score: String, bufs: Array[TopK.Buf]): DataFrame = {
+    val rows = bufs.indices.flatMap(g =>
+      bufs(g).ids.indices.map(i => Row(routing.keys(g), bufs(g).ids(i), bufs(g).scores(i), i + 1)))
+    spark.createDataFrame(rows.asJava, StructType(Seq(routing.idField,
+      StructField(corpusId, LongType), StructField(score, DoubleType),
       StructField("rank", IntegerType, nullable = false))))
+  }
+
+  /** Exact cosine of stored against query vectors, both array<float> or
+    * both array<double>; with `pools`, a query competes only the ids of its
+    * query id's pool. */
+  private def cosineScorer(caller: String, corpusVec: String, queryVec: String,
+                           routing: Routing, pools: Map[Any, Array[Long]])(
+      stored: DataType): RoutedScorer[(ArrayData, Array[Long]), ArrayData] = {
+    val isFloat = (stored, routing.vecType) match {
+      case (ArrayType(a @ (FloatType | DoubleType), _), ArrayType(b, _)) if a == b => a == FloatType
+      case (a, b) => throw new IllegalArgumentException(s"$caller: $corpusVec " +
+        s"(${a.sql}) and $queryVec (${b.sql}) must both be array<float> or array<double>")
+    }
+    new RoutedScorer[(ArrayData, Array[Long]), ArrayData] {
+      def query(r: Row, v: Seq[Float]): (ArrayData, Array[Long]) =
+        if (r.isNullAt(1)) null
+        else (if (isFloat) UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)
+          else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray),
+          if (pools == null) null else pools(r.get(0)))
+      def row(r: InternalRow): ArrayData = r.getArray(1)
+      override def admits(id: Long, q: (ArrayData, Array[Long])): Boolean =
+        q._2 == null || java.util.Arrays.binarySearch(q._2, id) >= 0
+      def score(row: ArrayData, q: (ArrayData, Array[Long]), list: Int): Double =
+        CosineSimilarity.cosine(row, q._1, isFloat)
+    }
+  }
+
+  /**
+   * The exact re-rank of a routed quantized search
+   * ([[Quantize.ivfSq8SearchRefined]], [[Pq.ivfPqSearchRefined]]): the
+   * kernel over the `raw/` refine sidecar, each query scoring by exact
+   * cosine only the ids of its query id's candidate `pools` (the first
+   * pass's buffers). The first pass's routing is reused, widened so a
+   * query probes every list a query sharing its id probed — the lists its
+   * pool came from. Returns the local (queryId, corpusId, cosine, rank)
+   * frame.
+   */
+  private[index] def refineOnRaw(spark: SparkSession, path: String, routing: Routing,
+                                 pools: Array[TopK.Buf], k: Int, corpusId: String,
+                                 corpusVec: String, queryVec: String): DataFrame = {
+    val members = routing.group.indices.groupBy(routing.group(_))
+    val widened = routing.copy(probing = routing.probing.map(qs =>
+      qs.flatMap(q => members(routing.group(q))).distinct))
+    val byKey = routing.keys.indices.map(g => routing.keys(g) -> pools(g).ids.sorted).toMap
+    localTopK(spark, routing, corpusId, "cosine",
+      routedTopK(spark, path, "raw", corpusVec, corpusId, widened, k,
+        cosineScorer("refined search", corpusVec, queryVec, routing, byKey)))
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.SparkTestBase
+import graft.{Ran, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Product-quantization index family: encode determinism, refined-search
@@ -266,10 +266,9 @@ class PqSpec extends SparkTestBase {
     assert(full === exact)
     // routed: the ADC scan's physical plan prunes to the probed list
     // partitions — the at-scale point of the composition
-    val routed = Pq.ivfPqSearch(spark, path, q, k = 5, nprobe = 2)
-    val plan = routed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning:\n$plan")
+    val (_, routed) = Ran(spark)(Pq.ivfPqSearch(spark, path, q, k = 5, nprobe = 2))
+    assert(routed.prunesLists("codes"), s"expected list_id partition pruning in ${routed.scans}")
+    assert(!routed.windows, s"ADC ranking must not use a window: ${routed.plans}")
     // routed refined self-recall: a corpus member probes its own list,
     // and a probed-lists-covering pool makes the exact re-rank rank
     // self first deterministically
@@ -411,5 +410,140 @@ class PqSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Pq.pqBuild(embs.limit(50), tmpIdx("badksub"), m = 8, ksub = 300)
     }
+  }
+
+  /** A churned IVF-PQ index with the raw sidecar: a build, an appended
+    * ingest and two tombstone installments; and 16 local queries. */
+  private lazy val churned = {
+    val rnd = new scala.util.Random(11)
+    def vecs(ids: Range) =
+      ids.map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+    val path = tmpIdx("ivfpq_jobs")
+    Pq.ivfPqBuild(vecs(0 until 2000), path, nlist = 8, m = 4, ksub = 16, storeRaw = true)
+    Pq.ivfPqAppend(spark, path, vecs(2000 until 2200))
+    Pq.ivfPqDelete(spark, path, Seq(1L, 2L, 3L).toDF("vec_id"))
+    Pq.ivfPqDelete(spark, path, Seq(2100L).toDF("vec_id"))
+    val queries = (0 until 16).map(i => (-1L - i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("query_id", "query_vec")
+    (path, queries)
+  }
+
+  private def plainPqRun() = {
+    val (path, queries) = churned
+    Ran(spark)(Pq.ivfPqSearch(spark, path, queries, k = 10, nprobe = 4).collect())
+  }
+
+  test("one IVF-PQ search runs at most 8 jobs and no shuffle stage") {
+    val (hits, search) = plainPqRun()
+    assert(hits.length === 160)
+    // meta, codebooks, centroids and tombstone reads, codes schema, the scan
+    assert(search.jobs <= 8, s"one search ran ${search.jobs} jobs")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+    assert(search.prunesLists("codes"))
+  }
+
+  test("one refined IVF-PQ search runs at most 2 jobs more than the plain one, no shuffle stage") {
+    val (path, queries) = churned
+    val (hits, search) = Ran(spark)(Pq.ivfPqSearchRefined(spark, path, queries,
+      k = 10, candidateK = 40, nprobe = 4).collect())
+    assert(hits.length === 160)
+    // the plain search's jobs, then the raw/ schema and the raw/ scan
+    val plain = plainPqRun()._2.jobs
+    assert(search.jobs <= plain + 2 && search.jobs <= 10,
+      s"one refined search ran ${search.jobs} jobs (plain: $plain)")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+    assert(search.prunesLists("codes") && search.prunesLists("raw"))
+  }
+
+  /** The ADC top-k over the live stored codes, computed here from the
+    * stored meta, codebooks, centroids and codes: q·u ≈ Σ_j table(j, code_j)
+    * (+ q·w_list, w the list's unit centroid, in residual mode). */
+  private def adcReference(path: String, residual: Boolean, live: Long => Boolean,
+                           qs: Seq[(Long, Array[Float])], k: Int): Seq[(Long, Long, Double, Int)] = {
+    val meta = spark.read.parquet(s"$path/meta").head()
+    val (m, ksub, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"), meta.getAs[Int]("dim"))
+    val books = spark.read.parquet(s"$path/codebooks").as[(Int, Int, Array[Double])].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    val units = spark.read.parquet(s"$path/centroids").as[(Int, Array[Double])].collect()
+      .map { case (l, c) =>
+        val ss = c.map(x => x * x).sum
+        l -> (if (ss == 0.0) c.map(_ => 0.0) else { val inv = 1.0 / math.sqrt(ss); c.map(_ * inv) })
+      }.toMap
+    val stored = spark.read.parquet(s"$path/codes").select("vec_id", "list_id", "codes")
+      .as[(Long, Int, Array[Byte])].collect().filter(r => live(r._1))
+    val dsub = dim / m
+    def dotFrom(u: Array[Double], from: Int, c: Array[Double]): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < c.length) { s += u(from + i) * c(i); i += 1 }
+      s
+    }
+    qs.flatMap { case (qid, v) =>
+      val ss = v.map(x => x.toDouble * x).sum
+      if (ss == 0.0) Nil
+      else {
+        val inv = 1.0 / math.sqrt(ss)
+        val u = v.map(_.toDouble * inv)
+        stored.map { case (id, list, codes) =>
+          var adc = 0.0
+          (0 until m).foreach { j =>
+            adc += books.get((j, codes(j) & 0xFF)).map(dotFrom(u, j * dsub, _)).getOrElse(0.0)
+          }
+          (id, adc + (if (residual) dotFrom(u, 0, units(list)) else 0.0))
+        }.sortBy { case (id, score) => (-score, id) }.take(k).zipWithIndex
+          .map { case ((id, score), r) => (qid, id, score, r + 1) }.toSeq
+      }
+    }
+  }
+
+  test("ivfPqSearch at nprobe = nlist equals the ADC top-k over the live rows, flat and residual") {
+    val rnd = new scala.util.Random(5)
+    def vec(): Array[Float] = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val base = (0 until 300).map(i => (i.toLong, vec()))
+    // ids 300-309 repeat the vectors of ids 0-9: equal codes, exact ties
+    // the lower id must win
+    val dups = (0 until 10).map(i => (300L + i, base(i)._2))
+    val appended = (310 until 360).map(i => (i.toLong, vec()))
+    val deleted = ((0L until 360L by 9L) :+ 303L).toSet
+    // a row re-appended under a deleted id stays hidden
+    val reappended = deleted.toSeq.sorted.take(4).map(i => (i, vec()))
+    val qs = (Seq(base(1)._2, base(9)._2) ++ Seq.fill(3)(vec()) :+ Array.fill(8)(0f))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    Seq(false, true).foreach { residual =>
+      val path = tmpIdx(s"ivfpq_eq_$residual")
+      Pq.ivfPqBuild((base ++ dups).toDF("vec_id", "embedding"), path, nlist = 4, m = 4,
+        ksub = 16, residual = residual)
+      Pq.ivfPqAppend(spark, path, appended.toDF("vec_id", "embedding"))
+      val (delA, delB) = deleted.toSeq.sorted.splitAt(deleted.size / 2)
+      Pq.ivfPqDelete(spark, path, delA.toDF("vec_id"))
+      Pq.ivfPqDelete(spark, path, delB.toDF("vec_id"))
+      Pq.ivfPqAppend(spark, path, reappended.toDF("vec_id", "embedding"))
+      val got = Pq.ivfPqSearch(spark, path, qs.toDF("query_id", "query_vec"), k = 7,
+        nprobe = 4).as[(Long, Long, Double, Int)].collect()
+      val expected = adcReference(path, residual, id => !deleted.contains(id), qs, k = 7)
+      assert(got.toSet === expected.toSet, s"residual = $residual")
+      assert(got.length === 5 * 7, s"residual = $residual")
+      assert(got.filter(_._1 == 0L).sortBy(_._4).map(_._2).toSeq.containsSlice(Seq(1L, 301L)),
+        s"the tie goes to the lower id (residual = $residual)")
+    }
+  }
+
+  test("ivfPqDeleteAt: a replayed installment replaces its id set, a later one adds to it") {
+    val path = tmpIdx("ivfpq_delat")
+    val corpus = embs.filter($"vec_id" < 40)
+    Pq.ivfPqBuild(corpus, path, nlist = 2, m = 8, ksub = 8)
+    val all = corpus.select("vec_id").as[Long].collect().toSet
+    def hits(): Set[Long] = Pq.ivfPqSearch(spark, path, queries(1), k = 40, nprobe = 2)
+      .select("vec_id").as[Long].collect().toSet
+    assert(hits() === all)
+    Pq.ivfPqDeleteAt(spark, path, Seq(1L, 2L).toDF("vec_id"), installment = 0)
+    assert(hits() === all -- Set(1L, 2L))
+    // a replay of installment 0 with a different id set replaces the first
+    Pq.ivfPqDeleteAt(spark, path, Seq(3L).toDF("vec_id"), installment = 0)
+    assert(hits() === all - 3L)
+    // a later installment adds to the set
+    Pq.ivfPqDeleteAt(spark, path, Seq(4L, 5L).toDF("vec_id"), installment = 1)
+    assert(hits() === all -- Set(3L, 4L, 5L))
   }
 }

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.SparkTestBase
+import graft.{Ran, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 class QuantizeSpec extends SparkTestBase {
@@ -96,16 +96,14 @@ class QuantizeSpec extends SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("ivfsq8")
       .resolve("idx").toString
     Quantize.ivfSq8Build(embs, path, nlist = 8, fitSampleFraction = 1.0)
-    val hits = Quantize.ivfSq8Search(spark, path, q, k = 5, nprobe = 4)
+    val (hits, search) = Ran(spark)(Quantize.ivfSq8Search(spark, path, q, k = 5, nprobe = 4))
     val top1 = hits.filter($"rank" === 1)
       .as[(Long, Long, Double, Int)].collect()
     assert(top1.length === 8)
     assert(top1.forall(r => r._1 === r._2), s"self not top-1: ${top1.toSeq}")
 
-    // probe plan prunes to the probed list partitions
-    val plan = hits.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning:\n$plan")
+    // the code scan the search ran prunes to the probed list partitions
+    assert(search.prunesLists("codes"), s"expected list_id partition pruning in ${search.scans}")
 
     // append against frozen centroids+scale == one-shot build
     val appPath = java.nio.file.Files.createTempDirectory("ivfsq8-app")
@@ -253,12 +251,11 @@ class QuantizeSpec extends SparkTestBase {
     assert(compacted === appended, "compaction must not change refined results")
 
     // a narrow probe still prunes both scans to probed list partitions
-    val narrow = Quantize.ivfSq8SearchRefined(spark, path, q, k = 3,
-      candidateK = 8, nprobe = 2)
-    val plan = narrow.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning in the refined plan:\n$plan")
-    assert(!plan.contains("Window"), s"refined ranking must not use a window:\n$plan")
+    val (narrow, search) = Ran(spark)(Quantize.ivfSq8SearchRefined(spark, path, q, k = 3,
+      candidateK = 8, nprobe = 2))
+    assert(search.prunesLists("codes") && search.prunesLists("raw"),
+      s"expected list_id partition pruning on codes/ and raw/ in ${search.scans}")
+    assert(!search.windows, s"refined ranking must not use a window: ${search.plans}")
     val top1 = narrow.filter($"rank" === 1).as[(Long, Long, Double, Int)].collect()
     assert(top1.length === 4 && top1.forall(r => r._1 === r._2),
       s"self not top-1 under narrow probes: ${top1.toSeq}")
@@ -646,5 +643,102 @@ class QuantizeSpec extends SparkTestBase {
       s"batch side must broadcast into the scoring join:\n$plan")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       s"the stored code scan must stream map-side, never shuffle:\n$plan")
+  }
+
+  /** A churned IVF-SQ8 index with the raw sidecar: a build, an appended
+    * ingest and two tombstone installments; and 16 local queries. */
+  private lazy val churned = {
+    val rnd = new scala.util.Random(11)
+    def vecs(ids: Range) =
+      ids.map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+    val path = java.nio.file.Files.createTempDirectory("ivfsq8-jobs")
+      .resolve("idx").toString
+    Quantize.ivfSq8Build(vecs(0 until 2000), path, nlist = 8, storeRaw = true)
+    Quantize.ivfSq8Append(spark, path, vecs(2000 until 2200))
+    Quantize.ivfSq8Delete(spark, path, Seq(1L, 2L, 3L).toDF("vec_id"))
+    Quantize.ivfSq8Delete(spark, path, Seq(2100L).toDF("vec_id"))
+    val queries = (0 until 16).map(i => (-1L - i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("query_id", "query_vec")
+    (path, queries)
+  }
+
+  private def plainSq8Run() = {
+    val (path, queries) = churned
+    Ran(spark)(Quantize.ivfSq8Search(spark, path, queries, k = 10, nprobe = 4).collect())
+  }
+
+  test("one IVF-SQ8 search runs at most 6 jobs and no shuffle stage") {
+    val (hits, search) = plainSq8Run()
+    assert(hits.length === 160)
+    // centroid collect, scale read, tombstone collect, codes schema, the scan
+    assert(search.jobs <= 6, s"one search ran ${search.jobs} jobs")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+    assert(search.prunesLists("codes"))
+  }
+
+  test("one refined IVF-SQ8 search runs at most 2 jobs more than the plain one, no shuffle stage") {
+    val (path, queries) = churned
+    val (hits, search) = Ran(spark)(Quantize.ivfSq8SearchRefined(spark, path, queries,
+      k = 10, candidateK = 40, nprobe = 4).collect())
+    assert(hits.length === 160)
+    // the plain search's jobs, then the raw/ schema and the raw/ scan
+    val plain = plainSq8Run()._2.jobs
+    assert(search.jobs <= plain + 2 && search.jobs <= 8,
+      s"one refined search ran ${search.jobs} jobs (plain: $plain)")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+    assert(search.prunesLists("codes") && search.prunesLists("raw"))
+  }
+
+  test("ivfSq8Search at nprobe = nlist equals the integer-code top-k over the live rows") {
+    val rnd = new scala.util.Random(5)
+    def vec(): Array[Float] = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val base = (0 until 200).map(i => (i.toLong, vec()))
+    // ids 200-209 repeat the vectors of ids 0-9: equal codes, exact ties
+    // the lower id must win
+    val dups = (0 until 10).map(i => (200L + i, base(i)._2))
+    val appended = (210 until 260).map(i => (i.toLong, vec()))
+    val deleted = (0L until 260L by 9L) :+ 203L
+    // tombstones apply to every read: a row re-appended under a deleted id
+    // stays hidden
+    val reappended = deleted.take(4).map(i => (i, vec()))
+    val path = java.nio.file.Files.createTempDirectory("ivfsq8-eq")
+      .resolve("idx").toString
+    Quantize.ivfSq8Build((base ++ dups).toDF("vec_id", "embedding"), path, nlist = 4)
+    Quantize.ivfSq8Append(spark, path, appended.toDF("vec_id", "embedding"))
+    val (delA, delB) = deleted.splitAt(deleted.length / 2)
+    Quantize.ivfSq8Delete(spark, path, delA.toDF("vec_id"))
+    Quantize.ivfSq8Delete(spark, path, delB.toDF("vec_id"))
+    Quantize.ivfSq8Append(spark, path, reappended.toDF("vec_id", "embedding"))
+    val live = (base ++ dups ++ appended).filterNot(r => deleted.contains(r._1))
+    // a duplicated vector, a deleted one with a live twin, fresh points and
+    // an all-zero query (zero-norm codes: no rows)
+    val qs = (Seq(base(1)._2, base(9)._2) ++ Seq.fill(3)(vec()) :+ Array.fill(8)(0f))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
+    def codes(v: Array[Float]): Array[Long] = v.map(x => math.floor(x.toDouble / scale + 0.5).toLong)
+    def normSq(c: Array[Long]): Long = c.map(x => x * x).sum
+    val k = 7
+    val expected = qs.flatMap { case (qid, qv) =>
+      val qc = codes(qv)
+      val qn = normSq(qc)
+      if (qn == 0) Nil
+      else live.flatMap { case (id, v) =>
+        val c = codes(v)
+        val cn = normSq(c)
+        if (cn == 0) None
+        else Some((id, c.zip(qc).map { case (a, b) => a * b }.sum.toDouble /
+          (math.sqrt(cn.toDouble) * math.sqrt(qn.toDouble))))
+      }.sortBy { case (id, score) => (-score, id) }.take(k).zipWithIndex
+        .map { case ((id, score), r) => (qid, id, score, r + 1) }
+    }
+    val got = Quantize.ivfSq8Search(spark, path, qs.toDF("query_id", "query_vec"), k = k,
+      nprobe = 4).as[(Long, Long, Double, Int)].collect()
+    assert(got.toSet === expected.toSet)
+    assert(got.length === expected.length)
+    assert(got.exists(r => r._1 == 0L && r._2 == 1L && r._4 == 1) &&
+      got.exists(r => r._1 == 0L && r._2 == 201L && r._4 == 2), "the tie goes to the lower id")
+    assert(got.exists(r => r._1 == 1L && r._2 == 209L && r._4 == 1),
+      "the live twin of a deleted vector ranks first")
   }
 }

@@ -1,72 +1,13 @@
 package graft.index
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
-
-import graft.SparkTestBase
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import graft.{Ran, SparkTestBase}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Mirrors reference GraphTests.cs: build-corpus queries return themselves
   * at ≈ identical score; closest-match picks the nearest sentence. */
 class SimilarityIndexSpec extends SparkTestBase {
   import spark.implicits._
-
-  /** What a block ran: the file scans of every SQL execution it finished
-    * (as query listeners see them), its Spark jobs and its shuffle-map
-    * stages. */
-  private final case class Ran(scans: Seq[FileSourceScanExec], jobs: Int,
-                               shuffleStages: Int) {
-    def scansOf(dir: String): Seq[FileSourceScanExec] =
-      scans.filter(_.relation.location.rootPaths.exists(_.toString.endsWith(dir)))
-    /** Every `assignments/` scan carries a `list_id` partition filter. */
-    def prunesLists: Boolean = scansOf("assignments").nonEmpty &&
-      scansOf("assignments").forall(_.partitionFilters.exists(
-        _.references.exists(_.name == "list_id")))
-  }
-
-  private def ran[T](body: => T): (T, Ran) = {
-    val sc = spark.sparkContext
-    val group = s"ran-${System.nanoTime()}"
-    def ours(p: java.util.Properties) =
-      p != null && p.getProperty("spark.jobGroup.id") == group
-    val scans = new ConcurrentLinkedQueue[FileSourceScanExec]
-    val jobs = new AtomicInteger
-    val shuffleStages = new AtomicInteger
-    val queries = new QueryExecutionListener with AdaptiveSparkPlanHelper {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
-          .foreach(scans.add)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val stages = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties) && ListenerBus.isShuffleMapStage(e.stageInfo))
-          shuffleStages.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    spark.listenerManager.register(queries)
-    sc.addSparkListener(stages)
-    sc.setJobGroup(group, group)
-    try {
-      val out = body
-      ListenerBus.drain(sc)
-      (out, Ran(scans.asScala.toSeq, jobs.get, shuffleStages.get))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(stages)
-      spark.listenerManager.unregister(queries)
-    }
-  }
 
   // ≙ FIXTURES A5: ';'-joined sentence pairs over a 4-word vocab
   private val sentences = Seq(
@@ -233,8 +174,9 @@ class SimilarityIndexSpec extends SparkTestBase {
     val queries = Seq((1L, c1), (2L, c2)).toDF("query_id", "query_vec")
     val exact = SimilarityIndex.bruteForceTopK(corpusDf, queries, k = 2)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val ivf = SimilarityIndex.ivfTopK(corpusDf, queries, k = 2,
-      nlist = 2, nprobe = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cover").toString
+    SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2)
+    val ivf = SimilarityIndex.ivfSearchIndexed(spark, dir, queries, k = 2, nprobe = 2)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(ivf === exact, s"IVF $ivf must match exact $exact here")
   }
@@ -349,9 +291,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     val plans = Seq(
       "brute" -> SimilarityIndex.bruteForceTopK(corpus, queries, k = 3),
       "lsh" -> SimilarityIndex.lshTopK(corpus, queries, k = 3, dims = 4,
-        planes = 8, bands = 4),
-      "ivf" -> SimilarityIndex.ivfTopK(corpus, queries, k = 3, nlist = 2,
-        nprobe = 2))
+        planes = 8, bands = 4))
     plans.foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Window"),
@@ -389,14 +329,14 @@ class SimilarityIndexSpec extends SparkTestBase {
     SimilarityIndex.ivfBuild(corpus.toDF("vec_id", "embedding"), dir,
       nlist = 2, fitSampleFraction = 1.0)
     val queries = Seq((1L, c1)).toDF("query_id", "query_vec")
-    val (ids, search) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
+    val (ids, search) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
       k = 20, nprobe = 1).select("vec_id").as[Long].collect().toSet)
     // only the c1 cluster's list is probed — no c2 ids can appear
     assert(ids.nonEmpty && ids.subsetOf((1L to 10L).toSet),
       s"got $ids — expected only ids 1-10")
     // and the pruning is physical: the scan must carry a list_id partition
     // filter (the non-probed list's files are never opened)
-    assert(search.prunesLists, s"expected list_id partition pruning in ${search.scans}")
+    assert(search.prunesLists("assignments"), s"expected list_id partition pruning in ${search.scans}")
   }
 
   test("ivfAppend: search over a two-installment index equals the one-shot build") {
@@ -423,7 +363,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     SimilarityIndex.ivfBuild(corpusDf.filter($"vec_id" % 2 === 1), appDir,
       nlist = 2, fitSampleFraction = 1.0)
     SimilarityIndex.ivfAppend(spark, appDir, corpusDf.filter($"vec_id" % 2 === 0))
-    val (appended, search) = ran(SimilarityIndex.ivfSearchIndexed(spark, appDir,
+    val (appended, search) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, appDir,
       queries, k = 20, nprobe = 1).select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet)
 
@@ -431,7 +371,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     // lists hold the same members and scores are identical floats
     assert(appended === oneShot)
     // appended files land in the pruned partition layout
-    assert(search.prunesLists, s"expected list_id partition pruning in ${search.scans}")
+    assert(search.prunesLists("assignments"), s"expected list_id partition pruning in ${search.scans}")
   }
 
   test("ivfDriftStats: per-(list, ingest) mean cosine; null/mismatch excluded (r17)") {
@@ -531,7 +471,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2, fitSampleFraction = 1.0)
 
     // a delete-free index never reads a tombstone list
-    val (_, clean) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
+    val (_, clean) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
       k = 20, nprobe = 2).collect())
     assert(clean.scansOf("deletes").isEmpty,
       s"delete-free search must not read deletes/: ${clean.scans}")
@@ -539,7 +479,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     val deleted = Set(2L, 3L, 15L)
     SimilarityIndex.ivfDelete(spark, dir,
       deleted.toSeq.toDF("vec_id"))
-    val (afterDelete, withDeletes) = ran(SimilarityIndex.ivfSearchIndexed(spark,
+    val (afterDelete, withDeletes) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark,
       dir, queries, k = 20, nprobe = 2).select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet)
     // the listener sees the tombstone read when there is one
@@ -566,14 +506,14 @@ class SimilarityIndexSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "deletes")),
       "compaction must clear the deletes dir LAST")
-    val (afterCompact, folded) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir,
+    val (afterCompact, folded) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir,
       queries, k = 20, nprobe = 2).select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet)
     assert(afterCompact === fresh)
     assert(folded.scansOf("deletes").isEmpty,
       s"post-compaction search must not read deletes/: ${folded.scans}")
     // the map-side probe shape survives the tombstone era end-to-end
-    assert(folded.prunesLists, s"expected list_id partition pruning in ${folded.scans}")
+    assert(folded.prunesLists("assignments"), s"expected list_id partition pruning in ${folded.scans}")
   }
 
   test("ivfBuild rebuild clears a previous generation's tombstones") {
@@ -599,8 +539,9 @@ class SimilarityIndexSpec extends SparkTestBase {
       (11 to 20).map(i => (i.toLong, mk(c2, i * 0.01f)))
     val corpusDf = corpus.toDF("vec_id", "embedding")
     val queries = Seq((1L, c1)).toDF("query_id", "query_vec")
-    val hits = SimilarityIndex.ivfTopK(corpusDf, queries, k = 20,
-      nlist = 2, nprobe = 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_probe1").toString
+    SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2)
+    val hits = SimilarityIndex.ivfSearchIndexed(spark, dir, queries, k = 20, nprobe = 1)
       .select("vec_id").as[Long].collect().toSet
     // only the c1 cluster's list is probed — no c2 ids can appear
     assert(hits.nonEmpty && hits.subsetOf((1L to 10L).toSet),
@@ -620,13 +561,13 @@ class SimilarityIndexSpec extends SparkTestBase {
     SimilarityIndex.ivfDelete(spark, dir, Seq(2100L).toDF("vec_id"))
     val queries = (0 until 16).map(i =>
       (-1L - i, Array.fill(16)(rnd.nextGaussian().toFloat))).toDF("query_id", "query_vec")
-    val (hits, search) = ran(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
+    val (hits, search) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
       k = 10, nprobe = 4).collect())
     assert(hits.length === 160)
     // centroid collect, tombstone collect, assignments schema, the scan
     assert(search.jobs <= 4, s"one search ran ${search.jobs} jobs")
     assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
-    assert(search.prunesLists)
+    assert(search.prunesLists("assignments"))
   }
 
   test("a null query vector yields no rows instead of failing the search") {
@@ -643,8 +584,6 @@ class SimilarityIndexSpec extends SparkTestBase {
     val exact = rows(SimilarityIndex.bruteForceTopK(corpusDf, queries, k = 3))
     assert(exact.map(_._1) === Set(1L, 3L))
     assert(rows(SimilarityIndex.ivfSearchIndexed(spark, dir, queries, k = 3,
-      nprobe = 2)) === exact)
-    assert(rows(SimilarityIndex.ivfTopK(corpusDf, queries, k = 3, nlist = 2,
       nprobe = 2)) === exact)
   }
 
@@ -694,5 +633,24 @@ class SimilarityIndexSpec extends SparkTestBase {
       .toDF("query_id", "query_vec")
     same(SimilarityIndex.ivfSearchIndexed(spark, ddir, dqueries, k = 5, nprobe = 2),
       SimilarityIndex.bruteForceTopK(dcorpus.toDF("vec_id", "embedding"), dqueries, k = 5))
+  }
+
+  test("ivfDeleteAt: a replayed installment replaces its id set, a later one adds to it") {
+    val corpus = (1 to 12).map(i => (i.toLong, Array(1.0f + i * 0.01f, i * 0.1f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_delat").toString
+    SimilarityIndex.ivfBuild(corpus, dir, nlist = 2)
+    val q = Seq((0L, Array(1.0f, 0.5f, 0.5f))).toDF("query_id", "query_vec")
+    def hits(): Set[Long] = SimilarityIndex.ivfSearchIndexed(spark, dir, q, k = 12, nprobe = 2)
+      .select("vec_id").as[Long].collect().toSet
+    val all = (1L to 12L).toSet
+    SimilarityIndex.ivfDeleteAt(spark, dir, Seq(1L, 2L).toDF("vec_id"), installment = 0)
+    assert(hits() === all -- Set(1L, 2L))
+    // a replay of installment 0 with a different id set replaces the first
+    SimilarityIndex.ivfDeleteAt(spark, dir, Seq(3L).toDF("vec_id"), installment = 0)
+    assert(hits() === all - 3L)
+    // a later installment adds to the set
+    SimilarityIndex.ivfDeleteAt(spark, dir, Seq(4L, 5L).toDF("vec_id"), installment = 1)
+    assert(hits() === all -- Set(3L, 4L, 5L))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.{Ran, SparkTestBase}
 import graft.index.{Quantize, SimilarityIndex}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -224,10 +224,9 @@ class IvfIngestStreamSpec extends SparkTestBase {
       fitSampleFraction = 1.0)
     val queries = embs.filter($"vec_id" < 2)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    val plan = Quantize.ivfSq8Search(spark, idxPath, queries, k = 3,
-        nprobe = 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning through the ingest level:\n$plan")
+    val (_, search) = Ran(spark)(Quantize.ivfSq8Search(spark, idxPath, queries, k = 3,
+        nprobe = 2))
+    assert(search.prunesLists("codes"),
+      s"expected list_id partition pruning through the ingest level: ${search.scans}")
   }
 }
