@@ -560,9 +560,7 @@ object Dedup {
    */
   def minhashIndexAppend(spark: org.apache.spark.sql.SparkSession, path: String,
                          newDf: DataFrame, textCol: String, idCol: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (shingleK, numHashes, bands) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val (shingleK, numHashes, bands) = readMinhashMeta(spark, path)
     val next = nextMinhashInstallment(spark, path)
     writeInstallment(newDf, textCol, idCol, path, next, shingleK, numHashes, bands)
   }
@@ -577,9 +575,15 @@ object Dedup {
   def minhashIndexAppendAt(spark: org.apache.spark.sql.SparkSession,
                            path: String, newDf: DataFrame, installment: Int,
                            textCol: String, idCol: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    writeInstallment(newDf, textCol, idCol, path, installment,
-      meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val (shingleK, numHashes, bands) = readMinhashMeta(spark, path)
+    writeInstallment(newDf, textCol, idCol, path, installment, shingleK, numHashes, bands)
+  }
+
+  /** (shingleK, numHashes, bands): `meta/` read with the schema
+    * [[minhashIndexBuild]] writes — no schema-inference job. */
+  private def readMinhashMeta(spark: org.apache.spark.sql.SparkSession, path: String) = {
+    val r = spark.read.schema("shingle_k INT, num_hashes INT, bands INT").parquet(s"$path/meta").head()
+    (r.getInt(0), r.getInt(1), r.getInt(2))
   }
 
   /** Next installment for the minhash index: one past the max across
@@ -779,9 +783,7 @@ object Dedup {
                         maxBucketSize: Int = 1000,
                         broadcastBatch: Boolean = true,
                         asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (shingleK, numHashes, bands) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val (shingleK, numHashes, bands) = readMinhashMeta(spark, path)
     val rowsPerBand = numHashes / bands
     def batchSide(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df

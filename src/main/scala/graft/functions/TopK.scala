@@ -41,9 +41,9 @@ object TopK {
   }
 
   /** `b` with (score, id) inserted at its rank, cut to the best `k` — the
-    * one bounded top-k insert: the aggregator below and the driver-routed
-    * IVF scan ([[graft.index.SimilarityIndex.ivfSearchIndexed]]) both rank
-    * through it. `b` is never mutated; an insert that cannot make the cut
+    * one bounded top-k insert: the aggregator below and the routed scan
+    * of every persisted vector search
+    * ([[graft.index.SimilarityIndex.routedTopK]]) both rank through it. `b` is never mutated; an insert that cannot make the cut
     * returns `b` itself. */
   def insert(b: Buf, score: Double, id: Long, k: Int): Buf = {
     val n = b.ids.length

@@ -33,9 +33,8 @@ import graft.functions.TopK
  * score-parity-grade (the float-IVF family's granularity, NOT int8's
  * bit-exactness) — the declared queries therefore pin the REFINED form
  * ([[pqSearchRefined]]: ADC candidate pool → exact float re-rank, the
- * FAISS IndexRefineFlat composition == [[Quantize.int8SearchRefined]]'s
- * shape), whose answer equals the exact float top-k once the pool
- * certainly contains it.
+ * FAISS IndexRefineFlat composition == [[SimilarityIndex.refine]]), whose
+ * answer equals the exact float top-k once the pool certainly contains it.
  *
  * Installment-family contracts (all four, the shared design):
  * append-only `codes/installment=N` with STORED meta+codebooks (a batch
@@ -46,11 +45,9 @@ import graft.functions.TopK
  * [[pqCompact]]).
  *
  * Scale shape: probe-path invariant throughout — the code scan streams
- * map-side and never shuffles. The flat [[pqSearch]] broadcasts the
- * queries with their ADC tables (m·ksub doubles each) into the bounded
- * top-k aggregator; the IVF-PQ searches prepare the tables once on the
- * driver and run the routed IVF kernel
- * ([[SimilarityIndex.ivfSearchIndexed]]'s). Codebooks are
+ * map-side and never shuffles. Every search prepares each query's ADC
+ * table (m·ksub doubles) once on the driver and runs the routed kernel
+ * ([[SimilarityIndex.routedTopK]]), a flat index as one list. Codebooks are
  * m·ksub·(dim/m) doubles (m=8, ksub=256, dim=64 → 16k doubles) — a
  * driver-side constant, the readCentroids pattern.
  *
@@ -226,15 +223,8 @@ object Pq {
     out
   }
 
-  /** [[adcTable]] as a column function. */
-  private def tableUdf(books: Array[Array[Array[Double]]], ksub: Int,
-                       dim: Int, rot: Array[Array[Double]]) =
-    udf((v: Seq[Float]) => adcTable(books, ksub, dim, rot, v))
-
-  /** ADC score: m table lookups, fixed summation order (deterministic).
-    * `table` is a lookup function so an array-backed table is read
-    * without boxing, and a column's `Seq[Double]` without a copy. */
-  private def adc(codes: Array[Byte], table: Int => Double, ksub: Int): Double = {
+  /** ADC score: m table lookups, fixed summation order (deterministic). */
+  private def adc(codes: Array[Byte], table: Array[Double], ksub: Int): Double = {
     var s = 0.0
     var j = 0
     while (j < codes.length) {
@@ -243,12 +233,6 @@ object Pq {
     }
     s
   }
-
-  /** [[adc]] as a column function; null in, null out. */
-  private val adcScoreUdf =
-    udf { (codes: Array[Byte], table: Seq[Double], ksub: Int) =>
-      if (codes == null || table == null) None else Some(adc(codes, table, ksub))
-    }
 
   /** The residual base term of a normalized query `u` for one list: q·w,
     * `w` the list's unit-normalized centroid — a residual code scores
@@ -467,33 +451,64 @@ object Pq {
       .write.mode("overwrite").parquet(s"$path/codes/installment=$installment")
   }
 
+  /** One query's ADC state: its table and, in residual mode, its base
+    * term for every list (null otherwise). */
+  private final case class AdcQuery(table: Array[Double], base: Array[Double])
+
+  /** The ADC score for [[SimilarityIndex.routedTopK]] over stored `codes`:
+    * adc + base, the base 0.0 when the index is not residual. Zero-norm
+    * and wrong-dimension queries decline. */
+  private def adcScorer(books: Array[Array[Array[Double]]], ksub: Int, dim: Int,
+                        rot: Array[Array[Double]], anchors: Array[Array[Double]])
+      : SimilarityIndex.RoutedScorer[AdcQuery, Array[Byte]] =
+    new SimilarityIndex.RoutedScorer[AdcQuery, Array[Byte]] {
+      def query(r: Row, v: Seq[Float]): AdcQuery = {
+        val t = adcTable(books, ksub, dim, rot, v)
+        if (t == null) null
+        else if (anchors == null) AdcQuery(t, null)
+        else { val u = normalize(v); AdcQuery(t, anchors.map(residualBase(u, _))) }
+      }
+      def row(r: InternalRow): Array[Byte] = r.getBinary(1)
+      def score(c: Array[Byte], q: AdcQuery, list: Int): Double =
+        adc(c, q.table, ksub) + (if (q.base == null) 0.0 else q.base(list))
+    }
+
+  /** The routed ADC pass of every PQ search, over the `codes` of `scan`
+    * (`centers` anchor residual codes): its routing and its top-`k` buffers. */
+  private def adcPass(spark: SparkSession, path: String, centers: Array[Array[Double]],
+                      scan: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
+                      corpusId: String, queryId: String,
+                      queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) = {
+    val (m, ksub, dim, residual) = readMeta(spark, path)
+    val books = readCodebooks(spark, path, m, ksub)
+    val rot = readRotation(spark, path, dim)
+    val routing = SimilarityIndex.route(spark, path, centers, queries, nprobe, queryId, queryVec)
+    val anchors = if (residual) normCenters(centers) else null
+    (routing, SimilarityIndex.routedTopK(spark, scan, "codes", corpusId, routing, k,
+      _ => adcScorer(books, ksub, dim, rot, anchors)))
+  }
+
+  /** [[adcPass]] over a flat [[pqBuild]] index, as of an installment. */
+  private def pqPass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
+                     corpusId: String, queryId: String, queryVec: String,
+                     asOfInstallment: Int): (SimilarityIndex.Routing, Array[TopK.Buf]) =
+    adcPass(spark, path, SimilarityIndex.OneList,
+      SimilarityIndex.flatCodes(spark, path, asOfInstallment), queries, k, 1,
+      corpusId, queryId, queryVec)
+
   /**
-   * ADC search: per-query lookup tables broadcast with the queries, one
-   * map-side scan of the (tombstone-filtered, optionally snapshot-pinned)
-   * stored codes, bounded top-k. Output (queryId, corpusId, score_pq,
-   * rank) — `score_pq` approximates cosine at ranking granularity.
+   * ADC search: [[ivfPqSearch]]'s routed kernel over the index as one list
+   * (optionally snapshot-pinned). EAGER: returns a local frame (queryId,
+   * corpusId long, score_pq double, rank int), score desc and lower id on
+   * ties — `score_pq` approximates cosine at ranking granularity.
    */
   def pqSearch(spark: SparkSession, path: String, queries: DataFrame,
                k: Int, corpusId: String = "vec_id",
                queryId: String = "query_id", queryVec: String = "query_vec",
                asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    val (m, ksub, dim, _) = readMeta(spark, path)
-    val books = readCodebooks(spark, path, m, ksub)
-    val rot = readRotation(spark, path, dim)
-    val codes0 = spark.read.parquet(s"$path/codes")
-    val codes1 = if (asOfInstallment == Int.MaxValue) codes0
-      else codes0.filter(col("installment") <= asOfInstallment)
-    val c = graft.store.Tombstones.filter(spark, path, codes1, corpusId)
-      .select(col(corpusId), col("codes"))
-    val q = queries
-      .select(col(queryId),
-        tableUdf(books, ksub, dim, rot)(col(queryVec)).as("_qt"))
-      .filter(col("_qt").isNotNull)
-    val scored = c.join(broadcast(q), lit(true))
-      .withColumn("score_pq",
-        adcScoreUdf(col("codes"), col("_qt"), lit(ksub)))
-      .select(col(queryId), col(corpusId), col("score_pq"))
-    TopK.topKPerGroup(scored, queryId, corpusId, "score_pq", k)
+    val (routing, top) = pqPass(spark, path, queries, k, corpusId, queryId, queryVec,
+      asOfInstallment)
+    SimilarityIndex.localTopK(spark, routing, corpusId, "score_pq", top)
   }
 
   /**
@@ -504,8 +519,9 @@ object Pq {
    * float corpus by exact cosine and cuts to top-k. PQ error only
    * shuffles ranks INSIDE the pool, so with candidateK ≫ k the answer
    * equals the exact float top-k — full-precision results at
-   * memory-bound scan cost. Pool and query vectors broadcast into the
-   * corpus read; the corpus never shuffles.
+   * memory-bound scan cost ([[SimilarityIndex.refine]]; nothing
+   * shuffles). EAGER: returns a local (queryId, corpusId, cosine, rank)
+   * frame.
    */
   def pqSearchRefined(spark: SparkSession, path: String, queries: DataFrame,
                       corpus: DataFrame, k: Int, candidateK: Int = 64,
@@ -514,20 +530,9 @@ object Pq {
                       queryId: String = "query_id",
                       queryVec: String = "query_vec",
                       asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    require(candidateK >= k,
-      s"candidateK ($candidateK) must be at least k ($k)")
-    val pool = pqSearch(spark, path, queries, candidateK, corpusId,
-      queryId, queryVec, asOfInstallment)
-      .select(col(queryId), col(corpusId))
-    val rescored = corpus.select(col(corpusId), col(corpusVec))
-      .join(broadcast(pool), Seq(corpusId))
-      .join(broadcast(queries.select(col(queryId), col(queryVec))),
-        Seq(queryId))
-      .withColumn("cosine",
-        graft.functions.expressions.CosineSimilarity.cosineNative(
-          col(corpusVec), col(queryVec)))
-      .select(col(queryId), col(corpusId), col("cosine"))
-    TopK.topKPerGroup(rescored, queryId, corpusId, "cosine", k)
+    SimilarityIndex.refine(spark, SimilarityIndex.oneList(corpus), k, candidateK,
+        corpusId, corpusVec, queryVec)(
+      pqPass(spark, path, queries, _, corpusId, queryId, queryVec, asOfInstallment))
   }
 
   /** Tombstone ids out of the index (takedown semantics — applies to
@@ -692,41 +697,12 @@ object Pq {
         build = false)
   }
 
-  /** One query's ADC state: its table and, in residual mode, its base
-    * term for every list (null otherwise). */
-  private final case class AdcQuery(table: Int => Double, base: Array[Double])
-
-  /** The ADC score for [[SimilarityIndex.routedTopK]] over stored `codes`:
-    * adc + base, the base 0.0 when the index is not residual. Zero-norm
-    * and wrong-dimension queries decline. */
-  private def adcScorer(books: Array[Array[Array[Double]]], ksub: Int, dim: Int,
-                        rot: Array[Array[Double]], anchors: Array[Array[Double]])
-      : SimilarityIndex.RoutedScorer[AdcQuery, Array[Byte]] =
-    new SimilarityIndex.RoutedScorer[AdcQuery, Array[Byte]] {
-      def query(r: Row, v: Seq[Float]): AdcQuery = {
-        val t = adcTable(books, ksub, dim, rot, v)
-        if (t == null) null
-        else if (anchors == null) AdcQuery(i => t(i), null)
-        else { val u = normalize(v); AdcQuery(i => t(i), anchors.map(residualBase(u, _))) }
-      }
-      def row(r: InternalRow): Array[Byte] = r.getBinary(1)
-      def score(c: Array[Byte], q: AdcQuery, list: Int): Double =
-        adc(c, q.table, ksub) + (if (q.base == null) 0.0 else q.base(list))
-    }
-
-  /** The routed ADC pass both IVF-PQ searches run: its routing and its
-    * top-`k` buffers. */
+  /** [[adcPass]] over an IVF-PQ index's stored centroids and `codes/`. */
   private def ivfPqPass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
                         nprobe: Int, corpusId: String, queryId: String,
-                        queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) = {
-    val (m, ksub, dim, residual) = readMeta(spark, path)
-    val books = readCodebooks(spark, path, m, ksub)
-    val rot = readRotation(spark, path, dim)
-    val routing = SimilarityIndex.route(spark, path, queries, nprobe, queryId, queryVec)
-    val anchors = if (residual) normCenters(routing.centers) else null
-    (routing, SimilarityIndex.routedTopK(spark, path, "codes", "codes", corpusId, routing, k,
-      _ => adcScorer(books, ksub, dim, rot, anchors)))
-  }
+                        queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) =
+    adcPass(spark, path, SimilarityIndex.readCentroids(spark, path),
+      spark.read.parquet(s"$path/codes"), queries, k, nprobe, corpusId, queryId, queryVec)
 
   /** Routed ADC search: the routed IVF kernel
     * ([[SimilarityIndex.ivfSearchIndexed]]'s — driver-resolved probe
@@ -763,14 +739,9 @@ object Pq {
                          corpusVec: String = "embedding",
                          queryId: String = "query_id",
                          queryVec: String = "query_vec"): DataFrame = {
-    require(candidateK >= k,
-      s"candidateK ($candidateK) must be at least k ($k)")
-    require(graft.store.dirExists(spark, s"$path/raw"),
-      s"$path has no raw/ refine sidecar — build with storeRaw = true " +
-        "to enable refined search")
-    val (routing, pools) = ivfPqPass(spark, path, queries, candidateK, nprobe,
-      corpusId, queryId, queryVec)
-    SimilarityIndex.refineOnRaw(spark, path, routing, pools, k, corpusId, corpusVec, queryVec)
+    SimilarityIndex.refine(spark, SimilarityIndex.rawSidecar(spark, path), k, candidateK,
+        corpusId, corpusVec, queryVec)(
+      ivfPqPass(spark, path, queries, _, nprobe, corpusId, queryId, queryVec))
   }
 
   /** Tombstone ids out of the IVF-PQ index (takedown semantics;

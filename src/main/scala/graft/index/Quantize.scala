@@ -354,16 +354,32 @@ object Quantize {
         dot(c.codes, q.codes).toDouble / (math.sqrt(c.normSq.toDouble) * math.sqrt(q.normSq.toDouble))
     }
 
-  /** The routed quantized pass both IVF-SQ8 searches run: its routing and
-    * its top-`k` buffers. */
-  private def ivfSq8Pass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
-                         nprobe: Int, corpusId: String, queryId: String,
-                         queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) = {
+  /** The routed quantized pass of every int8 search, over the packed
+    * `codes` of `scan`: its routing and its top-`k` buffers. */
+  private def sq8Pass(spark: SparkSession, path: String, centers: Array[Array[Double]],
+                      scan: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
+                      corpusId: String, queryId: String,
+                      queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) = {
     val scale = readScale(spark, path)
-    val routing = SimilarityIndex.route(spark, path, queries, nprobe, queryId, queryVec)
-    (routing, SimilarityIndex.routedTopK(spark, path, "codes", "codes", corpusId, routing, k,
+    val routing = SimilarityIndex.route(spark, path, centers, queries, nprobe, queryId, queryVec)
+    (routing, SimilarityIndex.routedTopK(spark, scan, "codes", corpusId, routing, k,
       _ => sq8Scorer(scale)))
   }
+
+  /** [[sq8Pass]] over an IVF-SQ8 index's stored centroids and `codes/`. */
+  private def ivfSq8Pass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
+                         nprobe: Int, corpusId: String, queryId: String,
+                         queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) =
+    sq8Pass(spark, path, SimilarityIndex.readCentroids(spark, path),
+      spark.read.parquet(s"$path/codes"), queries, k, nprobe, corpusId, queryId, queryVec)
+
+  /** [[sq8Pass]] over a flat [[int8Build]] index, as of an installment. */
+  private def int8Pass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
+                       corpusId: String, queryId: String, queryVec: String,
+                       asOfInstallment: Int): (SimilarityIndex.Routing, Array[TopK.Buf]) =
+    sq8Pass(spark, path, SimilarityIndex.OneList,
+      SimilarityIndex.flatCodes(spark, path, asOfInstallment), queries, k, 1,
+      corpusId, queryId, queryVec)
 
   /** Search a persisted [[ivfSq8Build]] index: the routed IVF kernel
     * ([[SimilarityIndex.ivfSearchIndexed]]'s — driver-resolved probe
@@ -409,14 +425,9 @@ object Quantize {
                           corpusVec: String = "embedding",
                           queryId: String = "query_id",
                           queryVec: String = "query_vec"): DataFrame = {
-    require(candidateK >= k,
-      s"candidateK ($candidateK) must be at least k ($k)")
-    require(graft.store.dirExists(spark, s"$path/raw"),
-      s"$path has no raw/ refine sidecar — build with storeRaw = true " +
-        "to enable refined search")
-    val (routing, pools) = ivfSq8Pass(spark, path, queries, candidateK, nprobe,
-      corpusId, queryId, queryVec)
-    SimilarityIndex.refineOnRaw(spark, path, routing, pools, k, corpusId, corpusVec, queryVec)
+    SimilarityIndex.refine(spark, SimilarityIndex.rawSidecar(spark, path), k, candidateK,
+        corpusId, corpusVec, queryVec)(
+      ivfSq8Pass(spark, path, queries, _, nprobe, corpusId, queryId, queryVec))
   }
 
   /**
@@ -425,11 +436,11 @@ object Quantize {
    * `candidateK` pool per query (quantized scan at 1 B/dim), then the
    * pool re-ranks by exact float cosine against the CALLER's float
    * corpus (the source-of-truth table the index was built from — no
-   * raw copy stored). The candidate id pairs and query vectors
-   * broadcast into the float scan, so the corpus is filtered map-side
-   * and never shuffles; float bytes are touched once, for pool rows
-   * only. `asOfInstallment` pins the CANDIDATE read to a snapshot; pass
-   * the matching corpus slice for exact-as-of semantics.
+   * raw copy stored), filtered to the pool ids ([[SimilarityIndex.refine]]).
+   * Nothing shuffles. EAGER: returns a local frame (queryId, corpusId
+   * long, cosine double, rank int). `asOfInstallment` pins the CANDIDATE
+   * read to a snapshot; pass the matching corpus slice for exact-as-of
+   * semantics.
    */
   def int8SearchRefined(spark: SparkSession, path: String, queries: DataFrame,
                         corpus: DataFrame, k: Int, candidateK: Int = 32,
@@ -438,19 +449,9 @@ object Quantize {
                         queryId: String = "query_id",
                         queryVec: String = "query_vec",
                         asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    require(candidateK >= k,
-      s"candidateK ($candidateK) must be at least k ($k)")
-    val pool = int8SearchIndexed(spark, path, queries, candidateK,
-      corpusId, queryId, queryVec, asOfInstallment)
-      .select(col(queryId), col(corpusId))
-    val rescored = corpus.select(col(corpusId), col(corpusVec))
-      .join(broadcast(pool), Seq(corpusId))
-      .join(broadcast(queries.select(col(queryId), col(queryVec))), Seq(queryId))
-      .withColumn("cosine",
-        graft.functions.expressions.CosineSimilarity.cosineNative(
-          col(corpusVec), col(queryVec)))
-      .select(col(queryId), col(corpusId), col("cosine"))
-    TopK.topKPerGroup(rescored, queryId, corpusId, "cosine", k)
+    SimilarityIndex.refine(spark, SimilarityIndex.oneList(corpus), k, candidateK,
+        corpusId, corpusVec, queryVec)(
+      int8Pass(spark, path, queries, _, corpusId, queryId, queryVec, asOfInstallment))
   }
 
   /**
@@ -735,8 +736,8 @@ object Quantize {
    * Tombstone a set of vector ids out of an [[int8Build]] index — the
    * delete half of the installment lifecycle ([[graft.store.Tombstones]]):
    * one id-list append, no data table touched. Every search/probe drops
-   * tombstoned rows via a broadcast anti-join (takedown semantics — the
-   * set applies to asOf snapshots too); [[int8Compact]] folds the
+   * tombstoned rows (takedown semantics — the set applies to asOf
+   * snapshots too); [[int8Compact]] folds the
    * deletion physically and clears the list. Returns the deletes
    * installment written ([[int8DeleteAt]] is the replay-idempotent
    * sibling for at-least-once writers).
@@ -776,35 +777,20 @@ object Quantize {
     rows
   }
 
-  /** Search a persisted [[int8Build]] index: unpack map-side, score with
-    * the integer kernel. Queries quantize with the stored scale.
-    * `asOfInstallment` pins the search to a fixed snapshot of the
-    * append history (partition-pruned `installment <= asOf` read). */
+  /** Search a persisted [[int8Build]] index: [[ivfSq8Search]]'s routed
+    * kernel over the index as one list. `asOfInstallment` pins the search
+    * to a fixed snapshot of the append history (partition-pruned
+    * `installment <= asOf` read). EAGER: returns a local frame (queryId,
+    * corpusId long, cosine_q double, rank int), score desc and lower id on
+    * ties; zero-norm and null queries score nothing. */
   def int8SearchIndexed(spark: SparkSession, path: String, queries: DataFrame,
                         k: Int, corpusId: String = "vec_id",
                         queryId: String = "query_id",
                         queryVec: String = "query_vec",
                         asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    val scale = readScale(spark, path)
-    val codes0 = spark.read.parquet(s"$path/codes")
-    val codes1 = if (asOfInstallment == Int.MaxValue) codes0
-      else codes0.filter(col("installment") <= asOfInstallment)
-    // tombstones apply to every read, snapshots included (takedown
-    // semantics); a no-op on an index with no deletes dir
-    val codes = graft.store.Tombstones.filter(spark, path, codes1, corpusId)
-    val c = codes
-      .select(col(corpusId), unpackCodesUdf(col("codes")).as("_cc"))
-      .withColumn("_cn", normSqUdf(col("_cc")))
-      .filter(col("_cn") > 0)
-    val q = queries.select(col(queryId), codesUdf(scale)(col(queryVec)).as("_qc"))
-      .withColumn("_qn", normSqUdf(col("_qc")))
-      .filter(col("_qn") > 0)
-    val scored = c.join(broadcast(q), lit(true))
-      .withColumn("_dot", dotUdf(col("_cc"), col("_qc")))
-      .withColumn("cosine_q", col("_dot").cast("double") /
-        (sqrt(col("_cn").cast("double")) * sqrt(col("_qn").cast("double"))))
-      .select(col(queryId), col(corpusId), col("cosine_q"))
-    TopK.topKPerGroup(scored, queryId, corpusId, "cosine_q", k)
+    val (routing, top) = int8Pass(spark, path, queries, k, corpusId, queryId, queryVec,
+      asOfInstallment)
+    SimilarityIndex.localTopK(spark, routing, corpusId, "cosine_q", top)
   }
 
   /**

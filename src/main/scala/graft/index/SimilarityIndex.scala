@@ -40,8 +40,8 @@ import graft.functions.expressions.CosineSimilarity
  * exchange — and scores within buckets only. All per-query ranking goes
  * through `TopK`'s bounded buffers — `topKPerGroup` (bounded partial
  * aggregation), or its insert/merge directly in the routed IVF kernel
- * (`routedTopK`: one scan plus a driver merge, shared by the float, IVF-SQ8
- * and IVF-PQ searches): no per-query window funnel anywhere in this file.
+ * (`routedTopK`: one scan plus a driver merge, shared by every persisted
+ * vector search): no per-query window funnel anywhere in this file.
  */
 object SimilarityIndex {
 
@@ -432,7 +432,7 @@ object SimilarityIndex {
    *
    * Query sets are small (an interactive probe set), so the search is one
    * scan plus a driver merge, never a top-k exchange — the routed kernel
-   * ([[routedTopK]]) the IVF-SQ8 and IVF-PQ searches share, here scoring
+   * ([[routedTopK]]) every persisted vector search shares, here scoring
    * float vectors by exact cosine ([[CosineSimilarity.cosine]]):
    *
    *   1. route on the driver ([[route]]): the queries (`queryId`,
@@ -459,31 +459,31 @@ object SimilarityIndex {
                        k: Int, nprobe: Int = 8,
                        corpusId: String = "vec_id", corpusVec: String = "embedding",
                        queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    val routing = route(spark, path, queries, nprobe, queryId, queryVec)
+    val routing = route(spark, path, readCentroids(spark, path), queries, nprobe, queryId, queryVec)
     localTopK(spark, routing, corpusId, "cosine",
-      routedTopK(spark, path, "assignments", corpusVec, corpusId, routing, k,
+      routedTopK(spark, spark.read.parquet(s"$path/assignments"), corpusVec, corpusId, routing, k,
         cosineScorer("ivfSearchIndexed", corpusVec, queryVec, routing, null)))
   }
 
   // ------------------------------------------------- routed search kernel
 
-  /** One IVF search's driver-side routing ([[route]]): the stored
-    * centroids, the collected (queryId, queryVec) rows, each query's
-    * vector at float precision (null for a null vector), the distinct
-    * query ids with each query's index into them (queries sharing an id
-    * share one top-k — the `topKPerGroup` group semantics), the queries
-    * probing each list, and the sorted tombstone ids. */
-  private[index] final case class Routing(centers: Array[Array[Double]],
-                                          queries: Array[Row], floats: Array[Seq[Float]],
+  /** One search's driver-side routing ([[route]]): the collected
+    * (queryId, queryVec) rows, each query's vector at float precision
+    * (null for a null vector), the distinct query ids with each query's
+    * index into them (queries sharing an id share one top-k — the
+    * `topKPerGroup` group semantics), the queries probing each list, and
+    * the sorted tombstone ids. */
+  private[index] final case class Routing(queries: Array[Row], floats: Array[Seq[Float]],
                                           keys: Array[Any], group: Array[Int],
                                           probing: Array[Array[Int]], dead: Array[Long],
                                           idField: StructField, vecType: DataType)
 
-  /** Route a query set through the stored centroids of the IVF index at
-    * `path`: one centroid read, one query collect, one tombstone collect. */
-  private[index] def route(spark: SparkSession, path: String, queries: DataFrame,
-                           nprobe: Int, queryId: String, queryVec: String): Routing = {
-    val centers = readCentroids(spark, path)
+  /** Route a query set through `centers` (an IVF index's [[readCentroids]],
+    * or a flat index's [[OneList]]) and collect the tombstones of the index
+    * at `path`: one query collect, one tombstone collect. */
+  private[index] def route(spark: SparkSession, path: String, centers: Array[Array[Double]],
+                           queries: DataFrame, nprobe: Int, queryId: String,
+                           queryVec: String): Routing = {
     val qs = queries.select(col(queryId), col(queryVec)).collect()
     val vecType = queries.schema(queryVec).dataType
     val isDouble = vecType match { case ArrayType(DoubleType, _) => true; case _ => false }
@@ -492,7 +492,7 @@ object SimilarityIndex {
     val keys = qs.map(_.get(0)).distinct
     val byList = Array.fill(centers.length)(Array.newBuilder[Int])
     qs.indices.foreach(q => probeLists(centers, floats(q), nprobe).foreach(byList(_) += q))
-    Routing(centers, qs, floats, keys, qs.map(r => keys.indexOf(r.get(0))), byList.map(_.result()),
+    Routing(qs, floats, keys, qs.map(r => keys.indexOf(r.get(0))), byList.map(_.result()),
       graft.store.Tombstones.collectLongIds(spark, path), queries.schema(queryId), vecType)
   }
 
@@ -514,24 +514,35 @@ object SimilarityIndex {
     def score(row: R, q: Q, list: Int): Double
   }
 
+  /** The routing table of a flat index: one empty centroid, so
+    * [[probeLists]] sends every non-null query to list 0. */
+  private[index] val OneList: Array[Array[Double]] = Array(Array.emptyDoubleArray)
+
+  /** `df` as the one list of a flat index: its rows in list 0. */
+  private[index] def oneList(df: DataFrame): DataFrame = df.withColumn("list_id", lit(0))
+
+  /** A flat installment index's `codes/` as [[oneList]], partition-pruned
+    * to `installment <= asOfInstallment`. */
+  private[index] def flatCodes(spark: SparkSession, path: String, asOfInstallment: Int): DataFrame =
+    oneList(spark.read.parquet(s"$path/codes").filter(col("installment") <= asOfInstallment))
+
   /**
-   * The routed-search kernel of the IVF families: one `list_id`-pruned
-   * scan of `<path>/<table>` reading (corpusId, `payload`, list_id), run
-   * as one SQL execution. Rows with a null id or payload, and tombstoned
-   * rows, are skipped; every other row is scored against the queries
-   * probing its list, into one [[TopK.insert]] buffer per query id per
-   * task, and the task buffers merge on the driver ([[TopK.merge]]).
-   * Returns one buffer per `routing.keys` entry. `scorer` receives the
-   * payload column's type.
+   * The routed-search kernel of every persisted vector search: one
+   * `list_id`-pruned pass over `scan` (an IVF table, or a flat index as
+   * [[oneList]]) reading (corpusId, `payload`, list_id), run as one SQL
+   * execution. Rows with a null id or payload, and tombstoned rows, are
+   * skipped; every other row is scored against the queries probing its
+   * list, into one [[TopK.insert]] buffer per query id per task, and the
+   * task buffers merge on the driver ([[TopK.merge]]). Returns one buffer
+   * per `routing.keys` entry. `scorer` receives the payload column's type.
    */
   private[index] def routedTopK[Q >: Null : ClassTag, R >: Null](
-      spark: SparkSession, path: String, table: String, payload: String, corpusId: String,
+      spark: SparkSession, scan: DataFrame, payload: String, corpusId: String,
       routing: Routing, k: Int, scorer: DataType => RoutedScorer[Q, R]): Array[TopK.Buf] = {
     require(k > 0, "k must be positive")
-    val scan = spark.read.parquet(s"$path/$table")
     val s = scorer(scan.schema(payload).dataType)
     val states = routing.queries.indices.map(q => s.query(routing.queries(q), routing.floats(q))).toArray
-    val Routing(_, _, _, keys, group, probing, dead, _, _) = routing
+    val Routing(_, _, keys, group, probing, dead, _, _) = routing
     val pruned = scan
       .filter(col("list_id").isin(probing.indices.filter(probing(_).nonEmpty): _*))
       .select(col(corpusId).cast("long"), col(payload), col("list_id").cast("int"))
@@ -605,25 +616,40 @@ object SimilarityIndex {
     }
   }
 
+  /** An IVF index's `raw/` refine sidecar; fails fast when the build did
+    * not store one. */
+  private[index] def rawSidecar(spark: SparkSession, path: String): DataFrame = {
+    require(graft.store.dirExists(spark, s"$path/raw"),
+      s"$path has no raw/ refine sidecar — build with storeRaw = true to enable refined search")
+    spark.read.parquet(s"$path/raw")
+  }
+
   /**
-   * The exact re-rank of a routed quantized search
-   * ([[Quantize.ivfSq8SearchRefined]], [[Pq.ivfPqSearchRefined]]): the
-   * kernel over the `raw/` refine sidecar, each query scoring by exact
-   * cosine only the ids of its query id's candidate `pools` (the first
-   * pass's buffers). The first pass's routing is reused, widened so a
-   * query probes every list a query sharing its id probed — the lists its
-   * pool came from. Returns the local (queryId, corpusId, cosine, rank)
-   * frame.
+   * The exact re-rank of every refined search: a first `pass` at
+   * `candidateK` (its routing and candidate pools), then the kernel over
+   * `scan` (an IVF index's [[rawSidecar]], or a flat index's float corpus
+   * as [[oneList]]) filtered to the union of the pools, each query scoring
+   * by exact cosine only its query id's pool. The first pass's routing is
+   * reused, widened so a query probes every list a query sharing its id
+   * probed — the lists its pool came from. Returns the local (queryId,
+   * corpusId, cosine, rank) frame.
    */
-  private[index] def refineOnRaw(spark: SparkSession, path: String, routing: Routing,
-                                 pools: Array[TopK.Buf], k: Int, corpusId: String,
-                                 corpusVec: String, queryVec: String): DataFrame = {
+  private[index] def refine(spark: SparkSession, scan: DataFrame, k: Int, candidateK: Int,
+                            corpusId: String, corpusVec: String, queryVec: String)(
+      pass: Int => (Routing, Array[TopK.Buf])): DataFrame = {
+    require(candidateK >= k, s"candidateK ($candidateK) must be at least k ($k)")
+    val (routing, pools) = pass(candidateK)
     val members = routing.group.indices.groupBy(routing.group(_))
     val widened = routing.copy(probing = routing.probing.map(qs =>
       qs.flatMap(q => members(routing.group(q))).distinct))
     val byKey = routing.keys.indices.map(g => routing.keys(g) -> pools(g).ids.sorted).toMap
+    // a UDF, not `isin`: pushed into parquet, an IN list of 512–1,024 ids
+    // pruned no row group of a 128-file raw/ and cost 0.2–0.3 s per search
+    val poolIds = pools.flatMap(_.ids).distinct.sorted
+    val pooled = scan.filter(udf((id: Long) => java.util.Arrays.binarySearch(poolIds, id) >= 0)
+      .apply(col(corpusId)))
     localTopK(spark, routing, corpusId, "cosine",
-      routedTopK(spark, path, "raw", corpusVec, corpusId, widened, k,
+      routedTopK(spark, pooled, corpusVec, corpusId, widened, k,
         cosineScorer("refined search", corpusVec, queryVec, routing, byKey)))
   }
 

@@ -211,12 +211,13 @@ object Crawl {
     // redirects) ride the checkpoint's own materialization as OBSERVED
     // metrics (r18): the former one-aggregate job over the checkpointed
     // frame was a full extra action — planning + scheduling round-trip —
-    // for conditional sums the checkpoint pass computes for free.
-    val classObs = org.apache.spark.sql.Observation()
+    // for conditional sums the checkpoint pass computes for free. Only the
+    // path that attaches it has one: a stray read fails, never blocks.
     val isResponse0 = col("warc_type") === "response"
-    val resp0 =
-      if (!wantLinks) respBase.filter(col("http_status") === 200 && textish)
+    val (resp0, classObs) =
+      if (!wantLinks) (respBase.filter(col("http_status") === 200 && textish), None)
       else {
+        val obs = org.apache.spark.sql.Observation()
         val redirectCond =
           if (hasLocation) redirect3xx && col("http_location").isNotNull
           else lit(false)
@@ -232,18 +233,18 @@ object Crawl {
           if (wantRobots)
             Robots.pathOf(col("target_uri")) === "/robots.txt"
           else lit(false)
-        respBase
+        (respBase
           .filter(col("http_status") === 200 || redirectCond ||
             ledgerDeadCond || revisitCond || robotsCond)
           .select(cols: _*)
-          .observe(classObs,
+          .observe(obs,
             sum(when(isResponse0 && col("http_status") === 200 && !textish,
               1L).otherwise(0L)).as("non_text"),
             sum(when(revisitCond, 1L).otherwise(0L)).as("revisits"),
             sum(when(isResponse0 && redirect3xx &&
               (if (hasLocation) col("http_location").isNotNull
                else lit(false)), 1L).otherwise(0L)).as("redirects"))
-          .localCheckpoint()
+          .localCheckpoint(), Some(obs))
       }
     // the WHOLE projection, not just robots-path rows: outcome
     // derivation follows 3xx chains through arbitrary-path hops and
@@ -353,9 +354,9 @@ object Crawl {
         // aggregate job; r18 folds that job into the checkpoint itself —
         // zero extra actions; redirectLinks is filter+select, so its
         // count is the same conditional sum)
-        nonTextCount = obsLong(classObs, "non_text")
-        revisitCount = obsLong(classObs, "revisits")
-        if (wantRedirects) redirectCount = obsLong(classObs, "redirects")
+        nonTextCount = obsLong(classObs.get, "non_text")
+        revisitCount = obsLong(classObs.get, "revisits")
+        if (wantRedirects) redirectCount = obsLong(classObs.get, "redirects")
         val extPages =
           ext.select(col("url"), col("links"), col("base"), col("canonical"),
             // the change observation: hash of the extracted text (the

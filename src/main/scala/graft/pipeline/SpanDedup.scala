@@ -131,13 +131,18 @@ object SpanDedup {
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
+  /** The stored window length: `meta/` read with the schema
+    * [[spanIndexBuild]] writes — no schema-inference job. */
+  private def readK(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    spark.read.schema("k INT").parquet(s"$path/meta").head().getInt(0)
+
   /** Fold a new batch's window counts in as the next installment (stored
     * installments never read or rewritten; the STORED k applies). Batch
     * docs must be new to the index; appends are sequential. */
   def spanIndexAppend(spark: org.apache.spark.sql.SparkSession, path: String,
                       newDocs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id"): Unit = {
-    val k = spark.read.parquet(s"$path/meta").head().getInt(0)
+    val k = readK(spark, path)
     val next = graft.store.Installments.next(spark, s"$path/wins")
     writeWinsInstallment(newDocs, path, next, textCol, idCol, k)
   }
@@ -149,7 +154,7 @@ object SpanDedup {
                         newDocs: DataFrame, installment: Int,
                         textCol: String = "text",
                         idCol: String = "doc_id"): Unit = {
-    val k = spark.read.parquet(s"$path/meta").head().getInt(0)
+    val k = readK(spark, path)
     writeWinsInstallment(newDocs, path, installment, textCol, idCol, k)
   }
 
@@ -203,7 +208,7 @@ object SpanDedup {
     guard(deletedDocs)
     require(!deletedDocs.columns.contains("_sd_fp"),
       "spanIndexDelete reserves the internal column name _sd_fp")
-    val k = spark.read.parquet(s"$path/meta").head().getInt(0)
+    val k = readK(spark, path)
     val live = graft.store.Tombstones.liveOnly(spark, path,
       deletedDocs.withColumn("_sd_fp", md5(col(textCol))), "_sd_fp",
       installment)
@@ -251,7 +256,7 @@ object SpanDedup {
                      idCol: String = "doc_id",
                      asOfInstallment: Int = Int.MaxValue): DataFrame = {
     guard(batch)
-    val k = spark.read.parquet(s"$path/meta").head().getInt(0)
+    val k = readK(spark, path)
     def snapshot(df: DataFrame): DataFrame =
       if (asOfInstallment == Int.MaxValue) df
       else df.filter(col("installment") <= asOfInstallment)

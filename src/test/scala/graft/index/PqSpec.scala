@@ -456,21 +456,69 @@ class PqSpec extends SparkTestBase {
     assert(search.prunesLists("codes") && search.prunesLists("raw"))
   }
 
+  /** A churned flat PQ index with a stored rotation: a build, an appended
+    * installment and two tombstone installments; its float corpus; and 16
+    * local queries. */
+  private lazy val churnedFlat = {
+    val rnd = new scala.util.Random(12)
+    def vecs(ids: Range) =
+      ids.map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+    val path = tmpIdx("pq_jobs")
+    val (built, appended) = (vecs(0 until 2000), vecs(2000 until 2200))
+    Pq.pqBuild(built, path, m = 4, ksub = 16, rotate = true)
+    Pq.pqAppend(spark, path, appended)
+    Pq.pqDelete(spark, path, Seq(1L, 2L, 3L).toDF("vec_id"))
+    Pq.pqDelete(spark, path, Seq(2100L).toDF("vec_id"))
+    val queries = (0 until 16).map(i => (-1L - i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("query_id", "query_vec")
+    (path, built.unionByName(appended), queries)
+  }
+
+  private def plainFlatPqRun() = {
+    val (path, _, queries) = churnedFlat
+    Ran(spark)(Pq.pqSearch(spark, path, queries, k = 10).collect())
+  }
+
+  test("one flat PQ search runs at most 6 jobs and no shuffle stage") {
+    val (hits, search) = plainFlatPqRun()
+    assert(hits.length === 160)
+    // meta, codebooks, rotation and tombstone reads, codes schema, the scan
+    assert(search.jobs <= 6, s"one search ran ${search.jobs} jobs")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+  }
+
+  test("one refined flat PQ search runs at most 2 jobs more than the plain one, no shuffle stage") {
+    val (path, corpus, queries) = churnedFlat
+    val (hits, search) = Ran(spark)(Pq.pqSearchRefined(spark, path, queries, corpus,
+      k = 10, candidateK = 64).collect())
+    assert(hits.length === 160)
+    // the plain search's jobs, then the corpus scan
+    val plain = plainFlatPqRun()._2.jobs
+    assert(search.jobs <= plain + 2 && search.jobs <= 8,
+      s"one refined search ran ${search.jobs} jobs (plain: $plain)")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+  }
+
   /** The ADC top-k over the live stored codes, computed here from the
     * stored meta, codebooks, centroids and codes: q·u ≈ Σ_j table(j, code_j)
-    * (+ q·w_list, w the list's unit centroid, in residual mode). */
+    * (+ q·w_list, w the list's unit centroid, in residual mode). A flat
+    * index has no centroids and is never residual. */
   private def adcReference(path: String, residual: Boolean, live: Long => Boolean,
                            qs: Seq[(Long, Array[Float])], k: Int): Seq[(Long, Long, Double, Int)] = {
     val meta = spark.read.parquet(s"$path/meta").head()
     val (m, ksub, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"), meta.getAs[Int]("dim"))
     val books = spark.read.parquet(s"$path/codebooks").as[(Int, Int, Array[Double])].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    val units = spark.read.parquet(s"$path/centroids").as[(Int, Array[Double])].collect()
-      .map { case (l, c) =>
-        val ss = c.map(x => x * x).sum
-        l -> (if (ss == 0.0) c.map(_ => 0.0) else { val inv = 1.0 / math.sqrt(ss); c.map(_ * inv) })
-      }.toMap
-    val stored = spark.read.parquet(s"$path/codes").select("vec_id", "list_id", "codes")
+    val units = if (!residual) Map.empty[Int, Array[Double]]
+      else spark.read.parquet(s"$path/centroids").as[(Int, Array[Double])].collect()
+        .map { case (l, c) =>
+          val ss = c.map(x => x * x).sum
+          l -> (if (ss == 0.0) c.map(_ => 0.0) else { val inv = 1.0 / math.sqrt(ss); c.map(_ * inv) })
+        }.toMap
+    val codes = spark.read.parquet(s"$path/codes")
+    val stored = (if (residual) codes.select($"vec_id", $"list_id", $"codes")
+        else codes.select($"vec_id", lit(0).as("list_id"), $"codes"))
       .as[(Long, Int, Array[Byte])].collect().filter(r => live(r._1))
     val dsub = dim / m
     def dotFrom(u: Array[Double], from: Int, c: Array[Double]): Double = {
@@ -510,22 +558,39 @@ class PqSpec extends SparkTestBase {
     val reappended = deleted.toSeq.sorted.take(4).map(i => (i, vec()))
     val qs = (Seq(base(1)._2, base(9)._2) ++ Seq.fill(3)(vec()) :+ Array.fill(8)(0f))
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    Seq(false, true).foreach { residual =>
+    val queries = qs.toDF("query_id", "query_vec")
+    val (delA, delB) = deleted.toSeq.sorted.splitAt(deleted.size / 2)
+    val ivf = Seq(false, true).map { residual =>
       val path = tmpIdx(s"ivfpq_eq_$residual")
       Pq.ivfPqBuild((base ++ dups).toDF("vec_id", "embedding"), path, nlist = 4, m = 4,
         ksub = 16, residual = residual)
       Pq.ivfPqAppend(spark, path, appended.toDF("vec_id", "embedding"))
-      val (delA, delB) = deleted.toSeq.sorted.splitAt(deleted.size / 2)
       Pq.ivfPqDelete(spark, path, delA.toDF("vec_id"))
       Pq.ivfPqDelete(spark, path, delB.toDF("vec_id"))
       Pq.ivfPqAppend(spark, path, reappended.toDF("vec_id", "embedding"))
-      val got = Pq.ivfPqSearch(spark, path, qs.toDF("query_id", "query_vec"), k = 7,
-        nprobe = 4).as[(Long, Long, Double, Int)].collect()
-      val expected = adcReference(path, residual, id => !deleted.contains(id), qs, k = 7)
-      assert(got.toSet === expected.toSet, s"residual = $residual")
-      assert(got.length === 5 * 7, s"residual = $residual")
+      s"ivfPqSearch, residual = $residual" -> (Pq.ivfPqSearch(spark, path, queries, k = 7,
+        nprobe = 4), adcReference(path, residual, id => !deleted.contains(id), qs, k = 7))
+    }
+    // the same churn on a flat index: installments 0, 1 and 2
+    val flat = tmpIdx("pq_eq")
+    Pq.pqBuild((base ++ dups).toDF("vec_id", "embedding"), flat, m = 4, ksub = 16)
+    Pq.pqAppend(spark, flat, appended.toDF("vec_id", "embedding"))
+    Pq.pqDelete(spark, flat, delA.toDF("vec_id"))
+    Pq.pqDelete(spark, flat, delB.toDF("vec_id"))
+    Pq.pqAppend(spark, flat, reappended.toDF("vec_id", "embedding"))
+    (ivf ++ Seq(
+      "pqSearch" -> (Pq.pqSearch(spark, flat, queries, k = 7),
+        adcReference(flat, residual = false, id => !deleted.contains(id), qs, k = 7)),
+      // installment 0 holds ids below 310, and the deletes apply to it too
+      "pqSearch as of installment 0" -> (Pq.pqSearch(spark, flat, queries, k = 7,
+        asOfInstallment = 0), adcReference(flat, residual = false,
+        id => !deleted.contains(id) && id < 310L, qs, k = 7))
+    )).foreach { case (arm, (result, expected)) =>
+      val got = result.as[(Long, Long, Double, Int)].collect()
+      assert(got.toSet === expected.toSet, arm)
+      assert(got.length === 5 * 7, arm)
       assert(got.filter(_._1 == 0L).sortBy(_._4).map(_._2).toSeq.containsSlice(Seq(1L, 301L)),
-        s"the tie goes to the lower id (residual = $residual)")
+        s"the tie goes to the lower id ($arm)")
     }
   }
 

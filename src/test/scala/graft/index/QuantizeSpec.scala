@@ -277,10 +277,10 @@ class QuantizeSpec extends SparkTestBase {
       .as[(Long, Long, Int)].collect().toSet
     assert(refined === exact,
       s"flat refine diverged from exact float top-5: ${refined.diff(exact)}")
-    // the float corpus is filtered by the broadcast pool, never shuffled
-    val plan = Quantize.int8SearchRefined(spark, path, q, embs, k = 5,
-      candidateK = 64).queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"refine must not rank via window:\n$plan")
+    // the float corpus is filtered to the pool ids, never ranked through a window
+    val (_, refine) = Ran(spark)(Quantize.int8SearchRefined(spark, path, q, embs, k = 5,
+      candidateK = 64))
+    assert(!refine.windows, s"refine must not rank via window: ${refine.plans}")
   }
 
   test("flat refine respects asOfInstallment on the candidate read") {
@@ -690,6 +690,50 @@ class QuantizeSpec extends SparkTestBase {
     assert(search.prunesLists("codes") && search.prunesLists("raw"))
   }
 
+  /** A churned flat int8 index: a build, an appended installment and two
+    * tombstone installments; its float corpus; and 16 local queries. */
+  private lazy val churnedFlat = {
+    val rnd = new scala.util.Random(12)
+    def vecs(ids: Range) =
+      ids.map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+    val path = java.nio.file.Files.createTempDirectory("int8-jobs")
+      .resolve("idx").toString
+    val (built, appended) = (vecs(0 until 2000), vecs(2000 until 2200))
+    Quantize.int8Build(built, path)
+    Quantize.int8Append(spark, path, appended)
+    Quantize.int8Delete(spark, path, Seq(1L, 2L, 3L).toDF("vec_id"))
+    Quantize.int8Delete(spark, path, Seq(2100L).toDF("vec_id"))
+    val queries = (0 until 16).map(i => (-1L - i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("query_id", "query_vec")
+    (path, built.unionByName(appended), queries)
+  }
+
+  private def plainInt8Run() = {
+    val (path, _, queries) = churnedFlat
+    Ran(spark)(Quantize.int8SearchIndexed(spark, path, queries, k = 10).collect())
+  }
+
+  test("one flat int8 search runs at most 5 jobs and no shuffle stage") {
+    val (hits, search) = plainInt8Run()
+    assert(hits.length === 160)
+    // scale read, tombstone collect, codes schema, the scan
+    assert(search.jobs <= 5, s"one search ran ${search.jobs} jobs")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+  }
+
+  test("one refined flat int8 search runs at most 2 jobs more than the plain one, no shuffle stage") {
+    val (path, corpus, queries) = churnedFlat
+    val (hits, search) = Ran(spark)(Quantize.int8SearchRefined(spark, path, queries, corpus,
+      k = 10, candidateK = 40).collect())
+    assert(hits.length === 160)
+    // the plain search's jobs, then the corpus scan
+    val plain = plainInt8Run()._2.jobs
+    assert(search.jobs <= plain + 2 && search.jobs <= 7,
+      s"one refined search ran ${search.jobs} jobs (plain: $plain)")
+    assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
+  }
+
   test("ivfSq8Search at nprobe = nlist equals the integer-code top-k over the live rows") {
     val rnd = new scala.util.Random(5)
     def vec(): Array[Float] = Array.fill(8)(rnd.nextGaussian().toFloat)
@@ -710,35 +754,57 @@ class QuantizeSpec extends SparkTestBase {
     Quantize.ivfSq8Delete(spark, path, delA.toDF("vec_id"))
     Quantize.ivfSq8Delete(spark, path, delB.toDF("vec_id"))
     Quantize.ivfSq8Append(spark, path, reappended.toDF("vec_id", "embedding"))
+    // the same churn on a flat index: installments 0, 1 and 2
+    val flat = java.nio.file.Files.createTempDirectory("int8-eq")
+      .resolve("idx").toString
+    Quantize.int8Build((base ++ dups).toDF("vec_id", "embedding"), flat)
+    Quantize.int8Append(spark, flat, appended.toDF("vec_id", "embedding"))
+    Quantize.int8Delete(spark, flat, delA.toDF("vec_id"))
+    Quantize.int8Delete(spark, flat, delB.toDF("vec_id"))
+    Quantize.int8Append(spark, flat, reappended.toDF("vec_id", "embedding"))
     val live = (base ++ dups ++ appended).filterNot(r => deleted.contains(r._1))
+    // what installment 0 holds, less the deletes (they apply to snapshots too)
+    val live0 = (base ++ dups).filterNot(r => deleted.contains(r._1))
     // a duplicated vector, a deleted one with a live twin, fresh points and
     // an all-zero query (zero-norm codes: no rows)
     val qs = (Seq(base(1)._2, base(9)._2) ++ Seq.fill(3)(vec()) :+ Array.fill(8)(0f))
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    val scale = spark.read.parquet(s"$path/meta").head().getDouble(0)
-    def codes(v: Array[Float]): Array[Long] = v.map(x => math.floor(x.toDouble / scale + 0.5).toLong)
-    def normSq(c: Array[Long]): Long = c.map(x => x * x).sum
     val k = 7
-    val expected = qs.flatMap { case (qid, qv) =>
-      val qc = codes(qv)
-      val qn = normSq(qc)
-      if (qn == 0) Nil
-      else live.flatMap { case (id, v) =>
-        val c = codes(v)
-        val cn = normSq(c)
-        if (cn == 0) None
-        else Some((id, c.zip(qc).map { case (a, b) => a * b }.sum.toDouble /
-          (math.sqrt(cn.toDouble) * math.sqrt(qn.toDouble))))
-      }.sortBy { case (id, score) => (-score, id) }.take(k).zipWithIndex
-        .map { case ((id, score), r) => (qid, id, score, r + 1) }
+    // the integer-code top-k of `rows` under the stored scale of `index`
+    def expected(index: String, rows: Seq[(Long, Array[Float])]) = {
+      val scale = spark.read.parquet(s"$index/meta").head().getDouble(0)
+      def codes(v: Array[Float]): Array[Long] = v.map(x => math.floor(x.toDouble / scale + 0.5).toLong)
+      def normSq(c: Array[Long]): Long = c.map(x => x * x).sum
+      qs.flatMap { case (qid, qv) =>
+        val qc = codes(qv)
+        val qn = normSq(qc)
+        if (qn == 0) Nil
+        else rows.flatMap { case (id, v) =>
+          val c = codes(v)
+          val cn = normSq(c)
+          if (cn == 0) None
+          else Some((id, c.zip(qc).map { case (a, b) => a * b }.sum.toDouble /
+            (math.sqrt(cn.toDouble) * math.sqrt(qn.toDouble))))
+        }.sortBy { case (id, score) => (-score, id) }.take(k).zipWithIndex
+          .map { case ((id, score), r) => (qid, id, score, r + 1) }
+      }
     }
-    val got = Quantize.ivfSq8Search(spark, path, qs.toDF("query_id", "query_vec"), k = k,
-      nprobe = 4).as[(Long, Long, Double, Int)].collect()
-    assert(got.toSet === expected.toSet)
-    assert(got.length === expected.length)
-    assert(got.exists(r => r._1 == 0L && r._2 == 1L && r._4 == 1) &&
-      got.exists(r => r._1 == 0L && r._2 == 201L && r._4 == 2), "the tie goes to the lower id")
-    assert(got.exists(r => r._1 == 1L && r._2 == 209L && r._4 == 1),
-      "the live twin of a deleted vector ranks first")
+    val queries = qs.toDF("query_id", "query_vec")
+    Seq(
+      "ivfSq8Search" -> (Quantize.ivfSq8Search(spark, path, queries, k = k, nprobe = 4),
+        expected(path, live)),
+      "int8SearchIndexed" -> (Quantize.int8SearchIndexed(spark, flat, queries, k = k),
+        expected(flat, live)),
+      "int8SearchIndexed as of installment 0" -> (Quantize.int8SearchIndexed(spark, flat,
+        queries, k = k, asOfInstallment = 0), expected(flat, live0))
+    ).foreach { case (arm, (result, want)) =>
+      val got = result.as[(Long, Long, Double, Int)].collect()
+      assert(got.toSet === want.toSet, arm)
+      assert(got.length === want.length, arm)
+      assert(got.exists(r => r._1 == 0L && r._2 == 1L && r._4 == 1) &&
+        got.exists(r => r._1 == 0L && r._2 == 201L && r._4 == 2), s"the tie goes to the lower id ($arm)")
+      assert(got.exists(r => r._1 == 1L && r._2 == 209L && r._4 == 1),
+        s"the live twin of a deleted vector ranks first ($arm)")
+    }
   }
 }

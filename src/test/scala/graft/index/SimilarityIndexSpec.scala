@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.{Ran, SparkTestBase}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -652,5 +653,25 @@ class SimilarityIndexSpec extends SparkTestBase {
     // a later installment adds to the set
     SimilarityIndex.ivfDeleteAt(spark, dir, Seq(4L, 5L).toDF("vec_id"), installment = 1)
     assert(hits() === all -- Set(3L, 4L, 5L))
+  }
+
+  test("source guard: the quantized searches rank through routedTopK, never topKPerGroup") {
+    def source(file: String): Seq[String] = {
+      val p = java.nio.file.Paths.get("src/main/scala/graft/index", file)
+      assert(java.nio.file.Files.isRegularFile(p), s"run from the repository root: $p")
+      java.nio.file.Files.readAllLines(p).asScala.toSeq
+    }
+    assert(!source("Pq.scala").exists(_.contains("topKPerGroup")),
+      "every PQ search runs on SimilarityIndex.routedTopK")
+    // each code line of Quantize.scala, with the member it sits in
+    val quantize = source("Quantize.scala")
+    val member = "^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
+    val owners = quantize.scanLeft("")((owner, l) =>
+      member.findFirstMatchIn(l).fold(owner)(_.group(1))).tail
+    def comment(l: String) = Seq("*", "/**", "//").exists(l.trim.startsWith)
+    val users = quantize.zip(owners)
+      .collect { case (l, owner) if l.contains("topKPerGroup") && !comment(l) => owner }.toSet
+    assert(users === Set("int8TopK"),
+      "only the in-memory reference int8TopK ranks through TopK.topKPerGroup")
   }
 }
