@@ -699,8 +699,8 @@ object SparkEntry {
 
     // incremental dedup: band the corpus into a persisted MinHash index
     // once, then probe the incoming batch against it — the stored side is
-    // only read map-side (batch bands broadcast), never re-banded or
-    // shuffled. Same recall argument as doc_minhash_dups (128 hashes / 64
+    // only read map-side (batch band keys routed on the driver), never
+    // re-banded or shuffled. Same recall argument as doc_minhash_dups (128 hashes / 64
     // bands), so the brute-force cross-pair scan is a valid oracle: the
     // fixture's true pairs (30% truncation) all sit at jaccard >= ~0.58,
     // far above the 0.3 threshold, where the per-pair LSH miss

@@ -1,8 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Deduplication operators for training-data pipelines: exact, normalized,
@@ -18,10 +23,11 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  /** Max distinct candidate ids a [[minhashIndexProbe]] collects to the
-    * driver to push into the stored-sets scan as a filter (the
-    * row-group-skipping fast path); above this the verify step falls
-    * back to the plain join. 16k string ids ≈ a few MB on the driver. */
+  /** Max distinct candidate ids a [[minhashIndexProbe]] pushes into the
+    * stored-sets scan as a filter and, in the routed regime, verifies on
+    * the driver over their collected shingle rows; above this the routed
+    * verify keeps one candidate-bounded exchange and the shuffled one the
+    * plain join. 16k string ids ≈ a few MB on the driver. */
   val ProbePushdownMaxCandidates: Int = 1 << 14
 
   // ------------------------------------------------------------- exact dedup
@@ -91,7 +97,12 @@ object Dedup {
     * `array_distinct(shingles(text, k))` but one tight pass per row instead
     * of interpreted per-element HOF evaluation (the HOF path dominated
     * round-1 bench profiles). */
-  def shinglesUdf(k: Int): UserDefinedFunction = udf { (text: String) =>
+  def shinglesUdf(k: Int): UserDefinedFunction =
+    udf { (text: String) => shingleSet(text, k) }
+
+  /** [[shinglesUdf]]'s kernel: the distinct word k-shingles of `text` in
+    * first-seen order, never empty (a text under k words is one shingle). */
+  def shingleSet(text: String, k: Int): Array[String] = {
     val toks = normalizeTokens(text)
     if (toks.length < k) Array(toks.mkString(" "))
     else {
@@ -155,6 +166,19 @@ object Dedup {
   def bandHashes(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(slice(sigCol, b * rowsPerBand + lit(1), lit(rowsPerBand))))
+
+  /** [[bandHashes]] of one signature, computed in Scala: `xxhash64` of an
+    * array of longs folds XXH64 over its elements from Spark's seed 42. */
+  def bandKeys(sig: Array[Long], bands: Int, rowsPerBand: Int): Array[Long] =
+    Array.tabulate(bands) { b =>
+      var h = 42L
+      var i = b * rowsPerBand
+      while (i < (b + 1) * rowsPerBand) {
+        h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(sig(i), h)
+        i += 1
+      }
+      h
+    }
 
   /**
    * MinHash-LSH candidate pairs with exact-Jaccard verification.
@@ -744,25 +768,46 @@ object Dedup {
   /**
    * Probe an incoming batch against a [[minhashIndexBuild]] index:
    * near-duplicate (corpus_id, new_id, jaccard) pairs above `threshold`.
+   * Degenerate buckets (boilerplate shingles shared by more than
+   * `maxBucketSize` stored docs — they cannot identify near-dups and
+   * would fan the probe out quadratically) are skipped by summing the
+   * stored per-installment size deltas for ONLY the buckets the batch
+   * touches. Tombstoned docs never pair (takedown semantics — applies to
+   * snapshots too); the sizes sums already carry a delete's negative
+   * deltas. Self pairs are dropped by comparing the ids as strings:
+   * stored and batch id TYPES may differ (a long-keyed corpus probed by
+   * URL-keyed batches).
    *
-   * Scale shape: the BATCH side broadcasts (bands, then candidate pairs,
-   * then batch shingle sets) — the stored index is only ever read
-   * map-side, never shuffled; the only exchanges are the candidate-pair
-   * distinct and the candidate-bounded regroup of the (exploded) stored
-   * shingle rows that survive the pair join. Degenerate buckets (boilerplate shingles shared by more
-   * than `maxBucketSize` stored docs — they cannot identify near-dups
-   * and would fan the probe out quadratically) are skipped by summing
-   * the stored per-installment size deltas for ONLY the buckets the
-   * batch touches, then removing those buckets from the BATCH side of
-   * the main join: stored rows in a hot bucket simply never match, no
-   * stored-side filter or shuffle needed.
+   * Two regimes; [[graft.pipeline.Crawl.ingestBatch]] picks one from the
+   * batch's measured text bytes:
+   *  - `broadcastBatch = true` (a driver-sized batch) is ROUTED and
+   *    EAGER: the work runs inside this call, and the result is a local
+   *    frame. One pass shingles and bands the batch and collects it
+   *    ([[bandKeys]] — the keys [[bandHashes]] writes). Then three scans
+   *    of the stored index, each filtered map-side against a set built
+   *    on the driver, with no exchange: `sizes/` for the touched
+   *    (band, bucket) keys (their summed deltas pick the hot buckets),
+   *    `bands/` for the kept keys (the (id, installment) candidates), and
+   *    `sets/`, partition-pruned to the candidates' installments and
+   *    filtered by candidate id. The candidate versions' shingle rows
+   *    come to the driver, which scores exact Jaccard per (id,
+   *    installment, batch row) and keeps the best per (id, new_id).
+   *    Jobs: the `meta/` read, the batch collect and the three scans, plus
+   *    one tombstone collect when `deletes/` exists. Above
+   *    [[ProbePushdownMaxCandidates]] candidate ids the verify keeps one
+   *    candidate-bounded exchange (a collect_list regroup of the
+   *    candidate versions' rows) instead of collecting rows.
+   *  - `broadcastBatch = false` (a corpus-sized batch) returns a lazy plan
+   *    of hash-partitioned joins on both sides — no driver OOM; the
+   *    routed regime would collect the batch's shingle sets.
    *
-   * The broadcast contract assumes a batch small enough to ship to every
-   * executor (the daily-increment shape). For a batch that is itself
-   * corpus-sized, `broadcastBatch = false` degrades every probe join to
-   * a hash-partitioned shuffle on both sides — identical output, no
-   * driver OOM. [[graft.pipeline.Crawl.ingestBatch]] picks the regime
-   * from the batch's measured text bytes.
+   * Per-version verification: an id re-appended with DIFFERENT content
+   * lives in several installments, and each version scores separately —
+   * pooling the versions' shingles into one union would dilute the
+   * Jaccard below threshold where each version alone would verify. The
+   * routed regime scores the versions that share a band with the batch
+   * doc (its LSH candidates); the shuffled one every version of a
+   * candidate id.
    *
    * Recall contract: candidates are LSH-generated, so a true pair at
    * Jaccard j is found with probability 1-(1-j^r)^b (r rows/band, b
@@ -777,19 +822,304 @@ object Dedup {
    * compactions — [[minhashIndexCompactSizes]] folds size history into
    * installment 0, after which only the full-history read is meaningful.
    */
-  def minhashIndexProbe(spark: org.apache.spark.sql.SparkSession, path: String,
+  def minhashIndexProbe(spark: SparkSession, path: String,
                         newDf: DataFrame, textCol: String, idCol: String,
                         threshold: Double = 0.8,
                         maxBucketSize: Int = 1000,
                         broadcastBatch: Boolean = true,
-                        asOfInstallment: Int = Int.MaxValue): DataFrame = {
+                        asOfInstallment: Int = Int.MaxValue): DataFrame =
+    if (!broadcastBatch)
+      shuffledProbe(spark, path, newDf, textCol, idCol, threshold, maxBucketSize, asOfInstallment)
+    else routedProbeFrame(spark, path, newDf, textCol, idCol, threshold, maxBucketSize,
+      asOfInstallment, ProbePushdownMaxCandidates)
+
+  /** [[minhashIndexProbe]]'s routed regime with the verify's candidate-id
+    * cap as a parameter. */
+  private[dedup] def routedProbeFrame(spark: SparkSession, path: String, newDf: DataFrame,
+                                      textCol: String, idCol: String, threshold: Double,
+                                      maxBucketSize: Int, asOfInstallment: Int,
+                                      maxCandidates: Int): DataFrame = {
+    val meta = readMinhashMeta(spark, path)
+    val docs = batchDocs(newDf.select(col(idCol), bandedShingles(meta)(col(textCol))))
+    val p = routedProbe(spark, path, docs, meta, threshold, maxBucketSize, asOfInstallment,
+      maxCandidates)
+    spark.createDataFrame(p.hits.map(h => Row(h._1, h._2, h._3)).asJava,
+      StructType(Seq(StructField("corpus_id", p.corpusId),
+        StructField("new_id", newDf.schema(idCol).dataType), StructField("jaccard", DoubleType))))
+  }
+
+  /**
+   * Probe `batch` against the index as of `installment - 1` and fold its
+   * survivors in at `installment` — the crawl and streaming ingest step
+   * (same regimes and output as [[minhashIndexProbe]], then
+   * [[minhashIndexAppendAt]]'s replay-idempotent write). `use` runs over
+   * the survivors while they are materialized and must consume them
+   * eagerly: their blocks are released before return. Returns what `use`
+   * returned and the number of survivors appended.
+   *
+   * Routed (`broadcastBatch = true`): the batch is checkpointed once with
+   * its shingle sets and band keys, and the probe runs on the collected
+   * keys. The survivors are a filter of that checkpoint: `sets/` is
+   * written from its shingle column, and `bands/` and `sizes/` from the
+   * band keys the probe already holds — no read-back and no regroup
+   * shuffle. A batch id that appears twice is banded once, from the
+   * union of its rows' shingles, as [[minhashIndexAppendAt]]'s regroup
+   * does. Nine jobs: the `meta/` read, the checkpoint, the batch
+   * collect, the probe's three scans and the three writes (+1 tombstone
+   * collect when `deletes/` exists).
+   *
+   * Shuffled (`broadcastBatch = false`): the lazy probe's duplicates
+   * anti-join the batch, the survivors are checkpointed (the anti-join
+   * would otherwise re-probe an index that already holds the batch), and
+   * [[minhashIndexAppendAt]] writes them.
+   */
+  def minhashIndexIngest[A](spark: SparkSession, path: String, batch: DataFrame,
+                            textCol: String, idCol: String, installment: Int,
+                            threshold: Double = 0.8, maxBucketSize: Int = 1000,
+                            broadcastBatch: Boolean = true)
+                           (use: DataFrame => A): (A, Long) =
+    if (!broadcastBatch) {
+      val dupIds = shuffledProbe(spark, path, batch, textCol, idCol, threshold,
+          maxBucketSize, installment - 1)
+        .select(col("new_id").as(idCol)).distinct()
+      val obs = org.apache.spark.sql.Observation()
+      val fresh = batch.join(dupIds, Seq(idCol), "left_anti")
+        .observe(obs, count(lit(1)).as("n"))
+        .localCheckpoint()
+      try {
+        minhashIndexAppendAt(spark, path, fresh, installment, textCol, idCol)
+        val appended = obs.get("n").asInstanceOf[Long]
+        (use(fresh), appended)
+      } finally release(fresh)
+    } else {
+      val meta = readMinhashMeta(spark, path)
+      val banded = batch.withColumn(BandedCol, bandedShingles(meta)(col(textCol)))
+        .localCheckpoint()
+      try {
+        val docs = batchDocs(banded.select(col(idCol), col(BandedCol)))
+        val dups = routedProbe(spark, path, docs, meta, threshold, maxBucketSize,
+          installment - 1, ProbePushdownMaxCandidates).hits.map(_._2).toSet
+        // a null batch id never matches the anti-join (today's left_anti)
+        val kept = docs.filter(d => d.id == null || !dups(d.id))
+        val fresh =
+          if (dups.isEmpty) banded
+          else banded.filter(col(idCol).isNull || !col(idCol).isin(dups.toSeq: _*))
+        writeBandedInstallment(spark, path, fresh, kept, batch.schema(idCol).dataType,
+          idCol, installment, meta)
+        (use(fresh.drop(BandedCol)), kept.length.toLong)
+      } finally release(banded)
+    }
+
+  /** The checkpoint column holding each batch row's [[bandedShingles]]. */
+  private val BandedCol = "_minhash_banded"
+
+  /** One batch row as the routed probe holds it on the driver: its id, its
+    * distinct shingles ([[shingleSet]]) and its band keys ([[bandKeys]]). */
+  private final case class BatchDoc(id: Any, sh: Array[String], keys: Array[Long])
+
+  /** A routed probe's outcome: the stored id type, and its verified
+    * (corpus id, new id, jaccard) triples. */
+  private final case class Probed(corpusId: DataType, hits: Seq[(Any, Any, Double)])
+
+  /** A text column's shingle set and band keys under the stored `meta`
+    * ((shingleK, numHashes, bands)), computed in one UDF call per row:
+    * struct<_1: array<string> shingles, _2: array<bigint> band keys>. */
+  private def bandedShingles(meta: (Int, Int, Int)): UserDefinedFunction = {
+    val (shingleK, numHashes, bands) = meta
+    udf { (text: String) =>
+      val sh = shingleSet(text, shingleK)
+      (sh, bandKeys(minhashSig(sh, numHashes), bands, numHashes / bands))
+    }.withName("bandedShingles")
+  }
+
+  /** Collect (id, [[bandedShingles]]) rows to the driver: one job. */
+  private def batchDocs(df: DataFrame): Array[BatchDoc] =
+    df.collect().map { r =>
+      val b = r.getStruct(1)
+      BatchDoc(r.get(0), b.getSeq[String](0).toArray, b.getSeq[Long](1).toArray)
+    }
+
+  /** `df` restricted to installments `<= asOf` (no filter for the full
+    * history). */
+  private def asOf(df: DataFrame, asOfInstallment: Int): DataFrame =
+    if (asOfInstallment == Int.MaxValue) df
+    else df.filter(col("installment") <= asOfInstallment)
+
+  /** The routed probe of [[minhashIndexProbe]] over driver-held batch
+    * docs. `maxCandidates` caps the candidate ids whose rows the verify
+    * collects. */
+  private def routedProbe(spark: SparkSession, path: String, docs: Array[BatchDoc],
+                          meta: (Int, Int, Int), threshold: Double, maxBucketSize: Int,
+                          asOfInstallment: Int, maxCandidates: Int): Probed = {
+    val bands = meta._3
+    // the stored id type, from a bands/ file footer (no inference job);
+    // an index with no stored file has nothing to pair
+    val idType = graft.store.parquetSchema(spark, s"$path/bands").map(_("id").dataType)
+    if (idType.isEmpty || docs.isEmpty) return Probed(idType.getOrElse(StringType), Nil)
+    val idT = idType.get
+    def read(table: String, cols: String) =
+      asOf(spark.read.schema(s"$cols, installment INT").parquet(s"$path/$table"), asOfInstallment)
+    // (band, bucket) keys as one sorted array per band, binary-searched map-side
+    def perBand(keys: Iterable[(Int, Long)]): Array[Array[Long]] = {
+      val by = keys.groupBy(_._1)
+      Array.tabulate(bands)(b => by.get(b).map(_.map(_._2).toArray.distinct.sorted)
+        .getOrElse(Array.emptyLongArray))
+    }
+    val docsByKey = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
+    docs.indices.foreach(d => docs(d).keys.indices.foreach(b =>
+      docsByKey.getOrElseUpdate((b, docs(d).keys(b)), mutable.ArrayBuffer.empty) += d))
+    val touched = perBand(docsByKey.keys)
+
+    // 1. hot buckets: each touched bucket's true size is the sum of its
+    // installment deltas, summed per task and then on the driver
+    val sizes = mutable.HashMap.empty[(Int, Long), Long].withDefaultValue(0L)
+    graft.store.scanCollect(read("sizes", "band INT, bucket BIGINT, cnt BIGINT")
+        .select("band", "bucket", "cnt")) { rows =>
+      val part = mutable.HashMap.empty[(Int, Long), Long].withDefaultValue(0L)
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && has(touched, r.getInt(0), r.getLong(1)))
+          part((r.getInt(0), r.getLong(1))) += r.getLong(2)
+      }
+      part.iterator
+    }.foreach { case (k, n) => sizes(k) += n }
+    val kept = perBand(docsByKey.keys.filter(sizes(_) <= maxBucketSize))
+
+    // 2. candidates: stored rows in a kept bucket, tombstoned ids dropped
+    val dead = graft.store.Tombstones.collectIds(spark, path, idT)
+    val stored = graft.store.scanCollect(read("bands", s"id ${idT.sql}, band INT, bucket BIGINT")
+        .select("id", "band", "bucket", "installment")) { rows =>
+      val toId = CatalystTypeConverters.createToScalaConverter(idT)
+      rows.flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2) ||
+            !has(kept, r.getInt(1), r.getLong(2))) None
+        else {
+          val id = toId(r.get(0, idT))
+          if (dead(id)) None else Some((id, r.getInt(3), r.getInt(1), r.getLong(2)))
+        }
+      }
+    }
+    // (stored id, installment, batch row): one version against one doc;
+    // the string compare drops self pairs across id types
+    val cands = stored.iterator.flatMap { case (id, inst, b, bucket) =>
+      docsByKey((b, bucket)).iterator.collect {
+        case d if docs(d).id != null && docs(d).id.toString != id.toString => (id, inst, d)
+      }
+    }.toSet.toSeq
+    if (cands.isEmpty) return Probed(idT, Nil)
+
+    // 3. verify: exact Jaccard per version, best per (id, new_id)
+    val scored = verify(spark, read("sets", s"id ${idT.sql}, sh STRING"), idT, cands, docs,
+      maxCandidates)
+    val best = mutable.LinkedHashMap.empty[(Any, Any), Double]
+    scored.foreach { case ((id, d), j) =>
+      val k = (id, docs(d).id)
+      best(k) = math.max(best.getOrElse(k, j), j)
+    }
+    Probed(idT, best.iterator.collect { case ((id, newId), j) if j >= threshold =>
+      (id, newId, j) }.toSeq)
+  }
+
+  /** Exact Jaccard of each candidate (stored id, installment, batch row)
+    * over `sets` (the `sets/` table read as `idT`), keyed (stored id, batch
+    * row). The scan is partition-pruned to the candidates' installments
+    * and filtered by candidate id; up to `maxCandidates` ids their rows
+    * are collected and scored on the driver, above it one
+    * candidate-bounded collect_list exchange scores them. */
+  private def verify(spark: SparkSession, sets: DataFrame, idT: DataType,
+                     cands: Seq[(Any, Int, Int)], docs: Array[BatchDoc],
+                     maxCandidates: Int): Seq[((Any, Int), Double)] = {
+    val versions = cands.map(c => (c._1, c._2)).toSet
+    val ids = versions.map(_._1).toSeq
+    val pruned = sets.filter(col("installment").isin(versions.map(_._2).toSeq.distinct: _*))
+    if (ids.length <= maxCandidates) {
+      val rows = graft.store.scanCollect(pruned.filter(col("id").isin(ids: _*))
+          .select("id", "installment", "sh")) { rows =>
+        val toId = CatalystTypeConverters.createToScalaConverter(idT)
+        rows.flatMap { r =>
+          val v = (toId(r.get(0, idT)), r.getInt(1))
+          if (!versions(v)) None
+          else Some((v, if (r.isNullAt(2)) null else r.getUTF8String(2).toString))
+        }
+      }
+      // null sh rows are presence rows: the version exists, shingle-less
+      val shingles = mutable.HashMap.empty[(Any, Int), mutable.HashSet[String]]
+      rows.foreach { case (v, sh) =>
+        val s = shingles.getOrElseUpdate(v, mutable.HashSet.empty)
+        if (sh != null) s += sh
+      }
+      cands.flatMap { case (id, inst, d) =>
+        shingles.get((id, inst)).map(s => ((id, d), jaccard(s, docs(d).sh)))
+      }
+    } else {
+      val candDf = spark.createDataFrame(cands.map(c => Row(c._1, c._2, c._3)).asJava,
+        StructType(Seq(StructField("id", idT), StructField("installment", IntegerType),
+          StructField("_d", IntegerType))))
+      val docSets = spark.createDataFrame(cands.map(_._3).distinct
+          .map(d => Row(d, docs(d).sh.toSeq)).asJava,
+        StructType(Seq(StructField("_d", IntegerType),
+          StructField("new_sh", ArrayType(StringType)))))
+      pruned.join(broadcast(candDf), Seq("id", "installment"))
+        .groupBy("id", "installment", "_d").agg(collect_list(col("sh")).as("sh"))
+        .join(broadcast(docSets), "_d")
+        .select(col("id"), col("_d"),
+          size(array_intersect(col("sh"), col("new_sh"))).cast("double") /
+            size(array_union(col("sh"), col("new_sh"))))
+        .collect().toSeq.map(r => ((r.get(0), r.getInt(1)), r.getDouble(2)))
+    }
+  }
+
+  /** True when `key` is in band `band`'s sorted keys. */
+  private def has(keys: Array[Array[Long]], band: Int, key: Long): Boolean =
+    band >= 0 && band < keys.length && java.util.Arrays.binarySearch(keys(band), key) >= 0
+
+  /** Set Jaccard of a stored version's shingles and a batch doc's distinct
+    * shingles — `size(array_intersect) / size(array_union)`. */
+  private def jaccard(stored: collection.Set[String], doc: Array[String]): Double = {
+    val inter = doc.count(stored)
+    inter.toDouble / (stored.size + doc.length - inter)
+  }
+
+  /** The routed ingest's installment, each table as one file (the file
+    * the former read-back regroup's coalesced shuffle wrote): `sets/`
+    * from the survivors' shingle column, exploded and id-sorted as
+    * [[writeInstallment]] writes it, then `bands/` and `sizes/` from the
+    * driver-held band keys. */
+  private def writeBandedInstallment(spark: SparkSession, path: String, fresh: DataFrame,
+                                     kept: Seq[BatchDoc], idType: DataType, idCol: String,
+                                     installment: Int, meta: (Int, Int, Int)): Unit = {
+    val (_, numHashes, bands) = meta
+    fresh.coalesce(1)
+      .select(col(idCol).as("id"), explode_outer(col(s"$BandedCol._1")).as("sh"))
+      .sortWithinPartitions("id")
+      .write.mode("overwrite").parquet(s"$path/sets/installment=$installment")
+    val byId = mutable.LinkedHashMap.empty[Any, mutable.ArrayBuffer[BatchDoc]]
+    kept.foreach(d => byId.getOrElseUpdate(d.id, mutable.ArrayBuffer.empty) += d)
+    val keys = byId.toSeq.map { case (id, ds) =>
+      id -> (if (ds.length == 1) ds.head.keys
+        else bandKeys(minhashSig(ds.flatMap(_.sh).distinct, numHashes), bands, numHashes / bands))
+    }
+    val bandRows = keys.flatMap { case (id, ks) => ks.indices.map(b => Row(id, b, ks(b))) }
+    spark.createDataFrame(bandRows.asJava, StructType(Seq(StructField("id", idType),
+        StructField("band", IntegerType, nullable = false),
+        StructField("bucket", LongType, nullable = false))))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/bands/installment=$installment")
+    val counts = mutable.HashMap.empty[(Int, Long), Long].withDefaultValue(0L)
+    keys.foreach { case (_, ks) => ks.indices.foreach(b => counts((b, ks(b))) += 1) }
+    spark.createDataFrame(counts.toSeq.sortBy(_._1).map { case ((b, k), n) => Row(b, k, n) }.asJava,
+        StructType(Seq(StructField("band", IntegerType), StructField("bucket", LongType),
+          StructField("cnt", LongType, nullable = false))))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/sizes/installment=$installment")
+  }
+
+  /** [[minhashIndexProbe]]'s shuffled regime: every probe join is a
+    * hash-partitioned shuffle on both sides, for a batch too large to
+    * collect or broadcast. */
+  private def shuffledProbe(spark: SparkSession, path: String, newDf: DataFrame,
+                            textCol: String, idCol: String, threshold: Double,
+                            maxBucketSize: Int, asOfInstallment: Int): DataFrame = {
     val (shingleK, numHashes, bands) = readMinhashMeta(spark, path)
     val rowsPerBand = numHashes / bands
-    def batchSide(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
-    def snapshot(df: DataFrame): DataFrame =
-      if (asOfInstallment == Int.MaxValue) df
-      else df.filter(col("installment") <= asOfInstallment)
+    def snapshot(df: DataFrame): DataFrame = asOf(df, asOfInstallment)
 
     // materialize the batch shingles once — they feed BOTH the banding
     // branch and the verification join, and the shingle kernel dominates
@@ -805,43 +1135,33 @@ object Dedup {
         .as(Seq("band", "bucket")))
 
     // true size of each touched bucket = sum of its installment deltas;
-    // the sizes table streams map-side through the touched-bucket join,
-    // and only (band, bucket, cnt) triples for touched buckets reach the
-    // aggregate exchange.
+    // only (band, bucket, cnt) triples for touched buckets reach the
+    // aggregate exchange. Hot buckets are removed from the BATCH side of
+    // the main join: stored rows in a hot bucket simply never match.
     val touched = newBanded.select("band", "bucket").distinct()
     val hot = snapshot(spark.read.parquet(s"$path/sizes"))
-      .join(batchSide(touched), Seq("band", "bucket"))
+      .join(touched, Seq("band", "bucket"))
       .groupBy("band", "bucket").agg(sum("cnt").as("n"))
       .filter(col("n") > maxBucketSize)
       .select("band", "bucket")
-    val keptBanded = newBanded.join(batchSide(hot), Seq("band", "bucket"), "left_anti")
+    val keptBanded = newBanded.join(hot, Seq("band", "bucket"), "left_anti")
 
-    // tombstoned docs can no longer pair (takedown semantics — applies to
-    // snapshots too); sets/ needs no filter: pairs gate the sets join on
-    // id, so a deleted doc's shingle row never matches. The sizes sums
-    // already carry the delete's negative deltas.
+    // sets/ needs no tombstone filter: pairs gate the sets join on id, so
+    // a deleted doc's shingle row never matches
     val stored = graft.store.Tombstones.filter(spark, path,
       snapshot(spark.read.parquet(s"$path/bands")), "id")
     val pairs = stored
-      .join(batchSide(keptBanded), Seq("band", "bucket"))
-      // string-compare: stored and batch id TYPES may differ (a
-      // long-keyed corpus probed by URL-keyed batches); Spark's implicit
-      // long<->string coercion would throw on non-numeric ids
+      .join(keptBanded, Seq("band", "bucket"))
       .filter(col("id").cast("string") =!= col("new_id").cast("string"))
       .select(col("id"), col("new_id"))
       .distinct()
       .localCheckpoint() // candidate-bounded; feeds the id collect + join
 
-    // Candidate-id pushdown: the stored shingle table grows with the
-    // CORPUS while candidates are bounded by the batch, so a full sets/
-    // scan per probe is the one stored-side cost that scales the wrong
-    // way (a billion-doc corpus is ~10^12 shingle rows; candidates are
-    // ~batch-sized). When the candidate set is driver-sized, push the
-    // ids into the scan as a filter — sets/ files are range-clustered by
-    // id at write, so parquet row-group min/max skip everything outside
-    // the candidates' id range (Spark pushes the In's [min,max] range
-    // once it exceeds the parquet in-filter threshold). Above the cap,
-    // fall back to the plain join — identical output.
+    // Candidate-id pushdown: when the candidate set is driver-sized, push
+    // the ids into the sets/ scan as a filter — sets/ files are sorted by
+    // id within partitions at write, so parquet row-group min/max skip
+    // everything outside the candidates' id range. Above the cap, the
+    // plain join — identical output.
     val candIds = pairs.select("id").distinct()
       .limit(ProbePushdownMaxCandidates + 1).collect().map(_.get(0))
     val storedSetsAll = snapshot(spark.read.parquet(s"$path/sets"))
@@ -850,20 +1170,13 @@ object Dedup {
         storedSetsAll.filter(col("id").isin(candIds.toIndexedSeq: _*))
       else storedSetsAll
 
-    // sets/ is exploded (one row per stored shingle — see the layout
-    // doc); the broadcast pair join keeps it map-side and candidate-only,
-    // then collect_list regroups ONLY the candidate docs' shingles (a
-    // candidate-bounded exchange, never the stored corpus). Regroup keys
-    // include the installment: an id re-appended with DIFFERENT content
-    // legitimately exists in several installments, and pooling the
-    // versions' shingles into one union dilutes the Jaccard below
-    // threshold where each version alone would verify — each version
-    // scores separately and the best match decides.
+    // collect_list regroups ONLY the candidate docs' exploded shingles,
+    // per (id, installment): each version of a re-appended id scores alone
     storedSets
-      .join(batchSide(pairs), "id")
+      .join(pairs, "id")
       .groupBy("id", "installment", "new_id")
       .agg(collect_list(col("sh")).as("sh"))
-      .join(batchSide(newShingled), "new_id")
+      .join(newShingled, "new_id")
       .withColumn("jaccard",
         size(array_intersect(col("sh"), col("new_sh"))).cast("double") /
           size(array_union(col("sh"), col("new_sh"))))

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{TopK, VectorOps}
@@ -547,33 +546,30 @@ object SimilarityIndex {
       .filter(col("list_id").isin(probing.indices.filter(probing(_).nonEmpty): _*))
       .select(col(corpusId).cast("long"), col(payload), col("list_id").cast("int"))
     val nGroups = keys.length
-    val qe = pruned.queryExecution
-    val partials = SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.toRdd.mapPartitions { rows =>
-        val bufs = Array.fill(nGroups)(TopK.emptyBuf)
-        rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1) &&
-              java.util.Arrays.binarySearch(dead, r.getLong(0)) < 0) {
-            val row = s.row(r)
-            if (row != null) {
-              val id = r.getLong(0)
-              val list = r.getInt(2)
-              val qsOfList = probing(list)
-              var i = 0
-              while (i < qsOfList.length) {
-                val q = qsOfList(i)
-                val st = states(q)
-                if (st != null && s.admits(id, st)) {
-                  val g = group(q)
-                  bufs(g) = TopK.insert(bufs(g), s.score(row, st, list), id, k)
-                }
-                i += 1
+    val partials = graft.store.scanCollect(pruned) { rows =>
+      val bufs = Array.fill(nGroups)(TopK.emptyBuf)
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1) &&
+            java.util.Arrays.binarySearch(dead, r.getLong(0)) < 0) {
+          val row = s.row(r)
+          if (row != null) {
+            val id = r.getLong(0)
+            val list = r.getInt(2)
+            val qsOfList = probing(list)
+            var i = 0
+            while (i < qsOfList.length) {
+              val q = qsOfList(i)
+              val st = states(q)
+              if (st != null && s.admits(id, st)) {
+                val g = group(q)
+                bufs(g) = TopK.insert(bufs(g), s.score(row, st, list), id, k)
               }
+              i += 1
             }
           }
         }
-        Iterator.single(bufs)
-      }.collect()
+      }
+      Iterator.single(bufs)
     }
     val merged = Array.fill(nGroups)(TopK.emptyBuf)
     partials.foreach(p => p.indices.foreach(g => merged(g) = TopK.merge(merged(g), p(g), k)))

@@ -85,9 +85,9 @@ object Crawl {
     * shape (the `format("warc")` source or `Warc.warcRecords`). If the
     * index does not exist yet, the batch BOOTSTRAPS it
     * (`minhashIndexBuild` at installment 0 — every doc is fresh);
-    * otherwise the batch probes as-of `installment - 1` and folds
-    * survivors in at `installment` via the replay-idempotent
-    * `minhashIndexAppendAt` (same-number retries overwrite themselves).
+    * otherwise [[graft.dedup.Dedup.minhashIndexIngest]] probes the batch
+    * as-of `installment - 1` and folds survivors in at `installment`
+    * (replay-idempotent: same-number retries overwrite themselves).
     *
     * `use` runs over the survivors WHILE they are materialized (write
     * them, count them, collect a small projection); they are released
@@ -430,14 +430,13 @@ object Crawl {
       val empties = obsLong(extObs, "empty")
       val textBytes = obsLong(extObs, "bytes")
       val noindexed = obsLong(extObs, "noidx")
-      // broadcast the batch through the probe only when it is actually
-      // broadcastable: the probe ships the batch's SHINGLE SETS (several
-      // times the text bytes) to every executor, so a bulk backfill batch
-      // (GB-scale) must take the probe's hash-shuffled dual path instead —
-      // identical output, no broadcast OOM (measured: a 240 MB-of-text
-      // batch is a ~700 MB shingle-set broadcast). Streaming micro-batches
-      // stay comfortably under the default 64 MB and keep the
-      // stored-side-never-shuffles fast path.
+      // route the batch through the probe on the driver only when it is
+      // driver-sized: the routed probe collects the batch's SHINGLE SETS
+      // (several times the text bytes), so a bulk backfill batch
+      // (GB-scale) must take the probe's hash-shuffled regime instead —
+      // no driver OOM (measured: a 240 MB-of-text batch is ~700 MB of
+      // shingle sets). Streaming micro-batches stay comfortably under the
+      // default 64 MB and keep the routed, exchange-free probe.
       val broadcastBatch = textBytes <= broadcastMaxBytes
       // robots-meta noindex pages are fetched (ledger) and their links
       // may feed the frontier, but they must not become corpus documents
@@ -460,28 +459,13 @@ object Crawl {
           responses - empties - noindexed, redirectCount, nonTextCount,
           noindexed, revisitCount, imagePairCount, mediaPairCount))
       } else {
-        val dupIds = graft.dedup.Dedup.minhashIndexProbe(spark, indexPath,
-            docs, "text", "url", threshold, maxBucketSize,
-            broadcastBatch = broadcastBatch,
-            asOfInstallment = installment - 1)
-          .select(col("new_id").as("url")).distinct()
-        // the survivor count rides the fresh checkpoint as an observed
-        // metric (r18) — the former fresh.count() was one more action
-        // over blocks the checkpoint had just materialized
-        val fObs = org.apache.spark.sql.Observation()
-        val fresh = docs.join(dupIds, Seq("url"), "left_anti")
-          .observe(fObs, count(lit(1)).as("n"))
-          .localCheckpoint()
-        try {
-          graft.dedup.Dedup.minhashIndexAppendAt(spark, indexPath, fresh,
-            installment, "text", "url")
-          val appended = obsLong(fObs, "n")
-          val result = use(fresh)
-          (result, BatchStats(responses, fallbacks, empties,
-            responses - empties - noindexed - appended, appended,
-            redirectCount, nonTextCount, noindexed, revisitCount,
-            imagePairCount, mediaPairCount))
-        } finally graft.dedup.Dedup.release(fresh)
+        val (result, appended) = graft.dedup.Dedup.minhashIndexIngest(spark,
+            indexPath, docs, "text", "url", installment, threshold,
+            maxBucketSize, broadcastBatch)(use)
+        (result, BatchStats(responses, fallbacks, empties,
+          responses - empties - noindexed - appended, appended,
+          redirectCount, nonTextCount, noindexed, revisitCount,
+          imagePairCount, mediaPairCount))
       }
     } finally {
       graft.dedup.Dedup.release(ext)

@@ -94,12 +94,20 @@ object Tombstones {
     * (narrower integer ids widen on read), so no schema-inference job
     * runs, and the distinct happens on the driver. */
   def collectLongIds(spark: SparkSession, path: String): Array[Long] =
-    if (!any(spark, path)) Array.emptyLongArray
-    else {
-      import spark.implicits._
-      spark.read.schema("id BIGINT").parquet(deletesDir(path))
-        .where(col("id").isNotNull).select("id").as[Long].collect().distinct.sorted
-    }
+    collectIds(spark, path, org.apache.spark.sql.types.LongType)
+      .iterator.map(_.asInstanceOf[Long]).toArray.sorted
+
+  /** The full tombstone set collected to the driver as distinct non-null
+    * ids read as `idType` (a declared read: no schema-inference job);
+    * empty when no delete has ever landed — for scans that drop
+    * tombstoned rows themselves (the routed MinHash probe). */
+  def collectIds(spark: SparkSession, path: String,
+                 idType: org.apache.spark.sql.types.DataType): Set[Any] =
+    if (!any(spark, path)) Set.empty
+    else spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", idType))))
+      .parquet(deletesDir(path)).where(col("id").isNotNull).select("id")
+      .collect().map(_.get(0)).toSet
 
   /** The tombstone set from installments STRICTLY BEFORE `installment` —
     * what the self-enforcing `*DeleteAt` forms anti-join their incoming

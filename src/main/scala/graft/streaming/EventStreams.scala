@@ -379,20 +379,18 @@ object EventStreams extends Serializable {
 
   /**
    * Continuous ingest dedup — the daily-ingest loop the appendable
-   * MinHash index exists for, run per micro-batch: probe the batch
-   * against the PERSISTED index (graft.dedup.Dedup.minhashIndexProbe —
-   * stored corpus read map-side, never re-banded), drop batch rows with
-   * a stored near-duplicate, fold the survivors into the index
-   * (minhashIndexAppend — one new installment, nothing rewritten), and
-   * emit exactly the surviving rows to the sink. State is the index
-   * itself: durable, shared, resumable — no Spark state store grows with
-   * corpus size, which is what breaks `dropDuplicates` dedup at 100 TB.
+   * MinHash index exists for, run per micro-batch through
+   * [[graft.dedup.Dedup.minhashIndexIngest]]: probe the batch against the
+   * PERSISTED index (routed on the driver's band keys — the stored
+   * corpus is read map-side, never re-banded or shuffled), drop batch
+   * rows with a stored near-duplicate, fold the survivors into the index
+   * (one new installment, nothing rewritten), and emit exactly the
+   * surviving rows to the sink. State is the index itself: durable,
+   * shared, resumable — no Spark state store grows with corpus size,
+   * which is what breaks `dropDuplicates` dedup at 100 TB.
    *
-   * The survivors are materialized (localCheckpoint) BEFORE the append:
-   * the anti-join is otherwise lazy, and evaluating it after the append
-   * would re-probe against an index that now contains the batch itself —
-   * every row would look like its own duplicate. Blocks are released as
-   * soon as the sink callback returns.
+   * The survivors are materialized BEFORE the append, and their blocks
+   * are released (`Dedup.release`) as soon as the sink callback returns.
    *
    * Near-dup semantics are batch-vs-STORED: rows inside one micro-batch
    * that duplicate each other both survive (then coexist in the index,
@@ -424,18 +422,9 @@ object EventStreams extends Serializable {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val inst = StreamInstallmentBase + batchId.toInt
-        val dupIds = graft.dedup.Dedup.minhashIndexProbe(spark, indexPath,
-          batch.toDF(), textCol, idCol, threshold, maxBucketSize,
-          asOfInstallment = inst - 1)
-          .select(col("new_id").as(idCol)).distinct()
-        val fresh = batch.toDF().join(dupIds, Seq(idCol), "left_anti")
-          .localCheckpoint()
-        try {
-          graft.dedup.Dedup.minhashIndexAppendAt(spark, indexPath, fresh,
-            inst, textCol, idCol)
-          sink(fresh, batchId)
-        } finally fresh.unpersist()
+        graft.dedup.Dedup.minhashIndexIngest(spark, indexPath, batch.toDF(),
+          textCol, idCol, StreamInstallmentBase + batchId.toInt, threshold,
+          maxBucketSize)(sink(_, batchId))
         ()
     }
 

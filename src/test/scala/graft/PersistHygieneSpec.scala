@@ -90,4 +90,29 @@ class PersistHygieneSpec extends SparkTestBase {
       Crawl.resolveRedirects(edges, maxHops = 3).count()
     }
   }
+
+  test("dedup ingest stream releases its survivors' checkpoint after a micro-batch") {
+    import graft.streaming.EventStreams
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val idxPath = java.nio.file.Files.createTempDirectory("hygiene-ingest")
+      .resolve("idx").toString
+    Dedup.minhashIndexBuild(
+      Seq((1L, "the quick brown fox jumps over the lazy dog tonight")).toDF("doc_id", "text"),
+      "text", "doc_id", idxPath, shingleK = 3, numHashes = 64, bands = 32)
+    assertNoNewPersists("dedupIngestStream") {
+      val input = MemoryStream[(Long, String)]
+      var emitted = -1L
+      val q = EventStreams.dedupIngestStream(spark, input.toDF().toDF("doc_id", "text"),
+        idxPath, "text", "doc_id", threshold = 0.5) { (fresh, _) => emitted = fresh.count() }
+        .start()
+      try {
+        input.addData((101L, "the quick brown fox jumps over the lazy dog today"),
+          (102L, "a totally new take on distributed columnar indexes"))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(emitted === 1L)
+    }
+  }
 }

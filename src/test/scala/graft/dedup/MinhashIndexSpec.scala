@@ -365,23 +365,150 @@ class MinhashIndexSpec extends SparkTestBase {
   test("the stored index is never shuffled by a probe — batch side broadcasts") {
     val path = tmpPath("mh-idx-plan")
     Dedup.minhashIndexBuild(corpus, "text", "doc_id", path)
-    // append must preserve the plan shape, so pin it on an appended index
+    // append must preserve the scan shape, so pin it on an appended index
     Dedup.minhashIndexAppend(spark, path,
       Seq((4L, "a fourth document appended later")).toDF("doc_id", "text"),
       "text", "doc_id")
     // the batch must generate candidates: with zero candidate ids the
-    // pushdown filter constant-folds the verify join away entirely
+    // verify scan does not run at all
     val batch = Seq(
       (101L, "the quick brown fox jumps over the lazy dog today"))
       .toDF("doc_id", "text")
-    val plan = Dedup.minhashIndexProbe(spark, path, batch, "text", "doc_id")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast probe:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"stored side must not shuffle:\n$plan")
-    // the candidate-id pushdown must reach the stored-sets parquet scan:
-    // the verify step's cost is then ∝ candidates, not corpus
-    assert(plan.contains("In(id") || plan.contains("EqualTo(id"),
-      s"candidate ids must push into the sets/ scan:\n$plan")
+    val (hits, ran) = graft.Ran(spark) {
+      Dedup.minhashIndexProbe(spark, path, batch, "text", "doc_id", threshold = 0.5)
+        .collect()
+    }
+    assert(hits.map(_.getLong(0)).toSeq === Seq(1L))
+    // the probe scanned each stored table map-side: no shuffle-map stage
+    // over bands/, sets/ or sizes/ (nor anywhere else)
+    Seq("bands", "sets", "sizes").foreach(d =>
+      assert(ran.scansOf(d).nonEmpty, s"no $d/ scan ran"))
+    assert(ran.shuffleStages === 0, s"${ran.shuffleStages} shuffle-map stages ran")
+    // the candidate filter reaches the stored-sets parquet scan: the
+    // verify read is then ∝ candidates, not corpus — the candidate ids
+    // as a data filter, their installments as a partition filter
+    ran.scansOf("sets").foreach { scan =>
+      assert(scan.dataFilters.exists(_.references.exists(_.name == "id")),
+        s"candidate ids must filter the sets/ scan:\n$scan")
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "installment")),
+        s"candidate installments must prune the sets/ scan:\n$scan")
+    }
+  }
+
+  test("one probe runs at most 5 jobs (+1 with deletes) and no shuffle stage") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val batch = docs.filter($"doc_id" % 25 === 0)
+      .select(($"doc_id" + 1000000L).as("doc_id"),
+        expr("substr(text, 1, cast(floor(length(text)*0.7) as int))").as("text"))
+    val path = tmpPath("mh-idx-budget")
+    Dedup.minhashIndexBuild(docs.filter($"doc_id" % 2 === 0), "text", "doc_id", path,
+      shingleK = 4, numHashes = 128, bands = 64)
+    Dedup.minhashIndexAppend(spark, path, docs.filter($"doc_id" % 2 === 1),
+      "text", "doc_id")
+    def probe() = graft.Ran(spark) {
+      Dedup.minhashIndexProbe(spark, path, batch, "text", "doc_id", threshold = 0.3)
+        .collect()
+    }
+    val (hits, ran) = probe()
+    assert(hits.nonEmpty)
+    assert(ran.jobs <= 5, s"${ran.jobs} jobs")
+    assert(ran.shuffleStages === 0, s"${ran.shuffleStages} shuffle-map stages")
+    Dedup.minhashIndexDelete(spark, path, docs.filter($"doc_id" % 7 === 0).select("doc_id"))
+    val (afterDelete, ranDel) = probe()
+    assert(afterDelete.nonEmpty && afterDelete.length < hits.length)
+    assert(ranDel.jobs <= 6, s"${ranDel.jobs} jobs with deletes/")
+    assert(ranDel.shuffleStages === 0, s"${ranDel.shuffleStages} shuffle-map stages")
+  }
+
+  test("probe plus AppendAt runs at most 9 jobs") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val batch = docs.filter($"doc_id" % 5 === 0)
+      .select(($"doc_id" + 1000000L).as("doc_id"),
+        expr("substr(text, 1, cast(floor(length(text)*0.7) as int))").as("text"))
+    val path = tmpPath("mh-idx-ingest-budget")
+    // odd source docs are not stored: their batch copies survive
+    Dedup.minhashIndexBuild(docs.filter($"doc_id" % 2 === 0), "text", "doc_id", path,
+      shingleK = 4, numHashes = 128, bands = 64)
+    // a `use` that runs nothing: the budget is the probe's and the append's
+    val ((_, appended), ran) = graft.Ran(spark) {
+      Dedup.minhashIndexIngest(spark, path, batch, "text", "doc_id", 1,
+        threshold = 0.3)(_ => ())
+    }
+    assert(appended > 0 && appended < batch.count())
+    assert(spark.read.parquet(s"$path/sets").filter($"installment" === 1)
+      .select("id").distinct().count() === appended)
+    assert(ran.jobs <= 9, s"${ran.jobs} jobs")
+    assert(ran.shuffleStages === 0, s"${ran.shuffleStages} shuffle-map stages")
+  }
+
+  test("driver-held band keys equal the bandHashes column on seeded text") {
+    val rnd = new scala.util.Random(17)
+    val words = Vector.tabulate(300)(i => s"w$i")
+    val texts = (0 until 300).map(_ =>
+      Seq.fill(rnd.nextInt(60))(words(rnd.nextInt(words.length))).mkString(" "))
+    for ((numHashes, bands, k) <- Seq((64, 16, 3), (64, 32, 3), (128, 64, 4))) {
+      val rows = texts.toDF("text")
+        .select(col("text"), Dedup.bandHashes(Dedup.minhashSigUdf(numHashes)(
+          Dedup.shinglesUdf(k)(col("text"))), bands, numHashes / bands).as("b"))
+        .collect()
+      rows.foreach { r =>
+        val keys = Dedup.bandKeys(Dedup.minhashSig(Dedup.shingleSet(r.getString(0), k),
+          numHashes), bands, numHashes / bands)
+        assert(keys.toSeq === r.getSeq[Long](1), s"$numHashes/$bands: '${r.getString(0)}'")
+      }
+    }
+  }
+
+  test("ingest writes the installment AppendAt writes, and keeps what the probe does not flag") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val near = docs.filter($"doc_id" % 10 === 0)
+      .select(($"doc_id" + 1000000L).as("doc_id"),
+        expr("substr(text, 1, cast(floor(length(text)*0.7) as int))").as("text"))
+    // an id twice in one batch is banded once, from its rows' union
+    val twice = Seq((2000001L, "one half of a batch id that appears twice here"),
+      (2000001L, "and the other half of that very same batch id")).toDF("doc_id", "text")
+    val batch = near.unionByName(docs.filter($"doc_id" % 10 === 1)
+      .select(($"doc_id" + 3000000L).as("doc_id"), $"text")).unionByName(twice)
+    def built(name: String) = {
+      val p = tmpPath(name)
+      Dedup.minhashIndexBuild(docs.filter($"doc_id" % 10 =!= 1), "text", "doc_id", p,
+        shingleK = 4, numHashes = 128, bands = 64)
+      p
+    }
+    val routed = built("mh-ingest-routed")
+    val flagged = Dedup.minhashIndexProbe(spark, routed, batch, "text", "doc_id",
+      threshold = 0.3).select("new_id").as[Long].collect().toSet
+    val (emitted, appended) = Dedup.minhashIndexIngest(spark, routed, batch, "text",
+      "doc_id", 1, threshold = 0.3)(_.select("doc_id").as[Long].collect().toSeq)
+    val want = batch.select("doc_id").as[Long].collect().toSeq.filterNot(flagged)
+    assert(flagged.nonEmpty && emitted.sorted === want.sorted && appended === want.length)
+
+    val viaAppendAt = built("mh-ingest-appendat")
+    Dedup.minhashIndexAppendAt(spark, viaAppendAt,
+      batch.filter(!$"doc_id".isin(flagged.toSeq: _*)), 1, "text", "doc_id")
+    for (t <- Seq("sets", "bands", "sizes")) {
+      def rows(p: String) = spark.read.parquet(s"$p/$t").collect().map(_.toSeq).toSeq
+        .groupBy(identity).view.mapValues(_.size).toMap
+      assert(rows(routed) === rows(viaAppendAt), s"$t/ differs")
+    }
+  }
+
+  test("above the candidate cap the verify exchange returns the same pairs") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val batch = docs.filter($"doc_id" % 50 === 0)
+      .select(($"doc_id" + 1000000L).as("doc_id"),
+        expr("substr(text, 1, cast(floor(length(text)*0.7) as int))").as("text"))
+    val path = tmpPath("mh-idx-cap")
+    Dedup.minhashIndexBuild(docs, "text", "doc_id", path,
+      shingleK = 4, numHashes = 128, bands = 64)
+    def probe(cap: Int) = graft.Ran(spark) {
+      Dedup.routedProbeFrame(spark, path, batch, "text", "doc_id", 0.3, 1000,
+        Int.MaxValue, cap).as[(Long, Long, Double)].collect().toSet
+    }
+    val (pushed, ranPushed) = probe(Dedup.ProbePushdownMaxCandidates)
+    val (exchanged, ranExchanged) = probe(0)
+    assert(pushed.nonEmpty && exchanged === pushed)
+    assert(ranPushed.shuffleStages === 0 && ranExchanged.shuffleStages >= 1)
   }
 
   test("sets/ stores EXPLODED shingle rows — row width bounded at any doc size") {

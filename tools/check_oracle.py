@@ -9,12 +9,14 @@ import json, sys, subprocess, os, glob
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+# the checkout this script sits in, so any copy of the tree verifies itself
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 def run_verify():
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT_DIR}']
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-3000:])
         sys.exit("verify run failed")
