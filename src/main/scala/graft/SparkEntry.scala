@@ -1214,26 +1214,29 @@ object SparkEntry {
     }),
 
     // NOTE (r13): the FLAT int8 probe-prune (`emb_probe_prune`,
-    // |batch|×|stored| integer scoring — measured 56× at sf1, never the
-    // 100 TB path) was a declared query through r12 as the exactness
-    // control for the routed forms below. With two rounds of green
-    // history on `emb_probe_prune_routed` (the production nprobe=4
-    // shape) it is demoted to spec coverage only — QuantizeSpec pins
-    // `int8ProbePrune`'s policy, zero-norm, reserved-column and
-    // flat-vs-routed-equality arms; the engine path is unchanged.
+    // |batch|×|stored| integer scoring, never the 100 TB path) was a
+    // declared query through r12 as the exactness control for the routed
+    // forms below. With two rounds of green history on
+    // `emb_probe_prune_routed` (the production nprobe=4 shape) it is
+    // demoted to spec coverage only — QuantizeSpec pins `int8ProbePrune`'s
+    // policy, zero-norm, column-passthrough and flat-vs-routed-equality
+    // arms, and an integer reference through appends, deletes and asOf.
+    // Its flat probe is `emb_incremental_dedup` above: 4.1 s at sf1 on
+    // the routed kernel (min of 3 runs, 4 cores).
 
     // NOTE (r14): the EXHAUSTIVE IVF-SQ8 probe-prune
     // (`emb_ivfsq8_probe_prune`, nprobe = nlist = 16 — every list
-    // scanned, work = |batch|×|stored|, measured 7.8× at sf1, never the
-    // 100 TB shape) followed the flat probe into spec-only coverage (the
-    // r13 demotion precedent): QuantizeSpec's "ivfSq8ProbePrune at
-    // nprobe=nlist equals the flat prune" arm pins the exactness
-    // contract, and the routed production form below keeps the oracle.
+    // scanned, work = |batch|×|stored|, never the 100 TB shape) followed
+    // the flat probe into spec-only coverage (the r13 demotion
+    // precedent): QuantizeSpec's "ivfSq8ProbePrune at nprobe=nlist
+    // equals the flat prune" arm pins the exactness contract, and the
+    // routed production form below keeps the oracle.
 
     // THE PRODUCTION CONFIGURATION of ingest pruning -- nprobe << nlist,
     // the shape that runs at 100 TB (per-batch cost |probed lists|, ~4/16
-    // of the corpus instead of all of it; measured 24-33 s vs 50+ s at
-    // sf1). Exactness still holds on THIS fixture deterministically:
+    // of the corpus instead of all of it; 9.4 s at sf1 on the routed
+    // kernel, build included, min of 3 runs on 4 cores). Exactness still
+    // holds on THIS fixture deterministically:
     // every planted >= 0.98 pair is a scalar multiple (x2, -1x, -2x), so
     // batch vector and stored twin have IDENTICAL direction and route to
     // IDENTICAL top-nprobe centroid lists -- the stored twin's own list

@@ -45,9 +45,15 @@ object TopK {
     * of every persisted vector search
     * ([[graft.index.SimilarityIndex.routedTopK]]) both rank through it. `b` is never mutated; an insert that cannot make the cut
     * returns `b` itself. */
-  def insert(b: Buf, score: Double, id: Long, k: Int): Buf = {
+  def insert(b: Buf, score: Double, id: Long, k: Int): Buf =
+    insert(b, score, id, k, Double.NegativeInfinity)
+
+  /** [[insert]] where a score below `floor` does not make the cut either:
+    * that test runs while `b` has room, and once `b` is full its last
+    * entry, at or above the floor, is the bar. */
+  private[graft] def insert(b: Buf, score: Double, id: Long, k: Int, floor: Double): Buf = {
     val n = b.ids.length
-    if (n >= k && !beats(score, id, b.scores(n - 1), b.ids(n - 1))) b
+    if (if (n < k) score < floor else !beats(score, id, b.scores(n - 1), b.ids(n - 1))) b
     else {
       var pos = n
       while (pos > 0 && beats(score, id, b.scores(pos - 1), b.ids(pos - 1))) pos -= 1

@@ -1,9 +1,13 @@
 package graft.index
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.TopK
 
@@ -335,8 +339,9 @@ object Quantize {
   }
 
   /** Int8 codes with their integer self-dot — either side of a quantized
-    * cosine; zero-norm codes (an all-zero vector) have none. */
-  private final case class Coded(codes: Array[Int], normSq: Long)
+    * cosine; zero-norm codes (an all-zero vector) have none. A probe's
+    * batch row carries its id as `self` ([[Sq8ProbeScorer]]). */
+  private final case class Coded(codes: Array[Int], normSq: Long, self: Long = 0L)
 
   private def coded(c: Array[Int]): Coded = {
     val n = normSq(c)
@@ -346,13 +351,27 @@ object Quantize {
   /** The quantized cosine for [[SimilarityIndex.routedTopK]] over packed
     * `codes`: the query quantizes under the stored `scale`; zero-norm rows
     * and queries decline. */
-  private def sq8Scorer(scale: Double): SimilarityIndex.RoutedScorer[Coded, Coded] =
-    new SimilarityIndex.RoutedScorer[Coded, Coded] {
-      def query(r: Row, v: Seq[Float]): Coded = if (v == null) null else coded(codes(scale, v))
-      def row(r: InternalRow): Coded = coded(unpack(r.getBinary(1)))
-      def score(c: Coded, q: Coded, list: Int): Double =
-        dot(c.codes, q.codes).toDouble / (math.sqrt(c.normSq.toDouble) * math.sqrt(q.normSq.toDouble))
+  private class Sq8Scorer(scale: Double) extends SimilarityIndex.RoutedScorer[Coded, Coded] {
+    def query(r: Row, v: Seq[Float]): Coded = if (v == null) null else coded(codes(scale, v))
+    def row(r: InternalRow): Coded = coded(unpack(r.getBinary(1)))
+    def score(c: Coded, q: Coded, list: Int): Double =
+      dot(c.codes, q.codes).toDouble / (math.sqrt(c.normSq.toDouble) * math.sqrt(q.normSq.toDouble))
+  }
+
+  /** [[Sq8Scorer]] for a near-dup probe's batch: a batch row with a null id
+    * declines, and a stored row never scores against the batch row of its
+    * own id. */
+  private final class Sq8ProbeScorer(scale: Double) extends Sq8Scorer(scale) {
+    override def query(r: Row, v: Seq[Float]): Coded = {
+      val c = if (r.isNullAt(0)) null else super.query(r, v)
+      if (c == null) null
+      else c.copy(self = r.get(0) match {
+        case id: java.lang.Number => id.longValue
+        case id => throw new IllegalArgumentException(s"near-dup probe ids must be integral, got $id")
+      })
     }
+    override def admits(id: Long, q: Coded): Boolean = id != q.self
+  }
 
   /** The routed quantized pass of every int8 search, over the packed
     * `codes` of `scan`: its routing and its top-`k` buffers. */
@@ -363,7 +382,7 @@ object Quantize {
     val scale = readScale(spark, path)
     val routing = SimilarityIndex.route(spark, path, centers, queries, nprobe, queryId, queryVec)
     (routing, SimilarityIndex.routedTopK(spark, scan, "codes", corpusId, routing, k,
-      _ => sq8Scorer(scale)))
+      _ => new Sq8Scorer(scale)))
   }
 
   /** [[sq8Pass]] over an IVF-SQ8 index's stored centroids and `codes/`. */
@@ -468,42 +487,26 @@ object Quantize {
    * [[int8TopK]]'s integer arithmetic (one double division at the end),
    * so the threshold decision reproduces bit-for-bit on any engine.
    *
-   * Scale shape: the quantized batch BROADCASTS into the scoring join and
-   * the stored code scan streams map-side at 1 B/dim — the corpus never
-   * shuffles (the probe-path invariant). The flat scan prices each probe
-   * at one read of the stored codes; when that is too much, route the
-   * batch through [[ivfSq8Search]]'s partition-pruned lists instead and
-   * accept the IVF recall contract. Batch ids must be NEW ids (the
-   * [[int8Append]] contract); zero-norm and null batch rows pair with
-   * nothing. `asOfInstallment` pins the stored side to a snapshot
-   * (partition-pruned, valid between compactions).
+   * Scale shape: [[int8SearchIndexed]]'s routed kernel over the index as
+   * one list, with `threshold` as its score floor instead of a top-k cut:
+   * the batch routes on the driver, the stored code scan streams map-side
+   * at 1 B/dim, and each task's pairs merge on the driver — nothing
+   * shuffles. The flat scan prices each probe at one read of the stored
+   * codes; when that is too much, probe [[ivfSq8NearDupProbe]]'s
+   * partition-pruned lists instead and accept the IVF recall contract.
+   * EAGER: returns a local frame (corpus_id as stored, new_id as given,
+   * cosine_q double). Batch ids must be NEW integral ids (the
+   * [[int8Append]] contract); a stored row never pairs with the batch row
+   * of its own id, zero-norm, null and null-id batch rows pair with
+   * nothing, and tombstoned rows never pair. `asOfInstallment` pins the
+   * stored side to a snapshot (partition-pruned, valid between compactions).
    */
   def int8NearDupProbe(spark: SparkSession, path: String, newVecs: DataFrame,
                        threshold: Double,
                        corpusId: String = "vec_id",
                        idCol: String = "vec_id", vecCol: String = "embedding",
-                       asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    val scale = readScale(spark, path)
-    val codes0 = spark.read.parquet(s"$path/codes")
-    val codes1 = if (asOfInstallment == Int.MaxValue) codes0
-      else codes0.filter(col("installment") <= asOfInstallment)
-    // tombstoned rows can no longer anchor or pair (takedown semantics)
-    val codes = graft.store.Tombstones.filter(spark, path, codes1, corpusId)
-    val c = codes
-      .select(col(corpusId).as("corpus_id"), unpackCodesUdf(col("codes")).as("_cc"))
-      .withColumn("_cn", normSqUdf(col("_cc")))
-      .filter(col("_cn") > 0)
-    val q = newVecs
-      .select(col(idCol).as("new_id"), codesUdf(scale)(col(vecCol)).as("_qc"))
-      .withColumn("_qn", normSqUdf(col("_qc")))
-      .filter(col("_qn") > 0)
-    c.join(broadcast(q), col("corpus_id") =!= col("new_id"))
-      .withColumn("_dot", dotUdf(col("_cc"), col("_qc")))
-      .withColumn("cosine_q", col("_dot").cast("double") /
-        (sqrt(col("_cn").cast("double")) * sqrt(col("_qn").cast("double"))))
-      .filter(col("cosine_q") >= threshold)
-      .select(col("corpus_id"), col("new_id"), col("cosine_q"))
-  }
+                       asOfInstallment: Int = Int.MaxValue): DataFrame =
+    int8ProbePass(spark, path, newVecs, threshold, corpusId, idCol, vecCol, asOfInstallment).pairs
 
   /**
    * Prune an incoming batch against the persisted index — the one-call
@@ -517,12 +520,13 @@ object Quantize {
    * semanticDedup rule). Survivors keep the caller's schema and are what
    * [[int8Append]] should fold in.
    *
-   * Scale shape: pairs are batch-bounded, so the star-contraction CC runs
-   * on probe-sized data; the drop list anti-joins back ids-only
-   * (`broadcastDrop = true` when the dup set is known small). The stored
-   * corpus is touched only by the flat probe scan. Call
-   * [[graft.dedup.Dedup.release]] on the result when the CC checkpoint
-   * blocks should be freed eagerly.
+   * Scale shape: the stored corpus is touched only by the probe's one
+   * scan; the batch-internal pairs are scored on the driver by the same
+   * scorer, every pair of the batch. Pairs are batch-bounded, so the
+   * star-contraction CC runs on probe-sized data; the drop list
+   * anti-joins back ids-only (`broadcastDrop = true` when the dup set is
+   * known small). Call [[graft.dedup.Dedup.release]] on the result when
+   * the CC checkpoint blocks should be freed eagerly.
    */
   def int8ProbePrune(spark: SparkSession, path: String, newVecs: DataFrame,
                      threshold: Double,
@@ -530,94 +534,11 @@ object Quantize {
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      broadcastDrop: Boolean = false,
                      asOfInstallment: Int = Int.MaxValue): DataFrame = {
-    require(!newVecs.columns.exists(_.startsWith("_ip_")),
-      "int8ProbePrune reserves internal column names starting with _ip_")
-    // the probe's scoring join feeds THREE consumers (the CC pair list,
-    // the stored-id set, and the anchored-component flags) — materialize
-    // its pair-sized result once instead of re-scoring the stored corpus
-    // per consumer (the minhashIndexProbe newShingled precedent; blocks
-    // are freed by [[graft.dedup.Dedup.release]] on the result)
-    val stored = int8NearDupProbe(spark, path, newVecs, threshold,
-      corpusId, idCol, vecCol, asOfInstallment)
-      .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
-      .localCheckpoint()
-    val scale = readScale(spark, path)
-    val internal = batchInternalPairs(newVecs, scale, threshold, idCol, vecCol)
-    probePrunePolicy(newVecs, stored, internal, idCol, broadcastDrop)
+    val probe = int8ProbePass(spark, path, newVecs, threshold, corpusId, idCol, vecCol,
+      asOfInstallment)
+    graft.dedup.Dedup.ingestPrunePolicy(newVecs, probe.stored, probe.batchPairs(spark, threshold),
+      idCol, broadcastDrop)
   }
-
-  /** Batch-internal near-dup pairs at `threshold`: the batch quantizes
-    * with the STORED scale (same code space as the probe), self-scored
-    * with one broadcast side — batch-sized, never corpus-sized. The
-    * EXACT form (every pair scored), used by the flat prune. */
-  private def batchInternalPairs(newVecs: DataFrame, scale: Double,
-                                 threshold: Double, idCol: String,
-                                 vecCol: String): DataFrame = {
-    val q = newVecs
-      .select(col(idCol).as("_ip_id"), codesUdf(scale)(col(vecCol)).as("_ip_c"))
-      .withColumn("_ip_n", normSqUdf(col("_ip_c")))
-      .filter(col("_ip_n") > 0)
-    val qb = q.select(col("_ip_id").as("_ip_id2"), col("_ip_c").as("_ip_c2"),
-      col("_ip_n").as("_ip_n2"))
-    q.join(broadcast(qb), col("_ip_id") < col("_ip_id2"))
-      .withColumn("_ip_dot", dotUdf(col("_ip_c"), col("_ip_c2")))
-      .filter(col("_ip_dot").cast("double") /
-        (sqrt(col("_ip_n").cast("double")) * sqrt(col("_ip_n2").cast("double")))
-        >= threshold)
-      .select(col("_ip_id").as("id_a"), col("_ip_id2").as("id_b"))
-  }
-
-  /** IVF-ROUTED batch-internal pairs — the scale form used by
-    * [[ivfSq8ProbePrune]]: two batch vectors are candidates iff their
-    * `nprobe` probe-list sets INTERSECT (an equi-join on probed list_id —
-    * candidate volume is per-list collisions, not |batch|²; the sf1 scale
-    * run showed the exact n² self-join becoming the routed prune's floor
-    * once the stored side was pruned). Candidates dedup ids-only, then
-    * re-score EXACTLY with the integer kernel — the prune gates which
-    * pairs compete, never what a pair scores (the closestMatchHashedIds
-    * guard principle). Recall matches the stored probe's contract: true
-    * near-dups (cosine ≈ 1) route to the same nearest centroids, and at
-    * `nprobe = nlist` every pair shares every list, so the result equals
-    * [[batchInternalPairs]] exactly — the configuration the oracle pins. */
-  private def batchInternalPairsRouted(newVecs: DataFrame,
-                                       centers: Array[Array[Double]],
-                                       scale: Double, threshold: Double,
-                                       nprobe: Int, idCol: String,
-                                       vecCol: String): DataFrame = {
-    val q = newVecs
-      .select(col(idCol).as("_ip_id"), col(vecCol).as("_ip_v"))
-      .withColumn("_ip_c", codesUdf(scale)(col("_ip_v")))
-      .withColumn("_ip_n", normSqUdf(col("_ip_c")))
-      .filter(col("_ip_n") > 0)
-    val probed = q.select(col("_ip_id"),
-      explode(SimilarityIndex.probeUdf(centers, nprobe)(col("_ip_v")))
-        .as("_ip_list"))
-    val candidates = probed
-      .join(probed.select(col("_ip_id").as("_ip_id2"), col("_ip_list")),
-        Seq("_ip_list"))
-      .filter(col("_ip_id") < col("_ip_id2"))
-      .select("_ip_id", "_ip_id2")
-      .distinct()
-    val codes = q.select(col("_ip_id"), col("_ip_c"), col("_ip_n"))
-    candidates
-      .join(broadcast(codes), Seq("_ip_id"))
-      .join(broadcast(codes.select(col("_ip_id").as("_ip_id2"),
-        col("_ip_c").as("_ip_c2"), col("_ip_n").as("_ip_n2"))), Seq("_ip_id2"))
-      .withColumn("_ip_dot", dotUdf(col("_ip_c"), col("_ip_c2")))
-      .filter(col("_ip_dot").cast("double") /
-        (sqrt(col("_ip_n").cast("double")) * sqrt(col("_ip_n2").cast("double")))
-        >= threshold)
-      .select(col("_ip_id").as("id_a"), col("_ip_id2").as("id_b"))
-  }
-
-  /** The anchored/keep-min ingest policy — ONE implementation shared with
-    * the hamming loop, hosted at [[graft.dedup.Dedup.ingestPrunePolicy]]
-    * (the r10 review's divergence warning). */
-  private def probePrunePolicy(newVecs: DataFrame, stored: DataFrame,
-                               internal: DataFrame, idCol: String,
-                               broadcastDrop: Boolean): DataFrame =
-    graft.dedup.Dedup.ingestPrunePolicy(newVecs, stored, internal, idCol,
-      broadcastDrop)
 
   /**
    * IVF-ROUTED incremental near-dup probe — [[int8NearDupProbe]]'s scale
@@ -637,69 +558,44 @@ object Quantize {
    * configuration the oracle pins). Scores keep the integer-kernel
    * bit-exactness either way; only candidate coverage is approximate.
    *
-   * Scale shape: the quantized batch BROADCASTS into an equi-join on
-   * `list_id`; the stored side is a partition-pruned scan of the probed
-   * lists only and never shuffles (the probe-path invariant). Each stored
-   * row lives in exactly one list and probe lists are distinct per batch
-   * vector, so no pair can be emitted twice.
+   * Scale shape: [[int8NearDupProbe]]'s routed pass with the stored
+   * centroids as the routing table — one partition-pruned scan of the
+   * probed lists, nothing shuffled. Each stored row lives in exactly one
+   * list and a batch vector's probe lists are distinct, so no pair can be
+   * emitted twice. EAGER, with [[int8NearDupProbe]]'s frame and declines;
+   * `asOfIngest` pins the stored side to a fixed ingest history (the
+   * second-level partition prunes alongside list_id) — what lets a
+   * replayed dedup-ingest batch probe exactly what its first attempt
+   * probed (see EventStreams.ivfSq8DedupIngestStream); tombstones still
+   * apply in full (takedown semantics).
    */
   def ivfSq8NearDupProbe(spark: SparkSession, path: String, newVecs: DataFrame,
                          threshold: Double, nprobe: Int = 8,
                          corpusId: String = "vec_id",
                          idCol: String = "vec_id",
                          vecCol: String = "embedding",
-                         asOfIngest: Int = Int.MaxValue): DataFrame = {
-    import spark.implicits._
-    val centers = SimilarityIndex.readCentroids(spark, path)
-    val scale = readScale(spark, path)
-    val qProbed = newVecs.select(col(idCol).as("new_id"), col(vecCol))
-      .withColumn("list_id",
-        explode(SimilarityIndex.probeUdf(centers, nprobe)(col(vecCol))))
-    val probedLists = qProbed.select("list_id").distinct().as[Int].collect()
-      .map(_.asInstanceOf[Any])
-    val q = qProbed
-      .select(col("new_id"), col("list_id"),
-        codesUdf(scale)(col(vecCol)).as("_qc"))
-      .withColumn("_qn", normSqUdf(col("_qc")))
-      .filter(col("_qn") > 0)
-    // asOfIngest pins the stored side to a fixed ingest history (the
-    // second-level partition prunes alongside list_id) — what lets a
-    // replayed dedup-ingest batch probe exactly what its first attempt
-    // probed (see EventStreams.ivfSq8DedupIngestStream); tombstones
-    // still apply in full (takedown semantics)
-    val codes0 = spark.read.parquet(s"$path/codes")
-      .filter(col("list_id").isin(probedLists: _*))
-    val codes1 = if (asOfIngest == Int.MaxValue) codes0
-      else codes0.filter(col("ingest") <= asOfIngest)
-    val c = graft.store.Tombstones.filter(spark, path, codes1, corpusId)
-      .select(col(corpusId).as("corpus_id"), col("list_id"),
-        unpackCodesUdf(col("codes")).as("_cc"))
-      .withColumn("_cn", normSqUdf(col("_cc")))
-      .filter(col("_cn") > 0)
-    c.join(broadcast(q), Seq("list_id"))
-      .filter(col("corpus_id") =!= col("new_id"))
-      .withColumn("_dot", dotUdf(col("_cc"), col("_qc")))
-      .withColumn("cosine_q", col("_dot").cast("double") /
-        (sqrt(col("_cn").cast("double")) * sqrt(col("_qn").cast("double"))))
-      .filter(col("cosine_q") >= threshold)
-      .select(col("corpus_id"), col("new_id"), col("cosine_q"))
-  }
+                         asOfIngest: Int = Int.MaxValue): DataFrame =
+    ivfSq8ProbePass(spark, path, newVecs, threshold, nprobe, corpusId, idCol, vecCol,
+      asOfIngest).pairs
 
   /**
    * IVF-routed ingest-time pruning — [[int8ProbePrune]] with the
    * [[ivfSq8NearDupProbe]] candidate pass: the batch routes through the
    * stored centroids, stored×batch pairs come from the probed lists only,
-   * batch-internal pairs stay exact (the batch self-join is batch-sized
-   * regardless), and the drop decision is the shared policy — anchored
+   * and batch-internal pairs come from the same routing: two batch rows
+   * are scored iff their probe lists intersect, so candidate volume is
+   * per-list collisions, not |batch|² (the sf1 scale run showed the exact
+   * n² pass becoming the routed prune's floor once the stored side was
+   * pruned). The drop decision is the shared policy — anchored
    * components drop, batch-only components keep their min id. This is the
    * daily-ingest dedup loop priced at |probed lists| per batch instead of
    * |corpus|: survivors are what [[ivfSq8Append]] should fold in.
    *
-   * Recall follows the probe contract above: at `nprobe = nlist` the
-   * result equals the flat [[int8ProbePrune]] over the same corpus and
-   * scale exactly; below that, a stored twin outside the probed lists is
-   * missed and its batch copy survives (tune `nprobe` to the dedup
-   * recall the pipeline needs).
+   * Recall follows the probe contract above: at `nprobe = nlist` every
+   * pair shares every list and the result equals the flat
+   * [[int8ProbePrune]] over the same corpus and scale exactly; below that,
+   * a stored twin outside the probed lists is missed and its batch copy
+   * survives (tune `nprobe` to the dedup recall the pipeline needs).
    */
   def ivfSq8ProbePrune(spark: SparkSession, path: String, newVecs: DataFrame,
                        threshold: Double, nprobe: Int = 8,
@@ -707,30 +603,81 @@ object Quantize {
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        broadcastDrop: Boolean = false,
                        asOfIngest: Int = Int.MaxValue): DataFrame = {
-    require(!newVecs.columns.exists(_.startsWith("_ip_")),
-      "ivfSq8ProbePrune reserves internal column names starting with _ip_")
-    val stored = ivfSq8NearDupProbe(spark, path, newVecs, threshold, nprobe,
-      corpusId, idCol, vecCol, asOfIngest)
-      .select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
-      .localCheckpoint()
-    val scale = readScale(spark, path)
-    // batch-internal pairs route through the SAME probe lists (r11): the
-    // exact n² self-join was the routed prune's residual floor at scale —
-    // with the stored side pruned to probed lists, the batch² term
-    // dominated (sf1: 1667² comparisons constant in nprobe). Routed,
-    // candidate volume is per-list collisions; recall follows the probe
-    // contract. At nprobe ≥ nlist every pair shares every list, so the
-    // routed join devolves to all-pairs WITH an nlist-way dedup on top —
-    // strictly worse than the exact broadcast form; take the exact path
-    // there (identical output, the oracle-pinned configuration).
-    val centers = SimilarityIndex.readCentroids(spark, path)
-    val internal =
-      if (nprobe >= centers.length)
-        batchInternalPairs(newVecs, scale, threshold, idCol, vecCol)
-      else batchInternalPairsRouted(newVecs, centers, scale,
-        threshold, nprobe, idCol, vecCol)
-    probePrunePolicy(newVecs, stored, internal, idCol, broadcastDrop)
+    val probe = ivfSq8ProbePass(spark, path, newVecs, threshold, nprobe, corpusId, idCol,
+      vecCol, asOfIngest)
+    graft.dedup.Dedup.ingestPrunePolicy(newVecs, probe.stored, probe.batchPairs(spark, threshold),
+      idCol, broadcastDrop)
   }
+
+  /** A near-dup probe's pass ([[probePass]]): the batch's routing, the
+    * scorer, and the local (corpus_id, new_id, cosine_q) pairs. */
+  private final case class Probe(routing: SimilarityIndex.Routing, scorer: Sq8Scorer,
+                                 pairs: DataFrame) {
+    /** The pairs as the ingest policy's stored×batch (id_a, id_b). */
+    def stored: DataFrame = pairs.select(col("corpus_id").as("id_a"), col("new_id").as("id_b"))
+
+    /** The batch's own pairs at `threshold`, scored on the driver: two
+      * batch rows pair when they share a probed list (a flat index's one
+      * list holds them all). One (id_a, id_b) row per pair, id_a < id_b in
+      * Spark's order for the id type; equal and null ids pair with nothing. */
+    def batchPairs(spark: SparkSession, threshold: Double): DataFrame = {
+      val qs = routing.queries
+      val states = qs.indices.map(q => scorer.query(qs(q), routing.floats(q)))
+      val found = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
+      routing.probing.indices.foreach { list =>
+        val members = routing.probing(list)
+        for (i <- members.indices; j <- i + 1 until members.length) {
+          val (a, b) = (states(members(i)), states(members(j)))
+          if (a != null && b != null && scorer.score(a, b, list) >= threshold)
+            found += ((members(i), members(j)))
+        }
+      }
+      val idType = routing.idField.dataType
+      val catalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+      val order = TypeUtils.getInterpretedOrdering(idType)
+      val rows = found.toSeq.flatMap { case (a, b) =>
+        val (ia, ib) = (qs(a).get(0), qs(b).get(0))
+        val c = order.compare(catalyst(ia), catalyst(ib))
+        if (c < 0) Some(Row(ia, ib)) else if (c > 0) Some(Row(ib, ia)) else None
+      }
+      spark.createDataFrame(rows.asJava, StructType(Seq(routing.idField.copy(name = "id_a"),
+        routing.idField.copy(name = "id_b"))))
+    }
+  }
+
+  /** The near-dup pass of both SQ8 probes: the batch (`idCol`, `vecCol`)
+    * routed through `centers`, then [[SimilarityIndex.routedTopK]] over the
+    * packed codes of `scan` with `threshold` as its score floor and no
+    * top-k cut, scored by [[Sq8ProbeScorer]]. */
+  private def probePass(spark: SparkSession, path: String, centers: Array[Array[Double]],
+                        scan: DataFrame, newVecs: DataFrame, threshold: Double, nprobe: Int,
+                        corpusId: String, idCol: String, vecCol: String): Probe = {
+    val scorer = new Sq8ProbeScorer(readScale(spark, path))
+    val routing = SimilarityIndex.route(spark, path, centers, newVecs, nprobe, idCol, vecCol)
+    val bufs = SimilarityIndex.routedTopK(spark, scan, "codes", corpusId, routing, Int.MaxValue,
+      _ => scorer, floor = threshold)
+    Probe(routing, scorer, SimilarityIndex.localTopK(spark,
+        routing.copy(idField = routing.idField.copy(name = "new_id")), "corpus_id", "cosine_q", bufs)
+      .select(col("corpus_id").cast(scan.schema(corpusId).dataType).as("corpus_id"),
+        col("new_id"), col("cosine_q")))
+  }
+
+  /** [[probePass]] over a flat [[int8Build]] index, as of an installment. */
+  private def int8ProbePass(spark: SparkSession, path: String, newVecs: DataFrame,
+                            threshold: Double, corpusId: String, idCol: String, vecCol: String,
+                            asOfInstallment: Int): Probe =
+    probePass(spark, path, SimilarityIndex.OneList,
+      SimilarityIndex.flatCodes(spark, path, asOfInstallment), newVecs, threshold, 1,
+      corpusId, idCol, vecCol)
+
+  /** [[probePass]] over an IVF-SQ8 index's stored centroids and `codes/`,
+    * as of an ingest. */
+  private def ivfSq8ProbePass(spark: SparkSession, path: String, newVecs: DataFrame,
+                              threshold: Double, nprobe: Int, corpusId: String, idCol: String,
+                              vecCol: String, asOfIngest: Int): Probe =
+    probePass(spark, path, SimilarityIndex.readCentroids(spark, path),
+      spark.read.parquet(s"$path/codes").filter(col("ingest") <= asOfIngest), newVecs,
+      threshold, nprobe, corpusId, idCol, vecCol)
 
   /**
    * Tombstone a set of vector ids out of an [[int8Build]] index — the

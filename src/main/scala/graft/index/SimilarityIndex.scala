@@ -489,9 +489,10 @@ object SimilarityIndex {
     val floats = qs.map(r => if (r.isNullAt(1)) null
       else if (isDouble) r.getSeq[Double](1).map(_.toFloat) else r.getSeq[Float](1))
     val keys = qs.map(_.get(0)).distinct
+    val groupOf = keys.zipWithIndex.toMap
     val byList = Array.fill(centers.length)(Array.newBuilder[Int])
     qs.indices.foreach(q => probeLists(centers, floats(q), nprobe).foreach(byList(_) += q))
-    Routing(qs, floats, keys, qs.map(r => keys.indexOf(r.get(0))), byList.map(_.result()),
+    Routing(qs, floats, keys, qs.map(r => groupOf(r.get(0))), byList.map(_.result()),
       graft.store.Tombstones.collectLongIds(spark, path), queries.schema(queryId), vecType)
   }
 
@@ -534,10 +535,13 @@ object SimilarityIndex {
    * list, into one [[TopK.insert]] buffer per query id per task, and the
    * task buffers merge on the driver ([[TopK.merge]]). Returns one buffer
    * per `routing.keys` entry. `scorer` receives the payload column's type.
+   * A score below `floor` never enters a buffer: with `k = Int.MaxValue`
+   * the buffers hold every pair at or above it (the SQ8 near-dup probes).
    */
   private[index] def routedTopK[Q >: Null : ClassTag, R >: Null](
       spark: SparkSession, scan: DataFrame, payload: String, corpusId: String,
-      routing: Routing, k: Int, scorer: DataType => RoutedScorer[Q, R]): Array[TopK.Buf] = {
+      routing: Routing, k: Int, scorer: DataType => RoutedScorer[Q, R],
+      floor: Double = Double.NegativeInfinity): Array[TopK.Buf] = {
     require(k > 0, "k must be positive")
     val s = scorer(scan.schema(payload).dataType)
     val states = routing.queries.indices.map(q => s.query(routing.queries(q), routing.floats(q))).toArray
@@ -562,7 +566,7 @@ object SimilarityIndex {
               val st = states(q)
               if (st != null && s.admits(id, st)) {
                 val g = group(q)
-                bufs(g) = TopK.insert(bufs(g), s.score(row, st, list), id, k)
+                bufs(g) = TopK.insert(bufs(g), s.score(row, st, list), id, k, floor)
               }
               i += 1
             }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
  * many were pruned as near-dups, and how many were appended.
  *
  * Scale: the stored index never re-bands (probe broadcasts the batch
- * when it fits `broadcastMaxBytes` of extracted text; a bulk backfill
+ * when it fits 64 MB of extracted text; a bulk backfill
  * batch above it takes the probe's hash-shuffled dual path instead of a
  * multi-GB shingle-set broadcast); extraction is map-side; the dominant
  * cost is the batch's own shingle/band work — ingesting 1 GB into a
@@ -123,7 +123,6 @@ object Crawl {
                      indexPath: String, installment: Int,
                      threshold: Double = 0.8, maxBucketSize: Int = 1000,
                      shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                     broadcastMaxBytes: Long = 64L << 20,
                      onPageLinks: DataFrame => Unit = null,
                      onRobots: DataFrame => Unit = null,
                      onImages: DataFrame => Unit = null,
@@ -377,6 +376,8 @@ object Crawl {
              extPages.unionByName(redir)
            }).unionByName(dead).unionByName(nonText)
             .unionByName(revisitRows)
+            // one ledger file per checkpoint partition, not per union arm
+            .coalesce(resp0.rdd.getNumPartitions)
         onPageLinks(pagesForLinks)
         // the redirect/dead rows live in resp0's checkpoint; once the
         // frontier consumer has run (eagerly, per contract) only ext is
@@ -435,9 +436,10 @@ object Crawl {
       // (several times the text bytes), so a bulk backfill batch
       // (GB-scale) must take the probe's hash-shuffled regime instead —
       // no driver OOM (measured: a 240 MB-of-text batch is ~700 MB of
-      // shingle sets). Streaming micro-batches stay comfortably under the
-      // default 64 MB and keep the routed, exchange-free probe.
-      val broadcastBatch = textBytes <= broadcastMaxBytes
+      // shingle sets). Streaming micro-batches stay comfortably under
+      // 64 MB and keep the routed, exchange-free probe.
+      val routedProbeMaxBytes = 64L << 20
+      val broadcastBatch = textBytes <= routedProbeMaxBytes
       // robots-meta noindex pages are fetched (ledger) and their links
       // may feed the frontier, but they must not become corpus documents
       val docs = ext.filter(length(col("text")) > 0 && !col("noindex"))

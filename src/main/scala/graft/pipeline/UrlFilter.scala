@@ -120,8 +120,8 @@ object UrlFilter {
     * per-row kernel UDF — the former `transform(sequence(...))` Column
     * chain evaluates INTERPRETED per element (the house anti-pattern;
     * bounded here by label count, but free to remove while touching
-    * blocklist code). [[hostSuffixesChain]] keeps the chain for the
-    * kernel==chain spec pin; the blocklist oracles rebuild suffix
+    * blocklist code). UrlFilterSpec keeps the chain for the
+    * kernel==chain pin; the blocklist oracles rebuild suffix
     * semantics independently (`ends_with`), so the declared queries
     * never depended on the chain form. */
   def hostSuffixes(host: Column): Column = {
@@ -142,15 +142,6 @@ object UrlFilter {
       }
     }
     u(host)
-  }
-
-  /** The pre-r15 Column-chain form of [[hostSuffixes]] — kept ONLY as
-    * the spec's equivalence pin (UrlFilterSpec: kernel == chain on
-    * generated hosts, empty-label edges included). */
-  private[pipeline] def hostSuffixesChain(host: Column): Column = {
-    val parts = split(host, "\\.")
-    transform(sequence(lit(1), size(parts)),
-      i => array_join(slice(parts, i, size(parts)), "."))
   }
 
   /**

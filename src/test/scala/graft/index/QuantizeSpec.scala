@@ -480,15 +480,16 @@ class QuantizeSpec extends SparkTestBase {
     assert(survivors === Set(102L, 103L, 106L))
   }
 
-  test("int8ProbePrune guards its reserved column prefix") {
-    val path = java.nio.file.Files.createTempDirectory("int8-prune-guard")
+  test("int8ProbePrune passes batch columns through, _ip_ names included") {
+    val path = java.nio.file.Files.createTempDirectory("int8-prune-cols")
       .resolve("idx").toString
     Quantize.int8Build(probeCorpus, path)
-    val clash = probeBatch.withColumn("_ip_x", lit(1))
-    val e = intercept[IllegalArgumentException] {
-      Quantize.int8ProbePrune(spark, path, clash, 0.9)
-    }
-    assert(e.getMessage.contains("_ip_"))
+    // the prune mints no column on the batch's frame, so no prefix is reserved
+    val extra = probeBatch.withColumn("_ip_x", $"vec_id" * 10)
+    val survivors = Quantize.int8ProbePrune(spark, path, extra, 0.9)
+    assert(survivors.columns.toSeq === extra.columns.toSeq)
+    assert(survivors.select("vec_id", "_ip_x").as[(Long, Long)].collect().toSet ===
+      Set((102L, 1020L), (103L, 1030L)))
   }
 
   test("ivfSq8NearDupProbe at nprobe=nlist equals the flat probe exactly") {
@@ -525,17 +526,12 @@ class QuantizeSpec extends SparkTestBase {
       .select("vec_id").as[Long].collect().toSet
     assert(ivfSurv === flatSurv)
     assert(ivfSurv === Set(102L, 103L))
-    // dual drop path + schema passthrough
-    val viaBroadcast = Quantize.ivfSq8ProbePrune(spark, ivf, probeBatch, 0.9,
+    // dual drop path + schema passthrough, _ip_ names included
+    val extra = probeBatch.withColumn("_ip_x", lit(1))
+    val viaBroadcast = Quantize.ivfSq8ProbePrune(spark, ivf, extra, 0.9,
       nprobe = 2, broadcastDrop = true)
-    assert(viaBroadcast.columns.toSeq === probeBatch.columns.toSeq)
+    assert(viaBroadcast.columns.toSeq === extra.columns.toSeq)
     assert(viaBroadcast.select("vec_id").as[Long].collect().toSet === ivfSurv)
-    // reserved-prefix guard
-    val e = intercept[IllegalArgumentException] {
-      Quantize.ivfSq8ProbePrune(spark, ivf,
-        probeBatch.withColumn("_ip_x", lit(1)), 0.9)
-    }
-    assert(e.getMessage.contains("_ip_"))
   }
 
   test("routed batch-internal pairs collapse exact twins at the narrowest probe") {
@@ -562,15 +558,11 @@ class QuantizeSpec extends SparkTestBase {
     val ivf = java.nio.file.Files.createTempDirectory("ivfsq8-probe-plan")
       .resolve("ivf").toString
     Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2, fitSampleFraction = 1.0)
-    val plan = Quantize.ivfSq8NearDupProbe(spark, ivf, probeBatch, 0.9,
-        nprobe = 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"expected list_id partition pruning in the probe plan:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"batch side must broadcast into the list equi-join:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"the stored code scan must stream map-side, never shuffle:\n$plan")
+    val (_, probe) = Ran(spark)(Quantize.ivfSq8NearDupProbe(spark, ivf, probeBatch, 0.9,
+      nprobe = 1).collect())
+    assert(probe.scansOf("codes").length === 1, "one scan of the stored codes")
+    assert(probe.prunesLists("codes"), "the code scan carries a list_id partition filter")
+    assert(probe.shuffleStages === 0, s"the probe ran ${probe.shuffleStages} shuffle stages")
   }
 
   test("int8 tombstones: deleted vectors vanish from search, probe, and snapshots; compact folds") {
@@ -633,16 +625,187 @@ class QuantizeSpec extends SparkTestBase {
     assert(refAfter === refined)
   }
 
-  test("probe plan broadcasts the batch and never shuffles the stored scan") {
+  test("flat probe runs one snapshot-pruned code scan and no shuffle stage") {
     val path = java.nio.file.Files.createTempDirectory("int8-probe-plan")
       .resolve("idx").toString
-    Quantize.int8Build(probeCorpus, path)
-    val plan = Quantize.int8NearDupProbe(spark, path, probeBatch, 0.9)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      s"batch side must broadcast into the scoring join:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"the stored code scan must stream map-side, never shuffle:\n$plan")
+    Quantize.int8Build(probeCorpus.filter($"vec_id" <= 2), path)
+    Quantize.int8Append(spark, path, probeCorpus.filter($"vec_id" > 2))
+    val (pairs, probe) = Ran(spark)(Quantize.int8NearDupProbe(spark, path, probeBatch, 0.9,
+      asOfInstallment = 0).collect())
+    assert(pairs.length === 2)
+    val scans = probe.scansOf("codes")
+    assert(scans.length === 1, "one scan of the stored codes")
+    assert(scans.head.partitionFilters.exists(_.references.exists(_.name == "installment")),
+      "the code scan prunes to the snapshot's installments")
+    assert(probe.shuffleStages === 0, s"the probe ran ${probe.shuffleStages} shuffle stages")
+  }
+
+  // ------------------------- probes and prunes against an integer reference
+
+  test("both probes and prunes equal an in-test integer reference through churn") {
+    val rnd = new scala.util.Random(23)
+    def vec(): Array[Float] = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val built = (0 until 120).map(i => (i.toLong, vec()))
+    // ids 150-159 repeat the vectors of ids 0-9: duplicate stored vectors
+    val appended = (120 until 150).map(i => (i.toLong, vec())) ++
+      (150 until 160).map(i => (i.toLong, built(i - 150)._2))
+    val (delA, delB) = (Seq(3L, 17L, 125L), Seq(40L, 151L))
+    val batchRows: Seq[(java.lang.Long, Array[Float])] =
+      // twice stored 0-14 (3 is deleted and 153 repeats it), jittered 20-29
+      (0 until 15).map(i => (Long.box(1000L + i), built(i)._2.map(_ * 2))) ++
+      (20 until 30).map(i => (Long.box(1000L + i), built(i)._2.map(_ + 0.05f))) ++
+      // batch-only twins, fresh rows, stored 33 under its own id
+      (0 until 5).flatMap { i => val v = vec()
+        Seq((Long.box(1040L + i), v), (Long.box(1045L + i), v.map(_ * 3))) } ++
+      (0 until 10).map(i => (Long.box(1050L + i), vec())) ++
+      Seq((Long.box(33L), built(33)._2),
+        // a zero vector, a null vector, and a null id carrying stored 5's vector
+        (Long.box(1060L), Array.fill(8)(0f)), (Long.box(1061L), null),
+        (null, built(5)._2))
+    val batch = batchRows.toDF("vec_id", "embedding")
+    val threshold = 0.95
+    val base = java.nio.file.Files.createTempDirectory("sq8-probe-ref")
+    val (flat, ivf) = (base.resolve("flat").toString, base.resolve("ivf").toString)
+    Quantize.int8Build(built.toDF("vec_id", "embedding"), flat)
+    Quantize.int8Append(spark, flat, appended.toDF("vec_id", "embedding"))
+    Quantize.ivfSq8Build(built.toDF("vec_id", "embedding"), ivf, nlist = 4)
+    Quantize.ivfSq8Append(spark, ivf, appended.toDF("vec_id", "embedding"))
+    Seq(delA, delB).foreach { ids =>
+      Quantize.int8Delete(spark, flat, ids.toDF("vec_id"))
+      Quantize.ivfSq8Delete(spark, ivf, ids.toDF("vec_id"))
+    }
+    val dead = (delA ++ delB).toSet
+    // the integer-code cosine under the stored scale of `index`
+    def cosine(index: String): (Array[Float], Array[Float]) => Option[Double] = {
+      val scale = spark.read.parquet(s"$index/meta").head().getDouble(0)
+      def codes(v: Array[Float]) = v.map(x => math.floor(x.toDouble / scale + 0.5).toLong)
+      (a, b) => {
+        val (ca, cb) = (codes(a), codes(b))
+        val (na, nb) = (ca.map(x => x * x).sum, cb.map(x => x * x).sum)
+        if (na == 0 || nb == 0) None
+        else Some(ca.zip(cb).map { case (x, y) => x * y }.sum.toDouble /
+          (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)))
+      }
+    }
+    val live = batchRows.collect { case (id, v) if id != null && v != null => (id.longValue, v) }
+    def refPairs(index: String, stored: Seq[(Long, Array[Float])]) = {
+      val cos = cosine(index)
+      for ((s, sv) <- stored if !dead(s); (b, bv) <- live if s != b;
+           c <- cos(sv, bv) if c >= threshold) yield (s, b, c)
+    }
+    def refSurvivors(index: String, stored: Seq[(Long, Array[Float])]) = {
+      val cos = cosine(index)
+      val internal = for ((a, av) <- live; (b, bv) <- live if a < b;
+                          c <- cos(av, bv) if c >= threshold) yield (a, b)
+      val storedPairs = refPairs(index, stored).map(p => (p._1, p._2))
+      val edges = storedPairs ++ internal
+      val rep = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = { val r = rep.getOrElse(x, x); if (r == x) x else find(r) }
+      edges.foreach { case (a, b) => val (ra, rb) = (find(a), find(b))
+        if (ra != rb) rep(math.max(ra, rb)) = math.min(ra, rb) }
+      val storedIds = storedPairs.map(_._1).toSet
+      val inEdges = edges.flatMap(e => Seq(e._1, e._2)).toSet
+      val anchored = storedIds.map(find)
+      batchRows.map(_._1).filter { id =>
+        id == null || !inEdges(id) || storedIds(id) ||
+          (!anchored(find(id)) && find(id) == id.longValue)
+      }.map(Option(_).map(_.longValue))
+    }
+    val all = built ++ appended
+    def pairs(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.columns.toSeq === Seq("corpus_id", "new_id", "cosine_q"))
+      df.as[(Long, Long, Double)].collect().toSeq.sorted
+    }
+    def survivors(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.columns.toSeq === batch.columns.toSeq)
+      df.select("vec_id").as[Option[Long]].collect().toSeq.sorted
+    }
+    Seq(
+      "flat" -> (Quantize.int8NearDupProbe(spark, flat, batch, threshold),
+        refPairs(flat, all)),
+      "flat as of installment 0" -> (Quantize.int8NearDupProbe(spark, flat, batch, threshold,
+        asOfInstallment = 0), refPairs(flat, built)),
+      "ivf" -> (Quantize.ivfSq8NearDupProbe(spark, ivf, batch, threshold, nprobe = 4),
+        refPairs(ivf, all)),
+      "ivf as of ingest 0" -> (Quantize.ivfSq8NearDupProbe(spark, ivf, batch, threshold,
+        nprobe = 4, asOfIngest = 0), refPairs(ivf, built))
+    ).foreach { case (arm, (got, want)) =>
+      assert(pairs(got) === want.sorted, arm)
+    }
+    assert(refPairs(flat, all).exists(p => p._1 == 153L && p._2 == 1003L),
+      "the fixture plants the live twin of a deleted vector")
+    Seq(
+      "flat" -> (Quantize.int8ProbePrune(spark, flat, batch, threshold), refSurvivors(flat, all)),
+      "flat as of installment 0" -> (Quantize.int8ProbePrune(spark, flat, batch, threshold,
+        asOfInstallment = 0), refSurvivors(flat, built)),
+      "ivf" -> (Quantize.ivfSq8ProbePrune(spark, ivf, batch, threshold, nprobe = 4),
+        refSurvivors(ivf, all)),
+      "ivf as of ingest 0" -> (Quantize.ivfSq8ProbePrune(spark, ivf, batch, threshold,
+        nprobe = 4, asOfIngest = 0), refSurvivors(ivf, built))
+    ).foreach { case (arm, (got, want)) =>
+      assert(survivors(got) === want.sorted, arm)
+    }
+    // below nlist the routed probe finds a subset: the IVF recall contract
+    val narrow = pairs(Quantize.ivfSq8NearDupProbe(spark, ivf, batch, threshold, nprobe = 1))
+    assert(narrow.toSet.subsetOf(refPairs(ivf, all).toSet))
+  }
+
+  // ----------------------------------------- probe and prune job budgets
+
+  /** A near-dup batch against `stored`: twice its first 20 vectors and 30
+    * fresh ones, materialized. */
+  private def dupBatch(stored: org.apache.spark.sql.DataFrame) = {
+    val rnd = new scala.util.Random(13)
+    stored.filter($"vec_id" < 20)
+      .select(($"vec_id" + 10000L).as("vec_id"), transform($"embedding", x => x * 2f).as("embedding"))
+      .unionByName((0 until 30).map(i => (20000L + i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding"))
+      .localCheckpoint()
+  }
+
+  test("one flat near-dup probe runs at most 5 jobs and no shuffle stage") {
+    val (path, corpus, _) = churnedFlat
+    val batch = dupBatch(corpus)
+    val (pairs, probe) = Ran(spark)(Quantize.int8NearDupProbe(spark, path, batch, 0.95).collect())
+    assert(pairs.length === 17) // stored 1-3 are deleted
+    // scale read, batch collect, tombstone collect, codes schema, the scan
+    // (a broadcast-join probe ran 7 jobs and a shuffled tombstone anti-join)
+    assert(probe.jobs <= 5, s"one probe ran ${probe.jobs} jobs")
+    assert(probe.shuffleStages === 0, s"one probe ran ${probe.shuffleStages} shuffle stages")
+  }
+
+  test("one IVF-SQ8 prune runs at most 20 jobs and 8 shuffle stages") {
+    val (path, _) = churned
+    val batch = dupBatch(spark.read.parquet(s"$path/raw"))
+    val (survivors, prune) = Ran(spark)(Quantize.ivfSq8ProbePrune(spark, path, batch, 0.95,
+      nprobe = 4).collect())
+    // the 30 fresh rows and the twins of deleted stored 1-3
+    assert(survivors.length === 33)
+    // the probe pass (centroids, scale, batch, tombstones, codes schema, the
+    // scan), then the pair components and the drop list; with the pairs as
+    // broadcast joins and a checkpoint, the prune ran 30 jobs and 12
+    // shuffle stages
+    assert(prune.jobs <= 20, s"one prune ran ${prune.jobs} jobs")
+    assert(prune.shuffleStages <= 8, s"one prune ran ${prune.shuffleStages} shuffle stages")
+  }
+
+  test("source guard: only int8TopK and the writers call column UDFs") {
+    val p = java.nio.file.Paths.get("src/main/scala/graft/index/Quantize.scala")
+    assert(java.nio.file.Files.isRegularFile(p), s"run from the repository root: $p")
+    val quantize = scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(p)).asScala.toSeq
+    // each code line, with the member it sits in
+    val member = "^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
+    val owners = quantize.scanLeft("")((owner, l) =>
+      member.findFirstMatchIn(l).fold(owner)(_.group(1))).tail
+    def comment(l: String) = Seq("*", "/**", "//").exists(l.trim.startsWith)
+    val udfs = Seq("codesUdf", "unpackCodesUdf", "normSqUdf", "dotUdf", "packCodesUdf")
+    val users = quantize.zip(owners).collect {
+      case (l, owner) if !comment(l) && !udfs.contains(owner) &&
+        udfs.exists(u => s"\\b$u\\b".r.findFirstIn(l).nonEmpty) => owner
+    }.toSet
+    assert(users === Set("int8TopK", "int8Build", "int8AppendAt", "ivfSq8Build", "ivfSq8AppendAt"),
+      "the probes and searches score through routedTopK's SQ8 scorer, not the column UDFs")
   }
 
   /** A churned IVF-SQ8 index with the raw sidecar: a build, an appended

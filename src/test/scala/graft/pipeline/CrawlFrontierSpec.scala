@@ -364,6 +364,32 @@ class CrawlFrontierSpec extends SparkTestBase {
       "https://s/readme", "https://s/unlabeled"))
   }
 
+  test("the ledger feed lands one file per records partition") {
+    val idx = tmp("crawl-ledger-files")
+    // four WARC files, each with every class the ledger feed unions: a
+    // text page, a redirect, a dead page, a non-text 200 and a revisit
+    val files = (0 until 4).map { g =>
+      (g.toLong, graft.sources.Warc.encodeWarcFixtures(Seq(
+        graft.sources.Warc.ResponseFixture(s"https://s$g/page", 200,
+          contentType = "text/html",
+          body = s"<p>page $g of the ledger file count fixture</p>".getBytes("UTF-8")),
+        graft.sources.Warc.ResponseFixture(s"https://s$g/moved", 301,
+          location = s"https://s$g/page"),
+        graft.sources.Warc.ResponseFixture(s"https://s$g/dead", 404, contentType = "text/html"),
+        graft.sources.Warc.ResponseFixture(s"https://s$g/pic.png", 200, contentType = "image/png"),
+        graft.sources.Warc.ResponseFixture(s"https://s$g/again", 200,
+          contentType = "text/html", warcType = "revisit"))))
+    }.toDF("g", "payload").repartition(4)
+    val recs = graft.sources.Warc.warcRecords(files).toDF()
+    val ledger = tmp("crawl-ledger-out")
+    Crawl.ingestBatch(spark, recs, idx, 0,
+      onPageLinks = _.write.parquet(ledger)) { _.count() }
+    assert(spark.read.parquet(ledger).count() === 20L)
+    val parts = new java.io.File(ledger).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(parts <= recs.rdd.getNumPartitions && parts <= 4,
+      s"the ledger write landed $parts files for ${recs.rdd.getNumPartitions} partitions")
+  }
+
   test("304s and revisit records are ledger observations, never corpus docs (r15)") {
     val idx = tmp("crawl-revisit-idx")
     val files = Seq((0L, graft.sources.Warc.encodeWarcFixtures(Seq(

@@ -8,6 +8,14 @@ class UrlFilterSpec extends SparkTestBase {
 
   private val blocklist = Seq("badsite.com", "tracker.io").toDF("domain")
 
+  /** The pre-r15 Column-chain form of [[UrlFilter.hostSuffixes]], the
+    * reference the kernel is pinned to. */
+  private def hostSuffixesChain(host: org.apache.spark.sql.Column) = {
+    val parts = split(host, "\\.")
+    transform(sequence(lit(1), size(parts)),
+      i => array_join(slice(parts, i, size(parts)), "."))
+  }
+
   test("hosts extracts distinct lowercased hosts") {
     val got = Seq("see https://A.B.com/x and http://a.b.com/y plus https://c.io")
       .toDF("t").select(UrlFilter.hosts($"t")).as[Seq[String]].head()
@@ -30,7 +38,7 @@ class UrlFilterSpec extends SparkTestBase {
     val df = hosts.toDF("h")
     val kernel = df.select($"h", UrlFilter.hostSuffixes($"h").as("s"))
       .as[(String, Seq[String])].collect().toMap
-    val chain = df.select($"h", UrlFilter.hostSuffixesChain($"h").as("s"))
+    val chain = df.select($"h", hostSuffixesChain($"h").as("s"))
       .as[(String, Seq[String])].collect().toMap
     assert(kernel === chain)
     assert(Seq((null: String)).toDF("h")
