@@ -121,8 +121,8 @@ object Main {
       import spark.implicits._
       val vocab = spark.read.parquet(s"$index/vocab")
       val idx = spark.read.parquet(s"$index/index")
-      // the declared schema graph-build writes: no schema-inference job
-      val sep = spark.read.schema("sep STRING").parquet(s"$index/meta").as[String].head()
+      // the one-row meta graph-build writes, read on the driver
+      val sep = graft.store.readSmall(spark, s"$index/meta", "sep STRING").head.getString(0)
       val q = SimilarityIndex.bagOfWords(
         Seq((0L, query)).toDF("id", "sentence"), vocab, sep = sep)
       SimilarityIndex.closestMatch(idx, q).show(false)

@@ -603,10 +603,10 @@ object Dedup {
     writeInstallment(newDf, textCol, idCol, path, installment, shingleK, numHashes, bands)
   }
 
-  /** (shingleK, numHashes, bands): `meta/` read with the schema
-    * [[minhashIndexBuild]] writes — no schema-inference job. */
+  /** (shingleK, numHashes, bands): `meta/` as [[minhashIndexBuild]]
+    * writes it, read on the driver ([[graft.store.readSmall]]). */
   private def readMinhashMeta(spark: org.apache.spark.sql.SparkSession, path: String) = {
-    val r = spark.read.schema("shingle_k INT, num_hashes INT, bands INT").parquet(s"$path/meta").head()
+    val r = graft.store.readSmall(spark, s"$path/meta", "shingle_k INT, num_hashes INT, bands INT").head
     (r.getInt(0), r.getInt(1), r.getInt(2))
   }
 

@@ -244,14 +244,14 @@ object Pq {
     s
   }
 
-  /** (m, ksub, dim, residual), read with the declared schema both
-    * writers' columns fit ([[pqBuild]]: m, ksub, dim; [[ivfPqBuild]] adds
-    * residual) — no schema-inference job. Flat-PQ and pre-r17 IVF-PQ
-    * metas have no residual column; it reads null, which means false. */
+  /** (m, ksub, dim, residual), read on the driver
+    * ([[graft.store.readSmall]]) with the declared schema both writers'
+    * columns fit ([[pqBuild]]: m, ksub, dim; [[ivfPqBuild]] adds
+    * residual). Flat-PQ and pre-r17 IVF-PQ metas have no residual column;
+    * it reads null, which means false. */
   private def readMeta(spark: SparkSession, path: String)
       : (Int, Int, Int, Boolean) = {
-    val r = spark.read.schema("m INT, ksub INT, dim INT, residual INT")
-      .parquet(s"$path/meta").head()
+    val r = graft.store.readSmall(spark, s"$path/meta", "m INT, ksub INT, dim INT, residual INT").head
     (r.getInt(0), r.getInt(1), r.getInt(2), !r.isNullAt(3) && r.getInt(3) == 1)
   }
 
@@ -310,9 +310,7 @@ object Pq {
     * ADC table STRIDE (an upper bound on every subspace's width). */
   private def readCodebooks(spark: SparkSession, path: String, m: Int,
                             ksub: Int): Array[Array[Array[Double]]] = {
-    // the declared schema of the codebooks writers: no inference job
-    val rows = spark.read.schema("sub INT, code INT, centroid ARRAY<DOUBLE>")
-      .parquet(s"$path/codebooks").collect()
+    val rows = graft.store.readSmall(spark, s"$path/codebooks", "sub INT, code INT, centroid ARRAY<DOUBLE>")
     val bySub = rows.groupBy(_.getInt(0))
     (0 until m).toArray.map { j =>
       val subRows = bySub.getOrElse(j, Array.empty)
@@ -328,8 +326,7 @@ object Pq {
   private def readRotation(spark: SparkSession, path: String,
                            dim: Int): Array[Array[Double]] = {
     if (!graft.store.dirExists(spark, s"$path/rotation")) return null
-    val rows = spark.read.schema("i INT, row ARRAY<DOUBLE>")
-      .parquet(s"$path/rotation").collect()
+    val rows = graft.store.readSmall(spark, s"$path/rotation", "i INT, row ARRAY<DOUBLE>")
     val r = new Array[Array[Double]](dim)
     rows.foreach(x => r(x.getInt(0)) = x.getSeq[Double](1).toArray)
     r
@@ -702,7 +699,7 @@ object Pq {
                         nprobe: Int, corpusId: String, queryId: String,
                         queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) =
     adcPass(spark, path, SimilarityIndex.readCentroids(spark, path),
-      spark.read.parquet(s"$path/codes"), queries, k, nprobe, corpusId, queryId, queryVec)
+      SimilarityIndex.readLists(spark, s"$path/codes"), queries, k, nprobe, corpusId, queryId, queryVec)
 
   /** Routed ADC search: the routed IVF kernel
     * ([[SimilarityIndex.ivfSearchIndexed]]'s — driver-resolved probe

@@ -128,10 +128,10 @@ object Quantize {
     udf((b: Array[Byte]) => if (b == null) null else unpack(b))
 
   /** The stored global scale: `meta/` as [[int8Build]] and [[ivfSq8Build]]
-    * write it ([[writeScale]]), one `scale DOUBLE` row — read with that
-    * declared schema, so no schema-inference job runs. */
+    * write it ([[writeScale]]), one `scale DOUBLE` row — read on the
+    * driver ([[graft.store.readSmall]]). */
   private def readScale(spark: SparkSession, path: String): Double =
-    spark.read.schema("scale DOUBLE").parquet(s"$path/meta").head().getDouble(0)
+    graft.store.readSmall(spark, s"$path/meta", "scale DOUBLE").head.getDouble(0)
 
   private def writeScale(spark: SparkSession, path: String, scale: Double): Unit =
     spark.createDataFrame(Seq(Tuple1(scale))).toDF("scale")
@@ -390,7 +390,7 @@ object Quantize {
                          nprobe: Int, corpusId: String, queryId: String,
                          queryVec: String): (SimilarityIndex.Routing, Array[TopK.Buf]) =
     sq8Pass(spark, path, SimilarityIndex.readCentroids(spark, path),
-      spark.read.parquet(s"$path/codes"), queries, k, nprobe, corpusId, queryId, queryVec)
+      SimilarityIndex.readLists(spark, s"$path/codes"), queries, k, nprobe, corpusId, queryId, queryVec)
 
   /** [[sq8Pass]] over a flat [[int8Build]] index, as of an installment. */
   private def int8Pass(spark: SparkSession, path: String, queries: DataFrame, k: Int,
@@ -676,7 +676,7 @@ object Quantize {
                               threshold: Double, nprobe: Int, corpusId: String, idCol: String,
                               vecCol: String, asOfIngest: Int): Probe =
     probePass(spark, path, SimilarityIndex.readCentroids(spark, path),
-      spark.read.parquet(s"$path/codes").filter(col("ingest") <= asOfIngest), newVecs,
+      SimilarityIndex.readLists(spark, s"$path/codes").filter(col("ingest") <= asOfIngest), newVecs,
       threshold, nprobe, corpusId, idCol, vecCol)
 
   /**

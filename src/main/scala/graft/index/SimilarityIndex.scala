@@ -176,19 +176,29 @@ object SimilarityIndex {
     KMeansLocal.fit(sample, nlist, seed = 42L, maxIter = 10)
   }
 
-  private def sqDist(v: Seq[Float], c: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(v.length, c.length)
-    while (i < n) { val d = v(i) - c(i); s += d * d; i += 1 }
-    s
+  /** Squared distances from `v` to every centroid, each over the first
+    * min(|v|, |c|) components, the float components widened to double. */
+  private def sqDists(centers: Array[Array[Double]], v: Array[Float]): Array[Double] = {
+    val out = new Array[Double](centers.length)
+    var j = 0
+    while (j < centers.length) {
+      val c = centers(j)
+      val n = math.min(v.length, c.length)
+      var s = 0.0; var i = 0
+      while (i < n) { val d = v(i) - c(i); s += d * d; i += 1 }
+      out(j) = s
+      j += 1
+    }
+    out
   }
 
-  /** Nearest-centroid id (map-side: the centroid matrix rides the closure). */
-  private[index] def assignUdf(centers: Array[Array[Double]]) = udf { (v: Seq[Float]) =>
+  /** Nearest-centroid id, the first on ties (map-side: the centroid matrix
+    * rides the closure). The vector arrives as a primitive array, read once
+    * per row. */
+  private[index] def assignUdf(centers: Array[Array[Double]]) = udf { (v: Array[Float]) =>
+    val d = sqDists(centers, v)
     var best = 0; var bestD = Double.MaxValue; var j = 0
-    while (j < centers.length) {
-      val d = sqDist(v, centers(j)); if (d < bestD) { bestD = d; best = j }; j += 1
-    }
+    while (j < d.length) { if (d(j) < bestD) { bestD = d(j); best = j }; j += 1 }
     best
   }
 
@@ -198,8 +208,8 @@ object SimilarityIndex {
   private[index] def probeLists(centers: Array[Array[Double]], v: Seq[Float],
                                 nprobe: Int): Array[Int] =
     if (v == null) Array.emptyIntArray
-    else centers.indices.map(j => (sqDist(v, centers(j)), j)).sorted
-      .take(math.min(nprobe, centers.length)).map(_._2).toArray
+    else sqDists(centers, v.toArray).zipWithIndex.sorted
+      .take(math.min(nprobe, centers.length)).map(_._2)
 
   /** [[probeLists]] as a column function. */
   private[index] def probeUdf(centers: Array[Array[Double]], nprobe: Int) =
@@ -258,26 +268,36 @@ object SimilarityIndex {
     * count. Shared by [[ivfCompact]] and the IVF-SQ8/IVF-PQ codes/ and
     * raw/ folds ([[Quantize.ivfSq8Compact]]). */
   private[index] def compactListDir(spark: SparkSession, indexPath: String,
-                                    dir: String, corpusId: String): Long =
+                                    dir: String, corpusId: String): Long = {
+    // tombstoned rows are skipped map-side, like the search's scan; a
+    // null id is never tombstoned
+    val dead = graft.store.Tombstones.collectLongIds(spark, indexPath)
+    val live = udf((id: Long) => java.util.Arrays.binarySearch(dead, id) < 0)
+    val id = col(corpusId).cast("long")
     graft.store.DirSwap.replace(spark, dir) { side =>
-      graft.store.Tombstones.filter(spark, indexPath,
-          spark.read.parquet(dir), corpusId)
+      val rows = org.apache.spark.sql.Observation()
+      val stored = readLists(spark, dir)
+      (if (dead.isEmpty) stored else stored.filter(id.isNull || live(id)))
         .withColumn("ingest", lit(0)) // the ingest history folds away
         .repartition(col("list_id"))
+        // observed above the exchange: a fold of no rows still reports 0
+        .observe(rows, count(lit(1)).as("n"))
         .write.partitionBy("list_id", "ingest")
         .parquet(side)
-      spark.read.parquet(side).count()
+      rows.get("n").asInstanceOf[Long]
     }
-
-  /** The stored centroid matrix, list_id-ordered — nlist rows, driver-side
-    * by design (it is the index's tiny routing table). */
-  private[index] def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] = {
-    import spark.implicits._
-    // the declared schema every centroid writer writes: no inference job
-    spark.read.schema("list_id INT, centroid ARRAY<DOUBLE>").parquet(s"$path/centroids")
-      .as[(Int, Array[Double])]
-      .collect().sortBy(_._1).map(_._2)
   }
+
+  /** A `list_id=X/ingest=N`-partitioned dir ([[writeLists]]) read with its
+    * declared schema: no schema-inference job. */
+  private[index] def readLists(spark: SparkSession, dir: String): DataFrame =
+    graft.store.readDeclared(spark, dir, "list_id INT, ingest INT")
+
+  /** The stored centroid matrix, list_id-ordered — nlist rows, read on the
+    * driver (it is the index's tiny routing table). */
+  private[index] def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
+    graft.store.readSmall(spark, s"$path/centroids", "list_id INT, centroid ARRAY<DOUBLE>")
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /**
    * Fold new vectors into a persisted [[ivfBuild]] index WITHOUT re-fitting:
@@ -361,7 +381,7 @@ object SimilarityIndex {
           dot / (math.sqrt(nv) * math.sqrt(nc)))
       }
     }
-    spark.read.parquet(s"$path/$table")
+    readLists(spark, s"$path/$table")
       .select(col("list_id").cast("int").as("list_id"),
         col("ingest").cast("int").as("ingest"),
         cosUdf(col("list_id"), col(vecCol)).as("_c"))
@@ -460,7 +480,7 @@ object SimilarityIndex {
                        queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
     val routing = route(spark, path, readCentroids(spark, path), queries, nprobe, queryId, queryVec)
     localTopK(spark, routing, corpusId, "cosine",
-      routedTopK(spark, spark.read.parquet(s"$path/assignments"), corpusVec, corpusId, routing, k,
+      routedTopK(spark, readLists(spark, s"$path/assignments"), corpusVec, corpusId, routing, k,
         cosineScorer("ivfSearchIndexed", corpusVec, queryVec, routing, null)))
   }
 
@@ -521,10 +541,11 @@ object SimilarityIndex {
   /** `df` as the one list of a flat index: its rows in list 0. */
   private[index] def oneList(df: DataFrame): DataFrame = df.withColumn("list_id", lit(0))
 
-  /** A flat installment index's `codes/` as [[oneList]], partition-pruned
-    * to `installment <= asOfInstallment`. */
+  /** A flat installment index's `codes/` as [[oneList]], read with its
+    * declared schema and partition-pruned to `installment <= asOfInstallment`. */
   private[index] def flatCodes(spark: SparkSession, path: String, asOfInstallment: Int): DataFrame =
-    oneList(spark.read.parquet(s"$path/codes").filter(col("installment") <= asOfInstallment))
+    oneList(graft.store.readDeclared(spark, s"$path/codes", "installment INT")
+      .filter(col("installment") <= asOfInstallment))
 
   /**
    * The routed-search kernel of every persisted vector search: one
@@ -621,7 +642,7 @@ object SimilarityIndex {
   private[index] def rawSidecar(spark: SparkSession, path: String): DataFrame = {
     require(graft.store.dirExists(spark, s"$path/raw"),
       s"$path has no raw/ refine sidecar — build with storeRaw = true to enable refined search")
-    spark.read.parquet(s"$path/raw")
+    readLists(spark, s"$path/raw")
   }
 
   /**

@@ -131,10 +131,10 @@ object SpanDedup {
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** The stored window length: `meta/` read with the schema
-    * [[spanIndexBuild]] writes — no schema-inference job. */
+  /** The stored window length: `meta/` as [[spanIndexBuild]] writes it,
+    * read on the driver ([[graft.store.readSmall]]). */
   private def readK(spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    spark.read.schema("k INT").parquet(s"$path/meta").head().getInt(0)
+    graft.store.readSmall(spark, s"$path/meta", "k INT").head.getInt(0)
 
   /** Fold a new batch's window counts in as the next installment (stored
     * installments never read or rewritten; the STORED k applies). Batch

@@ -38,11 +38,14 @@ object Installments {
 
   /** Replace `dir` with `folded` as its one `installment=0` partition
     * ([[DirSwap.replace]]) — the fold every installment-index compaction
-    * ends in. Returns the folded row count. */
+    * ends in. Returns the folded row count, observed on the write. */
   def fold(spark: SparkSession, dir: String, folded: DataFrame): Long =
     DirSwap.replace(spark, dir) { side =>
-      folded.write.parquet(s"$side/installment=0")
-      spark.read.parquet(side).count()
+      val rows = org.apache.spark.sql.Observation()
+      folded.observe(rows, org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("n"))
+        .write.parquet(s"$side/installment=0")
+      rows.get("n").asInstanceOf[Long]
     }
 
   /** Maintenance observability for installment indexes (r17): per

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Tombstone (logical-delete) sidecar for the append-only persisted
@@ -30,9 +31,11 @@ import org.apache.spark.sql.functions._
  * contract (the same caveat as snapshots across a compaction).
  *
  * Scale shape: the tombstone list is id-only (8 bytes/row) and rides a
- * broadcast anti-join on the stored side of each read — the corpus-
- * sized tables still stream map-side, never shuffle. The broadcast
- * assumes the delete set stays small relative to the corpus (the
+ * broadcast anti-join on the stored side of each read ([[filter]]), or
+ * is read on the driver ([[collectIds]], no Spark job) and skipped inside
+ * the stored scan (the routed vector searches, the MinHash probe, the
+ * IVF folds) — the corpus-sized tables stream map-side, never shuffle.
+ * Both assume the delete set stays small relative to the corpus (the
  * takedown shape); a mass deletion should be a rebuild, and compaction
  * resets the list to empty either way.
  */
@@ -69,45 +72,42 @@ object Tombstones {
       .write.mode("overwrite")
       .parquet(s"${deletesDir(path)}/installment=$installment")
 
-  /** The full tombstone set as a distinct one-column (`id`) frame; empty
-    * (with the caller-hinted id type — every index family keys by its own
-    * id column, and a hardcoded LongType would silently type-mismatch a
-    * string-keyed index's first delete-free read) when no delete has ever
+  /** The full tombstone set as a distinct one-column (`id`) frame of
+    * `idType` — every index family keys by its own id column, and a
+    * hardcoded LongType would silently type-mismatch a string-keyed
+    * index's first delete-free read. `id` is read with that declared type,
+    * so installments written with different integer widths read as one
+    * and no schema-inference job runs; empty when no delete has ever
     * landed. Distinct across installments — the same id deleted twice
     * anti-joins once. */
   def read(spark: SparkSession, path: String,
-           idType: org.apache.spark.sql.types.DataType =
-             org.apache.spark.sql.types.LongType): DataFrame = {
+           idType: DataType = LongType): DataFrame = {
     val dir = deletesDir(path)
+    val schema = StructType(Seq(StructField("id", idType)))
     if (!dirExists(spark, dir))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType))))
-    else spark.read.parquet(dir).select("id").distinct()
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(dir).select("id").distinct()
   }
 
-  /** The full tombstone set collected to the driver as distinct long ids,
-    * sorted ascending (binary-searchable); empty when no delete has ever
-    * landed — for readers that route on the driver and drop tombstoned
-    * rows inside their own scan (the IVF search) instead of planning an
-    * anti-join. One scan job: `id` is read with a declared BIGINT type
-    * (narrower integer ids widen on read), so no schema-inference job
-    * runs, and the distinct happens on the driver. */
+  /** The full tombstone set as distinct long ids, sorted ascending
+    * (binary-searchable); empty when no delete has ever landed — for
+    * readers that route on the driver and drop tombstoned rows inside
+    * their own scan (the IVF search and compaction) instead of planning an
+    * anti-join. `id` is read as BIGINT, so narrower integer ids widen. */
   def collectLongIds(spark: SparkSession, path: String): Array[Long] =
-    collectIds(spark, path, org.apache.spark.sql.types.LongType)
+    collectIds(spark, path, LongType)
       .iterator.map(_.asInstanceOf[Long]).toArray.sorted
 
-  /** The full tombstone set collected to the driver as distinct non-null
-    * ids read as `idType` (a declared read: no schema-inference job);
-    * empty when no delete has ever landed — for scans that drop
-    * tombstoned rows themselves (the routed MinHash probe). */
-  def collectIds(spark: SparkSession, path: String,
-                 idType: org.apache.spark.sql.types.DataType): Set[Any] =
+  /** The full tombstone set as distinct non-null ids read as `idType`,
+    * read on the driver ([[graft.store.readSmall]]: no Spark job; the set
+    * is takedown-sized by contract); empty when no delete has ever landed
+    * — for scans that drop tombstoned rows themselves (the routed MinHash
+    * probe). Every call reads the current installments, so a read sees
+    * every delete landed before it. */
+  def collectIds(spark: SparkSession, path: String, idType: DataType): Set[Any] =
     if (!any(spark, path)) Set.empty
-    else spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType))))
-      .parquet(deletesDir(path)).where(col("id").isNotNull).select("id")
-      .collect().map(_.get(0)).toSet
+    else readSmall(spark, deletesDir(path), s"id ${idType.sql}")
+      .iterator.map(_.get(0)).filter(_ != null).toSet
 
   /** The tombstone set from installments STRICTLY BEFORE `installment` —
     * what the self-enforcing `*DeleteAt` forms anti-join their incoming
@@ -118,13 +118,11 @@ object Tombstones {
     * double-subtract. Partition-pruned read; empty frame (caller-hinted
     * id type) when nothing earlier exists. */
   def readBefore(spark: SparkSession, path: String, installment: Int,
-                 idType: org.apache.spark.sql.types.DataType =
-                   org.apache.spark.sql.types.LongType): DataFrame = {
+                 idType: DataType = LongType): DataFrame = {
     val dir = deletesDir(path)
     if (!dirExists(spark, dir) || installment <= 0)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType))))
+        StructType(Seq(StructField("id", idType))))
     else spark.read.parquet(dir)
       .filter(col("installment") < installment)
       .select("id").distinct()
@@ -158,23 +156,31 @@ object Tombstones {
 
   /** Drop the stored side's tombstoned rows: a broadcast anti-join on
     * `joinCol`, or a no-op (the identical plan) when the index has no
-    * deletes dir. The stored scan stays map-side either way. */
+    * deletes dir. The stored scan stays map-side either way. `deletes/` is
+    * read with the join column's type, an integer column's as BIGINT: its
+    * installments may hold INT and BIGINT ids, and one read must take
+    * both. */
   def filter(spark: SparkSession, path: String, stored: DataFrame,
              joinCol: String): DataFrame =
     if (!any(spark, path)) stored
-    else stored.join(
-      broadcast(read(spark, path, stored.schema(joinCol).dataType)
-        .select(col("id").as(joinCol))),
-      Seq(joinCol), "left_anti")
+    else {
+      val idType = stored.schema(joinCol).dataType match {
+        case ByteType | ShortType | IntegerType => LongType
+        case t => t
+      }
+      stored.join(broadcast(read(spark, path, idType).select(col("id").as(joinCol))),
+        Seq(joinCol), "left_anti")
+    }
 
   /** Fold every installment of `$path/$table` into one `installment=0`
     * partition without the tombstoned rows ([[Installments.fold]]);
-    * returns the folded row count. The deletes dir stays: callers clear
-    * it LAST, after every table of the index is folded. */
+    * returns the folded row count. The table is read with its declared
+    * schema ([[readDeclared]]). The deletes dir stays: callers clear it
+    * LAST, after every table of the index is folded. */
   def fold(spark: SparkSession, path: String, table: String,
            idCol: String): Long =
     Installments.fold(spark, s"$path/$table", filter(spark, path,
-      spark.read.parquet(s"$path/$table").drop("installment"), idCol))
+      readDeclared(spark, s"$path/$table", "installment INT").drop("installment"), idCol))
 
   /** Remove the deletes dir — the compaction epilogue, after the
     * physical fold has dropped the tombstoned rows from the data

@@ -411,12 +411,14 @@ class MinhashIndexSpec extends SparkTestBase {
     }
     val (hits, ran) = probe()
     assert(hits.nonEmpty)
-    assert(ran.jobs <= 5, s"${ran.jobs} jobs")
+    // the batch collect and the sizes/, bands/ and sets/ scans: meta/ and
+    // deletes/ are read on the driver (5 jobs, and 6 with deletes, before)
+    assert(ran.jobs <= 4, s"${ran.jobs} jobs")
     assert(ran.shuffleStages === 0, s"${ran.shuffleStages} shuffle-map stages")
     Dedup.minhashIndexDelete(spark, path, docs.filter($"doc_id" % 7 === 0).select("doc_id"))
     val (afterDelete, ranDel) = probe()
     assert(afterDelete.nonEmpty && afterDelete.length < hits.length)
-    assert(ranDel.jobs <= 6, s"${ranDel.jobs} jobs with deletes/")
+    assert(ranDel.jobs <= 4, s"${ranDel.jobs} jobs with deletes/")
     assert(ranDel.shuffleStages === 0, s"${ranDel.shuffleStages} shuffle-map stages")
   }
 
@@ -437,7 +439,9 @@ class MinhashIndexSpec extends SparkTestBase {
     assert(appended > 0 && appended < batch.count())
     assert(spark.read.parquet(s"$path/sets").filter($"installment" === 1)
       .select("id").distinct().count() === appended)
-    assert(ran.jobs <= 9, s"${ran.jobs} jobs")
+    // the checkpoint, the batch collect, three scans and three writes: meta/
+    // is read on the driver (9 jobs before)
+    assert(ran.jobs <= 8, s"${ran.jobs} jobs")
     assert(ran.shuffleStages === 0, s"${ran.shuffleStages} shuffle-map stages")
   }
 

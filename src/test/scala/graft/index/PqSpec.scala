@@ -437,8 +437,9 @@ class PqSpec extends SparkTestBase {
   test("one IVF-PQ search runs at most 8 jobs and no shuffle stage") {
     val (hits, search) = plainPqRun()
     assert(hits.length === 160)
-    // meta, codebooks, centroids and tombstone reads, codes schema, the scan
-    assert(search.jobs <= 8, s"one search ran ${search.jobs} jobs")
+    // the scan: meta, codebooks, centroids and tombstones are read on the
+    // driver, codes/ with a declared schema (6 jobs before)
+    assert(search.jobs === 1, s"one search ran ${search.jobs} jobs")
     assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
     assert(search.prunesLists("codes"))
   }
@@ -448,9 +449,9 @@ class PqSpec extends SparkTestBase {
     val (hits, search) = Ran(spark)(Pq.ivfPqSearchRefined(spark, path, queries,
       k = 10, candidateK = 40, nprobe = 4).collect())
     assert(hits.length === 160)
-    // the plain search's jobs, then the raw/ schema and the raw/ scan
+    // the plain search's scan, then the raw/ scan
     val plain = plainPqRun()._2.jobs
-    assert(search.jobs <= plain + 2 && search.jobs <= 10,
+    assert(search.jobs === plain + 1 && search.jobs === 2,
       s"one refined search ran ${search.jobs} jobs (plain: $plain)")
     assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
     assert(search.prunesLists("codes") && search.prunesLists("raw"))
@@ -483,8 +484,9 @@ class PqSpec extends SparkTestBase {
   test("one flat PQ search runs at most 6 jobs and no shuffle stage") {
     val (hits, search) = plainFlatPqRun()
     assert(hits.length === 160)
-    // meta, codebooks, rotation and tombstone reads, codes schema, the scan
-    assert(search.jobs <= 6, s"one search ran ${search.jobs} jobs")
+    // the scan: meta, codebooks, rotation and tombstones are read on the
+    // driver, codes/ with a declared schema (5 jobs before)
+    assert(search.jobs === 1, s"one search ran ${search.jobs} jobs")
     assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
   }
 
@@ -493,9 +495,9 @@ class PqSpec extends SparkTestBase {
     val (hits, search) = Ran(spark)(Pq.pqSearchRefined(spark, path, queries, corpus,
       k = 10, candidateK = 64).collect())
     assert(hits.length === 160)
-    // the plain search's jobs, then the corpus scan
+    // the plain search's scan, then the corpus scan
     val plain = plainFlatPqRun()._2.jobs
-    assert(search.jobs <= plain + 2 && search.jobs <= 8,
+    assert(search.jobs === plain + 1 && search.jobs === 2,
       s"one refined search ran ${search.jobs} jobs (plain: $plain)")
     assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
   }

@@ -483,8 +483,9 @@ class SimilarityIndexSpec extends SparkTestBase {
     val (afterDelete, withDeletes) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark,
       dir, queries, k = 20, nprobe = 2).select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet)
-    // the listener sees the tombstone read when there is one
-    assert(withDeletes.scansOf("deletes").nonEmpty)
+    // the tombstones are read on the driver: no Spark scan of deletes/, and
+    // the search is still its one scan job
+    assert(withDeletes.scansOf("deletes").isEmpty && withDeletes.jobs === 1)
     val hitIds = afterDelete.map(_._2)
     assert(hitIds.intersect(deleted).isEmpty,
       s"tombstoned vectors still ranked: $hitIds")
@@ -565,10 +566,67 @@ class SimilarityIndexSpec extends SparkTestBase {
     val (hits, search) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
       k = 10, nprobe = 4).collect())
     assert(hits.length === 160)
-    // centroid collect, tombstone collect, assignments schema, the scan
-    assert(search.jobs <= 4, s"one search ran ${search.jobs} jobs")
+    // the scan: centroids and tombstones are read on the driver, and the
+    // assignments with a declared schema (4 jobs before)
+    assert(search.jobs === 1, s"one search ran ${search.jobs} jobs")
     assert(search.shuffleStages === 0, s"one search ran ${search.shuffleStages} shuffle stages")
     assert(search.prunesLists("assignments"))
+  }
+
+  test("ivfCompact runs at most 4 jobs and returns the live rows") {
+    val rnd = new scala.util.Random(17)
+    def vecs(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_compact").toString
+    SimilarityIndex.ivfBuild(vecs(0 until 2000), dir, nlist = 8)
+    SimilarityIndex.ivfAppend(spark, dir, vecs(2000 until 2200))
+    SimilarityIndex.ivfDelete(spark, dir, Seq(1L, 2L, 3L).toDF("vec_id"))
+    SimilarityIndex.ivfDelete(spark, dir, Seq(2100L, 2L).toDF("vec_id"))
+    val (rows, compact) = Ran(spark)(SimilarityIndex.ivfCompact(spark, dir))
+    assert(rows === 2196L)
+    // the shuffle map stage and the write; the fold ran 9 jobs when it
+    // inferred both schemas, broadcast the tombstones and re-read the count
+    assert(compact.jobs <= 4, s"one compaction ran ${compact.jobs} jobs")
+    val after = spark.read.parquet(s"$dir/assignments")
+    assert(after.count() === 2196L)
+    assert(after.filter($"vec_id".isin(1L, 2L, 3L, 2100L)).count() === 0L)
+    assert(after.select("ingest").distinct().as[Int].collect().toSeq === Seq(0))
+    // a fold of every row leaves an empty layout and counts 0
+    SimilarityIndex.ivfDelete(spark, dir, spark.read.parquet(s"$dir/assignments").select("vec_id"))
+    assert(SimilarityIndex.ivfCompact(spark, dir) === 0L)
+  }
+
+  test("assignUdf and probeLists equal a boxed in-test reference on seeded vectors") {
+    // the nearest-centroid rule: squared distance over min(|v|, |c|)
+    // components, float components widened to double, first minimum by <
+    def refDist(v: Seq[Float], c: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < math.min(v.length, c.length)) { val d = v(i) - c(i); s += d * d; i += 1 }
+      s
+    }
+    def refAssign(centers: Array[Array[Double]], v: Seq[Float]): Int = {
+      var best = 0; var bestD = Double.MaxValue
+      centers.indices.foreach { j => val d = refDist(v, centers(j)); if (d < bestD) { bestD = d; best = j } }
+      best
+    }
+    val rnd = new scala.util.Random(23)
+    val base = Array.fill(6, 8)(rnd.nextGaussian())
+    // duplicate centroids 2 and 5 tie on every vector: the first must win
+    val centers = base.updated(5, base(2).clone())
+    val vs: Seq[(Long, Seq[Float])] = (0 until 300).map(i => (i.toLong,
+      if (i % 50 == 7) Seq.fill(5)(rnd.nextGaussian().toFloat) // a wrong-dimension vector
+      else if (i % 30 == 0) centers(2).toSeq.map(_.toFloat) // a vector on the tied centroid
+      else Seq.fill(8)(rnd.nextGaussian().toFloat)))
+    val got = vs.toDF("vec_id", "embedding")
+      .select($"vec_id", SimilarityIndex.assignUdf(centers)($"embedding"))
+      .as[(Long, Int)].collect().toMap
+    vs.foreach { case (id, v) => assert(got(id) === refAssign(centers, v), s"vector $id") }
+    assert(vs.exists(_._2.length == 5) && !got.values.exists(_ == 5))
+    vs.foreach { case (id, v) =>
+      val want = centers.indices.map(j => (refDist(v, centers(j)), j)).sorted.take(3).map(_._2)
+      assert(SimilarityIndex.probeLists(centers, v, 3).toSeq === want, s"probe of vector $id")
+    }
   }
 
   test("a null query vector yields no rows instead of failing the search") {

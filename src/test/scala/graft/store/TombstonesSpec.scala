@@ -84,4 +84,23 @@ class TombstonesSpec extends SparkTestBase {
       .as[(Int, Int, Long)].collect().toSet
     assert(got === Set((0, 0, 2L), (1, 0, 1L), (1, 1, 3L)))
   }
+
+  test("deletes of INT then BIGINT ids fold out of ivfCompact and int8Compact") {
+    val rnd = new scala.util.Random(5)
+    val built = (0 until 300).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val ivf = tmp() + "/ivf"
+    graft.index.SimilarityIndex.ivfBuild(built, ivf, nlist = 4)
+    val flat = tmp() + "/int8"
+    graft.index.Quantize.int8Build(built, flat)
+    // the first installment holds INT ids, a later one BIGINT ids
+    for (path <- Seq(ivf, flat)) {
+      Tombstones.append(spark, path, Seq(1, 2, 3).toDF("vec_id"), "vec_id")
+      Tombstones.append(spark, path, Seq(3L, 4L).toDF("vec_id"), "vec_id")
+    }
+    assert(graft.index.SimilarityIndex.ivfCompact(spark, ivf) === 296L)
+    assert(graft.index.Quantize.int8Compact(spark, flat) === 296L)
+    assert(spark.read.parquet(s"$ivf/assignments").count() === 296L)
+    assert(spark.read.parquet(s"$flat/codes").filter($"vec_id" <= 4L).count() === 1L)
+  }
 }
