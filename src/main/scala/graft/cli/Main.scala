@@ -1456,7 +1456,7 @@ object Main {
       spark.stop()
 
     case "index-vacuum" :: kind :: idx :: rest =>
-      // int8/ivfsq8 tombstones anti-join on the index's id column — pass
+      // int8/ivfsq8 tombstones match the index's id column — pass
       // it when the index was built with a non-default one
       val vecIdCol = rest.headOption.getOrElse("vec_id")
       val spark = session()

@@ -630,16 +630,17 @@ object Dedup {
    * half of the installment lifecycle ([[graft.store.Tombstones]]): one
    * id-list append plus NEGATIVE per-bucket size deltas written as the
    * next `sizes/` installment, so probe-time bucket sums (and the
-   * hot-bucket guard) stay exact without rewriting anything. Probes drop
-   * tombstoned rows via a broadcast anti-join on the stored bands —
-   * takedown semantics: the set applies to asOf snapshot reads too, and
-   * a snapshot pinned BEFORE the delete's sizes installment sees
+   * hot-bucket guard) stay exact without rewriting anything. Probes skip
+   * tombstoned ids inside their stored scans — takedown semantics: the
+   * set applies to asOf snapshot reads too, and a snapshot pinned BEFORE
+   * the delete's sizes installment sees
    * post-delete membership with pre-delete sizes (out of contract, the
    * same caveat as snapshots across a compaction).
    *
    * The LIVE-ids contract is SELF-ENFORCED (r11): ids already tombstoned
-   * in an earlier installment are anti-joined away before the deltas are
-   * derived, so a double-delete nets zero size deltas instead of
+   * in an earlier installment are dropped
+   * ([[graft.store.Tombstones.liveOnly]]) before the deltas are derived,
+   * so a double-delete nets zero size deltas instead of
    * double-subtracting. Deletes are sequential with appends (shared
    * installment numbering). [[minhashIndexVacuum]] folds the deletion
    * physically. Returns the deletes installment written.
@@ -685,7 +686,7 @@ object Dedup {
    * bands, each table folded to ONE `installment=0` partition
    * ([[graft.store.Tombstones.fold]], [[graft.store.Installments.fold]]);
    * clear `deletes/` last. Crash-safe by ordering:
-   * until the final clear, probes still anti-join the tombstones, so a
+   * until the final clear, probes still skip the tombstoned ids, so a
    * partially-folded index reads exactly like an unfolded one, and
    * re-running the vacuum completes it. asOf snapshots are only
    * meaningful between vacuums (the installment history folds away — the
@@ -1385,7 +1386,7 @@ object Dedup {
    *    a billion stored frames index in ~20 GB before compression.
    *  - `sizes/installment=N/`  — (id, n) DISTINCT-hash count per video,
    *    precomputed at write time so a probe never aggregates the corpus
-   *    (id-addressed: the tombstone anti-join covers it, no deltas).
+   *    (id-addressed: the tombstone skip covers it, no deltas).
    *  - `dfs/installment=N/`    — (h, c) distinct-video count DELTAS per
    *    hash — the [[graft.multimodal.Multimodal.videoContainmentDups]]
    *    df guard resolved from summed deltas for only the hashes a batch
@@ -1495,8 +1496,8 @@ object Dedup {
     * videos to one `installment=0` partition each
     * ([[graft.store.Tombstones.fold]], [[graft.store.Installments.fold]]);
     * `deletes/` cleared LAST (crash-safe ordering: until then probes
-    * still anti-join, and a re-run completes the job). Returns the
-    * surviving video count. */
+    * still skip the tombstoned ids, and a re-run completes the job).
+    * Returns the surviving video count. */
   def videoIndexCompact(spark: org.apache.spark.sql.SparkSession,
                         path: String): Long = {
     graft.store.Tombstones.fold(spark, path, "frames", "id")

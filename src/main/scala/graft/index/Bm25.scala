@@ -133,14 +133,16 @@ object Bm25 {
    * sums of integer deltas, a post-delete search computes EXACTLY the
    * scores of a fresh build over corpus-minus-deleted — which is what
    * the `doc_bm25_tombstone` oracle pins. Searches drop tombstoned
-   * postings via a broadcast anti-join; takedown semantics (the set
-   * applies to asOf snapshots too, and a snapshot pinned before the
-   * delete's delta installment sees post-delete membership with
-   * pre-delete statistics — out of contract, the compaction caveat).
+   * postings map-side ([[graft.store.Tombstones.filter]]); takedown
+   * semantics (the set applies to asOf snapshots too, and a snapshot
+   * pinned before the delete's delta installment sees post-delete
+   * membership with pre-delete statistics — out of contract, the
+   * compaction caveat).
    *
    * The LIVE-ids contract is SELF-ENFORCED (r11): ids already tombstoned
-   * in an earlier installment are anti-joined away before the deltas are
-   * derived, so a double-delete nets zero df/N/dl deltas instead of
+   * in an earlier installment are dropped
+   * ([[graft.store.Tombstones.liveOnly]]) before the deltas are derived,
+   * so a double-delete nets zero df/N/dl deltas instead of
    * double-subtracting. Sequential with appends (shared `stats/`
    * numbering). [[bm25IndexVacuum]] folds the deletion physically.
    * Returns the deletes installment written.
@@ -180,7 +182,7 @@ object Bm25 {
       .write.mode("overwrite")
       .parquet(s"$path/stats/installment=$statsInstallment")
     // tombstone only the live ids — re-deleted ids are already in an
-    // earlier installment and would only bloat the broadcast set
+    // earlier installment and would only grow the driver-read set
     graft.store.Tombstones.appendAt(spark, path, live, "doc_id",
       deletesInstallment)
     deletesInstallment
@@ -194,7 +196,7 @@ object Bm25 {
    * [[bm25IndexCompact]] (their sums already net out the delete's
    * negative deltas), clear `deletes/` last.
    * Crash-safe by ordering: until the final clear, searches still
-   * anti-join the tombstones, so a partially-folded index reads exactly
+   * skip the tombstoned ids, so a partially-folded index reads exactly
    * like an unfolded one and a re-run completes the job. Returns the
    * surviving document count.
    */

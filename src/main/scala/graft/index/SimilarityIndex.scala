@@ -269,15 +269,10 @@ object SimilarityIndex {
     * raw/ folds ([[Quantize.ivfSq8Compact]]). */
   private[index] def compactListDir(spark: SparkSession, indexPath: String,
                                     dir: String, corpusId: String): Long = {
-    // tombstoned rows are skipped map-side, like the search's scan; a
-    // null id is never tombstoned
-    val dead = graft.store.Tombstones.collectLongIds(spark, indexPath)
-    val live = udf((id: Long) => java.util.Arrays.binarySearch(dead, id) < 0)
-    val id = col(corpusId).cast("long")
     graft.store.DirSwap.replace(spark, dir) { side =>
       val rows = org.apache.spark.sql.Observation()
-      val stored = readLists(spark, dir)
-      (if (dead.isEmpty) stored else stored.filter(id.isNull || live(id)))
+      // tombstoned rows are skipped map-side, like the search's scan
+      graft.store.Tombstones.filter(spark, indexPath, readLists(spark, dir), corpusId)
         .withColumn("ingest", lit(0)) // the ingest history folds away
         .repartition(col("list_id"))
         // observed above the exchange: a fold of no rows still reports 0
@@ -412,8 +407,8 @@ object SimilarityIndex {
                  corpusId: String = "vec_id"): Long = {
     val rows = compactListDir(spark, path, s"$path/assignments", corpusId)
     // clear deletes LAST (the Bm25 vacuum ordering): until this point a
-    // crashed compaction still reads correctly through the anti-join, and
-    // re-running the compaction completes it
+    // crashed compaction still reads correctly, every read skipping the
+    // tombstoned ids, and re-running the compaction completes it
     graft.store.Tombstones.clear(spark, path)
     rows
   }

@@ -298,15 +298,16 @@ private[sources] class WarcPartitionReader(part: WarcPartition,
         }
         val n = inflater.inflate(chunk)
         if (n > 0) {
-          outBuf.write(chunk, 0, n)
           // gzip-bomb guard: a member inflating past 1 GiB is treated as
           // corrupt (costs itself; the magic scan resumes) — no WARC
           // packaging puts a 1 GiB record in one member, and an unbounded
-          // outBuf is an executor OOM an adversarial crawl can trigger
-          if (outBuf.size() > WarcPartitionReader.MaxMemberInflated) {
+          // outBuf is an executor OOM an adversarial crawl can trigger.
+          // Checked before the write, so outBuf never grows past the cap
+          if (outBuf.size().toLong + n > WarcPartitionReader.MaxMemberInflated) {
             inflater.end()
             return None
           }
+          outBuf.write(chunk, 0, n)
         }
         if (inflater.finished()) done = true
         else if (n == 0 && !inflater.needsInput()) { // stuck: corrupt

@@ -1,6 +1,8 @@
 package graft.store
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,14 +32,17 @@ import org.apache.spark.sql.types._
  * post-delete membership with pre-delete statistics and is out of
  * contract (the same caveat as snapshots across a compaction).
  *
- * Scale shape: the tombstone list is id-only (8 bytes/row) and rides a
- * broadcast anti-join on the stored side of each read ([[filter]]), or
- * is read on the driver ([[collectIds]], no Spark job) and skipped inside
- * the stored scan (the routed vector searches, the MinHash probe, the
- * IVF folds) — the corpus-sized tables stream map-side, never shuffle.
- * Both assume the delete set stays small relative to the corpus (the
- * takedown shape); a mass deletion should be a rebuild, and compaction
- * resets the list to empty either way.
+ * Scale shape: the tombstone list is id-only (8 bytes/row) and is read
+ * on the driver ([[collectIds]]: no Spark job). Every reader skips the
+ * listed ids map-side inside its own stored scan — through [[filter]]
+ * (and [[fold]], [[liveOnly]]) or, in the routed vector searches and the
+ * MinHash probe, inside the kernel — so the corpus-sized tables stream
+ * and never shuffle. The set is read when the reader is called: a frame
+ * returned lazily (the BM25 search, the hamming and video probes) skips
+ * the ids deleted before the call, not those deleted between the call
+ * and its execution. This assumes the delete set stays small relative
+ * to the corpus (the takedown shape); a mass deletion should be a
+ * rebuild, and compaction resets the list to empty either way.
  */
 object Tombstones {
 
@@ -46,8 +51,8 @@ object Tombstones {
   /** Append a batch of deleted ids as the next `installment=` partition
     * of `$path/deletes`. First delete creates the dir at installment 0.
     * Returns the installment written. Ids are stored distinct — a
-    * re-deleted id is harmless (anti-join semantics) but bloats the
-    * broadcast for nothing. */
+    * re-deleted id is harmless (readers skip each id once) but would
+    * grow the driver-read set for nothing. */
   def append(spark: SparkSession, path: String, ids: DataFrame,
              idCol: String): Int = {
     val n = nextInstallment(spark, path)
@@ -72,60 +77,59 @@ object Tombstones {
       .write.mode("overwrite")
       .parquet(s"${deletesDir(path)}/installment=$installment")
 
-  /** The full tombstone set as a distinct one-column (`id`) frame of
-    * `idType` — every index family keys by its own id column, and a
-    * hardcoded LongType would silently type-mismatch a string-keyed
-    * index's first delete-free read. `id` is read with that declared type,
-    * so installments written with different integer widths read as one
-    * and no schema-inference job runs; empty when no delete has ever
-    * landed. Distinct across installments — the same id deleted twice
-    * anti-joins once. */
-  def read(spark: SparkSession, path: String,
-           idType: DataType = LongType): DataFrame = {
-    val dir = deletesDir(path)
-    val schema = StructType(Seq(StructField("id", idType)))
-    if (!dirExists(spark, dir))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dir).select("id").distinct()
-  }
-
   /** The full tombstone set as distinct long ids, sorted ascending
     * (binary-searchable); empty when no delete has ever landed — for
     * readers that route on the driver and drop tombstoned rows inside
-    * their own scan (the IVF search and compaction) instead of planning an
-    * anti-join. `id` is read as BIGINT, so narrower integer ids widen. */
+    * their own scan (the routed vector searches) instead of filtering a
+    * frame. `id` is read as BIGINT, so narrower integer ids widen. */
   def collectLongIds(spark: SparkSession, path: String): Array[Long] =
     collectIds(spark, path, LongType)
       .iterator.map(_.asInstanceOf[Long]).toArray.sorted
 
   /** The full tombstone set as distinct non-null ids read as `idType`,
     * read on the driver ([[graft.store.readSmall]]: no Spark job; the set
-    * is takedown-sized by contract); empty when no delete has ever landed
-    * — for scans that drop tombstoned rows themselves (the routed MinHash
-    * probe). Every call reads the current installments, so a read sees
-    * every delete landed before it. */
+    * is takedown-sized by contract); empty when no delete has ever landed.
+    * Every call reads the current installments, so a read sees every
+    * delete landed before it. */
   def collectIds(spark: SparkSession, path: String, idType: DataType): Set[Any] =
-    if (!any(spark, path)) Set.empty
-    else readSmall(spark, deletesDir(path), s"id ${idType.sql}")
-      .iterator.map(_.get(0)).filter(_ != null).toSet
+    idsBefore(spark, path, idType, Int.MaxValue)
 
-  /** The tombstone set from installments STRICTLY BEFORE `installment` —
-    * what the self-enforcing `*DeleteAt` forms anti-join their incoming
-    * ids against: a replay at the SAME numbers excludes its own (possibly
-    * already-landed) partition and recomputes identical deltas, while a
-    * true double-delete at a LATER number sees the id already tombstoned
-    * and contributes nothing — so negative df/size deltas can never
-    * double-subtract. Partition-pruned read; empty frame (caller-hinted
-    * id type) when nothing earlier exists. */
-  def readBefore(spark: SparkSession, path: String, installment: Int,
-                 idType: DataType = LongType): DataFrame = {
-    val dir = deletesDir(path)
-    if (!dirExists(spark, dir) || installment <= 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", idType))))
-    else spark.read.parquet(dir)
-      .filter(col("installment") < installment)
-      .select("id").distinct()
+  /** The ids of the installments STRICTLY BEFORE `installment` — the
+    * one driver read behind [[collectIds]] (`Int.MaxValue`: every
+    * installment) and [[liveOnly]]. Nulls never match an id, so they are
+    * dropped here. */
+  private def idsBefore(spark: SparkSession, path: String, idType: DataType,
+                        installment: Int): Set[Any] = {
+    val dir = new Path(deletesDir(path))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator.map(_.getPath)
+      .filter(p => p.getName.startsWith("installment=") &&
+        p.getName.stripPrefix("installment=").toInt < installment)
+      .flatMap(p => readSmall(spark, p.toString, s"id ${idType.sql}"))
+      .map(_.get(0)).filter(_ != null).toSet
+  }
+
+  /** Keep the rows of `df` whose `idCol` is null or not in the set `dead`
+    * reads — the one map-side tombstone skip every reader shares. `dead`
+    * is asked for the ids as the column's type, an integer column's as
+    * BIGINT: installments may hold INT and BIGINT ids, and one read must
+    * take both. A null id is never tombstoned, and no id at all leaves
+    * `df` as it is (the identical plan). The predicate is a UDF over the
+    * driver-read set, so no id list reaches the scan's pushed filters. */
+  private def dropDead(df: DataFrame, idCol: String)(dead: DataType => Set[Any]): DataFrame = {
+    val idType = df.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType => LongType
+      case t => t
+    }
+    val ids = dead(idType)
+    if (ids.isEmpty) df
+    else {
+      val live = udf(new UDF1[Any, Boolean] {
+        def call(id: Any): Boolean = id == null || !ids.contains(id)
+      }, BooleanType)
+      df.filter(live(col(idCol).cast(idType)))
+    }
   }
 
   /** Restrict a delete batch to ids NOT already tombstoned before
@@ -136,41 +140,24 @@ object Tombstones {
     * should consume, so a double-delete subtracts nothing and lands no
     * duplicate tombstone rows, while a crash-retry at the same numbers
     * (whose own partition is excluded by the strict `<`) still recomputes
-    * its full deltas. Broadcast anti-join — delete batches are id-only
-    * and takedown-sized by contract. */
+    * its full deltas. The earlier installments are read once, on the
+    * driver, when this is called; every write that consumes the frame
+    * skips against that set. */
   def liveOnly(spark: SparkSession, path: String, ids: DataFrame,
-               idCol: String, deletesInstallment: Int): DataFrame = {
-    val idType = ids.schema(idCol).dataType
-    ids.join(
-      broadcast(readBefore(spark, path, deletesInstallment, idType)
-        .select(col("id").as(idCol))),
-      Seq(idCol), "left_anti")
-  }
+               idCol: String, deletesInstallment: Int): DataFrame =
+    dropDead(ids, idCol)(idsBefore(spark, path, _, deletesInstallment))
 
-  /** True when at least one tombstone exists — readers use this to skip
-    * the anti-join entirely on an index that has never seen a delete,
-    * keeping their plans (and the plan-shape specs pinning them)
-    * byte-identical to the pre-tombstone era. */
+  /** True when the deletes dir exists: a delete has landed since the
+    * last compaction cleared it. */
   def any(spark: SparkSession, path: String): Boolean =
     dirExists(spark, deletesDir(path))
 
-  /** Drop the stored side's tombstoned rows: a broadcast anti-join on
-    * `joinCol`, or a no-op (the identical plan) when the index has no
-    * deletes dir. The stored scan stays map-side either way. `deletes/` is
-    * read with the join column's type, an integer column's as BIGINT: its
-    * installments may hold INT and BIGINT ids, and one read must take
-    * both. */
+  /** Drop the stored side's tombstoned rows ([[dropDead]] against
+    * [[collectIds]]): a map-side filter, or a no-op (the identical plan)
+    * when no id is tombstoned. */
   def filter(spark: SparkSession, path: String, stored: DataFrame,
              joinCol: String): DataFrame =
-    if (!any(spark, path)) stored
-    else {
-      val idType = stored.schema(joinCol).dataType match {
-        case ByteType | ShortType | IntegerType => LongType
-        case t => t
-      }
-      stored.join(broadcast(read(spark, path, idType).select(col("id").as(joinCol))),
-        Seq(joinCol), "left_anti")
-    }
+    dropDead(stored, joinCol)(collectIds(spark, path, _))
 
   /** Fold every installment of `$path/$table` into one `installment=0`
     * partition without the tombstoned rows ([[Installments.fold]]);
@@ -186,7 +173,7 @@ object Tombstones {
     * physical fold has dropped the tombstoned rows from the data
     * tables. */
   def clear(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(deletesDir(path))
+    val p = new Path(deletesDir(path))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What a block ran: the executed plans and file scans of every SQL
   * execution it finished (as query listeners see them), its Spark jobs
-  * and its shuffle-map stages. */
+  * with the call site (stack) each started from, and its shuffle-map
+  * stages. */
 final case class Ran(plans: Seq[SparkPlan], scans: Seq[FileSourceScanExec], jobs: Int,
-                     shuffleStages: Int) {
+                     shuffleStages: Int, jobSites: Seq[String]) {
   def scansOf(dir: String): Seq[FileSourceScanExec] =
     scans.filter(_.relation.location.rootPaths.exists(_.toString.endsWith(dir)))
   /** There is a scan of `dir`, and every one carries a `list_id` partition
@@ -37,6 +38,7 @@ object Ran extends AdaptiveSparkPlanHelper {
       p != null && p.getProperty("spark.jobGroup.id") == group
     val plans = new ConcurrentLinkedQueue[SparkPlan]
     val jobs = new AtomicInteger
+    val sites = new ConcurrentLinkedQueue[String]
     val shuffleStages = new AtomicInteger
     val queries = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -45,7 +47,10 @@ object Ran extends AdaptiveSparkPlanHelper {
     }
     val stages = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.incrementAndGet()
+        if (ours(e.properties)) {
+          jobs.incrementAndGet()
+          sites.add(e.stageInfos.headOption.fold("")(_.details))
+        }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (ours(e.properties) && ListenerBus.isShuffleMapStage(e.stageInfo))
           shuffleStages.incrementAndGet()
@@ -59,7 +64,7 @@ object Ran extends AdaptiveSparkPlanHelper {
       ListenerBus.drain(sc)
       val ps = plans.asScala.toSeq
       (out, Ran(ps, ps.flatMap(p => collectWithSubqueries(p) { case s: FileSourceScanExec => s }),
-        jobs.get, shuffleStages.get))
+        jobs.get, shuffleStages.get, sites.asScala.toSeq))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(stages)

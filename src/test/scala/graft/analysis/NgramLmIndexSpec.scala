@@ -59,7 +59,7 @@ class NgramLmIndexSpec extends SparkTestBase {
     NgramLm.lmIndexDelete(spark, path, odd)
     val once = collected(NgramLm.lmScoreIndexed(spark, path, docs))
     // re-deleting the SAME documents must subtract nothing more — the md5
-    // ledger anti-joins them away (the r10 review's contract gap)
+    // ledger drops them (the r10 review's contract gap)
     NgramLm.lmIndexDelete(spark, path, odd)
     assert(collected(NgramLm.lmScoreIndexed(spark, path, docs)) === once,
       "re-delete double-subtracted the count model")

@@ -106,8 +106,8 @@ class LexiconSpec extends SparkTestBase {
       // (the as-of/compact variants run the identical scorer over a
       // pruned/folded read)
       "emb_topk_int8", "emb_int8_asof", "emb_int8_compact",
-      // the tombstone search runs the same scorer with an anti-joined
-      // (broadcast-hash, not nested-loop) delete list in front
+      // the tombstone search runs the same scorer, skipping the
+      // driver-read tombstoned ids inside its scan (no join at all)
       "emb_int8_tombstone",
       // hard-negative mining runs the same intentional brute scorer
       "emb_hard_negatives",

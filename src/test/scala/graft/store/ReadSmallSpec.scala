@@ -116,31 +116,58 @@ class ReadSmallSpec extends SparkTestBase {
       multiset(spark.read.schema("d DATE, x DECIMAL(38,18)").parquet(dated).collect()))
   }
 
-  test("source guard: no spark.read of an index's small tables ends in collect() or head()") {
+  private def comment(l: String) = Seq("*", "/**", "//").exists(l.trim.startsWith)
+
+  /** Each statement that starts with `spark.read`: its line, then every
+    * line while a paren is open or the next line continues the chain. */
+  private def statements(lines: IndexedSeq[String]): Seq[(Int, String)] =
+    lines.indices.filter(i => !comment(lines(i)) && lines(i).contains("spark.read")).map { i =>
+      var j = i
+      var depth = lines(i).count(_ == '(') - lines(i).count(_ == ')')
+      while (j + 1 < lines.length && (depth > 0 || lines(j + 1).trim.startsWith("."))) {
+        j += 1
+        depth += lines(j).count(_ == '(') - lines(j).count(_ == ')')
+      }
+      (i + 1, lines.slice(i, j + 1).mkString("\n"))
+    }
+
+  /** Every main source file with its lines. */
+  private def mainSources: Seq[(Path, IndexedSeq[String])] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
+    Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(f => (f, Files.readAllLines(f).asScala.toIndexedSeq))
+  }
+
+  test("source guard: no spark.read of an index's small tables ends in collect() or head()") {
     val small = "/(centroids|meta|codebooks|rotation|deletes)\\b|deletesDir\\(".r
-    def comment(l: String) = Seq("*", "/**", "//").exists(l.trim.startsWith)
-    /** Each statement that starts with `spark.read`: its line, then every
-      * line while a paren is open or the next line continues the chain. */
-    def statements(lines: IndexedSeq[String]): Seq[(Int, String)] =
-      lines.indices.filter(i => !comment(lines(i)) && lines(i).contains("spark.read")).map { i =>
-        var j = i
-        var depth = lines(i).count(_ == '(') - lines(i).count(_ == ')')
-        while (j + 1 < lines.length && (depth > 0 || lines(j + 1).trim.startsWith("."))) {
-          j += 1
-          depth += lines(j).count(_ == '(') - lines(j).count(_ == ')')
-        }
-        (i + 1, lines.slice(i, j + 1).mkString("\n"))
-      }
-    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val offenders = files.flatMap { (f: Path) =>
-      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+    val offenders = mainSources.flatMap { case (f, lines) =>
       statements(lines).collect {
         case (n, st) if small.findFirstIn(st).nonEmpty &&
           (st.contains(".collect()") || st.contains(".head()")) => s"$f:$n"
       }
     }
     assert(offenders.isEmpty, "read small index tables with graft.store.readSmall")
+  }
+
+  test("source guard: deletes/ is read on the driver and never anti-joined") {
+    // Tombstones owns deletes/: any Spark read or anti-join there is one of
+    // deletes/; elsewhere, a Spark read naming deletes/, or an anti-join
+    // whose statement (the line and the 3 before it) names the tombstones
+    val deletes = "/deletes\\b|deletesDir\\(".r
+    val offenders = mainSources.flatMap { case (f, lines) =>
+      val owner = f.getFileName.toString == "Tombstones.scala"
+      val reads = statements(lines).collect {
+        case (n, st) if owner || deletes.findFirstIn(st).nonEmpty => s"$f:$n spark.read"
+      }
+      val antiJoins = lines.indices.collect {
+        case i if !comment(lines(i)) && lines(i).contains("\"left_anti\"") &&
+          (owner || lines.slice(i - 3 max 0, i + 1).exists(l =>
+            l.contains("Tombstones") || deletes.findFirstIn(l).nonEmpty)) => s"$f:${i + 1} left_anti"
+      }
+      reads ++ antiJoins
+    }
+    assert(offenders.isEmpty,
+      "drop tombstones through graft.store.Tombstones' driver read and predicate")
   }
 }
