@@ -960,7 +960,7 @@ object SparkEntry {
       val idxDir = java.nio.file.Files.createTempDirectory("graft_ivf_")
       deleteRecursivelyOnExit(idxDir)
       val idxPath = idxDir.resolve("idx").toFile.getAbsolutePath
-      SimilarityIndex.ivfBuild(e, idxPath, nlist = 16, fitSampleFraction = 0.5)
+      SimilarityIndex.ivfBuild(e, idxPath, nlist = 16)
       val approx = SimilarityIndex.ivfSearchIndexed(s, idxPath, q, k = 5, nprobe = 6)
       val exact = SimilarityIndex.bruteForceTopK(e, q, k = 5)
       SimilarityIndex.approxRecallReport(approx, exact, recallFloor = 2)
@@ -982,7 +982,7 @@ object SparkEntry {
       val idxPath = idxDir.resolve("idx").toFile.getAbsolutePath
       Phases.timed("build") {
         SimilarityIndex.ivfBuild(e.filter(col("vec_id") % 2 === 0), idxPath,
-          nlist = 16, fitSampleFraction = 0.5)
+          nlist = 16)
       }
       Phases.timed("append") {
         SimilarityIndex.ivfAppend(s, idxPath, e.filter(col("vec_id") % 2 === 1))
@@ -1040,7 +1040,7 @@ object SparkEntry {
       deleteRecursivelyOnExit(idxDir)
       val idxPath = idxDir.resolve("idx").toFile.getAbsolutePath
       Phases.timed("build") {
-        SimilarityIndex.ivfBuild(e, idxPath, nlist = 16, fitSampleFraction = 0.5)
+        SimilarityIndex.ivfBuild(e, idxPath, nlist = 16)
       }
       Phases.timed("delete") {
         SimilarityIndex.ivfDelete(s, idxPath,
@@ -1066,8 +1066,7 @@ object SparkEntry {
       deleteRecursivelyOnExit(idxDir)
       val idxPath = idxDir.resolve("idx").toFile.getAbsolutePath
       Phases.timed("build") {
-        graft.index.Quantize.ivfSq8Build(e, idxPath, nlist = 16,
-          fitSampleFraction = 0.5)
+        graft.index.Quantize.ivfSq8Build(e, idxPath, nlist = 16)
       }
       val approx = graft.index.Quantize.ivfSq8Search(s, idxPath, q,
         k = 5, nprobe = 6)
@@ -1250,8 +1249,7 @@ object SparkEntry {
       deleteRecursivelyOnExit(idxDir)
       val idxPath = idxDir.resolve("idx").toFile.getAbsolutePath
       Phases.timed("build") {
-        graft.index.Quantize.ivfSq8Build(e, idxPath, nlist = 16,
-          fitSampleFraction = 0.5)
+        graft.index.Quantize.ivfSq8Build(e, idxPath, nlist = 16)
       }
       val batch = e.filter(col("vec_id") % 20 === 0)
         .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -1288,7 +1286,7 @@ object SparkEntry {
       val idxPath = idxDir.resolve("idx").toFile.getAbsolutePath
       Phases.timed("build") {
         graft.index.Quantize.ivfSq8Build(e, idxPath, nlist = 16,
-          fitSampleFraction = 0.5, storeRaw = true)
+          storeRaw = true)
       }
       graft.index.Quantize.ivfSq8SearchRefined(s, idxPath, q, k = 5,
         candidateK = 64, nprobe = 16)

@@ -620,8 +620,8 @@ object Dedup {
     * Numbering off sets alone would let a delete (sizes-only) and the
     * next append collide on a sizes number. The max is collision-free
     * against both maintenance histories. */
-  def nextMinhashInstallment(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Int =
+  private def nextMinhashInstallment(spark: org.apache.spark.sql.SparkSession,
+                                     path: String): Int =
     math.max(graft.store.Installments.next(spark, s"$path/sizes"),
       graft.store.Installments.next(spark, s"$path/sets"))
 

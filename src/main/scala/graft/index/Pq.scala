@@ -591,15 +591,10 @@ object Pq {
         "centroids, a different layout)")
     val spark = corpus.sparkSession
     val (dim, fitRows) = buildShape(corpus, corpusVec, m, ksub, maxFitRows, "ivfPqBuild")
-    // coarse routing fit shares the row-bounded discipline: fraction
-    // derived from one count, seeded — corpus-independent fit cost.
-    // The coarse fit and the m codebook fits are INDEPENDENT seeded
-    // computations — run them as concurrent Spark jobs (the
+    // The coarse fit (row-bounded, seeded) and the m codebook fits are
+    // INDEPENDENT computations — run them as concurrent Spark jobs (the
     // fitCodebooks discipline; sequentially the coarse KMeans'
     // ~10 iterations are pure added wall-clock)
-    val n = corpus.select(col(corpusVec)).count()
-    val coarseFrac =
-      if (n > fitRows) fitRows.toDouble / n else 1.0
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -609,7 +604,7 @@ object Pq {
     // every call site consistent by construction)
     val rot = storeRotation(spark, path, dim, rotate)
     val coarseF = Future {
-      SimilarityIndex.fitCentroids(corpus, corpusVec, nlist, coarseFrac)
+      SimilarityIndex.fitCentroids(corpus, corpusVec, nlist)
     }
     def fitBooks(rc: Array[Array[Double]],
                  ra: Array[Array[Double]]): Array[Array[Array[Double]]] =

@@ -235,7 +235,6 @@ object Quantize {
    */
   def ivfSq8Build(corpus: DataFrame, path: String, nlist: Int = 64,
                   corpusId: String = "vec_id", corpusVec: String = "embedding",
-                  fitSampleFraction: Double = 0.5,
                   storeRaw: Boolean = false): Unit = {
     val spark = corpus.sparkSession
     // the fit, the scale pass, and the four writes below are
@@ -247,8 +246,7 @@ object Quantize {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val scaleF = Future { maxAbs(corpus, corpusVec) / 127.0 }
-    val centers = SimilarityIndex.fitCentroids(corpus, corpusVec, nlist,
-      fitSampleFraction)
+    val centers = SimilarityIndex.fitCentroids(corpus, corpusVec, nlist)
     val centroidsF = Future { SimilarityIndex.writeCentroids(spark, path, centers) }
     val scale = Await.result(scaleF, Duration.Inf)
     val metaF = Future { writeScale(spark, path, scale) }

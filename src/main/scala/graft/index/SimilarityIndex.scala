@@ -164,12 +164,9 @@ object SimilarityIndex {
     * 100×-scale caveat of the r16 verdict), one narrow corpus pass to
     * extract them, zero distributed jobs to iterate. Centroids are a
     * pure function of corpus CONTENT — partitioning/core-count
-    * independent, which the MLlib k-means|| path was not.
-    * `fitSampleFraction` is retained for source compatibility; the row
-    * bound subsumes it (every caller's fraction was only ever a cost
-    * control, and the bound is the stricter one). */
-  private[index] def fitCentroids(corpus: DataFrame, corpusVec: String, nlist: Int,
-                           fitSampleFraction: Double): Array[Array[Double]] = {
+    * independent, which the MLlib k-means|| path was not. */
+  private[index] def fitCentroids(corpus: DataFrame, corpusVec: String,
+                                  nlist: Int): Array[Array[Double]] = {
     val bound = math.max(256L * nlist, 10000L)
     val sample = KMeansLocal.boundedSample(corpus.select(col(corpusVec)),
       corpusVec, bound)
@@ -211,10 +208,6 @@ object SimilarityIndex {
     else sqDists(centers, v.toArray).zipWithIndex.sorted
       .take(math.min(nprobe, centers.length)).map(_._2)
 
-  /** [[probeLists]] as a column function. */
-  private[index] def probeUdf(centers: Array[Array[Double]], nprobe: Int) =
-    udf((v: Seq[Float]) => probeLists(centers, v, nprobe))
-
   /**
    * Fit and persist an IVF index (≙ GraphSerializer.Save, GraphSerializer
    * .cs:29-61 — but as a queryable columnar layout instead of a node file):
@@ -225,14 +218,12 @@ object SimilarityIndex {
    *     directory and a probe reads ONLY matching partitions.
    *
    * The k-means fit reads a row-bounded sample whatever the corpus size
-   * ([[fitCentroids]]); `fitSampleFraction` is accepted for source
-   * compatibility and does not change the bound.
+   * ([[fitCentroids]]).
    */
   def ivfBuild(corpus: DataFrame, path: String, nlist: Int = 64,
-               corpusId: String = "vec_id", corpusVec: String = "embedding",
-               fitSampleFraction: Double = 0.5): Unit = {
+               corpusId: String = "vec_id", corpusVec: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
-    val centers = fitCentroids(corpus, corpusVec, nlist, fitSampleFraction)
+    val centers = fitCentroids(corpus, corpusVec, nlist)
     writeCentroids(spark, path, centers)
     writeLists(corpus.withColumn("list_id", assignUdf(centers)(col(corpusVec))),
       s"$path/assignments", 0, build = true)

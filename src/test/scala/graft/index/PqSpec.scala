@@ -613,4 +613,16 @@ class PqSpec extends SparkTestBase {
     Pq.ivfPqDeleteAt(spark, path, Seq(4L, 5L).toDF("vec_id"), installment = 1)
     assert(hits() === all -- Set(3L, 4L, 5L))
   }
+
+  test("ivfPqBuild runs 7 Spark actions and at most 9 jobs: no corpus count") {
+    val path = tmpIdx("build_jobs")
+    embs.schema
+    val (_, build) = Ran(spark)(Pq.ivfPqBuild(embs, path, nlist = 4, m = 8, ksub = 16))
+    // the shape probe, the coarse and codebook fit samples, and the four
+    // writes. Actions are seen on every thread; the jobs of the fit and
+    // write futures count only when their pool thread inherited this
+    // test's job group, so the job count is an upper bound
+    assert(build.plans.size === 7, s"one build ran ${build.plans.size} actions")
+    assert(build.jobs <= 9, s"one build ran ${build.jobs} jobs: ${build.jobSites}")
+  }
 }

@@ -95,7 +95,7 @@ class QuantizeSpec extends SparkTestBase {
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
     val path = java.nio.file.Files.createTempDirectory("ivfsq8")
       .resolve("idx").toString
-    Quantize.ivfSq8Build(embs, path, nlist = 8, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(embs, path, nlist = 8)
     val (hits, search) = Ran(spark)(Quantize.ivfSq8Search(spark, path, q, k = 5, nprobe = 4))
     val top1 = hits.filter($"rank" === 1)
       .as[(Long, Long, Double, Int)].collect()
@@ -109,7 +109,7 @@ class QuantizeSpec extends SparkTestBase {
     val appPath = java.nio.file.Files.createTempDirectory("ivfsq8-app")
       .resolve("idx").toString
     Quantize.ivfSq8Build(embs.filter($"vec_id" % 2 === 0), appPath,
-      nlist = 8, fitSampleFraction = 1.0)
+      nlist = 8)
     Quantize.ivfSq8Append(spark, appPath, embs.filter($"vec_id" % 2 === 1))
     val appended = Quantize.ivfSq8Search(spark, appPath, q, k = 1, nprobe = 8)
       .filter($"rank" === 1).as[(Long, Long, Double, Int)].collect()
@@ -181,7 +181,7 @@ class QuantizeSpec extends SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("ivfsq8-compact")
       .resolve("idx").toString
     Quantize.ivfSq8Build(embs.filter($"vec_id" % 2 === 0), path,
-      nlist = 4, fitSampleFraction = 1.0)
+      nlist = 4)
     // several small appends -> many small files per list partition
     (1 to 3).foreach { r =>
       Quantize.ivfSq8Append(spark, path,
@@ -213,8 +213,7 @@ class QuantizeSpec extends SparkTestBase {
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
     val path = java.nio.file.Files.createTempDirectory("ivfsq8-refined")
       .resolve("idx").toString
-    Quantize.ivfSq8Build(embs, path, nlist = 8, fitSampleFraction = 1.0,
-      storeRaw = true)
+    Quantize.ivfSq8Build(embs, path, nlist = 8, storeRaw = true)
     // probe everything: the candidate pool then certainly contains the
     // float top-5 (int8 error cannot push a true neighbor below rank 32
     // of 500), so refinement must return EXACTLY the brute-force answer
@@ -235,7 +234,7 @@ class QuantizeSpec extends SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("ivfsq8-refined-app")
       .resolve("idx").toString
     Quantize.ivfSq8Build(embs.filter($"vec_id" % 2 === 0), path,
-      nlist = 8, fitSampleFraction = 1.0, storeRaw = true)
+      nlist = 8, storeRaw = true)
     Quantize.ivfSq8Append(spark, path, embs.filter($"vec_id" % 2 === 1))
     val appended = Quantize.ivfSq8SearchRefined(spark, path, q, k = 5,
       candidateK = 32, nprobe = 8)
@@ -323,7 +322,7 @@ class QuantizeSpec extends SparkTestBase {
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
     val path = java.nio.file.Files.createTempDirectory("ivfsq8-noraw")
       .resolve("idx").toString
-    Quantize.ivfSq8Build(embs.limit(50), path, nlist = 4, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(embs.limit(50), path, nlist = 4)
     val e = intercept[IllegalArgumentException] {
       Quantize.ivfSq8SearchRefined(spark, path, q, k = 3)
     }
@@ -497,7 +496,7 @@ class QuantizeSpec extends SparkTestBase {
     val flat = base.resolve("flat").toString
     val ivf = base.resolve("ivf").toString
     Quantize.int8Build(probeCorpus, flat)
-    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2)
     val flatPairs = Quantize.int8NearDupProbe(spark, flat, probeBatch, 0.9)
       .select("corpus_id", "new_id").as[(Long, Long)].collect().toSet
     val ivfPairs = Quantize.ivfSq8NearDupProbe(spark, ivf, probeBatch, 0.9,
@@ -518,7 +517,7 @@ class QuantizeSpec extends SparkTestBase {
     val flat = base.resolve("flat").toString
     val ivf = base.resolve("ivf").toString
     Quantize.int8Build(probeCorpus, flat)
-    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2)
     val flatSurv = Quantize.int8ProbePrune(spark, flat, probeBatch, 0.9)
       .select("vec_id").as[Long].collect().toSet
     val ivfSurv = Quantize.ivfSq8ProbePrune(spark, ivf, probeBatch, 0.9,
@@ -541,7 +540,7 @@ class QuantizeSpec extends SparkTestBase {
     // nprobe=1 must find the batch-only pair and keep-min it.
     val ivf = java.nio.file.Files.createTempDirectory("ivfsq8-bi-routed")
       .resolve("ivf").toString
-    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2)
     val twinBatch = Seq(
       (201L, Seq(0f, 0f, 0.7f, 0.7f)),
       (202L, Seq(0f, 0f, 0.7f, 0.7f)),  // exact twin of 201 — batch-only pair
@@ -557,7 +556,7 @@ class QuantizeSpec extends SparkTestBase {
   test("ivf probe plan prunes to probed lists and never shuffles the stored scan") {
     val ivf = java.nio.file.Files.createTempDirectory("ivfsq8-probe-plan")
       .resolve("ivf").toString
-    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(probeCorpus, ivf, nlist = 2)
     val (_, probe) = Ran(spark)(Quantize.ivfSq8NearDupProbe(spark, ivf, probeBatch, 0.9,
       nprobe = 1).collect())
     assert(probe.scansOf("codes").length === 1, "one scan of the stored codes")
@@ -598,7 +597,7 @@ class QuantizeSpec extends SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("ivfsq8-del")
       .resolve("idx").toString
     Quantize.ivfSq8Build(probeCorpus, path, nlist = 2,
-      fitSampleFraction = 1.0, storeRaw = true)
+      storeRaw = true)
     Quantize.ivfSq8Delete(spark, path, Seq(2L).toDF("vec_id"))
     val q = Seq((201L, Seq(0f, 1f, 0f, 0f))).toDF("query_id", "query_vec")
     val hits = Quantize.ivfSq8Search(spark, path, q, k = 4, nprobe = 2)

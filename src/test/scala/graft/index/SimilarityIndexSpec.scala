@@ -328,7 +328,7 @@ class SimilarityIndexSpec extends SparkTestBase {
       (11 to 20).map(i => (i.toLong, mk(c2, i * 0.01f)))
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
     SimilarityIndex.ivfBuild(corpus.toDF("vec_id", "embedding"), dir,
-      nlist = 2, fitSampleFraction = 1.0)
+      nlist = 2)
     val queries = Seq((1L, c1)).toDF("query_id", "query_vec")
     val (ids, search) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
       k = 20, nprobe = 1).select("vec_id").as[Long].collect().toSet)
@@ -351,7 +351,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     val queries = Seq((1L, c1), (15L, c2)).toDF("query_id", "query_vec")
 
     val oneShotDir = java.nio.file.Files.createTempDirectory("graft_ivf_one").toString
-    SimilarityIndex.ivfBuild(corpusDf, oneShotDir, nlist = 2, fitSampleFraction = 1.0)
+    SimilarityIndex.ivfBuild(corpusDf, oneShotDir, nlist = 2)
     val oneShot = SimilarityIndex.ivfSearchIndexed(spark, oneShotDir, queries,
       k = 20, nprobe = 1)
       .select("query_id", "vec_id", "cosine")
@@ -362,7 +362,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     // centroids — probe routing must stay consistent across installments
     val appDir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
     SimilarityIndex.ivfBuild(corpusDf.filter($"vec_id" % 2 === 1), appDir,
-      nlist = 2, fitSampleFraction = 1.0)
+      nlist = 2)
     SimilarityIndex.ivfAppend(spark, appDir, corpusDf.filter($"vec_id" % 2 === 0))
     val (appended, search) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, appDir,
       queries, k = 20, nprobe = 1).select("query_id", "vec_id", "cosine")
@@ -428,7 +428,7 @@ class SimilarityIndexSpec extends SparkTestBase {
 
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cmp").toString
     SimilarityIndex.ivfBuild(corpusDf.filter($"vec_id" <= 4), dir,
-      nlist = 2, fitSampleFraction = 1.0)
+      nlist = 2)
     // several append installments → several small files in the one list
     (5 to 12 by 2).foreach { lo =>
       SimilarityIndex.ivfAppend(spark, dir,
@@ -469,7 +469,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     val corpusDf = corpus.toDF("vec_id", "embedding")
     val queries = Seq((1L, c1), (15L, c2)).toDF("query_id", "query_vec")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
-    SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2, fitSampleFraction = 1.0)
+    SimilarityIndex.ivfBuild(corpusDf, dir, nlist = 2)
 
     // a delete-free index never reads a tombstone list
     val (_, clean) = Ran(spark)(SimilarityIndex.ivfSearchIndexed(spark, dir, queries,
@@ -494,7 +494,7 @@ class SimilarityIndexSpec extends SparkTestBase {
     val freshDir = java.nio.file.Files.createTempDirectory("graft_ivf_fr").toString
     SimilarityIndex.ivfBuild(
       corpusDf.filter(!$"vec_id".isin(deleted.toSeq: _*)), freshDir,
-      nlist = 2, fitSampleFraction = 1.0)
+      nlist = 2)
     val fresh = SimilarityIndex.ivfSearchIndexed(spark, freshDir, queries,
       k = 20, nprobe = 2)
       .select("query_id", "vec_id", "cosine")
@@ -522,10 +522,10 @@ class SimilarityIndexSpec extends SparkTestBase {
     val corpus = (1 to 8).map(i => (i.toLong,
       Array(1.0f + i * 0.01f, i * 0.1f))).toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_gen").toString
-    SimilarityIndex.ivfBuild(corpus, dir, nlist = 2, fitSampleFraction = 1.0)
+    SimilarityIndex.ivfBuild(corpus, dir, nlist = 2)
     SimilarityIndex.ivfDelete(spark, dir, Seq(1L).toDF("vec_id"))
     // rebuild = new generation; id 1 must be visible again
-    SimilarityIndex.ivfBuild(corpus, dir, nlist = 2, fitSampleFraction = 1.0)
+    SimilarityIndex.ivfBuild(corpus, dir, nlist = 2)
     val q = Seq((1L, Array(1.0f, 0.1f))).toDF("query_id", "query_vec")
     val ids = SimilarityIndex.ivfSearchIndexed(spark, dir, q, k = 8, nprobe = 2)
       .select("vec_id").as[Long].collect().toSet

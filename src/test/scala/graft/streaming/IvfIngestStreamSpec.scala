@@ -21,7 +21,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
     val idxPath = java.nio.file.Files.createTempDirectory("ivfsq8-stream")
       .resolve("idx").toString
     val seed = embs.filter($"vec_id" < 50)
-    Quantize.ivfSq8Build(seed, idxPath, nlist = 4, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(seed, idxPath, nlist = 4)
 
     val b1 = embs.filter($"vec_id" >= 50 && $"vec_id" < 60)
       .as[(Long, Array[Float])].collect().toSeq
@@ -44,7 +44,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
 
     val batchPath = java.nio.file.Files.createTempDirectory("ivfsq8-batch")
       .resolve("idx").toString
-    Quantize.ivfSq8Build(seed, batchPath, nlist = 4, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(seed, batchPath, nlist = 4)
     // same centroid fit inputs → same centroids is NOT guaranteed across
     // fits; instead append through the same frozen index by copying? No:
     // assert equality through the SAME index path — batch appends onto a
@@ -67,7 +67,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
     val idxPath = java.nio.file.Files.createTempDirectory("ivfsq8-replay")
       .resolve("idx").toString
     Quantize.ivfSq8Build(embs.filter($"vec_id" < 50), idxPath, nlist = 4,
-      fitSampleFraction = 1.0, storeRaw = true)
+      storeRaw = true)
     val batch = embs.filter($"vec_id" >= 50 && $"vec_id" < 60)
     val inst = EventStreams.StreamInstallmentBase
     Quantize.ivfSq8AppendAt(spark, idxPath, batch, inst)
@@ -87,7 +87,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
     val idxPath = java.nio.file.Files.createTempDirectory("ivf-stream")
       .resolve("idx").toString
     SimilarityIndex.ivfBuild(embs.filter($"vec_id" < 50), idxPath,
-      nlist = 4, fitSampleFraction = 1.0)
+      nlist = 4)
     val b1 = embs.filter($"vec_id" >= 50 && $"vec_id" < 60)
       .as[(Long, Array[Float])].collect().toSeq
     val input = MemoryStream[(Long, Array[Float])]
@@ -156,7 +156,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
     val idxPath = java.nio.file.Files.createTempDirectory("ivfsq8-dedup-stream")
       .resolve("idx").toString
     val seed = embs.filter($"vec_id" < 50)
-    Quantize.ivfSq8Build(seed, idxPath, nlist = 4, fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(seed, idxPath, nlist = 4)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Array[Float])].collect().toSeq
     // b1: 5 fresh + 2 exact twins of seed rows (must drop — an exact twin
@@ -195,8 +195,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
   test("IVF-SQ8 dedup ingest replay reproduces the same survivors (as-of probe)") {
     val idxPath = java.nio.file.Files.createTempDirectory("ivfsq8-dedup-replay")
       .resolve("idx").toString
-    Quantize.ivfSq8Build(embs.filter($"vec_id" < 50), idxPath, nlist = 4,
-      fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(embs.filter($"vec_id" < 50), idxPath, nlist = 4)
     val inst = EventStreams.StreamInstallmentBase
     val batch = embs.filter($"vec_id" >= 50 && $"vec_id" < 55)
       .unionByName(embs.filter($"vec_id" < 2)
@@ -220,8 +219,7 @@ class IvfIngestStreamSpec extends SparkTestBase {
   test("list pruning survives the two-level layout") {
     val idxPath = java.nio.file.Files.createTempDirectory("ivfsq8-prune2")
       .resolve("idx").toString
-    Quantize.ivfSq8Build(embs.filter($"vec_id" < 100), idxPath, nlist = 8,
-      fitSampleFraction = 1.0)
+    Quantize.ivfSq8Build(embs.filter($"vec_id" < 100), idxPath, nlist = 8)
     val queries = embs.filter($"vec_id" < 2)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
     val (_, search) = Ran(spark)(Quantize.ivfSq8Search(spark, idxPath, queries, k = 3,
